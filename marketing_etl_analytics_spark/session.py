@@ -71,13 +71,18 @@ def env_positive_int(name: str, default: int | None = None) -> int | None:
     return val if val >= 1 else default
 
 
+def default_cpus() -> int:
+    """Local worker threads: $SPARK_GRAFT_CPUS, else the CPUs this
+    process may run on."""
+    return env_positive_int("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+
+
 # Shuffle width defaults to the thread count but can be raised
 # independently (SPARK_GRAFT_SHUFFLE_PARTITIONS) for large-SF runs:
 # at 100x+ a 600 M-row shuffle wants more, smaller partitions than
 # local threads — AQE then coalesces whatever is oversplit.
 DEFAULT_SHUFFLE_PARTITIONS = env_positive_int(
-    "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-    env_positive_int("SPARK_GRAFT_CPUS", 32),
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS", default_cpus()
 )
 
 
@@ -105,14 +110,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    Defaults target local[$SPARK_GRAFT_CPUS]; on a real cluster the
+    Defaults target local[``default_cpus()``]; on a real cluster the
     master comes from spark-submit and these configs still apply.
     """
     ensure_disk_headroom()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{default_cpus()}]")
         # Determinism: epoch date keys and date extraction are TZ-sensitive.
         .config("spark.sql.session.timeZone", "UTC")
         # Adaptive execution: coalesce post-shuffle partitions, split skewed

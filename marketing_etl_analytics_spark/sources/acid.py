@@ -25,6 +25,12 @@ protocol, reduced to its essentials, on plain parquet + JSON:
   version N keeps reading version N's files regardless of later
   commits; ``read(version=N)`` re-opens any retained version.
   ``vacuum`` deletes files unreachable from the kept versions.
+  ``read`` opens each table version once per session: it resolves
+  ``_current`` and the manifest on every call, then hands back the
+  DataFrame it last opened for that path when the manifest lists the
+  same files under the same schema. The memo is exact, because
+  manifests are immutable and data files live in nonce-named
+  directories — a table re-created at the same path lists other files.
 
 Single-table layout::
 
@@ -261,10 +267,16 @@ def _carry_stats(
     return stats, m.stats_cols
 
 
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A 0-row frame with ``schema`` (nullability included). Built on an
+    empty RDD, so counting or scanning it starts no Python worker."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def _read_files(spark: SparkSession, m: Manifest) -> DataFrame:
     schema = StructType.fromJson(json.loads(m.schema_json))
     if not m.files:
-        return spark.createDataFrame([], schema)
+        return _empty(spark, schema)
     # explicit manifest schema: after additive schema evolution the
     # manifest may list files written under an older (narrower) schema;
     # parquet fills the missing columns with NULL
@@ -295,15 +307,34 @@ def create(
     return 1
 
 
+# absolute table path -> (session, files, schema_json, DataFrame) of the
+# last snapshot ``read`` opened there. Each entry is replaced whole, so
+# threads that miss together each open a correct frame; the last stays.
+_OPENED: dict[str, tuple] = {}
+
+
 def read(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
     """Open a snapshot (the current one, or time-travel to ``version``).
 
     The returned DataFrame is pinned to the snapshot's explicit file
     list — later commits don't change what it reads (data files are
     immutable until vacuum drops the version).
+
+    The pointer and manifest are read on every call, so a read always
+    sees the latest commit. When that manifest lists the same files
+    under the same schema as the snapshot this session last opened at
+    ``path``, the same DataFrame is returned, and a dashboard pays for
+    file listing and analysis once per table version, not per query.
     """
     v = current_version(path) if version is None else version
-    return _read_files(spark, read_manifest(path, v))
+    m = read_manifest(path, v)
+    key = os.path.abspath(path)
+    hit = _OPENED.get(key)
+    if hit is not None and hit[0] is spark and hit[1:3] == (m.files, m.schema_json):
+        return hit[3]
+    df = _read_files(spark, m)
+    _OPENED[key] = (spark, m.files, m.schema_json, df)
+    return df
 
 
 def restore(path: str, version: int) -> int:
@@ -407,25 +438,25 @@ def merge(
         lo, hi, src_has_null = b[0], b[1], bool(b[2] or 0)
         cand_files = prune_files(m, prune_col, lo, hi, src_has_null)
 
-    # candidate scan under the (possibly evolved) manifest schema —
-    # parquet yields NULL for columns absent from older files
-    cand = (
-        spark.read.schema(StructType.fromJson(json.loads(schema_json)))
-        .parquet(*cand_files)
-        if cand_files
-        else _read_files(spark, Manifest(m.version, [], schema_json, m.parent))
-    )
-
-    # which files hold matched keys? file paths are metadata-sized —
-    # the one deliberate driver-side collect (same shape as a format's
-    # manifest planning step). Files are matched by basename: Spark
-    # part-file names embed a per-job UUID, and input_file_name()'s
-    # URI scheme spelling (file:/ vs file:///) must not matter.
-    tagged = cand.withColumn("_vt_file", _basename(F.input_file_name()))
-    touched_rows = tagged.join(
-        F.broadcast(skeys), _key_cond(tagged, skeys), "left_semi"
-    )
-    touched = {r[0] for r in touched_rows.select("_vt_file").distinct().collect()}
+    touched: set[str] = set()
+    if cand_files:
+        # candidate scan under the (possibly evolved) manifest schema —
+        # parquet yields NULL for columns absent from older files
+        cand = spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(
+            *cand_files
+        )
+        # which files hold matched keys? file paths are metadata-sized —
+        # the one deliberate driver-side collect (same shape as a
+        # format's manifest planning step). Files are matched by
+        # basename: Spark part-file names embed a per-job UUID, and
+        # input_file_name()'s URI scheme spelling (file:/ vs file:///)
+        # must not matter.
+        tagged = cand.withColumn("_vt_file", _basename(F.input_file_name()))
+        touched_rows = tagged.join(
+            F.broadcast(skeys), _key_cond(tagged, skeys), "left_semi"
+        )
+        touched = {r[0] for r in touched_rows.select("_vt_file").distinct().collect()}
+    # else: pruning is conservative, so no file can hold a source key
 
     if touched:
         # rows of rewritten files that keep their target version,
@@ -467,11 +498,8 @@ def read_range(
     m = read_manifest(path, v)
     files = prune_files(m, col, lo, hi)
     schema = StructType.fromJson(json.loads(m.schema_json))
-    if not files:
-        return spark.createDataFrame([], schema).filter(F.col(col).between(lo, hi))
-    return (
-        spark.read.schema(schema).parquet(*files).filter(F.col(col).between(lo, hi))
-    )
+    df = spark.read.schema(schema).parquet(*files) if files else _empty(spark, schema)
+    return df.filter(F.col(col).between(lo, hi))
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
@@ -638,7 +666,7 @@ def changes(
 
     def side(files: list[str]) -> DataFrame:
         if not files:
-            return spark.createDataFrame([], schema)
+            return _empty(spark, schema)
         return spark.read.schema(schema).parquet(*files)
 
     old, new = side(removed), side(added)

@@ -42,8 +42,10 @@ def register_warehouse(spark: SparkSession, wh: dict[str, DataFrame]) -> None:
 
 
 def register_kpi_views(spark: SparkSession, wh: dict[str, DataFrame]) -> None:
-    """Expose the three KPI views as (lazy, recomputed-per-query)
-    temp views, matching the reference's non-materialized `mv_*`."""
+    """Expose the three KPI views as lazy temp views, matching the
+    reference's non-materialized `mv_*`: nothing is persisted, and a
+    query reads the current rows of ``wh``. The view DataFrames are
+    built once per warehouse snapshot (``views.build_views``)."""
     for name, df in build_views(wh).items():
         df.createOrReplaceTempView(name)
 
