@@ -21,6 +21,13 @@ protocol, reduced to its essentials, on plain parquet + JSON:
   contain a matched key are rewritten; every other file carries over
   by reference. A small delta against a 100 TB table rewrites a small
   fraction of it, not the table.
+- **One pass over the MERGE source.** ``merge`` stages its
+  key-deduplicated source once with ``localCheckpoint`` (Delta's
+  ``MergeIntoMaterializeSource``); the prune bounds, the touched-file
+  scan and the write all read that copy, and its blocks are freed when
+  ``merge`` returns or raises. Not ``persist``: a cached plan keeps its
+  shuffle partitioning (adaptive execution may not coalesce it), so a
+  small merge would write a file per shuffle partition instead of one.
 - **Snapshot isolation + time travel.** A DataFrame opened against
   version N keeps reading version N's files regardless of later
   commits; ``read(version=N)`` re-opens any retained version.
@@ -40,7 +47,8 @@ Single-table layout::
 
 - **Statistics-based file skipping.** Manifests record per-file
   min/max (+ null count) for declared stats columns (the Delta
-  ``dataSkippingNumIndexedCols`` analog). ``merge`` prunes its
+  ``dataSkippingNumIndexedCols`` analog), read from the footers of the
+  parquet files just written, without a Spark job. ``merge`` prunes its
   touched-file scan to files whose key range can intersect the source
   keys, and ``read_range`` serves selective reads from the candidate
   files only — a point MERGE against a 100 TB table plans against
@@ -60,6 +68,7 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -156,43 +165,64 @@ def _write_data_files(df: DataFrame, path: str, version: int) -> list[str]:
 
 # stats are kept only for types whose min/max survive a JSON round
 # trip exactly — a lossy bound (e.g. decimal -> float) could prune a
-# file that actually contains a matching key
-_STATS_TYPES = (
-    "tinyint", "smallint", "int", "bigint", "float", "double", "string"
-)
+# file that actually contains a matching key. Floating-point columns
+# are left out too: parquet min/max skip NaN, while Spark orders NaN
+# above +inf, so a footer bound could prune a file holding a NaN key.
+_STATS_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
 
 
 def eligible_stats_cols(schema: StructType, wanted: list[str] | None) -> list[str]:
+    """The columns of ``wanted`` whose type can carry exact file stats:
+    integers and strings. ``float`` and ``double`` are not eligible
+    (their footer bounds leave NaN out), nor are decimals, dates or
+    timestamps (their bounds do not survive the JSON manifest)."""
     if not wanted:
         return []
     ok = {f.name for f in schema.fields if f.dataType.simpleString() in _STATS_TYPES}
     return [c for c in wanted if c in ok]
 
 
-def _collect_stats(
-    spark: SparkSession, files: list[str], stats_cols: list[str]
-) -> dict:
-    """{basename: {col: [min, max, n_null]}} for just-written files —
-    one scan of the delta (the write path already holds it hot), same
-    as a table format computing footer stats at commit time."""
-    if not files or not stats_cols:
-        return {}
-    df = spark.read.parquet(*files).withColumn(
-        "_vt_file", _basename(F.input_file_name())
-    )
-    aggs = []
-    for c in stats_cols:
-        aggs += [
-            F.min(c).alias(f"mn_{c}"),
-            F.max(c).alias(f"mx_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"nn_{c}"),
-        ]
+def _footer_stats(md: pq.FileMetaData, j: int) -> list | None:
+    """[min, max, n_null] of column ``j`` over a file's row groups, or
+    None when a row group that is not all-NULL lacks min/max (or any
+    lacks a null count): the file then records no bounds for the
+    column and is always scanned."""
+    mn = mx = None
+    n_null = 0
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        st = rg.column(j).statistics
+        if st is None or not st.has_null_count:
+            return None
+        n_null += st.null_count
+        if st.null_count == rg.num_rows:
+            continue  # all-NULL row group: no bounds to merge
+        if not st.has_min_max:
+            return None
+        mn = st.min if mn is None else min(mn, st.min)
+        mx = st.max if mx is None else max(mx, st.max)
+    return [mn, mx, n_null]
+
+
+def _collect_stats(files: list[str], stats_cols: list[str]) -> dict:
+    """{basename: {col: [min, max, n_null]}} for just-written files,
+    read from the parquet footers the write produced — no Spark job,
+    as a table format takes its file stats at commit time. Min and max
+    merge across row groups; an all-NULL column reads [None, None, n].
+    A column without footer bounds gets no entry (always scanned), and
+    a file with no rows gets no entry at all."""
     out: dict = {}
-    for r in df.groupBy("_vt_file").agg(*aggs).collect():
-        out[r["_vt_file"]] = {
-            c: [r[f"mn_{c}"], r[f"mx_{c}"], int(r[f"nn_{c}"] or 0)]
-            for c in stats_cols
-        }
+    for f in files:
+        md = pq.read_metadata(f)
+        if md.num_rows == 0:
+            continue
+        idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        entry = {}
+        for c in stats_cols:
+            st = _footer_stats(md, idx[c])
+            if st is not None:
+                entry[c] = st
+        out[os.path.basename(f)] = entry
     return out
 
 
@@ -248,14 +278,13 @@ def _commit_or_cleanup(
 
 
 def _carry_stats(
-    spark: SparkSession,
     m: Manifest,
     carried: list[str],
     new_files: list[str],
 ) -> tuple[dict | None, list[str] | None]:
     """Stats for the next manifest: carried files keep their recorded
-    entries; new files get one delta-scan of stats. Tables created
-    without stats_cols stay stats-free."""
+    entries; new files get theirs from their parquet footers. Tables
+    created without stats_cols stay stats-free."""
     if not m.stats_cols:
         return None, None
     stats = {
@@ -263,7 +292,7 @@ def _carry_stats(
         for f in carried
     }
     stats = {k: v for k, v in stats.items() if v is not None}
-    stats.update(_collect_stats(spark, new_files, m.stats_cols))
+    stats.update(_collect_stats(new_files, m.stats_cols))
     return stats, m.stats_cols
 
 
@@ -299,7 +328,7 @@ def create(
     os.makedirs(path, exist_ok=True)
     files = _write_data_files(df, path, 1)
     cols = eligible_stats_cols(df.schema, stats_cols)
-    stats = _collect_stats(spark, files, cols) if cols else None
+    stats = _collect_stats(files, cols) if cols else None
     _commit(
         path, 1, files, df.schema.json(), parent=None,
         stats=stats, stats_cols=cols or None,
@@ -380,6 +409,13 @@ def merge(
     error. Without it, the source must provide exactly the table's
     columns.
 
+    The source is evaluated once: after column alignment and key
+    de-duplication it is staged with ``localCheckpoint``, and the prune
+    bounds, the touched-file scan and the write read that copy. A
+    ``persist``ed source would keep its shuffle partitioning under
+    adaptive execution and write one file per partition; the staged
+    blocks are released when ``merge`` returns or raises.
+
     Returns the new version number. Raises :class:`ConcurrentWriteError`
     if another writer commits first (retry against the new snapshot).
     """
@@ -408,8 +444,10 @@ def merge(
             )
     # normalize to the table's column order so every data file in the
     # manifest carries one physical layout (also enforces that the
-    # source provides exactly the table's columns)
-    source = source.select(*cur.columns).dropDuplicates(key_cols)
+    # source provides exactly the table's columns). Then stage it once:
+    # the prune bounds, the touched-file scan and the write all read
+    # this one materialization instead of re-running the source plan.
+    staged = source.select(*cur.columns).dropDuplicates(key_cols).localCheckpoint()
 
     def _key_cond(left, right):
         cond = None
@@ -418,66 +456,73 @@ def merge(
             cond = c if cond is None else cond & c
         return cond
 
-    skeys = source.select(*key_cols).distinct()
+    try:
+        # dropDuplicates on key_cols already made the keys unique
+        # (NULL-safely), so no distinct is needed
+        skeys = staged.select(*key_cols)
 
-    # file skipping: bound the touched-file scan to files whose
-    # recorded key range can intersect the source keys. One tiny agg
-    # over the source (min/max/null of the first indexed key column)
-    # prunes the planning scan from |table| to the overlapping files —
-    # the point-MERGE-against-100TB case reads almost nothing.
-    cand_files = m.files
-    prune_col = next(
-        (c for c in key_cols if c in (m.stats_cols or [])), None
-    )
-    if prune_col is not None and m.stats:
-        b = skeys.agg(
-            F.min(prune_col),
-            F.max(prune_col),
-            F.sum(F.col(prune_col).isNull().cast("long")),
-        ).collect()[0]
-        lo, hi, src_has_null = b[0], b[1], bool(b[2] or 0)
-        cand_files = prune_files(m, prune_col, lo, hi, src_has_null)
-
-    touched: set[str] = set()
-    if cand_files:
-        # candidate scan under the (possibly evolved) manifest schema —
-        # parquet yields NULL for columns absent from older files
-        cand = spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(
-            *cand_files
+        # file skipping: bound the touched-file scan to files whose
+        # recorded key range can intersect the source keys. One tiny agg
+        # over the source (min/max/null of the first indexed key column)
+        # prunes the planning scan from |table| to the overlapping files —
+        # the point-MERGE-against-100TB case reads almost nothing.
+        cand_files = m.files
+        prune_col = next(
+            (c for c in key_cols if c in (m.stats_cols or [])), None
         )
-        # which files hold matched keys? file paths are metadata-sized —
-        # the one deliberate driver-side collect (same shape as a
-        # format's manifest planning step). Files are matched by
-        # basename: Spark part-file names embed a per-job UUID, and
-        # input_file_name()'s URI scheme spelling (file:/ vs file:///)
-        # must not matter.
-        tagged = cand.withColumn("_vt_file", _basename(F.input_file_name()))
-        touched_rows = tagged.join(
-            F.broadcast(skeys), _key_cond(tagged, skeys), "left_semi"
-        )
-        touched = {r[0] for r in touched_rows.select("_vt_file").distinct().collect()}
-    # else: pruning is conservative, so no file can hold a source key
+        if prune_col is not None and m.stats:
+            b = staged.agg(
+                F.min(prune_col),
+                F.max(prune_col),
+                F.sum(F.col(prune_col).isNull().cast("long")),
+            ).collect()[0]
+            lo, hi, src_has_null = b[0], b[1], bool(b[2] or 0)
+            cand_files = prune_files(m, prune_col, lo, hi, src_has_null)
 
-    if touched:
-        # rows of rewritten files that keep their target version,
-        # plus every source row (updates replace, inserts append)
-        rewrite = tagged.filter(F.col("_vt_file").isin(sorted(touched))).drop(
-            "_vt_file"
-        )
-        new_data = rewrite.join(
-            F.broadcast(skeys), _key_cond(rewrite, skeys), "left_anti"
-        ).unionByName(source)
-    else:  # inserts only — untouched files all carry over
-        new_data = source
-    new_files = _write_data_files(new_data, path, new_version)
+        touched: set[str] = set()
+        if cand_files:
+            # candidate scan under the (possibly evolved) manifest schema —
+            # parquet yields NULL for columns absent from older files
+            cand = spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(
+                *cand_files
+            )
+            # which files hold matched keys? file paths are metadata-sized —
+            # the one deliberate driver-side collect (same shape as a
+            # format's manifest planning step). Files are matched by
+            # basename: Spark part-file names embed a per-job UUID, and
+            # input_file_name()'s URI scheme spelling (file:/ vs file:///)
+            # must not matter.
+            tagged = cand.withColumn("_vt_file", _basename(F.input_file_name()))
+            touched_rows = tagged.join(
+                F.broadcast(skeys), _key_cond(tagged, skeys), "left_semi"
+            )
+            touched = {r[0] for r in touched_rows.select("_vt_file").distinct().collect()}
+        # else: pruning is conservative, so no file can hold a source key
 
-    carried = [f for f in m.files if os.path.basename(f) not in touched]
-    stats, stats_cols = _carry_stats(spark, m, carried, new_files)
-    _commit_or_cleanup(
-        path, new_version, carried + new_files, new_files, schema_json, base,
-        stats, stats_cols,
-    )
-    return new_version
+        if touched:
+            # rows of rewritten files that keep their target version,
+            # plus every source row (updates replace, inserts append)
+            rewrite = tagged.filter(F.col("_vt_file").isin(sorted(touched))).drop(
+                "_vt_file"
+            )
+            new_data = rewrite.join(
+                F.broadcast(skeys), _key_cond(rewrite, skeys), "left_anti"
+            ).unionByName(staged)
+        else:  # inserts only — untouched files all carry over
+            new_data = staged
+        new_files = _write_data_files(new_data, path, new_version)
+
+        carried = [f for f in m.files if os.path.basename(f) not in touched]
+        stats, stats_cols = _carry_stats(m, carried, new_files)
+        _commit_or_cleanup(
+            path, new_version, carried + new_files, new_files, schema_json, base,
+            stats, stats_cols,
+        )
+        return new_version
+    finally:
+        # DataFrame.unpersist does not free a local checkpoint; the
+        # checkpointed RDD behind the plan does
+        staged._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def read_range(
@@ -526,7 +571,7 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
         )
         new_files = _write_data_files(survivors, path, new_version)
     carried = [f for f in m.files if os.path.basename(f) not in touched]
-    stats, stats_cols = _carry_stats(spark, m, carried, new_files)
+    stats, stats_cols = _carry_stats(m, carried, new_files)
     _commit_or_cleanup(
         path, new_version, carried + new_files, new_files, m.schema_json, base,
         stats, stats_cols,
@@ -628,7 +673,7 @@ def compact(
     else:
         shaped = cur.repartition(target_files)
     new_files = _write_data_files(shaped, path, new_version)
-    stats, stats_cols = _carry_stats(spark, m, [], new_files)
+    stats, stats_cols = _carry_stats(m, [], new_files)
     _commit_or_cleanup(
         path, new_version, new_files, new_files, m.schema_json, base,
         stats, stats_cols,

@@ -857,6 +857,16 @@ _SQL_COUNTMIN = f"""
     """
 
 
+def _countmin_freq(docs: DataFrame) -> DataFrame:
+    """Token frequencies (|vocab| rows) the Count-Min counters build from."""
+    return (
+        docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+
+
 # Bisect single retired r7 (r6-green; see ext_sketch_kmv_setops note).
 def ext_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch (d=4, w=512) with deterministic row-salted md5
@@ -864,18 +874,11 @@ def ext_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, not |corpus|), the sketch is 2048 counters at any data size.
     Also graded via the ext_sketch_suite merged row (r5
     consolidation; r6 bisect single)."""
-    docs = t(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        # the frequency table feeds TWO consumers (the counter build
-        # and the exact top-k probe list); without materialization the
-        # corpus tokenize+aggregate subtree executes twice. |vocab|
-        # rows — bounded far below the corpus at any scale.
-        .localCheckpoint(eager=True)
-    )
+    # the frequency table feeds TWO consumers (the counter build and
+    # the exact top-k probe list); without materialization the corpus
+    # tokenize+aggregate subtree executes twice. |vocab| rows —
+    # bounded far below the corpus at any scale.
+    freq = _countmin_freq(t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     bucket = (
         F.conv(
             F.substring(

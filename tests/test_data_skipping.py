@@ -213,3 +213,95 @@ def test_zorder_rejects_non_numeric_and_both_orders(spark, tmp_path):
         acid.compact(
             spark, path, target_files=2, order_by=["id"], zorder_by=["id"]
         )
+
+
+# --- file stats from parquet footers -----------------------------------------
+
+
+def _spark_stats(spark, files, cols):
+    """Per-file min/max/null count, aggregated by Spark over the rows."""
+    df = spark.read.parquet(*files).withColumn(
+        "_f", acid._basename(F.input_file_name())
+    )
+    aggs = []
+    for c in cols:
+        aggs += [
+            F.min(c).alias(f"mn_{c}"),
+            F.max(c).alias(f"mx_{c}"),
+            F.sum(F.col(c).isNull().cast("long")).alias(f"nn_{c}"),
+        ]
+    return {
+        r["_f"]: {c: [r[f"mn_{c}"], r[f"mx_{c}"], r[f"nn_{c}"]] for c in cols}
+        for r in df.groupBy("_f").agg(*aggs).collect()
+    }
+
+
+_FOOTER_COLS = ["b", "i", "s", "z"]
+
+
+def test_footer_stats_equal_spark_aggregate(spark, tmp_path):
+    """Footer stats of Spark-written files equal a Spark aggregate for
+    bigint, int and string columns with NULLs and an all-NULL column."""
+    rows = [
+        (None if k % 5 == 0 else k * 3 - 40, None if k % 7 == 0 else -k,
+         None if k % 4 == 0 else f"s{k:03d}", None)
+        for k in range(60)
+    ]
+    df = spark.createDataFrame(rows, "b bigint, i int, s string, z bigint").repartition(3)
+    path = str(tmp_path / "footer_tbl")
+    acid.create(spark, path, df, stats_cols=_FOOTER_COLS)
+    m = acid.read_manifest(path, 1)
+    assert m.stats_cols == _FOOTER_COLS
+    assert m.stats == _spark_stats(spark, m.files, _FOOTER_COLS)
+    for ent in m.stats.values():
+        assert ent["z"][:2] == [None, None] and ent["z"][2] > 0
+
+
+def test_footer_stats_merge_row_groups(spark, tmp_path):
+    """A file with several row groups: bounds merge across them, and a
+    row group that is all-NULL in a column adds only to its null count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 50
+    table = pa.table({
+        "b": pa.array([None if k < 10 else 1000 - k * 7 for k in range(n)], pa.int64()),
+        "i": pa.array([None if k % 3 == 0 else k - 25 for k in range(n)], pa.int32()),
+        "s": pa.array([None if k % 6 == 0 else f"t{(k * 37) % 101}" for k in range(n)]),
+        "z": pa.array([None] * n, pa.int64()),
+    })
+    f = str(tmp_path / "groups.parquet")
+    pq.write_table(table, f, row_group_size=10)
+    assert pq.read_metadata(f).num_row_groups == 5
+    assert acid._collect_stats([f], _FOOTER_COLS) == _spark_stats(spark, [f], _FOOTER_COLS)
+
+
+def test_double_columns_are_not_eligible(spark, tmp_path):
+    """Parquet min/max leave NaN out, and Spark orders NaN above +inf,
+    so floating-point columns carry no file stats."""
+    df = spark.createDataFrame(
+        [(1, float("nan")), (2, 0.5)], "id bigint, d double"
+    ).repartition(1)
+    assert acid.eligible_stats_cols(df.schema, ["d", "id"]) == ["id"]
+    path = str(tmp_path / "dbl_tbl")
+    acid.create(spark, path, df, stats_cols=["d"])
+    m = acid.read_manifest(path, 1)
+    assert m.stats is None and m.stats_cols is None
+
+
+def test_footer_stats_start_no_spark_job(spark, tmp_path):
+    path = _make(spark, tmp_path)
+    files = acid.read_manifest(path, 1).files
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("footer-stats", "footer stats")
+        stats = acid._collect_stats(files, ["id"])
+        # a control: a Spark read under another group is seen
+        sc.setJobGroup("footer-stats-control", "control scan")
+        spark.read.parquet(*files).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(stats) == len(files)
+    assert tracker.getJobIdsForGroup("footer-stats") == []
+    assert tracker.getJobIdsForGroup("footer-stats-control")

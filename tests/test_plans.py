@@ -303,41 +303,63 @@ def test_domain_balance_broadcasts_cap(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_countmin_counters_from_vocab_not_corpus(spark):
-    """The d-fold expansion must sit ABOVE the token-frequency
-    aggregate (|vocab| rows), not on the raw token stream — the
-    Generate(explode(sequence...)) operator consumes the aggregated
-    side."""
+def _formatted_ops(df) -> list[tuple[int, str, list[str]]]:
+    """(id, operator, detail lines) per operator of a formatted plan;
+    ids increase bottom-up."""
     import re
 
-    from marketing_etl_analytics_spark.suite.timeseries import ext_sketch_countmin
-
-    df = ext_sketch_countmin(spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    plan = buf.getvalue()
-    # formatted-plan operator ids increase bottom-up. The token explode
-    # (Generate over split(text)) must have a LOWER id than some
-    # HashAggregate which in turn is lower than the d-row explode
-    # (Generate emitting [j#...], the folded 0..3 sequence) — i.e. the
-    # frequency aggregate sits between the two explodes.
-    tok_gen, j_gen, aggs = None, None, []
-    op = None
-    for l in plan.splitlines():
-        m = re.match(r"\((\d+)\) (\w+)", l.strip())
+    ops: list[tuple[int, str, list[str]]] = []
+    for l in buf.getvalue().splitlines():
+        m = re.match(r"\((\d+)\) (.+)", l.strip())
         if m:
-            op = (int(m.group(1)), m.group(2))
-            if op[1] == "HashAggregate":
-                aggs.append(op[0])
-            continue
-        if op and op[1] == "Generate" and l.strip().startswith("Arguments:"):
-            if "split(lower(text" in l:
-                tok_gen = op[0] if tok_gen is None else tok_gen
-            if re.search(r"\[j#\d+\]", l):
-                j_gen = op[0] if j_gen is None else j_gen
-    assert tok_gen is not None and j_gen is not None, plan
-    assert any(tok_gen < a < j_gen for a in aggs), (tok_gen, aggs, j_gen)
+            ops.append((int(m.group(1)), m.group(2).strip(), []))
+        elif ops:
+            ops[-1][2].append(l.strip())
+    return ops
+
+
+def _detail(lines: list[str], field: str) -> str:
+    return next((l for l in lines if l.startswith(field)), "")
+
+
+def test_countmin_counters_from_vocab_not_corpus(spark):
+    """The d-fold expansion must sit ABOVE the token-frequency
+    aggregate (|vocab| rows), not on the raw token stream. The
+    frequency table is checkpointed, so the invariant is checked in two
+    parts: below the checkpoint, the token explode feeds the frequency
+    HashAggregate; above it, every Generate(explode(sequence...)) reads
+    the checkpointed relation, and no token explode is left."""
+    import re
+
+    from marketing_etl_analytics_spark.suite.common import t
+    from marketing_etl_analytics_spark.suite.timeseries import (
+        _countmin_freq,
+        ext_sketch_countmin,
+    )
+
+    freq_ops = _formatted_ops(_countmin_freq(t(spark, SF_DIR, "documents")))
+    tok_gen = [
+        i for i, op, d in freq_ops
+        if op == "Generate" and "split(lower(text" in _detail(d, "Arguments:")
+    ]
+    aggs = [i for i, op, _ in freq_ops if op == "HashAggregate"]
+    assert tok_gen and any(tok_gen[0] < a for a in aggs), freq_ops
+
+    ops = _formatted_ops(ext_sketch_countmin(spark, SF_DIR))
+    attrs = lambda s: s.split(":", 1)[1].strip()  # noqa: E731
+    scans = {
+        attrs(_detail(d, "Output")) for _, op, d in ops if op == "Scan ExistingRDD"
+    }
+    j_gens = [
+        d for _, op, d in ops
+        if op == "Generate" and re.search(r"\[j#\d+\]", _detail(d, "Arguments:"))
+    ]
+    assert scans and j_gens, ops
+    assert all(attrs(_detail(d, "Input")) in scans for d in j_gens), ops
+    assert not any("split(lower(text" in l for _, _, d in ops for l in d), ops
 
 
 def test_quality_score_scan_prunes_to_three_columns(spark):

@@ -230,3 +230,57 @@ def test_changes_feed_across_restore_shows_rollback(spark, table):
     assert feed.get((0, "update")) == "a0"  # back to the v1 value
     assert (200, "delete") in feed
     assert not any(k == 1 for k, _ in feed)  # untouched rows stay silent
+
+
+# --- the staged MERGE source -------------------------------------------------
+
+
+def test_merge_evaluates_source_once(spark, tmp_path):
+    """The prune bounds, the touched-file scan and the write all read
+    one staged copy of the source: a UDF computing the key runs once
+    per source row, however many of those steps the merge takes."""
+    path = str(tmp_path / "once")
+    acid.create(
+        spark, path, _df(spark, [(k, f"a{k}") for k in range(20)]).repartition(2),
+        stats_cols=["k"],
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def key(x):
+        seen.add(1)
+        return x
+
+    n = 10  # keys 15..24: five updates, five inserts
+    src = spark.range(15, 15 + n).select(key("id").alias("k"), F.lit("b").alias("v"))
+    acid.merge(spark, path, src, ["k"])
+    assert seen.value == n
+    got = {r.k: r.v for r in acid.read(spark, path).collect()}
+    assert len(got) == 25 and got[15] == "b" and got[24] == "b" and got[14] == "a14"
+
+
+def test_merge_releases_staged_source(spark, table):
+    """The staged source's blocks are freed when merge returns, and
+    when it raises on a lost commit race."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    acid.merge(spark, table, _df(spark, [(k, "x") for k in range(95, 105)]), ["k"])
+    assert jsc.getPersistentRDDs().size() == before
+
+    # another writer commits version 3 first
+    with open(acid._manifest_path(table, 3), "x") as f:
+        f.write("{}")
+    with pytest.raises(acid.ConcurrentWriteError):
+        acid.merge(spark, table, _df(spark, [(0, "y")]), ["k"])
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_small_insert_merge_adds_one_file(spark, table):
+    """A small insert-only merge writes one data file: the staged
+    source keeps adaptive execution's partition coalescing (a cached
+    source would not, and would write a file per shuffle partition)."""
+    m1 = acid.read_manifest(table, 1)
+    acid.merge(spark, table, _df(spark, [(k, f"n{k}") for k in range(200, 230)]), ["k"])
+    m2 = acid.read_manifest(table, 2)
+    assert set(m1.files) <= set(m2.files)
+    assert len(m2.files) == len(m1.files) + 1
