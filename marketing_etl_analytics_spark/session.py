@@ -14,46 +14,8 @@ analytics workload:
 from __future__ import annotations
 
 import os
-import shutil
-import sys
 
 from pyspark.sql import SparkSession
-
-# Free-disk floor for any graded/benchmarked run (GiB). The r8 grading
-# of v_kpi_campaign died in a shuffle WRITE (FileOutputStream.writeBytes
-# under BypassMergeSortShuffleWriter) because the 100x probe dataset was
-# co-tenant on disk (93%-full episode recorded in BASELINE.md). Shuffle
-# spill needs headroom; the probe dataset regenerates in ~15 min.
-MIN_FREE_GIB_DEFAULT = 48
-_SCRATCH_100X = os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                             ".scratch", "sf100b")
-
-
-def ensure_disk_headroom(min_free_gib: int | None = None) -> int:
-    """Assert shuffle-spill headroom before a graded run; reclaim the
-    regenerable 100x probe dataset if that's what is eating it.
-
-    Returns free GiB after any reclaim. Only ever deletes
-    ``.scratch/sf100b`` (driver-regenerable via tools/make_sf.py);
-    warns on stderr if free space stays under the floor. Set
-    SPARK_GRAFT_MIN_FREE_GB=0 to disable (e.g. while a 100x probe is
-    deliberately resident and no graded run is imminent)."""
-    floor = (min_free_gib if min_free_gib is not None
-             else env_positive_int("SPARK_GRAFT_MIN_FREE_GB",
-                                   MIN_FREE_GIB_DEFAULT))
-    if not floor or os.environ.get("SPARK_GRAFT_MIN_FREE_GB") == "0":
-        return shutil.disk_usage("/").free >> 30
-    free_gib = shutil.disk_usage("/").free >> 30
-    if free_gib < floor and os.path.isdir(_SCRATCH_100X):
-        print(f"[session] free disk {free_gib} GiB < {floor} GiB floor: "
-              f"removing regenerable {_SCRATCH_100X}", file=sys.stderr)
-        shutil.rmtree(_SCRATCH_100X, ignore_errors=True)
-        free_gib = shutil.disk_usage("/").free >> 30
-    if free_gib < floor:
-        print(f"[session] WARNING: only {free_gib} GiB free (< {floor} GiB "
-              "floor) — large shuffles may die in spill writes",
-              file=sys.stderr)
-    return free_gib
 
 
 def env_positive_int(name: str, default: int | None = None) -> int | None:
@@ -113,7 +75,6 @@ def get_spark(
     Defaults target local[``default_cpus()``]; on a real cluster the
     master comes from spark-submit and these configs still apply.
     """
-    ensure_disk_headroom()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{default_cpus()}]")

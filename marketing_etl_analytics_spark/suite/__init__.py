@@ -1,7 +1,7 @@
-"""Driver-facing correctness suite.
+"""Correctness suite.
 
 Each entry maps one operator/query shape from SURVEY.md §2 onto the
-driver's synthetic TPC-H-ish testdata (TESTDATA.md), as:
+synthetic TPC-H-ish testdata (TESTDATA.md), as:
 
 - a PySpark implementation ``(spark, sf_dir) -> DataFrame``, and
 - (where SQL-expressible) a DuckDB oracle SQL twin run on the same
@@ -10,13 +10,8 @@ driver's synthetic TPC-H-ish testdata (TESTDATA.md), as:
 Column names are aliased identically on both sides; numeric discipline
 (see ``suite.common``) keeps value-hashes engine-independent.
 
-Registration order is significant: external graders walk ``SUITE`` in
-insertion order and may only grade a prefix of it, so the dict is
-rebuilt below into an explicit priority order — the reference-parity
-queries (q*/etl_*/v_*), the LLM-data-pipeline operators (ext_*), the
-UDF/streaming surface, and the scale-relevant relational operators
-first; simple single-operator capability rows (each also covered by
-pytest differential tests and ``tools/diffcheck.py``) take the tail.
+Entries appear in ``SUITE`` in module import order (below), then in
+each module's ``register()`` order. No consumer depends on that order.
 """
 
 from marketing_etl_analytics_spark.suite.registry import SUITE, SuiteEntry, register
@@ -34,287 +29,5 @@ from marketing_etl_analytics_spark.suite import udf  # noqa: E402,F401
 from marketing_etl_analytics_spark.suite import timeseries  # noqa: E402,F401
 from marketing_etl_analytics_spark.suite import funnels  # noqa: E402,F401
 from marketing_etl_analytics_spark.suite import graphs  # noqa: E402,F401
-
-# Priority prefix (everything registered but not listed here keeps its
-# module registration order after the prefix). Window policy: the
-# external driver grades a 50-slot prefix per round (CORRECTNESS_r{N});
-# the standing invariant (VERDICT r3 #8 / r4 #1) is that EVERY suite
-# entry has a green driver row within the last two rounds — no
-# two-round-stale rows.
-#
-# Round-5 rotation: the r4 window graded 50 rows (CORRECTNESS_r04, all
-# green); the 48 entries past it were r3-green and would be two-round
-# stale by end of r5, so they rotate in. To fit alongside the r5
-# additions, the three r3-green batch sketch singles (hll / countmin /
-# kmv set-ops) were merged into the wide ext_sketch_suite row (the
-# rel_stats_suite precedent), shrinking the suite 101 -> 99; the two
-# r3-green non-pandas UDF singles (rel_map_in_arrow / rel_udtf) were
-# likewise merged into rel_udf_tiers, freeing the slot that admits
-# ext_pack_sequences (suite stays 99). The 50-slot r5 window holds,
-# in order:
-#   (a) the 6 never-driver-graded r5 entries: ext_semantic_dedup_ivf
-#       (VERDICT r4 #3 — graded IVF assignment), ext_bpe_encode
-#       (r4 #5 — tokenizer apply step), ext_quality_score (r4 #6 —
-#       learned-model gate), ext_pack_sequences (concat-and-chop
-#       packing via two-phase distributed prefix scan),
-#       ext_sketch_suite + rel_udf_tiers (the consolidation rows),
-#   (b) the 3 r4/r3-green entries whose code changed this round:
-#       ext_curation_pipeline (model gate composed in),
-#       ext_inverted_index / ext_bm25_search (served from the
-#       persisted bucketed term index, VERDICT r4 #4),
-#   (c) the remaining r3-green tail entries with unchanged code —
-#       with two more consolidations inside the window: the two
-#       r3-green singles ext_funnel / ext_cohort_retention merged
-#       into ext_funnel_cohort (the ext_sketch_suite precedent),
-#       freeing the slot that admits ext_shuffle_split (deterministic
-#       global shuffle + train/val/test split + shard layout — the
-#       training-export step; suite stays 99); and the two r3-green
-#       sampling singles ext_sample_reservoir / ext_sample_temperature
-#       merged into ext_sampling_suite (functions and plans
-#       unchanged), freeing the slot that admits ext_embed_transform
-#       (embedding preprocessing: L2 norm / int8 quantization / JL
-#       sign projection — zero-shuffle per-row map, engine API
-#       ext/embedding.py; suite stays 99); and the two r3-green IVF
-#       ANN singles ext_ann_ivf / ext_ann_ivf_kmeans merged into
-#       ext_ann_ivf_suite (plans unchanged, singles stay callable;
-#       ext_ann_recall still grades the seeded path), freeing the
-#       slot that admits ext_lm_perplexity (CCNet/KenLM-style
-#       statistical-LM quality filter: held-out bigram LM + OOV
-#       smoothing, per-doc cross-entropy + perplexity tertiles; suite
-#       stays 99); and the two search entries ext_inverted_index /
-#       ext_bm25_search (r5-changed, both served from the persisted
-#       bucketed term index) merged into ext_search_suite, freeing
-#       the slot that admits ext_hybrid_search (BM25 + dense-cosine
-#       shortlists fused by Reciprocal Rank Fusion — the RAG-era
-#       retrieval shape; suite stays 99).
-# The 49 entries past the window are exactly the r4-green rows whose
-# code is unchanged since CORRECTNESS_r04. stream_sessionize stays the
-# contract-allowed rows-only entry (pytest-equal to its oracled batch
-# twin; stream_session_window is its fully-oracled sibling).
-# Round-6 rotation (VERDICT r5 #1/#3): the r5 window graded 50 rows —
-# 49 green plus the ext_sketch_suite hash failure. The 49 entries past
-# it were r4-green and would be two-round stale by end of r6, so they
-# rotate in. The r6 window holds, in order:
-#   (a) the sketch bisect block: the HARDENED merged row (NULL-free
-#       all-integer schema) plus the four family functions as
-#       temporary graded singles (bodies unchanged), so the driver
-#       localizes which family's hash diverges in its environment;
-#   (b) re-graded / new rows: ext_semantic_dedup_ivf (distributed
-#       k-means||-style seeding replaces the driver-side greedy pool,
-#       VERDICT r5 #4) and ext_dedup_ingest_capped (bounded per-band
-#       index compaction, VERDICT r5 #5);
-#   (c) seven r6 consolidations of r4-green tail pairs (the
-#       rel_stats_suite precedent — singles stay callable, merged
-#       rows are NULL-free): stream_sketch_suite (hll+countmin
-#       foreachBatch twins), rel_window_suite (rank+frames),
-#       rel_reshape_suite (lattice+pivot/unpivot), rel_temporal_joins
-#       (range+asof), rel_timeseries_suite (rollup+rolling median),
-#       ext_text_metrics (tfidf/bigrams+rarity), ext_bpe_suite
-#       (merge-round + NEW imported-64-merge-table apply, VERDICT r5
-#       #7);
-#   (d) the remaining 36 r4-green tail singles, bodies unchanged.
-# Entries graded green in r5 fall out of the window (one round old at
-# end of r6 — inside the two-round invariant) and rotate back in r7.
-# Round-7 rotation (VERDICT r6 #3/#4): the r6 window graded 50 rows —
-# 47 green, the two quantile-family hash rows (root-caused to uncast
-# DuckDB HUGEINT oracle columns, fixed this round), and the
-# contract-allowed rows-only stream_sessionize. The r6 bisect did its
-# job: the three families it cleared (kmv / hll / countmin) retire as
-# singles (their functions stay callable; the merged ext_sketch_suite
-# row still grades all four families), shrinking the suite 98 -> 95.
-# The r7 window holds, in order:
-#   (a) the two fixed-oracle sketch rows — ext_sketch_suite and, for
-#       one more round, the ext_sketch_quantile single so the HUGEINT
-#       fix gets a direct driver row (retires into the merged row r8);
-#   (b) the two entries whose engine code changed this round:
-#       ext_semantic_dedup_ivf (integer-lattice k-means|| threshold,
-#       ADVICE r6) and ext_dedup_ingest_capped (sink flag guard,
-#       ADVICE r6);
-#   (c) three r7 consolidations of r5-green tail pairs (the
-#       rel_stats_suite precedent — singles stay callable, merged
-#       rows NULL-free): ext_dau_anomaly (rolling DAU/WAU7 + z-score
-#       anomaly), ext_ann_scan_suite (brute-force cosine top-k +
-#       sign-LSH bucketed scan), and ext_chunk_balance (context-window
-#       chunking + domain balancing) — freeing the slots that admit
-#       (b) and the NEW ext_sketch_bloom (Bloom-filter membership
-#       sketch probed as benchmark decontamination: the fourth
-#       classic sketch kind beside cardinality/frequency/rank, exact
-#       FP accounting columns) — suite lands at 93 registered entries;
-#   (d) the remaining 44 r5-green tail entries, rotating in per the
-#       two-round invariant — including ext_dedup_cluster, whose
-#       pointer-doubling fix (b863011) landed after the r5 rotation
-#       and has no driver row on the current body (VERDICT r6 #2).
-# The 43 entries past the window are exactly the r6-green rows whose
-# code is unchanged since CORRECTNESS_r06; they rotate back in r8.
-# Late-r7 window adjustment (the 1000x sweep landed after the initial
-# rotation): FOUR bodies changed after the r7 list was laid down —
-# q1_top_sellers / q2_top_profit / q3_margin_having (agg-before-join
-# rework of the forced-broadcast shape the sweep caught superlinear)
-# and ext_semantic_dedup (via the shared SPARK_DOT/SQL_DOT
-# integer-lattice hardening that fixed the 2 M-vector rounding tie).
-# Changed code MUST sit inside the graded window (the VERDICT r6 #2
-# standing policy), so they swap in — plus q0_pnl_summary, whose
-# mixed distinct+sum aggregate got the same two-phase rework after
-# the sweep measured its Expand-x2 plan at 1153 s. The five demoted
-# rows (ext_bpe_encode, ext_hybrid_search, rel_setops,
-# ext_sampling_suite, stream_dedup) are r5-green with UNCHANGED
-# bodies, each with a family sibling that keeps a <=1-round-old green
-# row (ext_bpe_suite r6-green, ext_search_suite in-window,
-# rel_setops_all r6-green, ext_sample_stratified r6-green,
-# ext_dedup_ingest_capped in-window + stream_dedup_ingest r6-green) —
-# the deliberate trade: a stale unchanged row over an ungraded
-# changed one. They rotate back in r8.
-# Round-8 rotation (VERDICT r7 #1): the r7 window graded 50 rows, all
-# green — the first all-green window since r4. ext_sketch_quantile
-# retires into the merged ext_sketch_suite row as planned (its r7 row
-# graded the HUGEINT-cast fix directly; the function stays callable,
-# suite 93 -> 92). The r8 window holds, in order:
-#   (a) the five late-r7 demotions — r5-green, i.e. two rounds stale,
-#       the only rows outside the two-round invariant.
-#       ext_hybrid_search leads: its r5 driver row predates the
-#       SPARK_DOT integer-lattice hardening (fc3b048), so its
-#       EFFECTIVE computation has never been driver-graded
-#       (VERDICT r7 What's-wrong #1);
-#   (b) the two entries whose code changes this round:
-#       q1_top_sellers (exact-distinct two-level partial-agg rework,
-#       VERDICT r7 #4) and ext_dedup_ngram_jaccard (band-bucket
-#       pre-count spill bound, VERDICT r7 #5);
-#   (c) the 38 remaining r6-green tail entries, rotating in per the
-#       standing two-round invariant (stream_sessionize stays the
-#       contract-allowed rows-only entry);
-#   (d) window fill: fresh rows for THREE of the five late-r7 reworked
-#       bodies (q0 agg-before-join, ext_semantic_dedup lattice dot,
-#       ext_sketch_suite post-quantile-fold) — each r7-green; a second
-#       consecutive row pins the rework. q2_top_profit and
-#       q3_margin_having did not fit the 50 slots and led the tail
-#       instead (both r7-green with unchanged effective hashes; they
-#       rotated in r9 per the invariant) — ADVICE r8 #1 correction:
-#       the original note here claimed all five fit.
-# The 44 entries past the window are exactly the r7-green rows whose
-# code is unchanged since CORRECTNESS_r07; they rotate back in r9.
-# Round-9 rotation (VERDICT r8 #1/#2): the r8 window graded 50 rows —
-# 48 green, the contract-allowed rows-only stream_sessionize, and ONE
-# row lost to the environment, not code: v_kpi_campaign's grading died
-# in a shuffle-write ENOSPC while the regenerable 100x probe dataset
-# was co-tenant on disk (the only entry with no driver-green row in
-# r7∪r8). The r9 window holds, in order:
-#   (a) v_kpi_campaign FIRST (VERDICT r8 Next #1) — body unchanged
-#       since its r6-green row, oracle-exact in every local diffcheck;
-#       the disk-headroom guard (session.ensure_disk_headroom, also
-#       run at __spark_entry__ import) now deletes .scratch/sf100b
-#       before any graded run can start under the free-disk floor;
-#   (b) the 44 r7-green tail entries, rotating in per the standing
-#       two-round invariant (v_channel_daily_incremental among them —
-#       its r8 bench uptick is isolated this round);
-#   (c) window fill: ext_quality_dsir (body gains the documented
-#       approx-over-sample percentile path this round, VERDICT r8
-#       Next #5 — the graded branch is unchanged but the effective
-#       hash moves, so it must sit in-window; also its second
-#       consecutive row);
-#   (d) the FOUR new r9 operators (never graded): ext_mix_unimax
-#       (UniMax water-filling mixture allocation, Chung et al. 2023),
-#       ext_coreset_kcenter (greedy k-center diversity coreset,
-#       Sener & Savarese 2018), ext_lm_kneser_ney (interpolated
-#       Kneser-Ney bigram LM filter, Kneser & Ney 1995 / Heafield
-#       2011), and ext_cluster_kmeans (lattice-quantized Lloyd
-#       k-means, the SemDeDup/IVF clustering stage, Abbas et al.
-#       2023).
-# ext_dedup_substring and v_channel_daily (both r8-green, bodies
-# unchanged) lead the tail instead of taking second-consecutive-row
-# fill slots: the new-operator policy (changed/new code must be
-# in-window) outranks a redundant sf0.01 re-grade, and both carry
-# 100x/1000x current-tree rows this round (VERDICT r8 Next #6) —
-# stronger evidence than the slot they gave up. They rotate back in
-# r10 with the rest of the r8-green tail.
-# Late-r9 window adjustment (FIFTH new operator): the r7-green
-# ext_ann_recall single folded into the in-window ext_ann_ivf_suite
-# merged row (the ext_ann_scan_suite precedent — the function stays
-# callable, its plan unchanged; the merged row grows a union-tagged
-# 'recall' branch, and being in-window its changed body gets an r9
-# row). The freed slot admits ext_quality_perceptron (distributed
-# quality-classifier training via iterative parameter mixing,
-# McDonald et al. 2010 — the FineWeb-Edu/DCLM learned-filter TRAIN
-# stage; suite stays 98). The two-round invariant holds: recall's
-# computation is graded THIS round via the merged row.
-_WINDOW = [
-    # (a) the env-lost row — first, per VERDICT r8 Next #1
-    "v_kpi_campaign",
-    # (b) the 44 r7-green tail entries (two-round invariant)
-    "q2_top_profit", "q3_margin_having",
-    "ext_semantic_dedup_ivf", "ext_dedup_ingest_capped",
-    "ext_dau_anomaly", "ext_ann_scan_suite", "ext_chunk_balance",
-    "ext_sketch_bloom",
-    "ext_dedup_cluster",
-    "ext_quality_score",
-    "ext_pack_sequences", "rel_udf_tiers",
-    "ext_curation_pipeline", "ext_search_suite",
-    "q6_category_performance", "q7_product_quadrant",
-    "ext_dedup_eval", "ext_graph_pagerank", "stream_session_window",
-    "ext_dedup_minhash_lsh",
-    "ext_dedup_simhash", "ext_dedup_embedding_cosine",
-    "ext_dedup_incremental", "ext_ann_ivf_suite",
-    "ext_quality_perceptron",
-    "ext_lm_perplexity",
-    "ext_ann_pq_adc",
-    "ext_data_quality", "stream_attribution_outer",
-    "ext_funnel_cohort", "ext_shuffle_split", "ext_rfm",
-    "ext_dedup_containment", "rel_salted_join",
-    "ext_text_profile", "rel_scalar_funcs",
-    "ext_attribution_multitouch", "ext_dedup_paragraph",
-    "ext_session_window_native",
-    "ext_fuzzy_linkage", "v_channel_daily_incremental",
-    "ext_graph_triangles", "ext_embed_transform",
-    "etl_scd2",
-    # (c) window fill: the changed body (approx-percentile path)
-    "ext_quality_dsir",
-    # (d) the four new r9 operators
-    "ext_mix_unimax", "ext_coreset_kcenter",
-    "ext_lm_kneser_ney", "ext_cluster_kmeans",
-]
-
-# The driver grades exactly this prefix of the registry per round.
-# Exported so tools/effhash.py lints against the REAL window instead
-# of a duplicated constant (ADVICE r8 #3).
-GRADED_WINDOW = len(_WINDOW)
-assert GRADED_WINDOW == 50, GRADED_WINDOW
-
-_TAIL = [
-    # every entry below is r8-green (CORRECTNESS_r08 hash-exact, or
-    # rows-only for the contract-allowed stream_sessionize) with code
-    # unchanged since that grade; rotates back in r10
-    "ext_dedup_substring", "v_channel_daily",
-    "ext_hybrid_search", "ext_bpe_encode", "rel_setops",
-    "ext_sampling_suite", "stream_dedup",
-    "q1_top_sellers", "ext_dedup_ngram_jaccard",
-    "stream_sketch_suite", "rel_window_suite", "rel_reshape_suite",
-    "rel_temporal_joins", "rel_timeseries_suite", "ext_text_metrics",
-    "ext_bpe_suite",
-    "ext_graph_label_propagation", "stream_topk_trending",
-    "stream_dedup_ingest",
-    "rel_join_variants", "rel_semistructured",
-    "rel_stats_suite", "rel_pandas_suite",
-    "ext_doc_filters", "stream_cdc_apply",
-    "q4_channel_kpis", "q5_repeat_drivers",
-    "q8_spend_waste", "q9_retention",
-    "q10_demographics", "q11_frequency_segments",
-    "etl_dim_product", "etl_dim_date", "etl_dim_campaign_parse",
-    "etl_fact_sales", "etl_upsert_dedup",
-    "v_kpi_channel",
-    "rel_setops_all",
-    "ext_dedup_exact", "ext_sessionize",
-    "ext_sample_stratified", "ext_multimodal_meta",
-    "stream_sessionize", "stream_enrich_join",
-    "rel_scalar_subquery",
-    "q0_pnl_summary",
-    "ext_semantic_dedup", "ext_sketch_suite",
-]
-
-_PRIORITY = _WINDOW + _TAIL
-_missing = [n for n in _PRIORITY if n not in SUITE]
-assert not _missing, f"priority list names unknown entries: {_missing}"
-_ordered = {n: SUITE[n] for n in _PRIORITY}
-_ordered.update({n: e for n, e in SUITE.items() if n not in _ordered})
-SUITE.clear()
-SUITE.update(_ordered)
 
 __all__ = ["SUITE", "SuiteEntry", "register"]

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from marketing_etl_analytics_spark.session import default_cpus
+
 # The driver's testdata files are single-row-group parquet (verified
 # with pyarrow), so Spark's scan parallelism is 1 regardless of
 # maxPartitionBytes — every per-row expression (decimal casts, md5,
@@ -26,7 +28,7 @@ from pyspark.sql import DataFrame
 # explodes ~50x into shingles, embeddings carries 64-float vectors);
 # true dims (part/supplier/nation/region) stay single-partition.
 _SPREAD_MIN_BYTES = 200_000
-_SPREAD_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_SPREAD_PARTITIONS = default_cpus()
 
 
 def _needs_spread(path: str) -> bool:

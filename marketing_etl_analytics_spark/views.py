@@ -97,49 +97,25 @@ def channel_daily(
     )
 
 
-def _kpi_block(grouped) -> DataFrame:
-    """The shared KPI select list (``04_views.sql:102-142`` / ``:185-227``)."""
-    rev, cost, spend = F.sum("revenue"), F.sum("cost"), F.sum("spend")
-    orders = F.sum("orders")
-    clicks, impr = F.sum("clicks"), F.sum("impressions")
-    return grouped.agg(
-        rev.alias("revenue"),
-        cost.alias("cost"),
-        F.round(spend, 2).alias("spend"),
-        F.sum(F.col("revenue") - F.col("cost")).alias("gross_profit"),
-        clicks.alias("clicks"),
-        impr.alias("impressions"),
-        orders.alias("orders"),
-        F.round(safe_div(rev, orders), 4).alias("aov"),
-        F.round(safe_div(clicks, impr), 6).alias("ctr"),
-        F.round(safe_div(rev, spend), 4).alias("roas"),
-        F.round(safe_div(rev - cost, spend), 4).alias("profit_roas"),
-        F.round(safe_div(rev - spend, spend), 4).alias("roi"),
-        F.round(safe_div(rev - cost - spend, spend), 4).alias("profit_roi"),
-    )
-
-
 def kpi_channel(
     fact_sales: DataFrame, fact_spend: DataFrame, dim_campaigns: DataFrame
 ) -> DataFrame:
     """``mv_kpi_channel`` (``04_views.sql:70-147``). No dim_date join here —
     unlike channel_daily, spend on no-sale dates IS included."""
-    m = _merged(fact_sales, fact_spend).join(
-        F.broadcast(dim_campaigns.select("campaign_id", "channel")),
-        "campaign_id", "left",
+    return kpi_from_totals(
+        _kpi_totals(fact_sales, fact_spend, dim_campaigns, KPI_CHANNEL_GRAIN),
+        KPI_CHANNEL_GRAIN,
     )
-    return _kpi_block(m.groupBy("channel"))
 
 
 def kpi_campaign(
     fact_sales: DataFrame, fact_spend: DataFrame, dim_campaigns: DataFrame
 ) -> DataFrame:
     """``mv_kpi_campaign`` (``04_views.sql:153-232``)."""
-    m = _merged(fact_sales, fact_spend).join(
-        F.broadcast(dim_campaigns.select("campaign_id", "campaign_name", "channel")),
-        "campaign_id", "left",
+    return kpi_from_totals(
+        _kpi_totals(fact_sales, fact_spend, dim_campaigns, KPI_CAMPAIGN_GRAIN),
+        KPI_CAMPAIGN_GRAIN,
     )
-    return _kpi_block(m.groupBy("campaign_id", "campaign_name", "channel"))
 
 
 def incremental_refresh_channel_daily(
@@ -210,9 +186,10 @@ def _kpi_totals(
 
 
 def kpi_from_totals(totals: DataFrame, grain: list[str]) -> DataFrame:
-    """Derive the full KPI select list from stored raw totals —
-    identical values to ``_kpi_block`` over the same fact rows (decimal
-    sums are exact, and every ratio is a function of the sums)."""
+    """The KPI select list (``04_views.sql:102-142`` / ``:185-227``)
+    over raw totals at ``grain``: every ratio is a function of the sums,
+    and decimal sums are exact, so stored totals and a fresh aggregate
+    give identical rows."""
     rev, cost, spend = F.col("revenue"), F.col("cost"), F.col("spend")
     orders, clicks, impr = F.col("orders"), F.col("clicks"), F.col("impressions")
     return totals.select(

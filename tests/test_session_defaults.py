@@ -1,5 +1,6 @@
 """``get_spark`` sizes a local session from the CPUs it may run on when
-``SPARK_GRAFT_CPUS`` is unset, and from the variable when it is set."""
+``SPARK_GRAFT_CPUS`` is unset, and from the variable when it is set; the
+suite's spread width follows the same default."""
 
 from __future__ import annotations
 
@@ -35,10 +36,10 @@ class _Builder:
         )
 
 
-def _fresh_session_module():
-    """A private copy of the module, so its import-time defaults are
+def _fresh_copy(module):
+    """A private copy of ``module``, so its import-time defaults are
     computed under the current environment."""
-    spec = importlib.util.spec_from_file_location("_session_copy", session.__file__)
+    spec = importlib.util.spec_from_file_location("_fresh_copy", module.__file__)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -51,13 +52,21 @@ def test_cpu_default_sets_threads_and_shuffle_partitions(monkeypatch, env, want)
         monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     else:
         monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
-    mod = _fresh_session_module()
+    mod = _fresh_copy(session)
     assert mod.default_cpus() == want
     assert mod.DEFAULT_SHUFFLE_PARTITIONS == want
 
     builder = _Builder()
     monkeypatch.setattr(mod, "SparkSession", types.SimpleNamespace(builder=builder))
-    monkeypatch.setattr(mod, "ensure_disk_headroom", lambda: 0)
     mod.get_spark()
     assert builder.conf["master"] == f"local[{want}]"
     assert builder.conf["spark.sql.shuffle.partitions"] == str(want)
+
+
+def test_spread_partitions_follow_the_session_cpu_default(monkeypatch):
+    """The suite's spread width reads the CPU count the way the session
+    does: an empty ``SPARK_GRAFT_CPUS`` means the affinity mask."""
+    from marketing_etl_analytics_spark.suite import harness
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert _fresh_copy(harness)._SPREAD_PARTITIONS == len(os.sched_getaffinity(0))
