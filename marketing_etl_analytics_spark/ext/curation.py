@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # Max collected center rows for the Arrow/NumPy closure evaluators
 # (r10, guide §4.2): nearest-center assignment, IVF probing, and
@@ -247,23 +248,23 @@ def farthest_first_from_pool(pool: list[tuple], k: int) -> list:
 KMPAR_ROUNDS = 3
 
 
-def _dot_expr() -> str:
-    """Exact dot product template on the 1e-12 integer lattice.
-
-    Per-term FLOOR(x*y * 1e12 + 0.5) on identical IEEE doubles is
-    engine-invariant, and BIGINT addition is exact and order-free —
-    the SPARK_DOT/SQL_DOT discipline (suite/ext.py, hardened fc3b048)
-    that the suite oracles for the semantic-dedup entries already
-    replay. The previous per-term CAST(... AS DECIMAL(38,12)) snap was
-    both slower (interpreted BigDecimal per term inside the
-    higher-order function) and the one place the engine's formula
-    differed from its own oracle's."""
-    return (
-        "(CAST(aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
-        " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
-        " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
-        " AS DOUBLE) / 1e12)"
-    )
+# Exact dot product template on the 1e-12 INTEGER lattice, formatted
+# with column expressions ``a`` and ``b``. Per-term
+# FLOOR(x*y * 1e12 + 0.5) on identical IEEE doubles is
+# engine-invariant, and BIGINT addition is exact and order-free, so
+# the sum cannot diverge at any term count; the suite's DuckDB oracles
+# replay it as SQL_DOT (suite/ext.py). The previous per-term
+# CAST(... AS DECIMAL(38,12)) snap left one engine-specific operation
+# in the chain — Java BigDecimal HALF_UP vs DuckDB scaled-multiply can
+# tie-round a term 1e-12 apart, which flipped a 6-dp l2_norm at the
+# 2 M-vector 1000x sweep (ext_embed_transform, vec 1032038) — and ran
+# as interpreted BigDecimal per term inside the higher-order function.
+SPARK_DOT = (
+    "(CAST(aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
+    " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
+    " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
+    " AS DOUBLE) / 1e12)"
+)
 
 
 def kmeanspar_seeds(
@@ -310,7 +311,7 @@ def kmeanspar_seeds(
     # distance 1 instead of an ANSI divide-by-zero; mirrored in the
     # suite oracle (_sql_kmeanspar_ctes)
     cos = F.coalesce(
-        F.expr(_dot_expr().format(a="_v", b="_ce"))
+        F.expr(SPARK_DOT.format(a="_v", b="_ce"))
         / F.nullif(F.sqrt(F.col("_vn2") * F.col("_cn2")), F.lit(0.0)),
         F.lit(0.0),
     )
@@ -514,8 +515,19 @@ def semantic_assign(
     collect. Approximate in general (a row whose true centroid lives
     outside the probed super-clusters mis-assigns); equality vs exact
     argmax on the graded corpora is pinned by pytest.
+
+    Raises ValueError when ``key`` is not an integer column (center
+    ids are written as bigint); a NULL vector fails the first job
+    that reads it, with the same message on every path.
     """
-    dot = _dot_expr()  # 1e-12 integer-lattice dot (engine-invariant)
+    from marketing_etl_analytics_spark.ext.embedding import null_vector_error
+
+    key_type = df.schema[key].dataType
+    if not isinstance(key_type, IntegralType):
+        raise ValueError(
+            f"semantic_assign key {key!r} must be an integer column,"
+            f" got {key_type.simpleString()}"
+        )
     # refine bits come from dims 9..16 when they exist; clamped to the
     # vector's width (sequence counts DOWN past the end, and ANSI-mode
     # element_at throws on out-of-range — both guarded), degrading to
@@ -529,8 +541,10 @@ def semantic_assign(
     )
     b = df.select(
         F.col(key),
-        F.col(vec),
-        F.expr(dot.format(a=vec, b=vec)).alias("_n2"),
+        F.when(F.col(vec).isNull(), F.raise_error(F.lit(null_vector_error(vec))))
+        .otherwise(F.col(vec))
+        .alias(vec),
+        F.expr(SPARK_DOT.format(a=vec, b=vec)).alias("_n2"),
         F.expr(sub).alias("_sub"),
     )
     cent_cols = [
@@ -539,7 +553,7 @@ def semantic_assign(
         F.col("_n2").alias("_cn2"),
     ]
     if seeding == "farthest":
-        pool = quantize_pool(df, key, vec, pool_factor * n_centroids)
+        pool = quantize_pool(b, key, vec, pool_factor * n_centroids)
         seed_keys = farthest_first_from_pool(pool, n_centroids)
         cent = (
             b.filter(F.col(key).isin(seed_keys)).select(*cent_cols)
@@ -581,7 +595,9 @@ def semantic_assign(
         )
     else:
         raise ValueError(f"unknown seeding mode: {seeding!r}")
-    cos_c = F.expr(dot.format(a=vec, b="_ce")) / F.sqrt(F.col("_n2") * F.col("_cn2"))
+    cos_c = F.expr(SPARK_DOT.format(a=vec, b="_ce")) / F.sqrt(
+        F.col("_n2") * F.col("_cn2")
+    )
     # Arrow/NumPy closure path (r10, guide §4.2): with a planning-
     # sized center set, the probe/argmax dots run vectorized per
     # Arrow batch — no n*k crossJoin rows, no rank-window exchange.
@@ -658,7 +674,7 @@ def semantic_assign(
                 F.col("_n2").alias("_sn2"),
             )
         # centroid -> home super-cluster (k x sqrt(k), both broadcast)
-        cos_cs = F.expr(dot.format(a="_ce", b="_se")) / F.sqrt(
+        cos_cs = F.expr(SPARK_DOT.format(a="_ce", b="_se")) / F.sqrt(
             F.col("_cn2") * F.col("_sn2")
         )
         wcs = Window.partitionBy("_cid").orderBy(F.desc("_ccs"), F.asc("_sid"))
@@ -695,7 +711,7 @@ def semantic_assign(
                     "cluster", keep=[key, "_sub"],
                 ).select(key, "cluster", "_sub")
         else:
-            cos_ds = F.expr(dot.format(a=vec, b="_se")) / F.sqrt(
+            cos_ds = F.expr(SPARK_DOT.format(a=vec, b="_se")) / F.sqrt(
                 F.col("_n2") * F.col("_sn2")
             )
             wds = Window.partitionBy(key).orderBy(
@@ -779,7 +795,6 @@ def semantic_dedup(
     the index is the amortized artifact; assignment parameters are
     then taken from it, not from this call's arguments).
     """
-    dot = _dot_expr()  # 1e-12 integer-lattice dot (engine-invariant)
     if keyed is None:
         keyed = semantic_assign(
             df,
@@ -793,7 +808,7 @@ def semantic_dedup(
             n_probe=n_probe,
         )
     b = df.select(
-        F.col(key), F.col(vec), F.expr(dot.format(a=vec, b=vec)).alias("_n2")
+        F.col(key), F.col(vec), F.expr(SPARK_DOT.format(a=vec, b=vec)).alias("_n2")
     )
     m = keyed.join(b.select(key, vec, "_n2"), key)
     mu = m.select(

@@ -1,15 +1,61 @@
 """Deduplication operators, column-parameterized.
 
-Scale shape: shingling and minhashing are narrow (per-row generate +
-explode, map-side); the only shuffles are the (doc, perm) partial-min
-aggregation and the (band, signature) candidate join — candidate
-generation never materializes all pairs.
+The one implementation of shingle -> MinHash -> LSH and of exact
+dedup: the suite's dedup entries (``suite/ext.py``), the streaming
+dedup ingest (``streaming/sinks.py``) and the multimodal near-dup
+operators call these, and the suite's DuckDB oracles spell the same
+hash family in SQL.
+
+MinHash: one md5 per 3-word shingle (first 48 bits, reduced mod
+``MH_PRIME``); permutation p maps it to (h * A_p + B_p) mod MH_PRIME
+(Carter–Wegman), and a document's signature is the per-permutation
+minimum over its shingles. ``N_PERM`` minima form ``N_BANDS`` bands
+of ``ROWS_PER_BAND``; two documents are LSH candidates when they
+share a whole band.
+
+Scale shape: shingling and hashing are a per-row explode (map-side);
+all ``N_PERM`` minima are plain aggregate columns of ONE doc-keyed
+aggregation with map-side partial MIN; the band explode is per-row;
+the only other shuffle is the (band, band_sig) candidate join —
+candidate generation never materializes all pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+N_PERM = 16
+N_BANDS = 4
+ROWS_PER_BAND = N_PERM // N_BANDS
+
+# MinHash permutations as universal hashes over ONE md5 per shingle:
+# h = first 48 bits of md5(shingle) reduced mod M; perm p's hash is
+# (h * A_p + B_p) mod M (Carter–Wegman). One md5 per shingle instead
+# of N_PERM — the md5 calls were ~80% of the operator's runtime.
+# (h % M) < 2^31 and A_p < M keep every product under 2^62: exact in
+# BIGINT in both engines.
+MH_PRIME = 2147483647
+PERM_A = [(2654435761 * p + 1) % MH_PRIME for p in range(N_PERM)]
+PERM_B = [(40503 * p + 17) % MH_PRIME for p in range(N_PERM)]
+
+# --- LSH bucket-size cap (skew guard) ----------------------------------------
+#
+# A hot band signature (boilerplate-heavy corpora: empty docs, licence
+# headers, templated pages) makes one LSH bucket quadratic — C(n, 2)
+# candidate pairs from a single (band, signature) value, the known LSH
+# skew hazard at corpus scale. Standard mitigation: treat
+# super-frequent signatures as spam and drop those BUCKETS. Docs stay
+# in their other bands, so genuine near-dups of distinctive text still
+# surface; what is suppressed is only the degenerate
+# everything-matches-everything signature. Per-bucket pair count is
+# then bounded by C(LSH_BUCKET_CAP, 2).
+#
+# Scale shape: bucket sizes come from a map-side-combined groupBy on
+# the band key (output = distinct signatures, tiny), hot signatures
+# are removed with a BROADCAST anti-join — no window sort over the
+# full candidate table, no extra shuffle of the big side.
+LSH_BUCKET_CAP = 128
 
 
 def shingles(text: Column, n: int = 3) -> Column:
@@ -30,6 +76,37 @@ def shingles(text: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def shingle_zip(text: str) -> str:
+    """SQL for the 3-word shingles of column ``text`` as an
+    ``arrays_zip`` of three shifted token slices.
+
+    Codegen-friendly: a transform() lambda runs interpreted per
+    element (~5x slower than this builtin-only plan). NOT deduped per
+    doc; callers take MIN or a distinct, so multiset vs set is
+    value-neutral. Only defined for texts of >= 3 tokens."""
+    toks = f"split(lower({text}), ' ')"
+    return (
+        f"arrays_zip(slice({toks}, 1, size({toks}) - 2),"
+        f" slice({toks}, 2, size({toks}) - 2),"
+        f" slice({toks}, 3, size({toks}) - 2))"
+    )
+
+
+def shingle_rows(df: DataFrame, key: str, text: str, *extra_cols: str) -> DataFrame:
+    """(key, *extra_cols, sh_str): one row per 3-word shingle of
+    lowercased, space-tokenized ``text``; texts below 3 tokens emit
+    no rows."""
+    return (
+        df.filter(F.expr(f"size(split(lower({text}), ' ')) >= 3"))
+        .select(key, *extra_cols, F.explode(F.expr(shingle_zip(text))).alias("z"))
+        .select(
+            key,
+            *extra_cols,
+            F.concat_ws(" ", "z.0", "z.1", "z.2").alias("sh_str"),
+        )
+    )
+
+
 def exact_dedup(df: DataFrame, key: str, text: str) -> DataFrame:
     """Map every row to its canonical (min-key) representative by
     normalized-text hash; ``is_dup`` marks rows to drop."""
@@ -44,42 +121,62 @@ def exact_dedup(df: DataFrame, key: str, text: str) -> DataFrame:
     )
 
 
-def minhash_bands(
-    df: DataFrame, key: str, text: str, n_perm: int = 16, n_bands: int = 4
-) -> DataFrame:
-    """(key, band, band_sig) MinHash band signatures.
-
-    Permutation i's hash of a shingle is md5(i ':' shingle); the min
-    over a doc's shingles approximates a random-permutation min-hash.
-    """
-    rows_per_band = n_perm // n_bands
-    spark = df.sparkSession
-    exploded = df.select(
-        F.col(key), F.explode(shingles(F.col(text))).alias("shingle")
-    )
-    perms = spark.range(n_perm).select(F.col("id").cast("int").alias("perm"))
-    hashed = (
-        exploded.crossJoin(F.broadcast(perms))
-        .groupBy(key, "perm")
-        .agg(
-            F.min(
-                F.md5(F.concat(F.col("perm").cast("string"), F.lit(":"), F.col("shingle")))
-            ).alias("mh")
-        )
+def minhash_signatures(df: DataFrame, key: str, text: str) -> DataFrame:
+    """(key, mh0 .. mh{N_PERM-1}) MinHash signatures: one md5 per
+    shingle, every permutation minimum an aggregate column of one
+    doc-keyed aggregation. Texts below 3 tokens have no row."""
+    h = (
+        F.conv(F.substring(F.md5("sh_str"), 1, 12), 16, 10).cast("long") % MH_PRIME
     )
     return (
-        hashed.withColumn("band", F.expr(f"perm div {rows_per_band}"))
-        .groupBy(key, "band")
+        shingle_rows(df, key, text)
+        .select(key, h.alias("h"))
+        .groupBy(key)
         .agg(
-            F.concat_ws(
-                "|",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("perm", "mh"))),
-                    lambda s: s["mh"],
-                ),
-            ).alias("band_sig")
+            *[
+                F.min((F.col("h") * PERM_A[p] + PERM_B[p]) % MH_PRIME).alias(f"mh{p}")
+                for p in range(N_PERM)
+            ]
         )
     )
+
+
+def signature_bands(sigs: DataFrame, key: str) -> DataFrame:
+    """(key, band, band_sig) from a ``minhash_signatures`` frame:
+    band b's signature is its ROWS_PER_BAND permutation minima joined
+    with '|', in permutation order. Uncapped."""
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "|",
+                *[F.col(f"mh{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
+            ).alias("band_sig"),
+        )
+        for b in range(N_BANDS)
+    ]
+    return sigs.select(key, F.explode(F.array(*band_cols)).alias("bb")).select(
+        key, F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
+    )
+
+
+def minhash_bands(df: DataFrame, key: str, text: str) -> DataFrame:
+    """(key, band, band_sig) MinHash band signatures, uncapped; apply
+    ``cap_lsh_buckets`` where corpus-global statistics are available."""
+    return signature_bands(minhash_signatures(df, key, text), key)
+
+
+def cap_lsh_buckets(
+    bands: DataFrame, keys: list[str], cap: int = LSH_BUCKET_CAP
+) -> DataFrame:
+    """Drop rows belonging to LSH buckets with more than ``cap`` members."""
+    hot = (
+        bands.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_bn"))
+        .filter(F.col("_bn") > cap)
+        .drop("_bn")
+    )
+    return bands.join(F.broadcast(hot), keys, "left_anti")
 
 
 def lsh_candidate_pairs(bands: DataFrame, key: str) -> DataFrame:

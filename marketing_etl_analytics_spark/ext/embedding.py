@@ -303,14 +303,23 @@ def arrow_lattice_dots(
 # (Spark sort), ties break on ascending center id (centers are passed
 # sorted ascending and NumPy argmax/stable argsort pick the first).
 
+def null_vector_error(vec: str) -> str:
+    """The one error text for a NULL vector, raised by the Arrow
+    evaluators here and by the frame-path guard in ext.curation."""
+    return f"NULL vector in column {vec!r}"
+
+
 def _np_vecs(batch, name: str, m: int):
     """(m, d) float64 matrix from a list column — asserting the batch
-    is rectangular first (ADVICE r9 #1: a ragged batch whose total
-    element count happens to divide by m would otherwise be silently
-    reshaped across misaligned rows instead of failing)."""
+    has no NULL vector and is rectangular first (ADVICE r9 #1: a
+    ragged batch whose total element count happens to divide by m
+    would otherwise be silently reshaped across misaligned rows
+    instead of failing)."""
     import numpy as np
 
     col = batch.column(name)
+    if col.null_count:
+        raise ValueError(null_vector_error(name))
     lens = np.unique(col.value_lengths().to_numpy(zero_copy_only=False))
     if len(lens) != 1:
         raise ValueError(
@@ -354,12 +363,30 @@ def _np_cos_matrix(vm, n2, cm, cn2, zero_cos: float | None):
     return np.where(denom == 0.0, zero_cos, cos)
 
 
-def _rank_clean(cos):
-    """Spark's sort ranks NaN greater than any double; map NaN to +inf
-    so NumPy selections agree."""
+def _desc_order(cos):
+    """Per-row column order by descending score under Spark's sort
+    rule: NaN ranks above every double, +inf included; ties keep
+    ascending column order (np.lexsort is stable)."""
     import numpy as np
 
-    return np.where(np.isnan(cos), np.inf, cos)
+    nan = np.isnan(cos)
+    return np.lexsort((-np.where(nan, 0.0, cos), ~nan), axis=-1)
+
+
+def _argmax(cos, mask=None):
+    """Per-row first column of ``_desc_order`` in O(k): the lowest NaN
+    column if the row has one, else the lowest column holding the max.
+    ``mask`` restricts each row to its True columns (a row with none
+    gets column 0; callers drop it)."""
+    import numpy as np
+
+    nan = np.isnan(cos)
+    ok = np.ones_like(nan) if mask is None else mask
+    elig = ok & np.where((nan & ok).any(axis=1, keepdims=True), nan, True)
+    val = np.where(elig & ~nan, cos, -np.inf)
+    best = np.argmax(val, axis=1)
+    # all eligible scores NaN or -inf: the first eligible column wins
+    return np.where(val.max(axis=1) == -np.inf, np.argmax(elig, axis=1), best)
 
 
 def _center_arrays(centers):
@@ -437,8 +464,8 @@ def arrow_nearest_center(
             else:
                 vm = _np_vecs(batch, vec, m)
                 n2v = np.asarray(batch.column(n2), dtype=np.float64)
-                cos = _rank_clean(_np_cos_matrix(vm, n2v, cmat, cn2, zero_cos))
-                best = pa.array(cids[np.argmax(cos, axis=1)], pa.int64())
+                cos = _np_cos_matrix(vm, n2v, cmat, cn2, zero_cos)
+                best = pa.array(cids[_argmax(cos)], pa.int64())
             yield pa.RecordBatch.from_arrays(cols + [best], names=names)
 
     return df.mapInArrow(batches, out_schema)
@@ -539,17 +566,16 @@ def arrow_ivf_assign(
                 continue
             vm = _np_vecs(batch, vec, m)
             n2v = np.asarray(batch.column(n2), dtype=np.float64)
-            # probe ranking: desc cleaned cos, stable -> asc sid ties
-            scos = _rank_clean(_np_cos_matrix(vm, n2v, smat, sn2, None))
-            order = np.argsort(-scos, axis=1, kind="stable")[:, :n_probe]
+            # probe ranking: desc cos (NaN first), asc sid ties
+            scos = _np_cos_matrix(vm, n2v, smat, sn2, None)
+            order = _desc_order(scos)[:, :n_probe]
             probe_mask = np.zeros((m, len(sids)), dtype=bool)
             np.put_along_axis(probe_mask, order, True, axis=1)
             # candidate centroids: home super among the row's probes
             cand = probe_mask[:, home_idx]
-            ccos = _rank_clean(_np_cos_matrix(vm, n2v, cmat, cn2, None))
-            scores = np.where(cand, ccos, -np.inf)
+            ccos = _np_cos_matrix(vm, n2v, cmat, cn2, None)
             alive = cand.any(axis=1)
-            best_all = cids[np.argmax(scores, axis=1)]
+            best_all = cids[_argmax(ccos, cand)]
             arrs = []
             for c in keep:
                 col = batch.column(c)

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets
+
 FEATURE_DIM = 8
 
 FEATURES_SCHEMA = StructType(
@@ -276,9 +278,7 @@ def dhash_near_dups(
     column family: per-row fingerprint (map-side), 4x16-bit band
     explode, candidate join on (band, band_val) only (never all
     pairs), exact Hamming verify, hot buckets capped by the shared
-    spam-signature guard (suite.ext.cap_lsh_buckets)."""
-    from marketing_etl_analytics_spark.suite.ext import cap_lsh_buckets
-
+    spam-signature guard (ext.dedup.cap_lsh_buckets)."""
     h = image_dhash(df).filter(F.col("dhash").isNotNull())
     banded = h.select(
         "doc_id",
@@ -349,8 +349,6 @@ def audio_near_dups(
     Hamming verify), applied to the WAV column family. Gain-scaled
     or lightly-noised copies of a clip pair up; unrelated clips
     don't."""
-    from marketing_etl_analytics_spark.suite.ext import cap_lsh_buckets
-
     h = audio_fp(df).filter(F.col("afp").isNotNull())
     banded = h.select(
         "doc_id",

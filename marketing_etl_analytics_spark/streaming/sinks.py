@@ -172,7 +172,7 @@ def dedup_ingest_sink(
 
     Bucket caps are the standing dedup entries' concern
     (corpus-global statistics); ``cap_buckets=True`` composes
-    ``suite.ext.cap_lsh_buckets`` over the knowledge-so-far (index
+    ``ext.dedup.cap_lsh_buckets`` over the knowledge-so-far (index
     plus arriving batch), dropping spam signatures from BOTH join
     sides so a boilerplate signature shared by thousands of docs can
     never make a batch quadratic. The cap uses prefix statistics — a
@@ -210,18 +210,18 @@ def dedup_ingest_sink(
 
     from pyspark.sql import functions as F
 
-    from marketing_etl_analytics_spark.suite.ext import (
-        minhash_bands_frame,
-        minhash_signatures_frame,
+    from marketing_etl_analytics_spark.ext.dedup import (
+        cap_lsh_buckets,
+        minhash_bands,
     )
 
     def ingest_batch_compact(batch_df: DataFrame, batch_id: int) -> None:
         # batchId-keyed OVERWRITE subdirs + own-subdir exclusion: the
         # same two replay shields as the uncompacted path below
         sp = batch_df.sparkSession
-        bands = minhash_bands_frame(
-            minhash_signatures_frame(batch_df)
-        ).localCheckpoint(eager=True)
+        bands = minhash_bands(batch_df, "doc_id", "text").localCheckpoint(
+            eager=True
+        )
         this_sub = f"b{batch_id:06d}"
         prior_subs = (
             [
@@ -288,9 +288,9 @@ def dedup_ingest_sink(
         # (idempotence by deterministic placement, the foreachBatch
         # analog of the logfmt writer's rename-commit).
         sp = batch_df.sparkSession
-        bands = minhash_bands_frame(
-            minhash_signatures_frame(batch_df)
-        ).localCheckpoint(eager=True)  # several consumers below
+        bands = minhash_bands(batch_df, "doc_id", "text").localCheckpoint(
+            eager=True
+        )  # several consumers below
         this_sub = f"b{batch_id:06d}"
         prior_subs = (
             [
@@ -304,8 +304,6 @@ def dedup_ingest_sink(
         idx = sp.read.parquet(*prior_subs) if prior_subs else None
         probe = bands
         if cap_buckets:
-            from marketing_etl_analytics_spark.suite.ext import cap_lsh_buckets
-
             # decisions-at-time skew guard: signatures whose bucket
             # exceeds the cap across index+batch drop from BOTH sides
             knowledge = idx.unionByName(bands) if idx is not None else bands

@@ -1,4 +1,4 @@
-"""LLM-data-pipeline extension operators (north star, SURVEY.md §7.4).
+"""LLM-data-pipeline extension entries (north star, SURVEY.md §7.4).
 
 Beyond the reference's surface: deduplication (exact, MinHash-LSH,
 n-gram Jaccard), embedding similarity search (brute-force cosine and
@@ -6,7 +6,14 @@ an LSH-bucketed scale path), text analysis (quality scoring, language
 ID, token counting, fingerprinting), multimodal binary plumbing, and
 the streaming-equivalent tumbling-window aggregation.
 
-Everything here is pure DataFrame/SQL-expressible (no Python UDFs in
+This module holds suite code only: the memoized corpus indexes, the
+DuckDB oracle SQL and the registered entries. The dedup operators
+themselves (shingling, MinHash, LSH bands, the bucket cap, exact
+dedup) and the lattice dot product live in the library
+(``ext/dedup.py``, ``ext/curation.py``); the entries here call them
+with ``doc_id``/``text``.
+
+Everything is pure DataFrame/SQL-expressible (no Python UDFs in
 the hot path) so the DuckDB oracle can verify it, and the same plan
 scales: shingling/minhashing are per-row generate+explode (map-side,
 no shuffle), candidate generation shuffles on (band, signature) or
@@ -15,15 +22,15 @@ no shuffle), candidate generation shuffles on (band, signature) or
 Portability notes (Spark <-> DuckDB):
 - md5(string) is the shared deterministic hash.
 - dot products snap each elementwise product to the 1e-12 INTEGER
-  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT /
-  SQL_DOT below) — composed only of IEEE ops that are bit-identical
-  on identical inputs in every engine, so the order-free sum cannot
-  diverge at any term count. (The earlier per-term DECIMAL(38,12)
-  cast left one engine-specific tie-rounding in the chain — Java
-  BigDecimal HALF_UP vs DuckDB scaled multiply — which the sf100b
-  sweep caught flipping once in 128 M terms; fc3b048. Float32 inputs
-  widen to double exactly; a single product of two float32 fits
-  double's 53-bit mantissa exactly.)
+  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT in
+  ext/curation.py, SQL_DOT below) — composed only of IEEE ops that
+  are bit-identical on identical inputs in every engine, so the
+  order-free sum cannot diverge at any term count. (The earlier
+  per-term DECIMAL(38,12) cast left one engine-specific tie-rounding
+  in the chain — Java BigDecimal HALF_UP vs DuckDB scaled multiply —
+  which the sf100b sweep caught flipping once in 128 M terms;
+  fc3b048. Float32 inputs widen to double exactly; a single product
+  of two float32 fits double's 53-bit mantissa exactly.)
 """
 
 from __future__ import annotations
@@ -31,9 +38,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext import dedup
+from marketing_etl_analytics_spark.ext.curation import SPARK_DOT
+from marketing_etl_analytics_spark.ext.dedup import (
+    LSH_BUCKET_CAP,
+    MH_PRIME,
+    N_BANDS,
+    N_PERM,
+    PERM_A,
+    PERM_B,
+    ROWS_PER_BAND,
+)
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
-    money,
     ratio,
     sql_pround,
     sql_ratio,
@@ -44,41 +61,12 @@ from marketing_etl_analytics_spark.suite.registry import register
 
 # --- shared shingling fragments --------------------------------------------
 
-# 3-word shingles over space-tokenized lowercased text, distinct.
-SPARK_SHINGLES = (
-    "array_distinct(transform(sequence(1, size(split(lower(text), ' ')) - 2),"
-    " i -> concat_ws(' ', slice(split(lower(text), ' '), i, 3))))"
-)
+# 3-word shingles over space-tokenized lowercased text, distinct: the
+# oracle-side spec of ext.dedup.shingle_rows.
 SQL_SHINGLES = (
     "list_distinct(list_transform(generate_series(1, len(string_split(lower(text), ' ')) - 2),"
     " i -> array_to_string(list_slice(string_split(lower(text), ' '), i, i + 2), ' ')))"
 )
-
-# codegen-friendly exploded form: arrays_zip of three shifted slices
-# instead of a transform() lambda (higher-order functions run
-# interpreted per element — ~5x slower than this builtin-only plan).
-# NOT deduped per doc; callers take MIN or collect_set, so multiset
-# vs set is value-neutral. The distinct SQL_SHINGLES stays the
-# oracle-side spec.
-_TOKS = "split(lower(text), ' ')"
-_SHINGLE_ZIP = (
-    f"arrays_zip(slice({_TOKS}, 1, size({_TOKS}) - 2),"
-    f" slice({_TOKS}, 2, size({_TOKS}) - 2),"
-    f" slice({_TOKS}, 3, size({_TOKS}) - 2))"
-)
-
-
-def shingle_rows(docs: DataFrame, *extra_cols: str) -> DataFrame:
-    """(doc_id, *extra_cols, sh_str): one row per 3-word shingle."""
-    return (
-        docs.filter(F.expr(f"size({_TOKS}) >= 3"))
-        .select("doc_id", *extra_cols, F.explode(F.expr(_SHINGLE_ZIP)).alias("z"))
-        .select(
-            "doc_id",
-            *extra_cols,
-            F.concat_ws(" ", "z.0", "z.1", "z.2").alias("sh_str"),
-        )
-    )
 
 
 # --- exact dedup (hash-groupBy) --------------------------------------------
@@ -106,36 +94,14 @@ def shingle_rows(docs: DataFrame, *extra_cols: str) -> DataFrame:
 )
 def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    hashed = docs.select("doc_id", F.md5(F.lower("text")).alias("text_hash"))
-    groups = hashed.groupBy("text_hash").agg(
-        F.count(F.lit(1)).alias("group_size"),
-        F.min("doc_id").alias("canonical_id"),
-    )
-    return (
-        hashed.join(groups, "text_hash")
-        .select(
-            "doc_id", "text_hash", "canonical_id", "group_size",
-            F.when(F.col("doc_id") != F.col("canonical_id"), 1).otherwise(0).alias("is_dup"),
-        )
-        .orderBy("doc_id")
-    )
+    return dedup.exact_dedup(docs, "doc_id", "text").orderBy("doc_id")
 
 
 # --- MinHash + LSH near-dedup ----------------------------------------------
-
-N_PERM = 16
-N_BANDS = 4
-ROWS_PER_BAND = N_PERM // N_BANDS
-
-# MinHash permutations as universal hashes over ONE md5 per shingle:
-# h = first 48 bits of md5(shingle) reduced mod M; perm p's hash is
-# (h * A_p + B_p) mod M (Carter–Wegman). One md5 per shingle instead
-# of N_PERM — the md5 calls were ~80% of the operator's runtime.
-# (h % M) < 2^31 and A_p < M keep every product under 2^62: exact in
-# BIGINT in both engines.
-MH_PRIME = 2147483647
-PERM_A = [(2654435761 * p + 1) % MH_PRIME for p in range(N_PERM)]
-PERM_B = [(40503 * p + 17) % MH_PRIME for p in range(N_PERM)]
+#
+# Oracle spelling of ext.dedup's hash family: one 48-bit md5-derived
+# hash per shingle, N_PERM Carter–Wegman permutation minima, bands of
+# ROWS_PER_BAND minima joined with '|'.
 
 _SQL_MH_MINS = ",\n             ".join(
     f"MIN((h * {PERM_A[p]} + {PERM_B[p]}) % {MH_PRIME}) AS mh{p}"
@@ -148,123 +114,12 @@ _SQL_BAND_SIG = " ".join(
     for b in range(N_BANDS)
 )
 
-# --- LSH bucket-size cap (skew guard) ----------------------------------------
-#
-# A hot band signature (boilerplate-heavy corpora: empty docs, licence
-# headers, templated pages) makes one LSH bucket quadratic — C(n, 2)
-# candidate pairs from a single (band, signature) value, the known LSH
-# skew hazard at corpus scale. Standard mitigation: treat
-# super-frequent signatures as spam and drop those BUCKETS. Docs stay
-# in their other bands, so genuine near-dups of distinctive text still
-# surface; what is suppressed is only the degenerate
-# everything-matches-everything signature. Per-bucket pair count is
-# then bounded by C(LSH_BUCKET_CAP, 2).
-#
-# Scale shape: bucket sizes come from a map-side-combined groupBy on
-# the band key (output = distinct signatures, tiny), hot signatures
-# are removed with a BROADCAST anti-join — no window sort over the
-# full candidate table, no extra shuffle of the big side.
-LSH_BUCKET_CAP = 128
 
-
-def cap_lsh_buckets(
-    bands: DataFrame, keys: list[str], cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """Drop rows belonging to LSH buckets with more than ``cap`` members."""
-    hot = (
-        bands.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > cap)
-        .drop("_bn")
-    )
-    return bands.join(F.broadcast(hot), keys, "left_anti")
-
-
-def sql_cap_lsh_buckets(inner: str, keys: str, cap: int = LSH_BUCKET_CAP) -> str:
-    """Oracle twin of cap_lsh_buckets. Window-count formulation — the
-    oracle needs identical VALUES, not the distributed plan shape."""
-    return (
-        f"SELECT * EXCLUDE (_bn) FROM ("
-        f"SELECT *, COUNT(*) OVER (PARTITION BY {keys}) AS _bn FROM ({inner})"
-        f") WHERE _bn <= {cap}"
-    )
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mh0..mh15) MinHash signature table, memoized.
-
-    One md5 per shingle; all 16 Carter–Wegman permutation min-hashes
-    as plain aggregate columns in ONE codegen'd aggregation: no perm
-    cross-join (16x shuffle volume), no second (doc, perm) shuffle,
-    map-side partial MIN combine. Signatures are ~130 B/doc but cost a
-    full shingle explode + md5 to build — this is the persisted corpus
-    index that both the standing dedup and the incremental ingest join
-    read (built once per corpus version, see ``common.memo_df``)."""
-
-    return memo_df(
-        spark, sf_dir, "minhash_sigs",
-        lambda: minhash_signatures_frame(t(spark, sf_dir, "documents")),
-    )
-
-
-def minhash_signatures_frame(docs: DataFrame) -> DataFrame:
-    """Frame-level signature builder — the memoized table above for a
-    full corpus, or an arriving micro-batch in the streaming ingest."""
-    exploded = shingle_rows(docs).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("sh_str"), 1, 12), 16, 10).cast("long")
-            % MH_PRIME
-        ).alias("h"),
-    )
-    return exploded.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("h") * PERM_A[p] + PERM_B[p]) % MH_PRIME).alias(f"mh{p}")
-            for p in range(N_PERM)
-        ]
-    )
-
-
-def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, band, band_sig) capped LSH band table, memoized.
-
-    Band signature = perm-ordered mh concat; spam signatures (buckets
-    over LSH_BUCKET_CAP) already dropped, so every consumer joins on a
-    skew-bounded key without re-running the hot-bucket aggregate."""
-
-    return memo_df(
-        spark, sf_dir, "minhash_bands",
-        lambda: cap_lsh_buckets(
-            minhash_bands_frame(minhash_signatures(spark, sf_dir)),
-            ["band", "band_sig"],
-        ),
-    )
-
-
-def minhash_bands_frame(hashed: DataFrame) -> DataFrame:
-    """(doc_id, band, band_sig) from a signature frame — UNCAPPED;
-    callers apply cap_lsh_buckets where corpus-global statistics are
-    available (the memoized table above does)."""
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|",
-                *[F.col(f"mh{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-            ).alias("band_sig"),
-        )
-        for b in range(N_BANDS)
-    ]
-    return hashed.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_sig").alias("band_sig")
-    )
-
-
-@register(
-    "ext_dedup_minhash_lsh",
-    f"""
-    WITH shingled AS (
+def sql_minhash_ctes(bands: str) -> str:
+    """Oracle CTE chain ``WITH shingled, exploded, hashed, <bands>``
+    ending in the UNCAPPED (doc_id, band, band_sig) table of the
+    documents corpus — ext.dedup.minhash_bands in DuckDB SQL."""
+    return f"""WITH shingled AS (
       SELECT doc_id, {SQL_SHINGLES} AS shingles
       FROM documents
       WHERE len(string_split(lower(text), ' ')) >= 3
@@ -280,11 +135,59 @@ def minhash_bands_frame(hashed: DataFrame) -> DataFrame:
       FROM exploded
       GROUP BY doc_id
     ),
-    bands0 AS (
+    {bands} AS (
       SELECT doc_id, band,
              CASE band {_SQL_BAND_SIG} END AS band_sig
       FROM hashed, (SELECT unnest(generate_series(0, {N_BANDS - 1})) AS band)
-    ),
+    )"""
+
+
+def sql_cap_lsh_buckets(inner: str, keys: str, cap: int = LSH_BUCKET_CAP) -> str:
+    """Oracle twin of ext.dedup.cap_lsh_buckets. Window-count
+    formulation — the oracle needs identical VALUES, not the
+    distributed plan shape."""
+    return (
+        f"SELECT * EXCLUDE (_bn) FROM ("
+        f"SELECT *, COUNT(*) OVER (PARTITION BY {keys}) AS _bn FROM ({inner})"
+        f") WHERE _bn <= {cap}"
+    )
+
+
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, mh0..mh15) MinHash signature table of the documents
+    corpus, memoized. Signatures are ~130 B/doc but cost a full
+    shingle explode + md5 to build — this is the persisted corpus
+    index that both the standing dedup and the incremental ingest join
+    read (built once per corpus version, see ``common.memo_df``)."""
+
+    return memo_df(
+        spark, sf_dir, "minhash_sigs",
+        lambda: dedup.minhash_signatures(
+            t(spark, sf_dir, "documents"), "doc_id", "text"
+        ),
+    )
+
+
+def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band, band_sig) capped LSH band table, memoized.
+
+    Spam signatures (buckets over LSH_BUCKET_CAP) already dropped, so
+    every consumer joins on a skew-bounded key without re-running the
+    hot-bucket aggregate."""
+
+    return memo_df(
+        spark, sf_dir, "minhash_bands",
+        lambda: dedup.cap_lsh_buckets(
+            dedup.signature_bands(minhash_signatures(spark, sf_dir), "doc_id"),
+            ["band", "band_sig"],
+        ),
+    )
+
+
+@register(
+    "ext_dedup_minhash_lsh",
+    f"""
+    {sql_minhash_ctes("bands0")},
     bands AS ({sql_cap_lsh_buckets("SELECT * FROM bands0", "band, band_sig")})
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(COUNT(*) AS BIGINT) AS shared_bands
@@ -301,19 +204,13 @@ def minhash_bands_frame(hashed: DataFrame) -> DataFrame:
     "per-bucket pair count.",
 )
 def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = minhash_bands(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        dedup.lsh_candidate_pairs(minhash_bands(spark, sf_dir), "doc_id")
+        .select(
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
+            "shared_bands",
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared_bands"))
         .orderBy(F.desc("shared_bands"), "doc_a", "doc_b")
     )
 
@@ -345,7 +242,7 @@ def ngram_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id")
         )
         docs2 = docs.join(reps, "doc_id", "left_semi")
-        hashed = shingle_rows(docs2).select(
+        hashed = dedup.shingle_rows(docs2, "doc_id", "text").select(
             "doc_id",
             F.conv(F.substring(F.md5("sh_str"), 1, 12), 16, 10).cast("long").alias("h"),
         )
@@ -468,21 +365,7 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding similarity: brute-force cosine top-k --------------------------
 
-# Per-term 1e-12 INTEGER lattice (same hardening as ext/embedding.py
-# sign_dot_expr, e311c9c): floor(x*y * 1e12 + 0.5) on identical IEEE
-# doubles is engine-invariant, and BIGINT addition is exact and
-# order-free. The previous per-term CAST(... AS DECIMAL(38,12)) snap
-# left one engine-specific operation in the chain — Java BigDecimal
-# HALF_UP vs DuckDB scaled-multiply can tie-round a term 1e-12 apart,
-# which flipped a 6-dp l2_norm at the 2 M-vector 1000x sweep
-# (ext_embed_transform, vec 1032038) exactly as it flipped a
-# projection at the 200 k-vector sf10 sweep before r6.
-SPARK_DOT = (
-    "(CAST(aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
-    " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
-    " AS DOUBLE) / 1e12)"
-)
+# Oracle twin of ext.curation.SPARK_DOT (the 1e-12 integer-lattice dot).
 SQL_DOT = (
     "(CAST(list_sum(list_transform(generate_series(1, len({a})),"
     " i -> CAST(FLOOR(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)"
@@ -793,7 +676,7 @@ def ext_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5(F.lower("text")).alias("full_hash"), "text"
     )
     fp = (
-        shingle_rows(with_fh, "full_hash")
+        dedup.shingle_rows(with_fh, "doc_id", "text", "full_hash")
         .groupBy("doc_id", "full_hash")
         .agg(F.min(F.md5("sh_str")).alias("min_shingle_hash"))
     )
@@ -849,27 +732,7 @@ _EVAL_MIN_SHARED = 3
 @register(
     "ext_dedup_eval",
     f"""
-    WITH shingled AS (
-      SELECT doc_id, {{SQL_SHINGLES}} AS shingles
-      FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= 3
-    ),
-    exploded AS (
-      SELECT doc_id,
-        ('0x' || substr(md5(unnest(shingles)), 1, 12))::BIGINT % {{MH_PRIME}} AS h
-      FROM shingled
-    ),
-    hashed AS (
-      SELECT doc_id,
-             {{_SQL_MH_MINS}}
-      FROM exploded
-      GROUP BY doc_id
-    ),
-    bands0 AS (
-      SELECT doc_id, band,
-             CASE band {{_SQL_BAND_SIG}} END AS band_sig
-      FROM hashed, (SELECT unnest(generate_series(0, {{NB1}})) AS band)
-    ),
+    {{MINHASH}},
     bands AS ({{CAPPED}}),
     cand AS (
       SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
@@ -910,11 +773,7 @@ _EVAL_MIN_SHARED = 3
       {{PRECISION}},
       {{RECALL}}
     """.format(
-        SQL_SHINGLES=SQL_SHINGLES,
-        MH_PRIME=MH_PRIME,
-        _SQL_MH_MINS=_SQL_MH_MINS,
-        _SQL_BAND_SIG=_SQL_BAND_SIG,
-        NB1=N_BANDS - 1,
+        MINHASH=sql_minhash_ctes("bands0"),
         CAP=LSH_BUCKET_CAP,
         CAPPED=sql_cap_lsh_buckets("SELECT * FROM bands0", "band, band_sig"),
         PRECISION=sql_ratio(
@@ -936,17 +795,8 @@ _EVAL_MIN_SHARED = 3
     "by tests/test_ext_library.py::test_dedup_eval_recall_floor.",
 )
 def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = minhash_bands(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
+    cand = dedup.lsh_candidate_pairs(minhash_bands(spark, sf_dir), "doc_id").select(
+        F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b")
     )
     docs = t(spark, sf_dir, "documents")
     # same memoized capped shingle index the containment dedup and
@@ -955,7 +805,9 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "containment_shingles",
-        lambda: cap_lsh_buckets(shingle_rows(docs).distinct(), ["sh_str"]),
+        lambda: dedup.cap_lsh_buckets(
+            dedup.shingle_rows(docs, "doc_id", "text").distinct(), ["sh_str"]
+        ),
     ).select("doc_id", "sh_str")
     x, y = capped.alias("x"), capped.alias("y")
     tcand = (
@@ -975,7 +827,7 @@ def ext_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "shingle_arrays",
-        lambda: shingle_rows(docs)
+        lambda: dedup.shingle_rows(docs, "doc_id", "text")
         .distinct()
         .groupBy("doc_id")
         .agg(

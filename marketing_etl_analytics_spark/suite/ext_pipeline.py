@@ -30,6 +30,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.curation import (
+    SPARK_DOT,
+    chunk_documents,
+    domain_balance,
+    temperature_sample,
+)
+from marketing_etl_analytics_spark.ext.dedup import (
+    cap_lsh_buckets,
+    shingle_rows,
+    shingle_zip,
+)
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
     pround,
@@ -39,11 +50,8 @@ from marketing_etl_analytics_spark.suite.common import (
     t,
 )
 from marketing_etl_analytics_spark.suite.ext import (
-    _SHINGLE_ZIP,
-    _TOKS,
     SQL_DOT,
     SQL_SHINGLES,
-    shingle_rows,
     sql_cap_lsh_buckets,
 )
 from marketing_etl_analytics_spark.suite.registry import register
@@ -118,6 +126,8 @@ def ext_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- repetition / boilerplate filtering -------------------------------------
+
+_TOKS = "split(lower(text), ' ')"
 
 # DuckDB-side 2-gram list (strings; tokens are space-split so the
 # joined form is injective and distinct-counts match Spark's distinct
@@ -331,12 +341,12 @@ def ext_doc_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # asymmetric hit join, per-doc shingle counts doc-local
     train = docs.filter(~is_eval)
     eval_sh = (
-        shingle_rows(docs.filter(is_eval))
+        shingle_rows(docs.filter(is_eval), "doc_id", "text")
         .select(F.md5("sh_str").alias("h"))
         .distinct()
     )
     hits = (
-        shingle_rows(train)
+        shingle_rows(train, "doc_id", "text")
         .select("doc_id", F.md5("sh_str").alias("h"))
         .join(F.broadcast(eval_sh), "h")
         .groupBy("doc_id")
@@ -344,7 +354,7 @@ def ext_doc_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_sh = F.when(
         F.expr(f"size({_TOKS}) >= 3"),
-        F.size(F.array_distinct(F.expr(_SHINGLE_ZIP))),
+        F.size(F.array_distinct(F.expr(shingle_zip("text")))),
     ).otherwise(F.lit(0))
     dec = (
         train.select("doc_id", n_sh.cast("long").alias("n_shingles"))
@@ -726,12 +736,11 @@ _CONT_MIN_SHINGLES = 5
 )
 def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketing_etl_analytics_spark.suite.common import memo_df, pround
-    from marketing_etl_analytics_spark.suite.ext import cap_lsh_buckets
 
     docs = t(spark, sf_dir, "documents")
 
     def build_capped():
-        sh = shingle_rows(docs).distinct()
+        sh = shingle_rows(docs, "doc_id", "text").distinct()
         return cap_lsh_buckets(sh, ["sh_str"])
 
     capped = memo_df(spark, sf_dir, "containment_shingles", build_capped)
@@ -1103,7 +1112,6 @@ _HYB_QVEC = 100  # query = embedding of vec_id 100 (the ANN convention)
 )
 def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from marketing_etl_analytics_spark.ext.search import bm25_search
-    from marketing_etl_analytics_spark.suite.ext import SPARK_DOT
 
     bm = bm25_search(
         spark,
@@ -1714,30 +1722,9 @@ _SQL_CHUNK_DOCS = f"""
 # ext_chunk_balance row (r7 consolidation); callable standalone.
 def ext_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.split("text", " ").alias("tok"),
-        F.size(F.split("text", " ")).alias("n"),
-    )
-    chunks = toks.select(
-        "doc_id",
-        "tok",
-        "n",
-        F.explode(
-            F.sequence(F.lit(1), F.col("n"), F.lit(CHUNK_STRIDE))
-        ).alias("start"),
-    )
     return (
-        chunks.select(
-            "doc_id",
-            (F.expr(f"(start - 1) div {CHUNK_STRIDE}") + 1).cast("long").alias("chunk_ord"),
-            F.least(
-                F.lit(CHUNK_TOKENS), F.col("n") - F.col("start") + 1
-            ).cast("long").alias("n_chunk_tokens"),
-            F.md5(
-                F.concat_ws(" ", F.slice("tok", F.col("start"), F.lit(CHUNK_TOKENS)))
-            ).alias("chunk_hash"),
-        )
+        chunk_documents(docs, chunk_tokens=CHUNK_TOKENS, stride=CHUNK_STRIDE)
+        .drop("chunk_text")
         .orderBy("doc_id", "chunk_ord")
     )
 
@@ -1785,21 +1772,9 @@ def ext_domain_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so capping on source would be a no-op; languages are skewed
     # (en ~4.4x fr at sf0.01), making the cap actually select
     docs = t(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    cap = counts.agg((F.lit(2) * F.min("n")).alias("cap"))
     return (
-        docs.select("doc_id", F.col("lang").alias("stratum"))
-        .withColumn(
-            "sample_rank",
-            F.row_number().over(
-                Window.partitionBy("stratum").orderBy(
-                    F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-                )
-            ),
-        )
-        .crossJoin(F.broadcast(cap))
-        .filter(F.col("sample_rank") <= F.col("cap"))
-        .select("doc_id", "stratum", F.col("sample_rank").cast("long"))
+        domain_balance(docs)
+        .withColumnRenamed("lang", "stratum")
         .orderBy("stratum", "sample_rank")
     )
 
@@ -1887,20 +1862,13 @@ def ext_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stratum = lang (see ext_domain_balance: sources are uniform in
     # the synthetic corpus, languages carry the real skew)
     docs = t(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    mn = counts.agg(F.min("n").alias("n_min"))
-    rate = F.sqrt(F.col("n_min").cast("double") / F.col("n"))
     return (
-        docs.select("doc_id", "lang", F.expr(_SPARK_U).alias("u"))
-        .join(F.broadcast(counts), "lang")
-        .crossJoin(F.broadcast(mn))
-        .withColumn("rate", rate)
-        .filter(F.col("u") < F.col("rate"))
+        temperature_sample(docs)
         .select(
             "doc_id",
             F.col("lang").alias("stratum"),
             pround(F.col("rate"), 6).alias("rate"),
-            pround(F.lit(1.0) / F.col("rate"), 6).alias("weight"),
+            pround(F.col("weight"), 6).alias("weight"),
         )
         .orderBy("doc_id")
     )

@@ -15,11 +15,11 @@ Scale shapes:
 - Embedding near-dup + IVF: every vector's squared norm is computed
   once; candidate generation joins on the bucket / probed-centroid
   key. Dot products snap elementwise products to the 1e-12 INTEGER
-  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT /
-  SQL_DOT in suite.ext, hardened fc3b048 after the sf100b sweep
-  caught a per-term DECIMAL(38,12) cast tie-rounding once in 128 M
-  terms) — pure IEEE ops on identical doubles, so the sum is
-  engine-invariant at any term count and ranking order is
+  lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT in
+  ext.curation, SQL_DOT in suite.ext, hardened fc3b048 after the
+  sf100b sweep caught a per-term DECIMAL(38,12) cast tie-rounding
+  once in 128 M terms) — pure IEEE ops on identical doubles, so the
+  sum is engine-invariant at any term count and ranking order is
   engine-independent. (SPARK_DOT_DEC below stays genuinely decimal:
   PQ ADC sums are kept IN decimal end-to-end, no double cast.)
 - Sessionization: one shuffle on user_id; lag + running-sum windows
@@ -33,6 +33,16 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.curation import (
+    SPARK_DOT,
+    semantic_assign,
+    semantic_dedup,
+)
+from marketing_etl_analytics_spark.ext.dedup import (
+    MH_PRIME,
+    N_BANDS,
+    cap_lsh_buckets,
+)
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
     money,
@@ -44,9 +54,10 @@ from marketing_etl_analytics_spark.suite.common import (
     t,
 )
 from marketing_etl_analytics_spark.suite.ext import (
-    SPARK_DOT,
     SQL_DOT,
-    cap_lsh_buckets,
+    SQL_SHINGLES,
+    _SQL_BAND_SIG,
+    _SQL_MH_MINS,
     embedding_norms,
     minhash_bands,
     sql_cap_lsh_buckets,
@@ -141,7 +152,7 @@ def ext_dedup_simhash_frame(
     """Near-dup pairs (key_a, key_b, shared_bands, hamming) by banded
     SimHash with a Hamming-distance verify. Buckets over
     ``LSH_BUCKET_CAP`` members are dropped (spam-signature skew guard
-    — see ``suite.ext.cap_lsh_buckets``)."""
+    — see ``ext.dedup.cap_lsh_buckets``)."""
     # the fingerprint table is tiny relative to the corpus (~16 B/doc)
     # but expensive to build (md5 + 48 vote-sums); materialize it once
     # so the band fan-out, the hot-bucket aggregate, and both self-join
@@ -1302,15 +1313,6 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental (cross-corpus) dedup ----------------------------------------
 
-from marketing_etl_analytics_spark.suite.ext import (  # noqa: E402
-    _SQL_BAND_SIG,
-    _SQL_MH_MINS,
-    MH_PRIME,
-    N_BANDS,
-    SQL_SHINGLES,
-)
-
-
 @register(
     "ext_dedup_incremental",
     f"""
@@ -1846,123 +1848,18 @@ def _sql_farthest_seed_ctes(k: int, pool_size: int) -> str:
     "every decision oracle-exact.",
 )
 def ext_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from marketing_etl_analytics_spark.ext.curation import (
-        farthest_first_from_pool,
-        quantize_pool,
-    )
-
-    def build_assign() -> DataFrame:
-        b = embedding_norms(spark, sf_dir)
-        seed_keys = farthest_first_from_pool(
-            quantize_pool(b, "vec_id", "embedding", SEM_POOL), SEM_CENTROIDS
-        )
-        cent = b.filter(F.col("vec_id").isin(seed_keys)).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("n2").alias("cn2"),
-        )
-        # Arrow/NumPy closure argmax (r10, guide §4.2): the k=32 seed
-        # centroids ride the task closure and every (row, centroid)
-        # lattice dot is evaluated vectorized per Arrow batch —
-        # bit-identical to the SPARK_DOT expression (pinned by
-        # tests/test_arrow_lattice_dot.py / test_arrow_center_eval.py),
-        # same desc-cos / asc-cent_id tiebreak as the previous rank
-        # window. Replaces the crossJoin(broadcast(cent)) that built
-        # n*k rows and the n*k-row window exchange with ONE corpus
-        # pass that ships (vec_id, embedding, n2, sub) out and
-        # (vec_id, sub, cluster) back.
-        from marketing_etl_analytics_spark.ext.embedding import (
-            arrow_nearest_center,
-        )
-
-        cent_rows = [
-            (r["cent_id"], list(r["ce"]), float(r["cn2"]))
-            for r in cent.collect()
-        ]
-        if not cent_rows:
-            assign = b.limit(0).select(
-                "vec_id",
-                F.col("vec_id").alias("cluster"),
-                F.lit(0).cast("long").alias("sub"),
-            )
-        else:
-            assign = arrow_nearest_center(
-                b.withColumn("sub", F.expr(_SPARK_SUBBUCKET)).select(
-                    "vec_id", "embedding", "n2", "sub"
-                ),
-                "embedding", "n2", cent_rows, "cluster",
-                keep=["vec_id", "sub"],
-            ).select("vec_id", "cluster", "sub")
-        # hot-cluster refine: <= SEM_CENTROIDS rows -> broadcast
-        hot = (
-            assign.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("_cn"))
-            .filter(F.col("_cn") > SEM_CLUSTER_CAP)
-            .select("cluster", F.lit(True).alias("_hot"))
-        )
-        return assign.join(F.broadcast(hot), "cluster", "left").select(
-            "vec_id",
-            "cluster",
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.concat_ws(
-                    ":", F.col("cluster").cast("string"), F.col("sub").cast("string")
-                ),
-            )
-            .otherwise(F.col("cluster").cast("string"))
-            .alias("ckey"),
-        )
-
+    emb = t(spark, sf_dir, "embeddings")
     # per-corpus index (argmax assignment + refined key), built once
     # and read by the output row set AND both sides of the pair join
-    assign = memo_df(spark, sf_dir, "sem_assign", build_assign)
-    b = embedding_norms(spark, sf_dir)
-    m = assign.join(b, "vec_id")
-    mu = m.select(
-        "ckey",
-        F.col("vec_id").alias("u"),
-        F.col("embedding").alias("ue"),
-        F.col("n2").alias("un2"),
+    keyed = memo_df(
+        spark,
+        sf_dir,
+        "sem_assign",
+        lambda: semantic_assign(
+            emb, n_centroids=SEM_CENTROIDS, cluster_cap=SEM_CLUSTER_CAP
+        ),
     )
-    mv = m.select(
-        F.col("ckey").alias("ckey_v"),
-        F.col("vec_id").alias("v"),
-        F.col("embedding").alias("ve"),
-        F.col("n2").alias("vn2"),
-    )
-    # pair-verify dots via the Arrow/NumPy lattice evaluator (guide
-    # §4.2): bit-identical to SPARK_DOT (pinned by pytest), ~2x the
-    # interpreted lambda at 100x pair volumes, and both 64-dim arrays
-    # are dropped at the Python boundary so only (u, v, norms, dot)
-    # flows into the filter/aggregate
-    from marketing_etl_analytics_spark.ext.embedding import (
-        arrow_lattice_dots,
-    )
-
-    scored = arrow_lattice_dots(
-        mu.join(mv, (mu.ckey == mv.ckey_v) & (mu.u < mv.v))
-        .select("u", "v", "un2", "vn2", "ue", "ve"),
-        "ue", "ve", "dot",
-    )
-    dups = (
-        scored.filter(
-            F.col("dot") / F.sqrt(F.col("un2") * F.col("vn2"))
-            >= SEM_DEDUP_T
-        )
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("nd"))
-        .withColumnRenamed("v", "vec_id")
-    )
-    return (
-        assign.join(dups, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cluster").cast("long").alias("cluster"),
-            F.coalesce("nd", F.lit(0)).cast("long").alias("n_dups_to_lower"),
-            (F.coalesce("nd", F.lit(0)) == 0).alias("is_kept"),
-        )
-        .orderBy("vec_id")
-    )
+    return semantic_dedup(emb, threshold=SEM_DEDUP_T, keyed=keyed).orderBy("vec_id")
 
 
 # --- semantic dedup, IVF-probed assignment (graded sibling) ------------------
@@ -2174,11 +2071,6 @@ def _sql_kmeanspar_ctes(k: int, rounds: int = 3, ell_factor: int = 2) -> str:
     "and grades it hash-exact.",
 )
 def ext_semantic_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from marketing_etl_analytics_spark.ext.curation import (
-        semantic_assign,
-        semantic_dedup,
-    )
-
     # the IVF cluster index is memoized per corpus like the exact
     # twin's sem_assign (at cluster scale: a persisted table built
     # once per corpus version); the pairwise stage reads it back

@@ -35,8 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets, shingle_rows
 from marketing_etl_analytics_spark.suite.common import memo_df, pround, sql_pround, t
-from marketing_etl_analytics_spark.suite.ext import SQL_SHINGLES, cap_lsh_buckets, shingle_rows
+from marketing_etl_analytics_spark.suite.ext import SQL_SHINGLES
 from marketing_etl_analytics_spark.suite.registry import register
 
 DAMPING = 0.85
@@ -55,7 +56,9 @@ def _build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "containment_shingles",  # shared with ext_dedup_containment
-        lambda: cap_lsh_buckets(shingle_rows(docs).distinct(), ["sh_str"]),
+        lambda: cap_lsh_buckets(
+            shingle_rows(docs, "doc_id", "text").distinct(), ["sh_str"]
+        ),
     ).select("doc_id", "sh_str")
     okh = (
         shd.groupBy("sh_str")

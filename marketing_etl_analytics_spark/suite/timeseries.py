@@ -1140,9 +1140,11 @@ BLOOM_FILTERS = (("m13", 1 << 13), ("m20", 1 << 20))
 BLOOM_K = 3
 _SQL_BLOOM_F = ", ".join(f"('{n}', {m})" for n, m in BLOOM_FILTERS)
 
+from marketing_etl_analytics_spark.ext.dedup import (  # noqa: E402
+    shingle_rows as _bloom_shingle_rows,
+)
 from marketing_etl_analytics_spark.suite.ext import (  # noqa: E402
     SQL_SHINGLES as _BLOOM_SQL_SHINGLES,
-    shingle_rows as _bloom_shingle_rows,
 )
 
 _SQL_BLOOM = f"""
@@ -1258,7 +1260,7 @@ def ext_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eval-set shingles feed two consumers (the bit build and the
     # per-probe truth flag): materialize the tiny frame once
     ev = (
-        _bloom_shingle_rows(docs.filter("doc_id % 97 = 0"))
+        _bloom_shingle_rows(docs.filter("doc_id % 97 = 0"), "doc_id", "text")
         .select("sh_str")
         .distinct()
         .localCheckpoint(eager=True)
@@ -1278,7 +1280,9 @@ def ext_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the matched-vs-scored sort-merge join disappears and the
     # corpus-sized shingle subtree runs once
     probe = (
-        _bloom_shingle_rows(docs.filter("doc_id % 97 != 0"), "source")
+        _bloom_shingle_rows(
+            docs.filter("doc_id % 97 != 0"), "doc_id", "text", "source"
+        )
         .select("doc_id", "source", "sh_str")
         .distinct()
         .join(F.broadcast(ev.withColumn("_t", F.lit(1))), "sh_str", "left")

@@ -775,8 +775,8 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # oracle assembled below (needs ext.py's SQL fragments)
     doc="Continuous dedup ingest: the document feed streams in, each "
     "micro-batch computes its MinHash band signatures "
-    "(suite.ext.minhash_signatures_frame/minhash_bands_frame — the "
-    "same pipeline the standing index persists), appends them to the "
+    "(ext.dedup.minhash_bands — the same pipeline the standing index "
+    "persists), appends them to the "
     "accumulating signature index, and flags every arriving doc "
     "against ALL docs that ARRIVED before it (standing index "
     "regardless of id, plus earlier-in-batch by doc_id) — so no "
@@ -823,36 +823,10 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_ingest_oracle() -> str:
-    from marketing_etl_analytics_spark.suite.ext import (
-        _SQL_BAND_SIG,
-        _SQL_MH_MINS,
-        MH_PRIME,
-        N_BANDS,
-        SQL_SHINGLES,
-    )
+    from marketing_etl_analytics_spark.suite.ext import sql_minhash_ctes
 
     return f"""
-    WITH shingled AS (
-      SELECT doc_id, {SQL_SHINGLES} AS shingles
-      FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= 3
-    ),
-    exploded AS (
-      SELECT doc_id,
-        ('0x' || substr(md5(unnest(shingles)), 1, 12))::BIGINT % {MH_PRIME} AS h
-      FROM shingled
-    ),
-    hashed AS (
-      SELECT doc_id,
-             {_SQL_MH_MINS}
-      FROM exploded
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, band,
-             CASE band {_SQL_BAND_SIG} END AS band_sig
-      FROM hashed, (SELECT unnest(generate_series(0, {N_BANDS - 1})) AS band)
-    ),
+    {sql_minhash_ctes("bands")},
     matches AS (
       SELECT b2.doc_id AS d, COUNT(DISTINCT b1.doc_id) AS ne
       FROM bands b1
@@ -945,36 +919,10 @@ def ext_dedup_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_ingest_capped_oracle() -> str:
-    from marketing_etl_analytics_spark.suite.ext import (
-        _SQL_BAND_SIG,
-        _SQL_MH_MINS,
-        MH_PRIME,
-        N_BANDS,
-        SQL_SHINGLES,
-    )
+    from marketing_etl_analytics_spark.suite.ext import sql_minhash_ctes
 
     return f"""
-    WITH shingled AS (
-      SELECT doc_id, {SQL_SHINGLES} AS shingles
-      FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= 3
-    ),
-    exploded AS (
-      SELECT doc_id,
-        ('0x' || substr(md5(unnest(shingles)), 1, 12))::BIGINT % {MH_PRIME} AS h
-      FROM shingled
-    ),
-    hashed AS (
-      SELECT doc_id,
-             {_SQL_MH_MINS}
-      FROM exploded
-      GROUP BY doc_id
-    ),
-    bands AS (
-      SELECT doc_id, band,
-             CASE band {_SQL_BAND_SIG} END AS band_sig
-      FROM hashed, (SELECT unnest(generate_series(0, {N_BANDS - 1})) AS band)
-    ),
+    {sql_minhash_ctes("bands")},
     firsts AS (
       SELECT band, band_sig, MIN(doc_id) AS rep
       FROM bands GROUP BY band, band_sig

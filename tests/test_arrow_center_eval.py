@@ -26,7 +26,7 @@ from marketing_etl_analytics_spark.ext.embedding import (
     arrow_min_center_dist,
     arrow_nearest_center,
 )
-from marketing_etl_analytics_spark.suite.ext import SPARK_DOT
+from marketing_etl_analytics_spark.ext.curation import SPARK_DOT
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -197,6 +197,55 @@ def test_semantic_assign_ivf_kmeanspar_whole_path(spark, monkeypatch):
         ),
     )
     assert _rows_set(arrow) == _rows_set(frame)
+
+
+def test_nan_center_outranks_inf():
+    """Spark ranks NaN above +inf. A row whose lattice norm rounds to
+    0 scores +inf against a real center and NaN (0/0) against a
+    higher-id zero center: the NaN center must win the argmax and
+    head the probe order."""
+    import numpy as np
+
+    from marketing_etl_analytics_spark.ext.embedding import (
+        _argmax,
+        _desc_order,
+        _np_cos_matrix,
+    )
+
+    vm = np.array([[1e-7, 0.0]])
+    n2 = np.array([0.0])  # floor(1e-14 * 1e12 + 0.5) == 0
+    cm = np.array([[1.0, 0.0], [0.0, 0.0]])
+    cn2 = np.array([1.0, 0.0])
+    cos = _np_cos_matrix(vm, n2, cm, cn2, None)
+    assert np.isposinf(cos[0, 0]) and np.isnan(cos[0, 1])
+    assert _argmax(cos).tolist() == [1]
+    assert _desc_order(cos).tolist() == [[1, 0]]
+    # a masked-out NaN column does not outrank an allowed +inf one
+    assert _argmax(cos, np.array([[True, False]])).tolist() == [0]
+
+
+def test_null_vector_raises_on_both_paths(spark, monkeypatch):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter("vec_id < 200")
+    holed = emb.select(
+        "vec_id",
+        F.when(F.col("vec_id") == 7, F.lit(None))
+        .otherwise(F.col("embedding"))
+        .alias("embedding"),
+    )
+    for cap in (10**9, 0):  # Arrow path, then the frame fallback
+        monkeypatch.setattr(curation, "ARROW_CENTERS_MAX", cap)
+        with pytest.raises(Exception, match="NULL vector in column 'embedding'"):
+            curation.semantic_assign(holed, n_centroids=4, cluster_cap=32).collect()
+
+
+def test_semantic_assign_rejects_non_integer_key(spark):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        F.col("vec_id").cast("string").alias("vec_id"), "embedding"
+    )
+    with pytest.raises(
+        ValueError, match="key 'vec_id' must be an integer column, got string"
+    ):
+        curation.semantic_assign(emb)
 
 
 @pytest.fixture(scope="module")

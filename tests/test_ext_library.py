@@ -55,6 +55,47 @@ def test_minhash_lsh_finds_near_dups(docs):
         assert 1 <= r.shared_bands <= 4
 
 
+def test_minhash_bands_match_pure_python(spark):
+    """ext.dedup's hash family, recomputed by hand: md5 of each 3-word
+    shingle (first 12 hex digits) mod MH_PRIME, per permutation the
+    minimum of (h * A_p + B_p) mod MH_PRIME, band minima joined by '|'."""
+    import hashlib
+
+    from marketing_etl_analytics_spark.ext.dedup import (
+        MH_PRIME,
+        N_BANDS,
+        PERM_A,
+        PERM_B,
+        ROWS_PER_BAND,
+    )
+
+    docs = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "The Quick brown FOX jumps over the lazy cat"),  # mixed case
+        (3, "a b c a b c a b c"),  # repeated shingles
+        (4, "too short"),  # below the shingle width: no rows
+        (5, "one two three"),  # exactly one shingle
+    ]
+
+    def bands(text):
+        toks = text.lower().split(" ")
+        shs = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:12], 16) % MH_PRIME for s in shs]
+        if not hs:
+            return []
+        mins = [min((h * a + b) % MH_PRIME for h in hs) for a, b in zip(PERM_A, PERM_B)]
+        return [
+            (band, "|".join(str(m) for m in mins[band * ROWS_PER_BAND:][:ROWS_PER_BAND]))
+            for band in range(N_BANDS)
+        ]
+
+    want = sorted((k, band, sig) for k, text in docs for band, sig in bands(text))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = sorted(tuple(r) for r in minhash_bands(df, "doc_id", "text").collect())
+    assert got == want
+    assert {k for k, _, _ in got} == {1, 2, 3, 5}
+
+
 def test_cosine_topk_self_similarity(spark, emb):
     # a vector's nearest neighbor list must not contain itself, and
     # cosine is within [-1, 1]

@@ -24,11 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from marketing_etl_analytics_spark.suite.ext import (
-    LSH_BUCKET_CAP,
-    cap_lsh_buckets,
-    ext_dedup_minhash_lsh,
-)
+from marketing_etl_analytics_spark.ext.dedup import LSH_BUCKET_CAP, cap_lsh_buckets
+from marketing_etl_analytics_spark.suite.ext import ext_dedup_minhash_lsh
 from marketing_etl_analytics_spark.suite.ext_scale import (
     EMB_BUCKET_CAP,
     ext_dedup_embedding_cosine,

@@ -238,7 +238,7 @@ def test_dedup_ingest_cap_bounds_spam_signature(spark, tmp_path):
     dropped from both join sides — decisions-at-time skew guard),
     while genuine small clone groups still pair up."""
     from marketing_etl_analytics_spark.streaming.sinks import dedup_ingest_sink
-    from marketing_etl_analytics_spark.suite.ext import LSH_BUCKET_CAP
+    from marketing_etl_analytics_spark.ext.dedup import LSH_BUCKET_CAP
 
     spam = "subscribe to our newsletter for daily updates and exclusive offers"
     real = "a genuinely unique research abstract about catalyst optimizer rules"
@@ -330,7 +330,7 @@ def test_dedup_ingest_compact_flag_equivalence_and_bounded_index(spark, tmp_path
     # index sizes: full index logs every arrival's bands (30 docs x
     # n_bands); the compacted index holds one row per DISTINCT
     # signature — unique content (3 texts x n_bands), 10x smaller
-    from marketing_etl_analytics_spark.suite.ext import N_BANDS
+    from marketing_etl_analytics_spark.ext.dedup import N_BANDS
 
     assert full_idx == 30 * N_BANDS
     assert comp_idx == 3 * N_BANDS
