@@ -59,18 +59,24 @@ def main() -> None:
     # this, whichever stream_* entry the registry rotation puts first
     # absorbs that machinery cost into its timing. A 1-row rate-source
     # stateful query touches the same engine paths and no entry data.
+    # Timed into `warmup`, so its cost shows in value_plus_warmup_sec.
     import uuid as _uuid
 
+    warmup: dict[str, float] = {}
+    _wname = f"warm_stream_{_uuid.uuid4().hex[:6]}"
+    t0 = time.perf_counter()
     _wq = (
         spark.readStream.format("rate").option("numPartitions", 1).load()
         .dropDuplicates(["value"])
         .writeStream.format("memory")
-        .queryName(f"warm_stream_{_uuid.uuid4().hex[:6]}")
+        .queryName(_wname)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     _wq.awaitTermination(120)
+    warmup["_stream_engine"] = round(time.perf_counter() - t0, 3)
+    spark.catalog.dropTempView(_wname)
 
     # Shared-artifact warmup (VERDICT r8 #2 / Next #4): several entry
     # families consume one-time memoized artifacts (suite.common.memo_df
@@ -86,7 +92,6 @@ def main() -> None:
     # probe (SPARK_GRAFT_BENCH_ONLY) warms only the owners it will
     # time — paying all 15 owners at a 100x-class SF to probe one
     # entry made targeted large-SF runs impractical.
-    warmup: dict[str, float] = {}
     _only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     _only_set = (
         {n.strip() for n in _only_env.split(",") if n.strip()}

@@ -12,10 +12,8 @@ Layout:
     session      SparkSession factory (UTC, AQE, sane shuffle config)
     schemas      explicit StructTypes for raw CSVs + warehouse tables
     sources      readers (csv/parquet/catalog) and writers
-    functions    scalar column builders (dates, text, KPIs, bands)
-    operators    reusable relational operators (top-k, grain align,
-                 upsert, set ops, as-of/range joins)
-    plans        plan-inspection helpers (pushdown/broadcast asserts)
+    functions    scalar column builders (dates, text, KPIs, bands,
+                 portable rounding)
     etl          star-schema build (staging -> dims -> facts)
     views        KPI view layer (channel_daily, kpi_channel, kpi_campaign)
     queries      the 12-query analytics library (marketing schema)

@@ -2,11 +2,10 @@
 
 Column-parameterized operators: deduplication, embedding similarity,
 text analysis, corpus curation, sketches, search and multimodal
-payload handling. The suite's dedup and curation entries
-(``suite/ext.py``, ``suite/ext_pipeline.py``, ``suite/ext_scale.py``)
-are thin ``(spark, sf_dir)`` adapters over ``ext.dedup`` and
-``ext.curation``; this package imports nothing from the suite at
-import time.
+payload handling. The suite's dedup, curation and sketch entries are
+thin ``(spark, sf_dir)`` adapters over ``ext.dedup``,
+``ext.curation`` and ``ext.sketches``; this package imports nothing
+from the suite.
 """
 
 from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
@@ -14,6 +13,8 @@ from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
     lsh_candidate_pairs,
     minhash_bands,
     shingles,
+    simhash_candidate_pairs,
+    simhash_fingerprints,
 )
 from marketing_etl_analytics_spark.ext.similarity import (  # noqa: F401
     cosine_topk,
@@ -57,19 +58,3 @@ from marketing_etl_analytics_spark.ext.search import (  # noqa: F401
     term_stats,
 )
 
-# frame-level scale-path operators implemented beside their suite
-# entries, re-exported here as the one-stop API. Resolved on first
-# access: the suite imports this package while it loads.
-_SUITE_EXPORTS = {
-    "simhash_candidate_pairs": "ext_dedup_simhash_frame",
-    "sessionize_batch": "sessionize_batch",
-    "simhash_fingerprints": "simhash_fingerprints",
-}
-
-
-def __getattr__(name: str):
-    if name not in _SUITE_EXPORTS:
-        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-    from marketing_etl_analytics_spark.suite import ext_scale
-
-    return getattr(ext_scale, _SUITE_EXPORTS[name])

@@ -1,10 +1,11 @@
 """Deduplication operators, column-parameterized.
 
-The one implementation of shingle -> MinHash -> LSH and of exact
-dedup: the suite's dedup entries (``suite/ext.py``), the streaming
-dedup ingest (``streaming/sinks.py``) and the multimodal near-dup
-operators call these, and the suite's DuckDB oracles spell the same
-hash family in SQL.
+The one implementation of shingle -> MinHash -> LSH, of SimHash and
+of exact dedup: the suite's dedup entries (``suite/ext.py``,
+``suite/ext_scale.py``), the streaming dedup ingest
+(``streaming/sinks.py``) and the multimodal near-dup operators call
+these, and the suite's DuckDB oracles spell the same hash families in
+SQL.
 
 MinHash: one md5 per 3-word shingle (first 48 bits, reduced mod
 ``MH_PRIME``); permutation p maps it to (h * A_p + B_p) mod MH_PRIME
@@ -195,3 +196,101 @@ def lsh_candidate_pairs(bands: DataFrame, key: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("shared_bands"))
     )
+
+
+# --- SimHash -----------------------------------------------------------------
+#
+# 48-bit SimHash: token hash = first 12 hex chars of md5; each token
+# votes +1/-1 per bit position weighted by multiplicity; the sign of
+# the vote sum is the fingerprint bit. 48 bits (not 64) keeps 2**i
+# inside the exact double/BIGINT range in both engines; bands are
+# 4 x 12 bits. The per-token hash is computed ONCE and the 48-position
+# vote reads nibbles out of it — a 48x hashing saving over hashing
+# inside the bit loop.
+SPARK_TOKEN_HASHES = (
+    "transform(split(lower(text), ' '), tk -> substring(md5(tk), 1, 12))"
+)
+
+HAMMING_MAX = 2  # <= 2/48 differing bits ≈ 96% bit agreement
+
+
+def simhash_fingerprints(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
+    """(key, simhash) 48-bit fingerprints.
+
+    Explodes tokens, decodes the 12 hex nibbles with codegen'd
+    builtins (conv), votes each of the 48 bits as a plain
+    conditional-sum aggregate — everything stays inside whole-stage
+    codegen with map-side partial aggregation (one shuffle on key).
+    """
+    token_hashes = SPARK_TOKEN_HASHES.replace("text", text)
+    exploded = df.select(
+        key, F.explode(F.expr(token_hashes)).alias("h")
+    ).select(
+        key,
+        *[
+            F.conv(F.substring("h", j + 1, 1), 16, 10).cast("int").alias(f"nib{j}")
+            for j in range(12)
+        ],
+    )
+    votes = exploded.groupBy(key).agg(
+        *[
+            F.sum(
+                F.when(
+                    F.shiftright(F.col(f"nib{i // 4}"), i % 4).bitwiseAND(1) == 1, 1
+                ).otherwise(-1)
+            ).alias(f"v{i}")
+            for i in range(48)
+        ]
+    )
+    simhash = None
+    for i in range(48):
+        term = F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        simhash = term if simhash is None else simhash + term
+    return votes.select(key, simhash.alias("simhash"))
+
+
+def simhash_candidate_pairs(
+    df: DataFrame,
+    key: str = "doc_id",
+    text: str = "text",
+    fingerprints: DataFrame | None = None,
+) -> DataFrame:
+    """Near-dup pairs (key_a, key_b, shared_bands, hamming) by banded
+    SimHash with a Hamming-distance verify. Buckets over
+    ``LSH_BUCKET_CAP`` members are dropped (spam-signature skew guard
+    — see ``cap_lsh_buckets``)."""
+    # the fingerprint table is tiny relative to the corpus (~16 B/doc)
+    # but expensive to build (md5 + 48 vote-sums); materialize it once
+    # so the band fan-out, the hot-bucket aggregate, and both self-join
+    # sides read it instead of recomputing the aggregation per branch
+    if fingerprints is None:
+        fingerprints = simhash_fingerprints(df, key, text).localCheckpoint(eager=True)
+    sh = fingerprints
+    banded = sh.select(
+        key,
+        "simhash",
+        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
+    ).withColumn(
+        "band_val",
+        F.expr("(simhash div CAST(pow(4096, band) AS BIGINT)) % 4096"),
+    )
+    banded = cap_lsh_buckets(banded, ["band", "band_val"])
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
+        )
+        .groupBy(F.col(f"a.{key}").alias("doc_a"), F.col(f"b.{key}").alias("doc_b"))
+        .agg(
+            F.count(F.lit(1)).alias("shared_bands"),
+            F.min(F.expr("bit_count(a.simhash ^ b.simhash)"))
+            .cast("int")
+            .alias("hamming"),
+        )
+    )
+    return pairs.filter(F.col("hamming") <= HAMMING_MAX)

@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.functions.kpis import pround
+
 
 @dataclass(frozen=True)
 class Check:
@@ -135,14 +137,12 @@ def validate(df: DataFrame, checks: list[Check]) -> DataFrame:
     # empty-batch discipline: SUM over zero rows is NULL -> coalesce
     # violations to 0 so an empty ingest batch reports clean instead of
     # NULL flags (or a DIVIDE_BY_ZERO under ANSI mode on the metric).
-    # Portable half-up rounding (floor(x*10^n + 0.5)) — plain
-    # ROUND(double) disagrees between engines at exact-tie values.
     viol = F.coalesce(F.col("violations"), F.lit(0)).cast("long")
     frac = viol / F.nullif(F.col("total").cast("double"), F.lit(0.0))
     return out.select(
         "check", "target",
         viol.alias("violations"),
         "total",
-        (F.floor(frac * 1e6 + F.lit(0.5)) / 1e6).alias("metric"),
+        pround(frac, 6).alias("metric"),
         (viol == 0).alias("passed"),
     )

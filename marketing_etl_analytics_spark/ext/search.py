@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.functions.kpis import pround
+
 BM25_K1 = 1.2
 BM25_B = 0.75
 
@@ -180,8 +182,6 @@ def bm25_search(
     plans as TakeOrderedAndProject. Portable rounding (per-term score
     to 9 dp, decimal sum, 6 dp) matches the suite's ext_bm25_search,
     so its oracle evidence transfers (equality pytest)."""
-    from marketing_etl_analytics_spark.suite.common import pround
-
     terms = sorted(set(terms))
     meta = spark.table(f"{table_name}_meta")
     idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.functions.kpis import pround
+
 DEFAULT_STOPWORDS = ("the", "a", "of", "and", "to", "in")
 TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
@@ -354,9 +356,7 @@ def lm_perplexity_scores(
         "ln(CAST(COALESCE(c, 0) + 1 AS DOUBLE)"
         " / CAST(t_tokens + v_types + 1 AS DOUBLE))"
     )
-    lnp6 = (
-        F.floor(F.expr(lnp) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    ).cast("decimal(18,6)")
+    lnp6 = pround(F.expr(lnp), 6).cast("decimal(18,6)")
     scored = (
         doc_bigrams.join(F.broadcast(vocab), "b", "left")
         .crossJoin(F.broadcast(stats))
@@ -373,7 +373,5 @@ def lm_perplexity_scores(
     return scored.groupBy(key).agg(
         F.sum("cnt").cast("long").alias("n_bigrams"),
         F.sum(F.col("is_oov") * F.col("cnt")).cast("long").alias("n_oov"),
-        (F.floor(ce * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "cross_entropy"
-        ),
+        pround(ce, 6).alias("cross_entropy"),
     )

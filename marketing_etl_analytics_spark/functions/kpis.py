@@ -22,6 +22,22 @@ def safe_div(num: Column, den: Column) -> Column:
     return num / F.nullif(den.cast("double"), F.lit(0.0))
 
 
+# ROUND(double, n) disagrees between engines at exact-tie values (Spark
+# rounds the shortest decimal repr HALF_UP; DuckDB scales and rounds the
+# binary value). For ratio outputs we need *identical* results, not any
+# particular tie rule, so round as floor(q * 10^n + 0.5) / 10^n — every
+# step is deterministic IEEE arithmetic on identical operands.
+
+def pround(col: Column, ndigits: int) -> Column:
+    scale = float(10 ** ndigits)
+    return F.floor(col.cast("double") * scale + F.lit(0.5)) / F.lit(scale)
+
+
+def sql_pround(expr: str, ndigits: int) -> str:
+    scale = float(10 ** ndigits)
+    return f"FLOOR(CAST(({expr}) AS DOUBLE) * {scale} + 0.5) / {scale}"
+
+
 def kpi_columns(
     revenue: Column,
     cost: Column,

@@ -1,6 +1,6 @@
 """Zero-extra-pass pipeline metrics via Spark's Observation API.
 
-``functions/validate.py`` computes constraint metrics with a dedicated
+``ext/quality.py`` computes constraint metrics with a dedicated
 aggregate action — right for a gate, wrong for routine telemetry: at
 100 TB an extra metrics pass re-scans the table. ``observe()`` instead
 piggybacks named aggregates onto whatever action the caller already

@@ -106,11 +106,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Arrow for any pandas_udf / toPandas path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Filter pushdown INTO Python data sources (Spark 4.1, off by
-        # default): lets custom connectors (sources/logfmt.py) drop
-        # rows during parsing instead of materializing them into
-        # Arrow batches first.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Quieter local runs.
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

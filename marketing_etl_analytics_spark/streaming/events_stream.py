@@ -12,7 +12,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -357,6 +357,37 @@ def sessionize(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
+def sessionize_batch(ev: DataFrame) -> DataFrame:
+    """Sessions by 30-min inactivity gap over (event_id, user_id, ts,
+    value) rows — the gaps-and-islands batch twin of :func:`sessionize`
+    (lag + running flag-sum; one shuffle on user_id, windows stay
+    inside the partition)."""
+    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(order_w))
+    flagged = ev.select(
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        F.when(gap_us.isNull() | (gap_us > SESSION_GAP_US), 1)
+        .otherwise(0)
+        .alias("new_session"),
+    )
+    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    numbered = flagged.withColumn("session_no", F.sum("new_session").over(run_w))
+    return (
+        numbered.groupBy("user_id", F.col("session_no").cast("long").alias("session_no"))
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
+            .cast("double")
+            .alias("total_value"),
         )
     )
 

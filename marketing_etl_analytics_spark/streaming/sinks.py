@@ -285,8 +285,7 @@ def dedup_ingest_sink(
         # and the checkpoint commit replays the batch. Both outputs
         # are batchId-keyed subdirs written with OVERWRITE — a replay
         # rewrites the same subdir instead of appending a second copy
-        # (idempotence by deterministic placement, the foreachBatch
-        # analog of the logfmt writer's rename-commit).
+        # (idempotence by deterministic placement).
         sp = batch_df.sparkSession
         bands = minhash_bands(batch_df, "doc_id", "text").localCheckpoint(
             eager=True

@@ -29,6 +29,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.functions.kpis import pround, sql_pround  # noqa: F401
+
 # --- table access -----------------------------------------------------------
 
 # Single-row-group testdata accommodation: quarantined in
@@ -261,24 +263,6 @@ def sql_dsum(expr: str, alias: str, ndigits: int = 2) -> str:
 
 def sql_lsum(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS BIGINT)) AS BIGINT) AS {alias}"
-
-
-# --- portable double rounding ----------------------------------------------
-#
-# ROUND(double, n) disagrees between engines at exact-tie values (Spark
-# rounds the shortest decimal repr HALF_UP; DuckDB scales and rounds the
-# binary value). For ratio outputs we need *identical* results, not any
-# particular tie rule, so round as floor(q * 10^n + 0.5) / 10^n — every
-# step is deterministic IEEE arithmetic on identical operands.
-
-def pround(col: Column, ndigits: int) -> Column:
-    scale = float(10 ** ndigits)
-    return F.floor(col.cast("double") * scale + F.lit(0.5)) / F.lit(scale)
-
-
-def sql_pround(expr: str, ndigits: int) -> str:
-    scale = float(10 ** ndigits)
-    return f"FLOOR(CAST(({expr}) AS DOUBLE) * {scale} + 0.5) / {scale}"
 
 
 def ratio(num: Column, den: Column, ndigits: int) -> Column:

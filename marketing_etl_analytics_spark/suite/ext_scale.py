@@ -39,13 +39,18 @@ from marketing_etl_analytics_spark.ext.curation import (
     semantic_dedup,
 )
 from marketing_etl_analytics_spark.ext.dedup import (
+    HAMMING_MAX,
     MH_PRIME,
     N_BANDS,
-    cap_lsh_buckets,
+    simhash_candidate_pairs,
+    simhash_fingerprints,
+)
+from marketing_etl_analytics_spark.streaming.events_stream import (
+    SESSION_GAP_US,
+    sessionize_batch,
 )
 from marketing_etl_analytics_spark.suite.common import (
     memo_df,
-    money,
     pround,
     ratio,
     sql_pround,
@@ -66,26 +71,14 @@ from marketing_etl_analytics_spark.suite.registry import register
 
 # --- SimHash near-dedup ------------------------------------------------------
 #
-# 48-bit SimHash: token hash = first 12 hex chars of md5 (nibble-decoded
-# portably via instr('0123456789abcdef', ch)); each token votes +1/-1
-# per bit position weighted by multiplicity; sign of the vote sum is
-# the fingerprint bit. 48 bits (not 64) keeps 2**i inside the exact
-# double/BIGINT range in both engines; bands are 4 x 12 bits.
+# The Spark side is ext.dedup (simhash_fingerprints,
+# simhash_candidate_pairs); the oracle below spells the same 48-bit
+# token-vote fingerprint and 4 x 12-bit bands in SQL.
 
-# per-token hash computed ONCE (first 12 hex chars of md5), then the
-# 48-position vote loop reads nibbles out of the precomputed hex string
-# — hoisting md5 out of the bit loop is a 48x hashing saving
-SPARK_TOKEN_HASHES = (
-    "transform(split(lower(text), ' '), tk -> substring(md5(tk), 1, 12))"
-)
 SQL_TOKEN_HASHES = (
     "list_transform(string_split(lower(text), ' '), tk -> substr(md5(tk), 1, 12))"
 )
 
-_SPARK_BIT = (
-    "((instr('0123456789abcdef', substring(w, CAST(i div 4 AS INT) + 1, 1)) - 1)"
-    " div (CASE CAST(i % 4 AS INT) WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END)) % 2"
-)
 _SQL_BIT = (
     "((instr('0123456789abcdef', substr(w, (i // 4) + 1, 1)) - 1)"
     " // (CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END)) % 2"
@@ -103,91 +96,6 @@ SQL_SIMHASH = (
     " THEN CAST(2 ** i AS BIGINT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
 )
 
-HAMMING_MAX = 2  # <= 2/48 differing bits ≈ 96% bit agreement
-
-
-def simhash_fingerprints(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """(key, simhash) 48-bit fingerprints.
-
-    Explodes tokens, decodes the 12 hex nibbles with codegen'd
-    builtins (conv), votes each of the 48 bits as a plain
-    conditional-sum aggregate — everything stays inside whole-stage
-    codegen with map-side partial aggregation (one shuffle on key).
-    """
-    token_hashes = SPARK_TOKEN_HASHES.replace("text", text)
-    exploded = df.select(
-        key, F.explode(F.expr(token_hashes)).alias("h")
-    ).select(
-        key,
-        *[
-            F.conv(F.substring("h", j + 1, 1), 16, 10).cast("int").alias(f"nib{j}")
-            for j in range(12)
-        ],
-    )
-    votes = exploded.groupBy(key).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col(f"nib{i // 4}"), i % 4).bitwiseAND(1) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(48)
-        ]
-    )
-    simhash = None
-    for i in range(48):
-        term = F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        simhash = term if simhash is None else simhash + term
-    return votes.select(key, simhash.alias("simhash"))
-
-
-def ext_dedup_simhash_frame(
-    df: DataFrame,
-    key: str = "doc_id",
-    text: str = "text",
-    fingerprints: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs (key_a, key_b, shared_bands, hamming) by banded
-    SimHash with a Hamming-distance verify. Buckets over
-    ``LSH_BUCKET_CAP`` members are dropped (spam-signature skew guard
-    — see ``ext.dedup.cap_lsh_buckets``)."""
-    # the fingerprint table is tiny relative to the corpus (~16 B/doc)
-    # but expensive to build (md5 + 48 vote-sums); materialize it once
-    # so the band fan-out, the hot-bucket aggregate, and both self-join
-    # sides read it instead of recomputing the aggregation per branch
-    if fingerprints is None:
-        fingerprints = simhash_fingerprints(df, key, text).localCheckpoint(eager=True)
-    sh = fingerprints
-    banded = sh.select(
-        key,
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
-    ).withColumn(
-        "band_val",
-        F.expr("(simhash div CAST(pow(4096, band) AS BIGINT)) % 4096"),
-    )
-    banded = cap_lsh_buckets(banded, ["band", "band_val"])
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .groupBy(F.col(f"a.{key}").alias("doc_a"), F.col(f"b.{key}").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("shared_bands"),
-            F.min(F.expr("bit_count(a.simhash ^ b.simhash)"))
-            .cast("int")
-            .alias("hamming"),
-        )
-    )
-    return pairs.filter(F.col("hamming") <= HAMMING_MAX)
-
-
 def simhash_corpus_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized SimHash near-dup pair table for the documents corpus —
     the shared upstream of ext_dedup_simhash (reports pairs) and
@@ -200,7 +108,7 @@ def simhash_corpus_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp = memo_df(
             spark, sf_dir, "simhash_fp", lambda: simhash_fingerprints(docs)
         )
-        return ext_dedup_simhash_frame(docs, fingerprints=fp)
+        return simhash_candidate_pairs(docs, fingerprints=fp)
 
     return memo_df(spark, sf_dir, "simhash_pairs", build)
 
@@ -1003,9 +911,6 @@ def ext_ann_ivf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- batch sessionization (gaps-and-islands) ---------------------------------
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matches streaming.sessionize
-
-
 @register(
     "ext_sessionize",
     f"""
@@ -1045,34 +950,6 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matches streaming.sessionize
 def ext_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     return sessionize_batch(ev).orderBy("user_id", "session_no")
-
-
-def sessionize_batch(ev: DataFrame) -> DataFrame:
-    """Sessions by 30-min inactivity gap over (event_id, user_id, ts,
-    value) rows — the gaps-and-islands batch twin of
-    streaming.sessionize."""
-    order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(order_w))
-    flagged = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(gap_us.isNull() | (gap_us > SESSION_GAP_US), 1)
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    run_w = order_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    numbered = flagged.withColumn("session_no", F.sum("new_session").over(run_w))
-    return (
-        numbered.groupBy("user_id", F.col("session_no").cast("long").alias("session_no"))
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(money("value")), 2).cast("double").alias("total_value"),
-        )
-    )
 
 
 # --- corpus text statistics: TF-IDF + n-gram top-k ---------------------------

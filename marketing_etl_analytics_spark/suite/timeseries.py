@@ -39,6 +39,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.sketches import (
+    BLOOM_K,
+    CM_D,
+    CM_W,
+    HLL_LC,
+    HLL_M,
+    HLL_NUMER,
+    bloom_hash,
+    bloom_salts,
+    countmin_counters,
+    countmin_freq_counters,
+    countmin_query,
+    hll_estimate,
+    hll_merge,
+    hll_registers,
+)
+from marketing_etl_analytics_spark.streaming.events_stream import SESSION_GAP_US
 from marketing_etl_analytics_spark.suite.common import money, pround, sql_pround, t
 from marketing_etl_analytics_spark.suite.registry import register
 
@@ -553,9 +570,6 @@ def ext_dau_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- native session windows --------------------------------------------------
 
-_SESSION_GAP_US = 30 * 60 * 1_000_000
-
-
 @register(
     "ext_session_window_native",
     f"""
@@ -571,7 +585,7 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000
         -- pinned by test_session_window_boundary_is_inclusive), the
         -- same rule as the gaps-and-islands twin
         CASE WHEN prev_ts IS NULL
-                  OR epoch_us(ts) - epoch_us(prev_ts) > {_SESSION_GAP_US}
+                  OR epoch_us(ts) - epoch_us(prev_ts) > {SESSION_GAP_US}
              THEN 1 ELSE 0 END AS new_session
       FROM ordered
     ),
@@ -644,16 +658,12 @@ def ext_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mergeability that makes HLL the standard distributed distinct
 # estimator. Scale: one shuffle to (group, register), 64 rows per
 # group thereafter; the merge is a 64-row-per-group re-aggregation.
-
-HLL_M = 64
-_HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)  # alpha_64 per the paper
-_HLL_NUMER = repr(_HLL_ALPHA * HLL_M * HLL_M * float(1 << 43))
-_HLL_LC = {z: repr(HLL_M * __import__("math").log(HLL_M / z)) for z in range(1, HLL_M)}
+# The Spark side is ext.sketches; the oracle reads its constants.
 
 
 def _hll_lc_case(zcol: str) -> str:
     """m*ln(m/zeros) as a literal lookup — engine-independent."""
-    arms = " ".join(f"WHEN {z} THEN {lit}" for z, lit in _HLL_LC.items())
+    arms = " ".join(f"WHEN {z} THEN {v!r}" for z, v in HLL_LC.items())
     return f"CASE {zcol} {arms} ELSE 0.0 END"
 
 
@@ -663,61 +673,16 @@ def _hll_finish_sql(src: str) -> str:
       SELECT grp,
         CAST({HLL_M} - COUNT(*) AS BIGINT) AS n_zero_registers,
         CAST(FLOOR(
-          CASE WHEN {_HLL_NUMER} / CAST(SUM(1::BIGINT << (43 - m))
+          CASE WHEN {HLL_NUMER!r} / CAST(SUM(1::BIGINT << (43 - m))
                  + ({HLL_M} - COUNT(*)) * (1::BIGINT << 43) AS DOUBLE)
                  <= {2.5 * HLL_M}
                 AND COUNT(*) < {HLL_M}
             THEN {_hll_lc_case(f"({HLL_M} - COUNT(*))")}
-            ELSE {_HLL_NUMER} / CAST(SUM(1::BIGINT << (43 - m))
+            ELSE {HLL_NUMER!r} / CAST(SUM(1::BIGINT << (43 - m))
                  + ({HLL_M} - COUNT(*)) * (1::BIGINT << 43) AS DOUBLE)
           END + 0.5) AS BIGINT) AS hll_estimate
       FROM {src} GROUP BY grp
     """
-
-
-def _hll_rank_expr():
-    """(hv) -> (idx, rank) projection columns for the register build."""
-    w = F.expr(f"hv div {HLL_M}")
-    return (
-        (F.col("hv") % HLL_M).alias("idx"),
-        F.when(w == 0, F.lit(43)).otherwise(43 - F.length(F.bin(w))).alias("rank"),
-    )
-
-
-def _hll_hv(col: str = "user_id") -> F.Column:
-    return F.conv(
-        F.substring(F.md5(F.col(col).cast("string")), 1, 12), 16, 10
-    ).cast("long")
-
-
-def _hll_finish(r: DataFrame) -> DataFrame:
-    """Registers (grp, idx, m) -> (grp, n_zero_registers, hll_estimate);
-    Spark twin of ``_hll_finish_sql``."""
-    agg = r.groupBy("grp").agg(
-        (F.lit(HLL_M) - F.count(F.lit(1))).cast("long").alias("n_zero_registers"),
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 43 - m)")).alias("s_present"),
-    )
-    s = (
-        F.col("s_present")
-        + F.col("n_zero_registers") * F.lit(1 << 43).cast("long")
-    ).cast("double")
-    raw = F.lit(float(_HLL_NUMER)) / s
-    # CASE zeros -> 64*ln(64/zeros) from the shared literals
-    lc_arms = F.expr(
-        "CASE n_zero_registers "
-        + " ".join(
-            f"WHEN {z} THEN CAST({lit} AS DOUBLE)" for z, lit in _HLL_LC.items()
-        )
-        + " ELSE 0.0 END"
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (F.col("n_zero_registers") > 0), lc_arms
-    ).otherwise(raw)
-    return agg.select(
-        "grp",
-        "n_zero_registers",
-        F.floor(est + F.lit(0.5)).cast("long").alias("hll_estimate"),
-    )
 
 
 _SQL_HLL = f"""
@@ -762,25 +727,18 @@ def ext_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Also graded via the ext_sketch_suite merged row (r5
     consolidation; r6 bisect single)."""
     ev = t(spark, sf_dir, "events")
-    # no DISTINCT before the register build: MAX(rank) over the raw
-    # (type, hv) multiset equals MAX over the distinct set, so the
-    # corpus-wide distinct exchange is pure overhead — the register
-    # groupBy partial-aggregates map-side down to 64 rows per type
-    # (the mergeable-sketch property doing the shuffle's work)
-    h = ev.select("event_type", _hll_hv().alias("hv"))
-    ranked = h.select(F.col("event_type").alias("grp"), *_hll_rank_expr())
     regs = (
-        ranked.groupBy("grp", "idx").agg(F.max("rank").alias("m"))
+        hll_registers(
+            ev.select(F.col("event_type").alias("grp"), "user_id"), "user_id", ["grp"]
+        )
         # the per-type register table (64 rows/type) feeds TWO
         # consumers — its own estimate and the '(all)' register-wise
         # max-merge; without materialization the events scan + register
         # aggregate executes twice. Sketch-sized at any corpus size.
         .localCheckpoint(eager=True)
     )
-    regs_all = regs.groupBy("idx").agg(F.max("m").alias("m")).select(
-        F.lit("(all)").alias("grp"), "idx", "m"
-    )
-    est = _hll_finish(regs).unionAll(_hll_finish(regs_all))
+    regs_all = hll_merge(regs).select(F.lit("(all)").alias("grp"), "idx", "m")
+    est = hll_estimate(regs, ["grp"]).unionAll(hll_estimate(regs_all, ["grp"]))
     # one ROLLUP pass replaces the two separate exact-count
     # aggregations (per-type + grand total): same values — the
     # grouping bit identifies the total row, so a hypothetical NULL
@@ -820,8 +778,6 @@ def ext_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe the top-k exact tokens (deterministic tie-break) through the
 # same hash family.
 
-CM_D = 4
-CM_W = 512
 CM_TOPK = 20
 
 
@@ -879,28 +835,9 @@ def ext_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+aggregate subtree executes twice. |vocab| rows —
     # bounded far below the corpus at any scale.
     freq = _countmin_freq(t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("j"), F.col("tok"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % CM_W
-    )
-    expanded = freq.select(
-        "tok", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
-    ).withColumn("bucket", bucket)
-    counters = expanded.groupBy("j", "bucket").agg(F.sum("n").alias("c"))
     top = freq.orderBy(F.desc("n"), "tok").limit(CM_TOPK)
-    probes = top.select(
-        "tok", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
-    ).withColumn("bucket", bucket)
     return (
-        probes.join(counters, ["j", "bucket"])
-        .groupBy("tok", "n")
-        .agg(F.min("c").cast("long").alias("cm_estimate"))
+        countmin_query(countmin_freq_counters(freq, "tok"), top, "tok")
         .select(
             F.col("tok").alias("token"),
             F.col("n").alias("n_exact"),
@@ -1137,7 +1074,6 @@ def ext_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # saturation curve a single m would hide.
 
 BLOOM_FILTERS = (("m13", 1 << 13), ("m20", 1 << 20))
-BLOOM_K = 3
 _SQL_BLOOM_F = ", ".join(f"('{n}', {m})" for n, m in BLOOM_FILTERS)
 
 from marketing_etl_analytics_spark.ext.dedup import (  # noqa: E402
@@ -1241,22 +1177,8 @@ def ext_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per position draw and reduce % m per filter, instead of
     # re-hashing inside the filter cross join (halves the md5 work;
     # same positions, since pos = hv % m term-for-term)
-    hv = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("j").cast("string"), F.lit(":"), F.col("sh_str")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-    )
-    ks = F.explode(F.sequence(F.lit(1), F.lit(BLOOM_K))).alias("j")
+    hv = bloom_hash(F.col("sh_str"))
+    ks = bloom_salts()
     # eval-set shingles feed two consumers (the bit build and the
     # per-probe truth flag): materialize the tiny frame once
     ev = (
@@ -1498,15 +1420,7 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg_dir = f"{base}/registers"
 
     def batch_registers(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(_hll_hv().alias("hv"))
-            .distinct()
-            .select(*_hll_rank_expr())
-            .groupBy("idx")
-            .agg(F.max("rank").alias("m"))
-            .write.mode("append")
-            .parquet(reg_dir)
-        )
+        hll_registers(batch_df, "user_id").write.mode("append").parquet(reg_dir)
 
     try:
         q = (
@@ -1519,17 +1433,14 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination(300)
-        merged = (
-            spark.read.parquet(reg_dir)
-            .groupBy("idx")
-            .agg(F.max("m").alias("m"))
-            .select(F.lit("(all)").alias("grp"), "idx", "m")
+        merged = hll_merge(spark.read.parquet(reg_dir)).select(
+            F.lit("(all)").alias("grp"), "idx", "m"
         )
         ex = t(spark, sf_dir, "events").agg(
             F.countDistinct("user_id").cast("long").alias("n_exact")
         )
         out = (
-            _hll_finish(merged)
+            hll_estimate(merged, ["grp"])
             .crossJoin(F.broadcast(ex))
             .select("grp", "n_exact", "hll_estimate", "n_zero_registers")
             .localCheckpoint(eager=True)  # materialize before rmtree
@@ -1739,14 +1650,6 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = tempfile.mkdtemp(prefix=f"cm_stream_{uuid.uuid4().hex[:8]}_")
     cnt_dir = f"{base}/counters"
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col("j"), F.col("v"))), 1, 12),
-            16,
-            10,
-        ).cast("long")
-        % CM_W
-    )
 
     def batch_counters(batch_df: DataFrame, batch_id: int) -> None:
         # sum-merge is NOT replay-idempotent and foreachBatch is
@@ -1755,20 +1658,9 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rewrites its own subdir instead of double-counting
         import os as _os
 
-        (
-            batch_df.select(F.col("user_id").cast("string").alias("v"))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .select(
-                "v", "n",
-                F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j"),
-            )
-            .withColumn("bucket", bucket)
-            .groupBy("j", "bucket")
-            .agg(F.sum("n").alias("c"))
-            .write.mode("overwrite")
-            .parquet(_os.path.join(cnt_dir, f"b{batch_id:06d}"))
-        )
+        countmin_counters(
+            batch_df.select(F.col("user_id").cast("string").alias("v")), "v"
+        ).write.mode("overwrite").parquet(_os.path.join(cnt_dir, f"b{batch_id:06d}"))
 
     try:
         q = (
@@ -1795,13 +1687,8 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("n"), "v")
             .limit(CM_TOPK)
         )
-        probes = top.select(
-            "v", "n", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1))).alias("j")
-        ).withColumn("bucket", bucket)
         out = (
-            probes.join(counters, ["j", "bucket"])
-            .groupBy("v", "n")
-            .agg(F.min("c").cast("long").alias("cm_estimate"))
+            countmin_query(counters, top, "v")
             .select(
                 F.col("v").alias("user_key"),
                 F.col("n").alias("n_exact"),

@@ -78,13 +78,12 @@ def test_stream_hll_batch_count_invariance(spark, tmp_path):
     merged sketch over N micro-batches equals the single-pass sketch —
     including under a replayed batch. Three files, one per trigger,
     with overlapping keys + a verbatim replay file."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from marketing_etl_analytics_spark.suite.timeseries import (
-        _hll_finish,
-        _hll_hv,
-        _hll_rank_expr,
+    from marketing_etl_analytics_spark.ext.sketches import (
+        hll_estimate,
+        hll_merge,
+        hll_registers,
     )
 
     schema = StructType([StructField("user_id", LongType())])
@@ -99,15 +98,7 @@ def test_stream_hll_batch_count_invariance(spark, tmp_path):
     reg_dir = str(tmp_path / "regs")
 
     def batch_registers(batch_df, batch_id):
-        (
-            batch_df.select(_hll_hv().alias("hv"))
-            .distinct()
-            .select(*_hll_rank_expr())
-            .groupBy("idx")
-            .agg(F.max("rank").alias("m"))
-            .write.mode("append")
-            .parquet(reg_dir)
-        )
+        hll_registers(batch_df, "user_id").write.mode("append").parquet(reg_dir)
 
     q = (
         spark.readStream.schema(schema)
@@ -121,20 +112,10 @@ def test_stream_hll_batch_count_invariance(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    def finish(regs):
-        return _hll_finish(
-            regs.groupBy("idx")
-            .agg(F.max("rank").alias("m") if "rank" in regs.columns else F.max("m").alias("m"))
-            .select(F.lit("(all)").alias("grp"), "idx", "m")
-        ).collect()[0]
-
-    streamed = finish(spark.read.parquet(reg_dir))
-    batch = finish(
-        spark.createDataFrame(rows1 + rows2, schema)
-        .select(_hll_hv().alias("hv"))
-        .distinct()
-        .select(*_hll_rank_expr())
-    )
+    streamed = hll_estimate(hll_merge(spark.read.parquet(reg_dir))).collect()[0]
+    batch = hll_estimate(
+        hll_registers(spark.createDataFrame(rows1 + rows2, schema), "user_id")
+    ).collect()[0]
     assert streamed["hll_estimate"] == batch["hll_estimate"]
     assert streamed["n_zero_registers"] == batch["n_zero_registers"]
 
@@ -176,9 +157,9 @@ def test_bloom_library_no_false_negatives_and_mergeable(spark):
     a = spark.createDataFrame([(f"m{i}",) for i in range(50)], "v string")
     b = spark.createDataFrame([(f"m{i}",) for i in range(50, 90)], "v string")
     union = a.unionByName(b)
-    whole = bloom_bits(union, "v", m=4096, k=3)
-    merged = bloom_bits(a, "v", m=4096, k=3).unionByName(
-        bloom_bits(b, "v", m=4096, k=3)
+    whole = bloom_bits(union, "v", m=4096)
+    merged = bloom_bits(a, "v", m=4096).unionByName(
+        bloom_bits(b, "v", m=4096)
     ).distinct()
     assert sorted(r["pos"] for r in whole.collect()) == sorted(
         r["pos"] for r in merged.collect()
@@ -188,6 +169,6 @@ def test_bloom_library_no_false_negatives_and_mergeable(spark):
     )
     out = {
         r["v"]: r["might_contain"]
-        for r in bloom_might_contain(whole, probes, "v", m=4096, k=3).collect()
+        for r in bloom_might_contain(whole, probes, "v", m=4096).collect()
     }
     assert all(out[f"m{i}"] for i in range(90))  # no false negatives

@@ -1,4 +1,6 @@
-"""Semantic unit tests for the scale-path operators (suite.ext_scale).
+"""Semantic unit tests for the scale-path operators (SimHash in
+ext.dedup, batch sessionization in streaming.events_stream, IVF in
+suite.ext_scale).
 
 The differential suite proves Spark==DuckDB; these prove both are
 *right*: SimHash flags a true near-duplicate pair, sessionization
@@ -14,12 +16,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from marketing_etl_analytics_spark.suite.ext_scale import (
+from marketing_etl_analytics_spark.ext.dedup import simhash_candidate_pairs
+from marketing_etl_analytics_spark.streaming.events_stream import (
     SESSION_GAP_US,
-    ext_ann_cosine_for_ivf_check,
-    ext_dedup_simhash_frame,
     sessionize_batch,
 )
+from marketing_etl_analytics_spark.suite.ext_scale import ext_ann_cosine_for_ivf_check
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +40,7 @@ def docs(spark):
 
 
 def test_simhash_flags_near_dup_pair(docs):
-    pairs = ext_dedup_simhash_frame(docs).collect()
+    pairs = simhash_candidate_pairs(docs).collect()
     found = {(r.doc_a, r.doc_b) for r in pairs}
     assert (1, 2) in found
     by_pair = {(r.doc_a, r.doc_b): r.hamming for r in pairs}

@@ -24,12 +24,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from marketing_etl_analytics_spark.ext.dedup import LSH_BUCKET_CAP, cap_lsh_buckets
+from marketing_etl_analytics_spark.ext.dedup import (
+    LSH_BUCKET_CAP,
+    cap_lsh_buckets,
+    simhash_candidate_pairs,
+)
 from marketing_etl_analytics_spark.suite.ext import ext_dedup_minhash_lsh
 from marketing_etl_analytics_spark.suite.ext_scale import (
     EMB_BUCKET_CAP,
     ext_dedup_embedding_cosine,
-    ext_dedup_simhash_frame,
 )
 
 N_SPAM = LSH_BUCKET_CAP + 22  # one hot bucket, comfortably over cap
@@ -71,7 +74,7 @@ def test_cap_lsh_buckets_drops_only_hot(spark):
 
 
 def test_simhash_hot_bucket_stays_bounded(spark):
-    pairs = ext_dedup_simhash_frame(_docs_df(spark)).collect()
+    pairs = simhash_candidate_pairs(_docs_df(spark)).collect()
     # without the guard the spam group alone yields C(N_SPAM, 2) pairs
     spam_pairs = [p for p in pairs if p.doc_a < N_SPAM and p.doc_b < N_SPAM]
     assert spam_pairs == []

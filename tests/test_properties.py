@@ -12,10 +12,10 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from marketing_etl_analytics_spark.suite.ext_scale import (
+from marketing_etl_analytics_spark.ext.dedup import simhash_fingerprints
+from marketing_etl_analytics_spark.streaming.events_stream import (
     SESSION_GAP_US,
     sessionize_batch,
-    simhash_fingerprints,
 )
 
 _ts_offsets = st.lists(

@@ -172,8 +172,8 @@ def test_stream_sessionize_equals_batch(spark):
     correctness evidence against its fully-oracled batch twin."""
     from marketing_etl_analytics_spark.streaming.events_stream import (
         SESSION_GAP_US,
+        sessionize_batch,
     )
-    from marketing_etl_analytics_spark.suite.ext_scale import sessionize_batch
     from marketing_etl_analytics_spark.suite.udf import stream_sessionize
 
     streamed = {
@@ -290,8 +290,8 @@ def test_stream_session_window_multibatch(spark, tmp_path):
 
     from marketing_etl_analytics_spark.streaming.events_stream import (
         session_window_agg,
+        sessionize_batch,
     )
-    from marketing_etl_analytics_spark.suite.ext_scale import sessionize_batch
 
     ev = batch_events(spark, SF).select(
         "event_id", "ts", "user_id", "event_type", "value"

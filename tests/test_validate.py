@@ -1,43 +1,48 @@
-"""functions.validate: constraint checks over the built warehouse."""
+"""ext.quality.validate: key, NOT NULL and FK constraints over the built
+warehouse."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from marketing_etl_analytics_spark.ext import quality as Q
 
-from marketing_etl_analytics_spark.functions.validate import (
-    conservation_check,
-    fk_violations,
-    key_violations,
-    null_violations,
-)
-from marketing_etl_analytics_spark.suite.common import money
+
+def _violations(df, checks) -> dict[str, int]:
+    return {r.check: r.violations for r in Q.validate(df, checks).collect()}
 
 
 def test_warehouse_constraints_hold(warehouse):
     wh = warehouse
-    assert key_violations(wh["dim_products"], "product_id").count() == 0
-    assert key_violations(wh["dim_customers"], "customer_id").count() == 0
-    assert key_violations(wh["fact_sales"], "sale_id").count() == 0
-    assert null_violations(wh["fact_sales"], "date_id", "customer_id").count() == 0
-    assert (
-        fk_violations(
-            wh["fact_sales"], "product_id", wh["dim_products"], "product_id"
-        ).count()
-        == 0
-    )
-    cons = conservation_check(
-        wh["fact_sales"], wh["fact_sales"], money("revenue"), money("revenue")
-    ).collect()[0]
-    assert float(cons.difference) == 0.0
+    assert _violations(wh["dim_products"], [Q.unique("product_id")]) == {
+        "unique(product_id)": 0
+    }
+    assert _violations(wh["dim_customers"], [Q.unique("customer_id")]) == {
+        "unique(customer_id)": 0
+    }
+    assert _violations(
+        wh["fact_sales"],
+        [
+            Q.unique("sale_id"),
+            Q.not_null("date_id"),
+            Q.not_null("customer_id"),
+            Q.foreign_key(["product_id"], wh["dim_products"], ["product_id"]),
+        ],
+    ) == {
+        "unique(sale_id)": 0,
+        "not_null(date_id)": 0,
+        "not_null(customer_id)": 0,
+        "foreign_key(product_id)": 0,
+    }
 
 
 def test_checks_catch_violations(spark):
     bad = spark.createDataFrame(
         [(1, None), (1, 5), (2, 7)], "id long, ref long"
     )
-    assert key_violations(bad, "id").count() == 1  # id=1 twice
-    nv = {r.column: r.n_nulls for r in null_violations(bad, "ref").collect()}
-    assert nv == {"ref": 1}
     dim = spark.createDataFrame([(5,)], "k long")
-    # ref=7 has no dim match; ref=None is skipped (SQL FK semantics)
-    assert fk_violations(bad, "ref", dim, "k").count() == 1
+    # id=1 twice; ref has one NULL; ref=7 has no dim match, and the
+    # NULL ref is skipped rather than counted as an orphan (SQL FK
+    # semantics)
+    assert _violations(
+        bad,
+        [Q.unique("id"), Q.not_null("ref"), Q.foreign_key(["ref"], dim, ["k"])],
+    ) == {"unique(id)": 1, "not_null(ref)": 1, "foreign_key(ref)": 1}
