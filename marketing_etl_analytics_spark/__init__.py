@@ -11,7 +11,7 @@ designed for 100 TB scale.
 Layout:
     session      SparkSession factory (UTC, AQE, sane shuffle config)
     schemas      explicit StructTypes for raw CSVs + warehouse tables
-    sources      readers (csv/parquet/catalog) and writers
+    sources      CSV reader, ACID table format, JDBC source/sink
     functions    scalar column builders (dates, text, KPIs, bands,
                  portable rounding)
     etl          star-schema build (staging -> dims -> facts)

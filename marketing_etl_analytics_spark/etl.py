@@ -219,22 +219,21 @@ def build_fact_spend(
 
 
 def run_etl(
-    spark: SparkSession, raw_dir: str = REFERENCE_RAW_DIR, cache_dims: bool = True
+    spark: SparkSession, raw_dir: str = REFERENCE_RAW_DIR
 ) -> dict[str, DataFrame]:
     """Full warehouse build — the Spark analog of ``run_etl.sh``.
 
     Returns the warehouse as a dict of lazy DataFrames. Dims are
-    cached by default: they are re-read by every fact build and query,
-    and caching a few thousand rows costs nothing at any scale.
+    cached: they are re-read by every fact build and query, and
+    caching a few thousand rows costs nothing at any scale.
     """
     stg = load_staging(spark, raw_dir)
     dim_date = build_dim_date(stg["transactions"])
     dim_customers = build_dim_customers(stg["transactions"])
     dim_products = build_dim_products(stg["transactions"])
     dim_campaigns = build_dim_campaigns(stg["transactions"])
-    if cache_dims:
-        for d in (dim_date, dim_customers, dim_products, dim_campaigns):
-            d.cache()
+    for d in (dim_date, dim_customers, dim_products, dim_campaigns):
+        d.cache()
     fact_sales = build_fact_sales(
         stg["transactions"], dim_date, dim_products, dim_campaigns
     )

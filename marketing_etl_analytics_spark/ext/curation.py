@@ -11,11 +11,11 @@ corpus builds, idempotent reruns.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
+
+from marketing_etl_analytics_spark.ext.text import STOPWORDS
 
 # Max collected center rows for the Arrow/NumPy closure evaluators
 # (r10, guide §4.2): nearest-center assignment, IVF probing, and
@@ -26,9 +26,11 @@ from pyspark.sql.types import IntegralType
 # bound (k ~ 1e5 regimes: 8192 centers x 64 dims x 8 B = 4 MB closure
 # is the comfort ceiling) the code falls back to the frame-only
 # broadcast-join shape, which never collects centers to the driver.
-ARROW_CENTERS_MAX = int(
-    os.environ.get("SPARK_GRAFT_ARROW_CENTERS_MAX", "8192")
-)
+ARROW_CENTERS_MAX = 8192
+
+# farthest-first seeding draws its candidates from the POOL_FACTOR * k
+# md5-first rows (quantize_pool)
+POOL_FACTOR = 8
 
 
 # --- model-based quality scoring ---------------------------------------------
@@ -46,7 +48,6 @@ ARROW_CENTERS_MAX = int(
 # in ext_rarity_score), and exp() has no cross-libm exactness
 # guarantee.
 
-QUALITY_STOPWORDS = ("the", "a", "of", "and", "to", "in")
 # logit_1e4 = BIAS + W_STOP*sr + W_DISTINCT*dr + W_TOKENS*n_tokens*1e4
 #             + W_TOKLEN*atl  (all on the 1e-4 lattice)
 QUALITY_BIAS_1E4 = -30000      # -3.0
@@ -70,7 +71,7 @@ def quality_logit_1e4(toks, n_chars) -> "F.Column":
         ).cast("long")
 
     sr = s1e4(
-        F.size(F.filter(toks, lambda w: w.isin(*QUALITY_STOPWORDS))), n_tokens
+        F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS))), n_tokens
     )
     dr = s1e4(F.size(F.array_distinct(toks)), n_tokens)
     atl = s1e4(n_chars.cast("long") - n_tokens + 1, n_tokens)
@@ -175,7 +176,7 @@ def quantize_pool(
     deterministic uniform sample that seeds farthest-first selection.
     md5 hex ordering and floor-quantization are bit-identical across
     Spark, DuckDB, and Python, so every consumer derives the same
-    pool. The collect is PLANNING-sized: O(pool_factor * k) rows,
+    pool. The collect is PLANNING-sized: O(POOL_FACTOR * k) rows,
     never corpus-sized (the acid-manifest precedent)."""
     qvec = f"transform({vec}, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
     rows = (
@@ -472,7 +473,6 @@ def semantic_assign(
     n_centroids: int = 32,
     cluster_cap: int = 128,
     seeding: str = "farthest",
-    pool_factor: int = 8,
     assign: str = "exact",
     n_probe: int = 3,
 ) -> DataFrame:
@@ -488,15 +488,14 @@ def semantic_assign(
 
     ``seeding``: 'farthest' (default) picks centroids by farthest-
     first traversal over a deterministic md5-ordered sample of
-    pool_factor*k rows — the k-center greedy that k-means++
+    POOL_FACTOR*k rows — the k-center greedy that k-means++
     randomizes, here exact-integer and engine-reproducible. Seed
     quality determines cluster BALANCE, and balance is what the
-    sum(c_i^2) bound actually buys: lowest-key seeds ('lowest', the
-    legacy mode) can all land in one dense region, collapsing the
-    rest of the space onto few giant clusters (pinned by the skewed-
-    synthetic pytest). 'hashmod' (r5) is the distributed large-k
-    mode: hash-first row per md5 bucket, seeds stay a frame — no
-    driver greedy, no isin literals; the k~1e5 seeding path.
+    sum(c_i^2) bound actually buys: spread seeds keep a dense region
+    from collapsing the rest of the space onto few giant clusters
+    (pinned by the skewed-synthetic pytest). 'kmeanspar' is the
+    distributed large-k mode (see ``assign`` below): seeds stay a
+    frame — no driver greedy, no isin literals; the k~1e5 path.
 
     ``assign``: 'exact' scores every row against all k centroids
     (O(n*k) dots — fine at k~sqrt(n) up to modest k). 'ivf' routes
@@ -553,15 +552,13 @@ def semantic_assign(
         F.col("_n2").alias("_cn2"),
     ]
     if seeding == "farthest":
-        pool = quantize_pool(b, key, vec, pool_factor * n_centroids)
+        pool = quantize_pool(b, key, vec, POOL_FACTOR * n_centroids)
         seed_keys = farthest_first_from_pool(pool, n_centroids)
         cent = (
             b.filter(F.col(key).isin(seed_keys)).select(*cent_cols)
             if seed_keys
             else b.limit(0).select(*cent_cols)  # empty input frame
         )
-    elif seeding == "lowest":
-        cent = b.orderBy(key).limit(n_centroids).select(*cent_cols)
     elif seeding == "kmeanspar":
         # r6 (VERDICT r5 #4): deterministic k-means|| — oversample by
         # threshold each round, weight-reduce to k via md5 buckets;
@@ -570,28 +567,6 @@ def semantic_assign(
             b.select(key, vec, "_n2"), key, vec, n_centroids
         ).select(
             F.col("_cid"), F.col("_ce"), F.col("_cn2")
-        )
-    elif seeding == "hashmod":
-        # Distributed seeding for LARGE k (the ADVICE r4 path): k
-        # md5-derived buckets, seed = hash-first row per bucket. One
-        # shuffle on the bucket id, seeds stay a FRAME end-to-end —
-        # no driver-side greedy, no isin(<k literals>) plan-time
-        # blowup, so k~1e5 seeding costs the same as any groupBy.
-        # Trades farthest-first's k-center spread guarantee for full
-        # distribution; content-addressed, hence deterministic and
-        # engine-reproducible like every other seeding mode. Occupied
-        # buckets can be < k on small inputs (seeds = occupied count).
-        h = F.md5(F.col(key).cast("string"))
-        bkt = (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-            % F.lit(n_centroids)
-        )
-        ws = Window.partitionBy("_bkt").orderBy("_h", key)
-        cent = (
-            b.select(key, vec, "_n2", h.alias("_h"), bkt.alias("_bkt"))
-            .withColumn("_srn", F.row_number().over(ws))
-            .filter(F.col("_srn") == 1)
-            .select(*cent_cols)
         )
     else:
         raise ValueError(f"unknown seeding mode: {seeding!r}")
@@ -781,7 +756,6 @@ def semantic_dedup(
     cluster_cap: int = 128,
     threshold: float = 0.35,
     seeding: str = "farthest",
-    pool_factor: int = 8,
     assign: str = "exact",
     n_probe: int = 3,
     keyed: DataFrame | None = None,
@@ -803,7 +777,6 @@ def semantic_dedup(
             n_centroids=n_centroids,
             cluster_cap=cluster_cap,
             seeding=seeding,
-            pool_factor=pool_factor,
             assign=assign,
             n_probe=n_probe,
         )

@@ -26,7 +26,7 @@ exact, order-free, engine-invariant); quantization rounds via
 exact on identical IEEE doubles in both engines, so no
 HALF_UP-vs-banker's divergence).
 
-Two execution tiers, the cosine_topk / cosine_topk_arrow precedent:
+Two execution tiers:
 
 - :func:`project_signs` / :func:`quantize_int8` — JVM expression
   forms (flat ``aggregate()`` / ``transform()`` higher-order

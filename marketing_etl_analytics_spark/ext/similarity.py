@@ -1,6 +1,5 @@
 """Embedding similarity search.
 
-Norms are computed once per vector (``with_norm``) — never per pair.
 Brute force is a broadcast of the (small) query side against the full
 candidate set; the scale path buckets both sides by sign-LSH so the
 join shuffles on the bucket key instead of producing all pairs.
@@ -19,10 +18,6 @@ def _dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", F.sqrt(_dot(F.col(vec), F.col(vec))))
 
 
 def with_sign_bucket(df: DataFrame, vec: str = "embedding", bits: int = 8) -> DataFrame:
@@ -61,10 +56,8 @@ def cosine_topk(
     the recall/cost trade).
 
     Zero-norm vectors are dropped from BOTH sides before scoring
-    (cosine is undefined for them; without the filter the JVM ranks
-    the resulting NaN first while numpy's lexsort ranks it last, so
-    the two paths would diverge on degenerate input). The Arrow twin
-    applies the same filter.
+    (cosine is undefined for them; without the filter the window
+    would rank the resulting NaN first).
     """
     q = queries.select(
         F.col(key).alias("qid"), F.col(vec).alias("qe")
@@ -92,81 +85,3 @@ def cosine_topk(
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
     return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
-
-def cosine_topk_arrow(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    key: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized brute-force top-k: the numpy/BLAS twin of
-    ``cosine_topk``.
-
-    The query side is collected once (queries are the SMALL side by
-    contract — the same assumption that makes ``cosine_topk``
-    broadcast it), row-normalized into a dense matrix, and broadcast
-    to executors; each Arrow batch of candidates is normalized and
-    scored against ALL queries in ONE matmul, then reduced to a
-    per-batch local top-k so the shuffle carries at most
-    k * n_queries rows per batch — the classic partial-top-k combine.
-    A final per-query window merges the batch winners.
-
-    Same contract as cosine_topk(bucketed=False) — including the
-    zero-norm-rows-dropped rule, applied here on both the collected
-    query matrix and each candidate batch; ~10-50x its
-    per-pair cost at wide vectors because the JVM expression
-    evaluates the dot per pair while BLAS does a blocked matmul.
-    Scores are float64 matmul sums (pairwise summation) — equal to
-    the JVM's sequential double sum to ~1e-12; the pytest pins
-    rank-for-rank agreement on the graded corpora.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(key, vec).collect()
-    qids = np.array([r[key] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[vec]) for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(qm, axis=1)
-    qids, qm, q_norm = qids[q_norm > 0], qm[q_norm > 0], q_norm[q_norm > 0]
-    qm = qm / q_norm[:, None]
-    bq = candidates.sparkSession.sparkContext.broadcast((qids, qm))
-
-    def score(batches):
-        qids, qm = bq.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf[key].to_numpy(dtype=np.int64)
-            cm = np.array(pdf[vec].tolist(), dtype=np.float64)
-            c_norm = np.linalg.norm(cm, axis=1)
-            cids, cm = cids[c_norm > 0], cm[c_norm > 0]
-            if not len(cids):
-                continue
-            cm = cm / c_norm[c_norm > 0][:, None]
-            s = cm @ qm.T  # (n_candidates, n_queries)
-            out_q, out_c, out_s = [], [], []
-            for j in range(len(qids)):
-                col = s[:, j]
-                mask = cids != qids[j]
-                mc, ms = cids[mask], col[mask]
-                if not len(mc):
-                    continue
-                top = min(k, len(mc))
-                # batch-local top-k under the SAME total order as the
-                # final window (score desc, cid asc): argpartition on
-                # score alone would break exact-score ties (common —
-                # clone embeddings) arbitrarily at the k-boundary,
-                # making results partition-dependent
-                order = np.lexsort((mc, -ms))
-                sel = order[:top]
-                out_q.extend([qids[j]] * len(sel))
-                out_c.extend(mc[sel].tolist())
-                out_s.extend(ms[sel].tolist())
-            yield pd.DataFrame({"qid": out_q, "cid": out_c, "cosine": out_s})
-
-    local = candidates.select(key, vec).mapInPandas(
-        score, "qid long, cid long, cosine double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return local.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)

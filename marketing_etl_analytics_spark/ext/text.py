@@ -11,16 +11,16 @@ from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.functions.kpis import pround
 
-DEFAULT_STOPWORDS = ("the", "a", "of", "and", "to", "in")
+# the one stopword list: the quality heuristics, the quality model's
+# stopword-ratio feature and every DuckDB oracle that counts stopwords
+STOPWORDS = ("the", "a", "of", "and", "to", "in")
 TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def quality_features(
-    df: DataFrame, text: str = "text", stopwords: tuple[str, ...] = DEFAULT_STOPWORDS
-) -> DataFrame:
+def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
     tokens = F.split(F.lower(F.col(text)), " ")
     n_tokens = F.size(tokens)
-    n_stop = F.size(F.filter(tokens, lambda w: w.isin(*stopwords)))
+    n_stop = F.size(F.filter(tokens, lambda w: w.isin(*STOPWORDS)))
     return df.withColumns(
         {
             "n_tokens": n_tokens.cast("long"),

@@ -5,10 +5,7 @@ from marketing_etl_analytics_spark.functions.dates import (  # noqa: F401
     epoch_date_id,
     parse_mdy,
 )
-from marketing_etl_analytics_spark.functions.kpis import (  # noqa: F401
-    kpi_columns,
-    safe_div,
-)
+from marketing_etl_analytics_spark.functions.kpis import safe_div  # noqa: F401
 from marketing_etl_analytics_spark.functions.text import (  # noqa: F401
     channel_from_campaign,
 )

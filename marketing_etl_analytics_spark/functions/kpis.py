@@ -1,9 +1,11 @@
-"""Shared KPI expression builders (SURVEY.md §2.D D8).
+"""KPI arithmetic primitives (SURVEY.md §2.D D8): safe division and
+engine-portable rounding.
 
 The reference repeats the same ratio-of-sums KPI block in three views
 (``etl_script/04_views.sql:115-142`` channel grain, ``:199-227``
-campaign grain) and in ``analytics_queries.sql:76-86``. Here it is one
-reusable builder.
+campaign grain) and in ``analytics_queries.sql:76-86``. Here the block
+has one builder, ``views.kpi_from_totals``; this module holds the
+division and rounding it shares with the queries.
 
 Division is *true* division everywhere (documented deviation from the
 PG integer-division truncation bug at ``04_views.sql:56-58`` — see
@@ -37,29 +39,3 @@ def sql_pround(expr: str, ndigits: int) -> str:
     scale = float(10 ** ndigits)
     return f"FLOOR(CAST(({expr}) AS DOUBLE) * {scale} + 0.5) / {scale}"
 
-
-def kpi_columns(
-    revenue: Column,
-    cost: Column,
-    spend: Column,
-    orders: Column,
-    impressions: Column,
-    clicks: Column,
-    ndigits: int = 4,
-) -> dict[str, Column]:
-    """The reference's KPI set over pre-aggregated sums.
-
-    AOV = revenue/orders; CTR = clicks/impressions; ROAS = revenue/spend;
-    profit_roas = (revenue-cost)/spend; ROI = (revenue-spend)/spend;
-    profit_roi = (revenue-cost-spend)/spend.
-    (``etl_script/04_views.sql:115-142``)
-    """
-    r, c, s = revenue.cast("double"), cost.cast("double"), spend.cast("double")
-    return {
-        "aov": F.round(safe_div(r, orders.cast("double")), ndigits),
-        "ctr": F.round(safe_div(clicks.cast("double"), impressions.cast("double")), ndigits),
-        "roas": F.round(safe_div(r, s), ndigits),
-        "profit_roas": F.round(safe_div(r - c, s), ndigits),
-        "roi": F.round(safe_div(r - s, s), ndigits),
-        "profit_roi": F.round(safe_div(r - c - s, s), ndigits),
-    }

@@ -48,6 +48,14 @@ DEFAULT_SHUFFLE_PARTITIONS = env_positive_int(
 )
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when $SPARK_DRIVER_MEM is unset: half the
+    host's physical memory, at most 8g — a fixed 8g heap would ask a
+    small host for memory it does not have."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return "8g" if half_mb >= 8192 else f"{half_mb}m"
+
+
 def _jdk_major() -> int:
     """Major version of the JDK Spark will launch on (JAVA_HOME release
     file; falls back to 17 — the documented floor for Spark 4)."""
@@ -108,7 +116,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Quieter local runs.
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # Heartbeat window: at 100x+ local SFs a full-heap GC pause can
         # exceed the default 120 s spark.network.timeout, and in local
         # mode the HeartbeatReceiver then "removes" the driver-executor

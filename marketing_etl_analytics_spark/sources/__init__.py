@@ -1,11 +1,3 @@
-"""Sources & sinks: CSV/parquet readers, testdata catalog, writers."""
+"""Sources & sinks: CSV reader, ACID table format, JDBC source/sink."""
 
-from marketing_etl_analytics_spark.sources.catalog import (  # noqa: F401
-    TESTDATA_TABLES,
-    load_testdata,
-    register_testdata_views,
-)
 from marketing_etl_analytics_spark.sources.csv import read_csv  # noqa: F401
-from marketing_etl_analytics_spark.sources.sinks import (  # noqa: F401
-    write_partitioned_parquet,
-)

@@ -637,9 +637,8 @@ def compact(
 ) -> int:
     """Rewrite the current snapshot into ``target_files`` data files as
     a new version — no row changes, readers keep snapshot isolation
-    throughout (unlike ``sinks.compact_parquet``, which swaps a raw
-    directory in place). Incremental MERGEs accrete small files; at
-    scale this runs periodically like a format's OPTIMIZE.
+    throughout. Incremental MERGEs accrete small files; at scale this
+    runs periodically like a format's OPTIMIZE.
 
     ``order_by`` range-partitions + sorts the rewrite on the given
     columns (OPTIMIZE ... ZORDER's one-dimensional analog): files end

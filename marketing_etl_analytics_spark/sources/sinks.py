@@ -1,99 +1,14 @@
-"""Writers.
+"""JDBC source and sink.
 
 The reference's sinks are Postgres tables written via pandas ``to_sql``
-(replace) and ``INSERT ... SELECT`` (SURVEY.md §2.A A2/A8). Our
-equivalents are parquet directories; ``partitionBy`` on coarse date
-columns replaces the reference's B-tree indexes (`schema.sql:68-70`)
-— partition pruning + parquet min/max stats give the same access paths
-declaratively.
+(replace) and ``INSERT ... SELECT`` (SURVEY.md §2.A A2/A8). The
+package's own tables are ``sources.acid`` directories; these two
+functions connect a DataFrame to an external SQL database.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet, optionally hive-partitioned.
-
-    At 100 TB, facts go out partitioned by (year, month) so that
-    date-filtered queries prune partitions instead of scanning
-    everything; dims stay unpartitioned (they broadcast).
-    """
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Save as a bucketed (and bucket-sorted) managed table.
-
-    Both sides of a hot fact-fact join bucketed on the join key with
-    the same bucket count join WITHOUT an Exchange — the co-located
-    join layout for joins where neither side broadcasts
-    (tests/test_bucketing.py asserts the shuffle-free plan).
-    """
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table)
-    )
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_files: int,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Small-files compaction: rewrite a parquet directory into
-    ``target_files`` files (per partition when partitioned).
-
-    At 100 TB the small-files problem is operational reality —
-    streaming sinks and fine-grained partitioning produce thousands of
-    KB-sized files whose per-file open cost dominates scans. Rewrite
-    with a narrow repartition; readers see multi-row-group files the
-    scanner can parallelize. (The inverse of the single-row-group
-    pathology handled in suite.common.)
-    """
-    old = path.rstrip("/") + "__compact_old"
-    if os.path.isdir(old):
-        if os.path.isdir(path):
-            # stale leftover from a crash after the swap completed
-            shutil.rmtree(old)
-        else:
-            # crash happened mid-swap: the old data is the only copy
-            shutil.move(old, path)
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    writer = df.repartition(target_files).write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    # swap via rename-aside: a crash leaves either the old data at
-    # `path`, or (mid-swap) at `__compact_old` — which the recovery
-    # branch above restores on the next run. Parquet dirs still aren't
-    # transactional under concurrent readers; production layers a
-    # table format (see sources/acid.py) for that.
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
 
 
 def write_jdbc(

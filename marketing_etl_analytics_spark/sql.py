@@ -49,7 +49,3 @@ def register_kpi_views(spark: SparkSession, wh: dict[str, DataFrame]) -> None:
     for name, df in build_views(wh).items():
         df.createOrReplaceTempView(name)
 
-
-def run_sql(spark: SparkSession, sql: str) -> DataFrame:
-    """Run a SQL query against the registered views."""
-    return spark.sql(sql)

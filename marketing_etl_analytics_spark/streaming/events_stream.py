@@ -109,49 +109,6 @@ def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def attribution_join(
-    events: DataFrame, window: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream inner join: each click matched to same-user views
-    in the preceding ``window`` (the last-touch attribution shape).
-
-    Both sides carry watermarks and the join predicate carries an
-    event-time range, so the state store is bounded: a buffered view
-    row is evicted once the watermark passes ``view_ts + window``, a
-    click row once it passes ``click_ts`` — the state size is
-    O(events per watermark horizon), independent of stream length.
-    """
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", watermark)
-    )
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    return views.join(
-        clicks,
-        (F.col("user_id") == F.col("click_user"))
-        & (F.col("view_ts") < F.col("click_ts"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr(f"INTERVAL {window}")),
-    ).select(
-        "click_id",
-        "view_id",
-        "user_id",
-        (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("gap_us"),
-    )
-
-
 def attribution_join_outer(
     events: DataFrame, window: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:
@@ -163,8 +120,10 @@ def attribution_join_outer(
     arrive. Spark buffers the click and emits the NULL-joined row only
     once the global watermark (min across both sides) passes the
     click's last possible match time, so the unmatched feed is exactly
-    the clicks provably beyond late-data reach — state stays bounded by
-    the watermark horizon just like the inner join."""
+    the clicks provably beyond late-data reach. Both sides carry
+    watermarks and the join predicate carries an event-time range, so
+    the state store is bounded: O(events per watermark horizon),
+    independent of stream length."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -388,146 +347,6 @@ def sessionize_batch(ev: DataFrame) -> DataFrame:
             F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
             .cast("double")
             .alias("total_value"),
-        )
-    )
-
-
-# --- transformWithState sessionizer (next-gen stateful API) ------------------
-
-
-def sessionize_tws(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """The same 30-min-gap sessionizer on ``transformWithStateInPandas``
-    (Spark 4's successor to applyInPandasWithState): named value state,
-    explicit event-time timers, Arrow-batched input. Output must equal
-    :func:`sessionize` row-for-row — the test suite asserts it.
-
-    API differences that matter here vs the GroupState form: state is a
-    named handle created once in ``init`` (and can be one of several —
-    value/list/map — per processor); timers are first-class (register/
-    delete/list) instead of one implicit timeout per key, so the stale
-    timer is deleted explicitly when the open session extends.
-
-    Environment note: the TWS Python driver worker requires the
-    ``google.protobuf`` package to handshake with the JVM; in
-    environments without it the stream fails at initialization
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). The equality
-    test against :func:`sessionize` importorskips on that package."""
-    import numpy as np
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap_us = SESSION_GAP_US
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState(
-                "open_session",
-                "start_us long, last_us long, n long, value double",
-            )
-
-        def _emit(self, user_id, segs):
-            return pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(segs),
-                    "session_start": [
-                        pd.Timestamp(s, unit="us") for s, _, _, _ in segs
-                    ],
-                    "session_end": [
-                        pd.Timestamp(e, unit="us") for _, e, _, _ in segs
-                    ],
-                    "n_events": [n for _, _, n, _ in segs],
-                    "total_value": [round(v, 2) for _, _, _, v in segs],
-                }
-            )
-
-        def _rearm(self, last_us: int, wm_ms: int) -> None:
-            # exactly one live timer per key: drop any stale ones, then
-            # arm at watermark-safe session expiry
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-            self.handle.registerTimer(max(last_us // 1000 + gap_us // 1000, wm_ms + 1))
-
-        def handleInputRows(
-            self, key, rows, timerValues: TimerValues
-        ) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            ts_parts, val_parts = [], []
-            for pdf in rows:
-                ts_parts.append(
-                    pd.to_datetime(pdf["ts"])
-                    .values.astype("datetime64[us]")
-                    .astype(np.int64)
-                )
-                val_parts.append(pdf["value"].to_numpy(dtype=np.float64))
-            us = np.concatenate(ts_parts) if ts_parts else np.empty(0, np.int64)
-            vals = (
-                np.concatenate(val_parts) if val_parts else np.empty(0, np.float64)
-            )
-            if len(us) == 0:
-                if self.state.exists():
-                    _, last0, _, _ = self.state.get()
-                    self._rearm(int(last0), timerValues.getCurrentWatermarkInMs())
-                return
-            order = np.argsort(us, kind="stable")
-            us, vals = us[order], vals[order]
-            seg_starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(us) > gap_us) + 1)
-            )
-            seg_last = np.concatenate((seg_starts[1:] - 1, [len(us) - 1]))
-            counts = np.diff(np.concatenate((seg_starts, [len(us)])))
-            sums = np.add.reduceat(vals, seg_starts)
-            segments = [
-                (int(us[s]), int(us[e]), int(c), float(v))
-                for s, e, c, v in zip(seg_starts, seg_last, counts, sums)
-            ]
-            if self.state.exists():
-                segments.append(tuple(self.state.get()))
-                segments.sort()
-                merged = [segments[0]]
-                for seg in segments[1:]:
-                    prev = merged[-1]
-                    if seg[0] - prev[1] <= gap_us:
-                        merged[-1] = (
-                            min(prev[0], seg[0]),
-                            max(prev[1], seg[1]),
-                            prev[2] + seg[2],
-                            prev[3] + seg[3],
-                        )
-                    else:
-                        merged.append(seg)
-                segments = merged
-            out = segments[:-1]
-            start_us, last_us, n, value = segments[-1]
-            self.state.update((start_us, last_us, n, value))
-            self._rearm(last_us, timerValues.getCurrentWatermarkInMs())
-            if out:
-                yield self._emit(user_id, out)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            if self.state.exists():
-                seg = tuple(self.state.get())
-                self.state.clear()
-                yield self._emit(user_id, [seg])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType=SESSION_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
         )
     )
 

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.ext.text import STOPWORDS
 from marketing_etl_analytics_spark.functions.kpis import pround, sql_pround  # noqa: F401
 
 # --- table access -----------------------------------------------------------
@@ -296,13 +297,17 @@ def sql_avg_det_raw(expr: str) -> str:
     return f"(CAST(SUM({e}) AS DOUBLE) / COUNT({e}))"
 
 
+# ext.text.STOPWORDS as a DuckDB list literal: 'the', 'a', ...
+SQL_STOPWORDS = ", ".join(repr(w) for w in STOPWORDS)
+
+
 def sql_quality_logit(toks: str, n_chars: str) -> str:
     """DuckDB twin of ext.curation.quality_logit_1e4: the fixed-weight
     linear quality model on the 1e-4 integer lattice (same
     left-to-right double division, same integer weights — the logit is
     exact integer arithmetic in both engines)."""
     s1e4 = "CAST(FLOOR(CAST({num} AS DOUBLE) / {den} * 10000 + 0.5) AS BIGINT)"
-    stop_sql = "w IN ('the', 'a', 'of', 'and', 'to', 'in')"
+    stop_sql = f"w IN ({SQL_STOPWORDS})"
     sr = s1e4.format(
         num=f"len(list_filter({toks}, w -> {stop_sql}))", den=f"len({toks})"
     )

@@ -49,7 +49,13 @@ from marketing_etl_analytics_spark.ext.dedup import (
     PERM_B,
     ROWS_PER_BAND,
 )
+from marketing_etl_analytics_spark.ext.text import (
+    TOKEN_RE,
+    quality_features,
+    token_counts,
+)
 from marketing_etl_analytics_spark.suite.common import (
+    SQL_STOPWORDS,
     memo_df,
     ratio,
     sql_pround,
@@ -568,13 +574,10 @@ def ext_ann_scan_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (ext_text_quality, ext_lang_id, ext_token_count, ext_fingerprint)
 # are merged into ONE wide per-document profile so their semantics
 # share a single current driver-graded row (the VERDICT r2 #2
-# recommendation, same consolidation as rel_window_frames). The
-# expressions are unchanged from the retired entries; one scan
-# computes every doc-local feature, and only the fingerprint
-# (min-shingle aggregate) adds a shuffle.
-
-STOPWORDS = "'the', 'a', 'of', 'and', 'to', 'in'"
-TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
+# recommendation, same consolidation as rel_window_frames). The token
+# counts and the quality features are ext.text.token_counts /
+# quality_features; one scan computes every doc-local feature, and
+# only the fingerprint (min-shingle aggregate) adds a shuffle.
 
 LANG_SETS = {
     "en": ("the", "a", "of"),
@@ -593,7 +596,7 @@ LANG_SETS = {
     scored AS (
       SELECT doc_id, lang, source, n_chars, text,
         len(tokens) AS n_tokens,
-        len(list_filter(tokens, w -> w IN ({STOPWORDS}))) AS n_stop,
+        len(list_filter(tokens, w -> w IN ({SQL_STOPWORDS}))) AS n_stop,
         len(list_filter(tokens, w -> w IN ('the', 'a', 'of'))) AS s_en,
         len(list_filter(tokens, w -> w IN ('el', 'la', 'de'))) AS s_es,
         len(list_filter(tokens, w -> w IN ('der', 'die', 'und'))) AS s_de
@@ -640,30 +643,22 @@ LANG_SETS = {
 def ext_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     tokens = F.split(F.lower("text"), " ")
-    n_tokens = F.size(tokens)
-    n_stop = F.size(
-        F.filter(tokens, lambda w: w.isin("the", "a", "of", "and", "to", "in"))
-    )
+    n_tokens = F.col("n_tokens")
 
     def score(words: tuple[str, ...]):
         return F.size(F.filter(tokens, lambda w: w.isin(*words))).cast("long")
 
     s_en, s_es, s_de = (score(LANG_SETS[k]) for k in ("en", "es", "de"))
-    base = docs.select(
+    base = quality_features(token_counts(docs)).select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
         "source",
         F.col("n_chars").cast("long").alias("n_chars"),
-        n_tokens.cast("long").alias("ws_tokens"),
-        F.size(F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_RE), 0))
-        .cast("long")
-        .alias("re_tokens"),
+        "ws_tokens",
+        "re_tokens",
         ratio(F.col("n_chars") - n_tokens + 1, n_tokens, 4).alias("avg_token_len"),
-        ratio(n_stop, n_tokens, 4).alias("stopword_ratio"),
-        F.when(n_tokens < 5, "too_short")
-        .when(n_stop.cast("double") / n_tokens > 0.5, "low_content")
-        .otherwise("ok")
-        .alias("quality"),
+        pround(F.col("stopword_ratio"), 4).alias("stopword_ratio"),
+        "quality",
         F.when((s_en >= s_es) & (s_en >= s_de), "en")
         .when(s_es >= s_de, "es")
         .otherwise("de")

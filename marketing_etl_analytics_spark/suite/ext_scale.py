@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext.curation import (
+    POOL_FACTOR,
     SPARK_DOT,
     semantic_assign,
     semantic_dedup,
@@ -45,11 +46,13 @@ from marketing_etl_analytics_spark.ext.dedup import (
     simhash_candidate_pairs,
     simhash_fingerprints,
 )
+from marketing_etl_analytics_spark.ext.text import STOPWORDS
 from marketing_etl_analytics_spark.streaming.events_stream import (
     SESSION_GAP_US,
     sessionize_batch,
 )
 from marketing_etl_analytics_spark.suite.common import (
+    SQL_STOPWORDS,
     memo_df,
     pround,
     ratio,
@@ -1113,7 +1116,7 @@ SQL_QUALITY_LOGIT = sql_quality_logit("toks", "n_chars")
     scored AS (
       SELECT doc_id, lang, source, n_chars, text_hash,
         len(toks) AS n_tokens,
-        len(list_filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'to', 'in')))
+        len(list_filter(toks, w -> w IN ({SQL_STOPWORDS})))
           AS n_stop,
         {SQL_QUALITY_LOGIT} AS q_1e4
       FROM hashed
@@ -1159,7 +1162,7 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = F.split(F.lower("text"), " ")
     n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda w: w.isin("the", "a", "of", "and", "to", "in")))
+    n_stop = F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS)))
     scored = docs.select(
         "doc_id", "lang", "source",
         F.md5(F.lower("text")).alias("text_hash"),
@@ -1601,7 +1604,7 @@ SEM_DEDUP_T = 0.35  # production text near-dup ~0.95; synthetic corpus
 # set where the decision is non-trivial in BOTH directions
 SEM_CENTROIDS = 32
 SEM_CLUSTER_CAP = 128
-SEM_POOL = 8 * SEM_CENTROIDS  # farthest-first candidate pool
+SEM_POOL = POOL_FACTOR * SEM_CENTROIDS  # farthest-first candidate pool
 
 
 def _sql_farthest_ctes(k: int, pool_sql: str, prefix: str) -> str:

@@ -173,12 +173,12 @@ def test_semantic_dedup_narrow_vectors(spark):
 
 def test_semantic_dedup_farthest_seeding_balances_skew(spark):
     """Farthest-first seeding (r4, VERDICT r3 #2) spreads centroids
-    across the embedding space; lowest-key seeding can land every
-    seed inside one dense blob, collapsing the rest of the space onto
-    few giant clusters. Synthetic: the lowest keys all sit in one
-    tight cluster, while the corpus spans 4 well-separated directions
-    — max cluster size must be strictly better (smaller) under
-    farthest-first."""
+    across the embedding space, so a dense blob of low keys cannot
+    capture every seed and collapse the rest of the space onto few
+    giant clusters. Synthetic: the lowest keys all sit in one tight
+    cluster, while the corpus spans 4 well-separated directions — each
+    direction must land in its own cluster, 4 distinct clusters in
+    all, and no cluster may grow past ~a quarter of the corpus."""
     from marketing_etl_analytics_spark.ext import semantic_dedup
 
     dirs = {
@@ -187,28 +187,22 @@ def test_semantic_dedup_farthest_seeding_balances_skew(spark):
         2: [0.1, 0.1, 10.0, 0.1],
         3: [0.1, 0.1, 0.1, 10.0],
     }
-    rows = []
+    rows, direction = [], {}
     for i in range(200):
         # keys 0..7 (the lowest) ALL in direction 0; the rest rotate
         d = 0 if i < 8 else i % 4
+        direction[i] = d
         base = dirs[d]
         rows.append((i, [c + 0.001 * (i % 7) for c in base]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def max_cluster(out):
-        sizes = (
-            out.groupBy("cluster").count().agg(F.max("count")).collect()[0][0]
-        )
-        return sizes
-
     far = semantic_dedup(df, n_centroids=4, cluster_cap=1000, threshold=2.0)
-    low = semantic_dedup(
-        df, n_centroids=4, cluster_cap=1000, threshold=2.0, seeding="lowest"
-    )
-    far_max, low_max = max_cluster(far), max_cluster(low)
-    # lowest-key: all 4 seeds in direction 0 -> ties collapse the
-    # other 3 directions onto few seeds; farthest-first covers all 4
-    assert far_max < low_max
+    clusters_of = {d: set() for d in dirs}
+    for r in far.select("vec_id", "cluster").collect():
+        clusters_of[direction[r.vec_id]].add(r.cluster)
+    assert all(len(c) == 1 for c in clusters_of.values()), clusters_of
+    assert len(set().union(*clusters_of.values())) == 4
+    far_max = far.groupBy("cluster").count().agg(F.max("count")).collect()[0][0]
     assert far_max <= 60  # ~200/4 + the 8 planted low keys
 
 
@@ -264,39 +258,14 @@ def test_semantic_dedup_ivf_assign_matches_exact(spark):
 
 
 def test_semantic_dedup_empty_input(spark):
-    """An empty input frame yields an empty result (not a crash) in
-    both seeding modes — upstream curation stages can legitimately
-    filter everything out."""
+    """An empty input frame yields an empty result (not a crash) on
+    both the farthest/exact and the kmeanspar/ivf path — upstream
+    curation stages can legitimately filter everything out."""
     from marketing_etl_analytics_spark.ext import semantic_dedup
 
     df = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert semantic_dedup(df).count() == 0
-    assert semantic_dedup(df, seeding="lowest").count() == 0
-
-
-def test_hashmod_seeding_is_distributed_and_deterministic(spark):
-    """'hashmod' seeding (r5, the large-k ADVICE path): seeds derived
-    as a frame (one bucket groupBy — no driver greedy, no isin
-    literals), deterministic across invocations, and the resulting
-    assignment covers every row with clusters drawn from the seed
-    set."""
-    from marketing_etl_analytics_spark.ext.curation import (
-        semantic_assign,
-        semantic_dedup,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    n = emb.count()
-    a1 = semantic_assign(emb, n_centroids=16, seeding="hashmod")
-    a2 = semantic_assign(emb, n_centroids=16, seeding="hashmod")
-    r1 = sorted(map(tuple, a1.collect()))
-    assert r1 == sorted(map(tuple, a2.collect()))  # deterministic
-    assert len(r1) == n  # every row assigned
-    clusters = {r[1] for r in r1}
-    assert 1 < len(clusters) <= 16  # occupied buckets, bounded by k
-    # end-to-end: the full dedup runs on the hashmod index too
-    out = semantic_dedup(emb, n_centroids=16, seeding="hashmod")
-    assert out.count() == n
+    assert semantic_dedup(df, seeding="kmeanspar", assign="ivf").count() == 0
 
 
 # --- global shuffle / split / shard ------------------------------------------

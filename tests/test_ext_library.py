@@ -186,26 +186,3 @@ def test_dedup_eval_recall_floor(spark):
     assert row.recall is not None and row.recall >= 0.9
     assert row.precision is not None and row.precision >= 0.3
 
-
-def test_cosine_topk_arrow_matches_jvm_path(spark, emb):
-    """The Arrow/BLAS brute-force path (mapInPandas matmul + local
-    top-k combine) agrees rank-for-rank with the JVM expression path
-    on the graded corpus, for several query sizes and k values —
-    float64 matmul vs sequential double sums differ only in the last
-    ulps, far below the corpus's score gaps."""
-    from marketing_etl_analytics_spark.ext import cosine_topk_arrow
-
-    for n_q, k in ((3, 4), (10, 5)):
-        q = emb.filter(F.col("vec_id") < n_q)
-        jvm = {
-            (r.qid, r.rn): r.cid for r in cosine_topk(emb, q, k=k).collect()
-        }
-        arrow = {
-            (r.qid, r.rn): (r.cid, r.cosine)
-            for r in cosine_topk_arrow(emb, q, k=k).collect()
-        }
-        assert set(jvm) == set(arrow)
-        for key_rn, cid in jvm.items():
-            acid, acos = arrow[key_rn]
-            assert acid == cid
-            assert -1.0001 <= acos <= 1.0001

@@ -1,7 +1,7 @@
-"""The library packages ``ext`` and ``streaming`` import nothing from
-``suite``: the suite's entries are adapters over the library, never the
-other way round. Every import statement counts, including the ones
-inside functions."""
+"""The library packages ``ext``, ``streaming``, ``sources`` and
+``functions`` import nothing from ``suite``: the suite's entries are
+adapters over the library, never the other way round. Every import
+statement counts, including the ones inside functions."""
 
 from __future__ import annotations
 
@@ -33,7 +33,7 @@ def _imported_modules(path: Path) -> list[tuple[int, str]]:
     return out
 
 
-@pytest.mark.parametrize("subpackage", ["ext", "streaming"])
+@pytest.mark.parametrize("subpackage", ["ext", "streaming", "sources", "functions"])
 def test_library_does_not_import_suite(subpackage):
     files = sorted((PKG_DIR / subpackage).rglob("*.py"))
     assert files

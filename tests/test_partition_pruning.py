@@ -14,8 +14,6 @@ import io
 
 from pyspark.sql import functions as F
 
-from marketing_etl_analytics_spark.sources.sinks import write_partitioned_parquet
-
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -24,7 +22,7 @@ def test_year_filter_prunes_partitions(spark, tmp_path):
         "o_year", F.year(F.to_date("o_orderdate"))
     )
     out = str(tmp_path / "orders_by_year")
-    write_partitioned_parquet(orders, out, ["o_year"])
+    orders.write.partitionBy("o_year").parquet(out)
 
     back = spark.read.parquet(out)
     filtered = back.filter(F.col("o_year") == 1995)
@@ -42,18 +40,3 @@ def test_year_filter_prunes_partitions(spark, tmp_path):
     expect = orders.filter(F.col("o_year") == 1995).count()
     assert filtered.count() == expect and expect > 0
 
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    from marketing_etl_analytics_spark.sources.sinks import compact_parquet
-
-    src = spark.range(10_000).withColumn("v", F.col("id") * 2)
-    out = str(tmp_path / "fragmented")
-    src.repartition(64).write.parquet(out)  # 64 tiny files
-    import glob
-
-    assert len(glob.glob(f"{out}/part-*.parquet")) == 64
-    compact_parquet(spark, out, target_files=4)
-    assert len(glob.glob(f"{out}/part-*.parquet")) == 4
-    back = spark.read.parquet(out)
-    assert back.count() == 10_000
-    assert back.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(10_000))

@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark import queries as Q
-from marketing_etl_analytics_spark.sources.sinks import write_partitioned_parquet
 
 
 def test_fact_roundtrip_preserves_query_results(spark, warehouse, tmp_path):
@@ -20,7 +19,7 @@ def test_fact_roundtrip_preserves_query_results(spark, warehouse, tmp_path):
         "sale_year", F.year(F.from_unixtime("date_id").cast("date"))
     )
     out = str(tmp_path / "fact_sales")
-    write_partitioned_parquet(fact, out, ["sale_year"])
+    fact.write.partitionBy("sale_year").parquet(out)
 
     reread = spark.read.parquet(out).drop("sale_year")
     wh2 = dict(wh)

@@ -1,6 +1,7 @@
 """``get_spark`` sizes a local session from the CPUs it may run on when
 ``SPARK_GRAFT_CPUS`` is unset, and from the variable when it is set; the
-suite's spread width follows the same default."""
+suite's spread width follows the same default. The driver heap follows
+the host's physical memory unless ``SPARK_DRIVER_MEM`` sets it."""
 
 from __future__ import annotations
 
@@ -70,3 +71,17 @@ def test_spread_partitions_follow_the_session_cpu_default(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
     assert _fresh_copy(harness)._SPREAD_PARTITIONS == len(os.sched_getaffinity(0))
+
+
+def test_driver_memory_is_half_the_host_up_to_8g(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+    for gib, want in ((6, "3072m"), (64, "8g")):
+        sysconf = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(os, "sysconf", sysconf.__getitem__)
+        session.get_spark()
+        assert builder.conf["spark.driver.memory"] == want, gib
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
+    session.get_spark()
+    assert builder.conf["spark.driver.memory"] == "2g"

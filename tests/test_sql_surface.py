@@ -11,11 +11,7 @@ from __future__ import annotations
 import pytest
 
 from marketing_etl_analytics_spark import queries as Q
-from marketing_etl_analytics_spark.sql import (
-    register_kpi_views,
-    register_warehouse,
-    run_sql,
-)
+from marketing_etl_analytics_spark.sql import register_kpi_views, register_warehouse
 
 # Spark-SQL transcriptions of reference queries
 # (analytics_queries.sql:26-35, :12-18, :68-89)
@@ -69,37 +65,35 @@ def reference_sql_session(spark, reference_warehouse):
 
 
 def test_sql_q1_matches_dataframe_library(sql_session, warehouse):
-    got = run_sql(sql_session, SQL_Q1).collect()
+    got = sql_session.sql(SQL_Q1).collect()
     lib = Q.q1_best_sellers(warehouse).limit(5).collect()
     assert [r.item_name for r in got] == [r.item_name for r in lib]
     assert [r.total_units_sold for r in got] == [r.total_units_sold for r in lib]
 
 
 def test_sql_q0_totals(reference_sql_session):
-    row = run_sql(reference_sql_session, SQL_Q0).collect()[0]
+    row = reference_sql_session.sql(SQL_Q0).collect()[0]
     # reference golden totals (BASELINE.md): revenue / cost over raw CSV
     assert float(row.total_revenue) == 21261600.0
     assert float(row.total_cost) == 8486920.0
 
 
 def test_sql_filter_aggregate_clause(sql_session):
-    rows = run_sql(sql_session, SQL_FILTER_AGG).collect()
+    rows = sql_session.sql(SQL_FILTER_AGG).collect()
     assert rows and all(r.multi_unit_orders > 0 for r in rows)
     assert all(r.multi_unit_orders <= r.orders for r in rows)
 
 
 def test_kpi_view_recomputes_lazily(sql_session):
-    kpis = run_sql(
-        sql_session,
-        "SELECT channel, roas FROM mv_kpi_channel ORDER BY roas DESC",
+    kpis = sql_session.sql(
+        "SELECT channel, roas FROM mv_kpi_channel ORDER BY roas DESC"
     ).collect()
     assert len(kpis) == 4  # Email, Affiliates, Social Media, Paid Search
 
 
 def test_kpi_view_email_leads_roas(reference_sql_session):
-    kpis = run_sql(
-        reference_sql_session,
-        "SELECT channel, roas FROM mv_kpi_channel ORDER BY roas DESC",
+    kpis = reference_sql_session.sql(
+        "SELECT channel, roas FROM mv_kpi_channel ORDER BY roas DESC"
     ).collect()
     # reference golden outcome (README.md:699): Email is the ROAS leader
     assert kpis[0].channel.strip() == "Email"

@@ -7,8 +7,6 @@ entry's rows exactly (modulo the approx-distinct column).
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.streaming import (
@@ -115,18 +113,19 @@ def test_sessionize(spark):
 
 
 def test_attribution_join_matches_batch(spark):
-    """Stream-stream interval join over a bounded stream must equal
-    the batch join: watermarks only evict state, never drop matches
-    when every row arrives before the final watermark advance."""
+    """The matched rows of the stream-stream interval join over a
+    bounded stream must equal the batch inner join: watermarks only
+    evict state, never drop matches when every row arrives before the
+    final watermark advance."""
     from marketing_etl_analytics_spark.streaming.events_stream import (
-        attribution_join,
+        attribution_join_outer,
         read_events_stream,
     )
     from marketing_etl_analytics_spark.suite.common import events as batch_events
 
     sf_dir = "/root/testdata/sf0.001"
     q = (
-        attribution_join(read_events_stream(spark, sf_dir))
+        attribution_join_outer(read_events_stream(spark, sf_dir))
         .writeStream.format("memory")
         .queryName("attrib_test")
         .outputMode("append")
@@ -136,7 +135,9 @@ def test_attribution_join_matches_batch(spark):
     q.awaitTermination(180)
     got = {
         (r.click_id, r.view_id, r.user_id, r.gap_us)
-        for r in spark.sql("SELECT * FROM attrib_test").collect()
+        for r in spark.sql(
+            "SELECT * FROM attrib_test WHERE view_id IS NOT NULL"
+        ).collect()
     }
 
     ev = batch_events(spark, sf_dir)
@@ -209,43 +210,6 @@ def test_stream_sessionize_equals_batch(spark):
     # — identical after 2dp rounding up to one-ulp boundary noise
     for key, got in streamed.items():
         assert abs(got - closed[key]) <= 0.011, (key, got, closed[key])
-
-
-def test_transform_with_state_sessionizer_equals_group_state(spark):
-    """The transformWithStateInPandas sessionizer (next-gen stateful
-    API: named value state + explicit event-time timers) must emit
-    exactly the rows of the applyInPandasWithState one on the same
-    bounded stream — two implementations, one contract."""
-    # the TWS Python driver worker speaks protobuf to the JVM; without
-    # the google.protobuf package the runner cannot even start
-    # (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE) — environment
-    # gap, not an implementation one, so skip rather than xfail
-    pytest.importorskip("google.protobuf")
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        sessionize_tws,
-    )
-
-    def run(build, name):
-        q = (
-            build(read_events_stream(spark, SF))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return {
-            (r.user_id, r.session_start, r.session_end, r.n_events): round(
-                r.total_value, 2
-            )
-            for r in spark.table(name).collect()
-        }
-
-    old = run(sessionize, "tws_old_sessions")
-    new = run(sessionize_tws, "tws_new_sessions")
-    assert len(old) > 100
-    assert new == old
 
 
 def test_dedup_within_watermark_drops_replays(spark, tmp_path):
