@@ -88,71 +88,58 @@ def main() -> None:
     # making round-over-round per-entry comparisons noise. Build them
     # HERE, untimed-per-entry but reported as separate named rows, so
     # the timed loop below measures warm plans regardless of registry
-    # order. Opt out with SPARK_GRAFT_BENCH_NO_WARMUP=1. A targeted
-    # probe (SPARK_GRAFT_BENCH_ONLY) warms only the owners it will
-    # time — paying all 15 owners at a 100x-class SF to probe one
-    # entry made targeted large-SF runs impractical.
-    _only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    _only_set = (
-        {n.strip() for n in _only_env.split(",") if n.strip()}
-        if _only_env else None
+    # order. A targeted probe (SPARK_GRAFT_BENCH_ONLY) warms only the
+    # owners it will time — paying all 15 owners at a 100x-class SF to
+    # probe one entry made targeted large-SF runs impractical.
+    #   SPARK_GRAFT_BENCH_ONLY=a,b,c -> run only the named entries
+    only_env = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    only = (
+        {n.strip() for n in only_env.split(",") if n.strip()}
+        if only_env else None
     )
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_WARMUP") != "1":
-        WARMUP_OWNERS = [
-            # entry -> shared artifact it builds (comment = memo name)
-            "ext_dedup_ngram_jaccard",    # ngram_sets (shared shingle index)
-            "ext_ann_scan_suite",         # emb_norms
-            "ext_coreset_kcenter",        # emb_norms_lattice
-            "ext_sketch_suite",           # kmv_sketch_sets / kmv_hash_sets
-            "ext_dedup_containment",      # containment_shingles
-            "ext_quality_dsir",           # dsir_feats (memoized bigram stage)
-            "ext_graph_pagerank",         # pagerank_edges (shared edge index)
-            "ext_dedup_simhash",          # simhash_pairs
-            "ext_dedup_cluster",          # simhash_clusters
-            "ext_ann_ivf_suite",          # ann_ground_truth (recall branch, r9 fold)
-            "ext_quality_perceptron",     # pctr_docvec (hashed-count vectors)
-            "ext_ann_pq_adc",             # pq_codes + pq_lut
-            "ext_semantic_dedup",         # sem_assign
-            "ext_semantic_dedup_ivf",     # IVF centroids
-            "ext_search_suite",           # persisted bucketed term index
-            "v_channel_daily_incremental",  # channel_daily_base_state
-        ]
-        for wname in WARMUP_OWNERS:
-            if wname not in SUITE:
-                continue
-            if _only_set is not None and wname not in _only_set:
-                continue
-            t0 = time.perf_counter()
-            SUITE[wname].fn(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            warmup[wname] = round(time.perf_counter() - t0, 3)
-            print(f"[bench] warmup {wname}: {warmup[wname]:.3f}s",
-                  file=sys.stderr, flush=True)
+    WARMUP_OWNERS = [
+        # entry -> shared artifact it builds (comment = memo name)
+        "ext_dedup_ngram_jaccard",    # ngram_sets (shared shingle index)
+        "ext_dedup_embedding_cosine", # emb_norms + emb_buckets
+        "ext_coreset_kcenter",        # emb_norms_lattice
+        "ext_sketch_suite",           # kmv_sketch_sets / kmv_hash_sets
+        "ext_dedup_containment",      # containment_shingles
+        "ext_quality_dsir",           # dsir_feats (memoized bigram stage)
+        "ext_graph_pagerank",         # pagerank_edges (shared edge index)
+        "ext_dedup_simhash",          # simhash_pairs
+        "ext_dedup_cluster",          # simhash_clusters
+        "ext_ann_ivf_suite",          # ann_ground_truth (recall branch, r9 fold)
+        "ext_quality_perceptron",     # pctr_docvec (hashed-count vectors)
+        "ext_ann_pq_adc",             # pq_codes + pq_lut
+        "ext_semantic_dedup",         # sem_assign
+        "ext_semantic_dedup_ivf",     # IVF centroids
+        "ext_search_suite",           # persisted bucketed term index
+        "v_channel_daily_incremental",  # channel_daily_base_state
+    ]
+    for wname in WARMUP_OWNERS:
+        if wname not in SUITE:
+            continue
+        if only is not None and wname not in only:
+            continue
+        t0 = time.perf_counter()
+        SUITE[wname].fn(spark, sf_dir).write.mode("overwrite").format(
+            "noop"
+        ).save()
+        warmup[wname] = round(time.perf_counter() - t0, 3)
+        print(f"[bench] warmup {wname}: {warmup[wname]:.3f}s",
+              file=sys.stderr, flush=True)
 
     # best-of-2 per query: the first run carries per-plan codegen
     # compilation and any transient machine noise; min() reports the
     # reproducible steady-state cost of the plan itself
     # per-entry progress on stderr (stdout stays the single JSON line):
     # at large SFs a failure/OOM mid-run must be attributable to an entry
-    # resume/subset support for large-SF runs: a crash (or a targeted
-    # re-measure) shouldn't force re-paying the whole suite.
-    #   SPARK_GRAFT_BENCH_AFTER=<name>  -> skip entries up to AND
-    #     including <name> (resume a crashed run at the next entry)
-    #   SPARK_GRAFT_BENCH_ONLY=a,b,c    -> run only the named entries
-    after = os.environ.get("SPARK_GRAFT_BENCH_AFTER")
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     names = list(SUITE)
-    if after:
-        if after not in SUITE:
-            raise SystemExit(f"unknown bench entry for SPARK_GRAFT_BENCH_AFTER: {after!r}")
-        names = names[names.index(after) + 1:]
-    if only:
-        wanted = {n.strip() for n in only.split(",") if n.strip()}
-        unknown = wanted - set(SUITE)
+    if only is not None:
+        unknown = only - set(SUITE)
         if unknown:
             raise SystemExit(f"unknown bench entries: {sorted(unknown)}")
-        names = [n for n in names if n in wanted]
+        names = [n for n in names if n in only]
 
     timings: dict[str, float] = {}
     for name in names:

@@ -2,10 +2,10 @@
 
 Column-parameterized operators: deduplication, embedding similarity,
 text analysis, corpus curation, sketches, search and multimodal
-payload handling. The suite's dedup, curation, sketch and text-profile
-entries are thin ``(spark, sf_dir)`` adapters over ``ext.dedup``,
-``ext.curation``, ``ext.sketches`` and ``ext.text``; this package
-imports nothing from the suite.
+payload handling. The suite's dedup, curation, sketch, ANN and
+text-profile entries are thin ``(spark, sf_dir)`` adapters over
+``ext.dedup``, ``ext.curation``, ``ext.sketches``, ``ext.similarity``
+and ``ext.text``; this package imports nothing from the suite.
 """
 
 from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
@@ -18,7 +18,7 @@ from marketing_etl_analytics_spark.ext.dedup import (  # noqa: F401
 )
 from marketing_etl_analytics_spark.ext.similarity import (  # noqa: F401
     cosine_topk,
-    with_sign_bucket,
+    sign_bucket,
 )
 from marketing_etl_analytics_spark.ext.text import (  # noqa: F401
     lm_bigram_counts,

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
+from marketing_etl_analytics_spark.ext.similarity import SPARK_DOT
 from marketing_etl_analytics_spark.ext.text import STOPWORDS
 
 # Max collected center rows for the Arrow/NumPy closure evaluators
@@ -247,25 +248,6 @@ def farthest_first_from_pool(pool: list[tuple], k: int) -> list:
 # worth the planning-sized collect).
 
 KMPAR_ROUNDS = 3
-
-
-# Exact dot product template on the 1e-12 INTEGER lattice, formatted
-# with column expressions ``a`` and ``b``. Per-term
-# FLOOR(x*y * 1e12 + 0.5) on identical IEEE doubles is
-# engine-invariant, and BIGINT addition is exact and order-free, so
-# the sum cannot diverge at any term count; the suite's DuckDB oracles
-# replay it as SQL_DOT (suite/ext.py). The previous per-term
-# CAST(... AS DECIMAL(38,12)) snap left one engine-specific operation
-# in the chain — Java BigDecimal HALF_UP vs DuckDB scaled-multiply can
-# tie-round a term 1e-12 apart, which flipped a 6-dp l2_norm at the
-# 2 M-vector 1000x sweep (ext_embed_transform, vec 1032038) — and ran
-# as interpreted BigDecimal per term inside the higher-order function.
-SPARK_DOT = (
-    "(CAST(aggregate(sequence(1, size({a})), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CAST(FLOOR(CAST(element_at({a}, i) AS DOUBLE)"
-    " * CAST(element_at({b}, i) AS DOUBLE) * 1e12 + 0.5) AS BIGINT))"
-    " AS DOUBLE) / 1e12)"
-)
 
 
 def kmeanspar_seeds(

@@ -20,11 +20,11 @@ matrix is **generated once in Python from md5 and inlined as literal
 '0'/'1' strings** into both engines' SQL, so there is no cross-engine
 RNG to disagree; sums of products are snapped per-term to the 1e-12
 INTEGER lattice — ``floor(term * 1e12 + 0.5)`` summed as BIGINT (the
-SPARK_DOT discipline, see :func:`sign_dot_expr` for the rationale —
-exact, order-free, engine-invariant); quantization rounds via
-``floor(x + 0.5)`` (floor is
-exact on identical IEEE doubles in both engines, so no
-HALF_UP-vs-banker's divergence).
+``ext.similarity.SPARK_DOT`` discipline, see :func:`sign_dot_expr`
+for the rationale — exact, order-free, engine-invariant);
+quantization rounds via ``floor(x + 0.5)`` (floor is exact on
+identical IEEE doubles in both engines, so no HALF_UP-vs-banker's
+divergence).
 
 Two execution tiers:
 
@@ -209,8 +209,8 @@ def quantize_int8(df: DataFrame, vec: str = "embedding") -> DataFrame:
     codes are bit-deterministic cross-engine (SQL ``round()`` would
     pit HALF_UP against banker's). Zero-shuffle per-row map; the 4x
     size cut is what lets a 100 TB fp32 corpus serve from a quarter
-    the IO, with :mod:`~..ext.similarity`'s PQ/ADC path as the next
-    compression tier."""
+    the IO, with the suite's PQ/ADC entry (``ext_ann_pq_adc``) as the
+    next compression tier."""
     max_abs = (
         f"aggregate({vec}, CAST(0.0 AS DOUBLE),"
         f" (acc, x) -> greatest(acc, abs(CAST(x AS DOUBLE))))"

@@ -1,4 +1,5 @@
-"""Scalar column builders shared across ETL, views, and queries."""
+"""Scalar column builders shared across ETL, views, queries and the
+suite's ETL entries (the only date-key and channel-parse code)."""
 
 from marketing_etl_analytics_spark.functions.dates import (  # noqa: F401
     date_parts,

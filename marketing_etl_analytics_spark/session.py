@@ -81,7 +81,8 @@ def get_spark(
     """Build (or fetch) the configured SparkSession.
 
     Defaults target local[``default_cpus()``]; on a real cluster the
-    master comes from spark-submit and these configs still apply.
+    master comes from spark-submit and these configs still apply. Any
+    other Spark conf goes through ``extra_conf``.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -115,7 +116,7 @@ def get_spark(
         # Arrow for any pandas_udf / toPandas path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Quieter local runs.
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
@@ -127,10 +128,7 @@ def get_spark(
         # missing temp_shuffle files (observed at sf100b). 480 s rides
         # out worst-case pauses; on a real cluster the same setting is
         # standard practice for straggler-tolerant long jobs.
-        .config(
-            "spark.network.timeout",
-            os.environ.get("SPARK_GRAFT_NETWORK_TIMEOUT", "480s"),
-        )
+        .config("spark.network.timeout", "480s")
         # Shuffle/spill compression codec (Spark default lz4). zstd
         # roughly halves spill volume for the shingle-pair-heavy dedup
         # entries at 100x-class SFs, where local disk — not CPU — is
@@ -150,14 +148,11 @@ def get_spark(
     # extraJavaOptions rather than replacing them) and only on JDKs
     # that still have a GCLocker (removed in JDK 22+, where the
     # unrecognized -XX option would abort startup).
-    gclocker_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTS")
-    if gclocker_opts is None and _jdk_major() < 22:
-        gclocker_opts = (
-            "-XX:+UnlockDiagnosticVMOptions "
-            "-XX:GCLockerRetryAllocationCount=128"
+    if _jdk_major() < 22:
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=128",
         )
-    if gclocker_opts:
-        builder = builder.config("spark.driver.defaultJavaOptions", gclocker_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

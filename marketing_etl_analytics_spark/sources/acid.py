@@ -751,33 +751,40 @@ def history(path: str) -> list[int]:
 
 def vacuum(path: str, keep_last: int = 2) -> list[str]:
     """Drop manifests older than the last ``keep_last`` versions and
-    delete data files no retained version references. Returns removed
-    file paths. (Time travel to vacuumed versions stops working —
-    same contract as Delta's VACUUM.)"""
+    delete every data file no kept manifest lists: the files of dropped
+    versions and those of writers that died between writing and
+    committing. A data directory above the current version may belong
+    to a writer still in flight and stays; a writer whose directory is
+    at or below it has lost its commit race (``_commit`` raises
+    ConcurrentWriteError). Returns removed file paths. (Time travel to
+    vacuumed versions stops working — same contract as Delta's
+    VACUUM.)"""
+    current = current_version(path)
     versions = history(path)
-    keep = set(versions[-keep_last:]) | {current_version(path)}
-    keep_files: set[str] = set()
-    for v in keep:
-        keep_files.update(map(_strip_scheme, read_manifest(path, v).files))
-    removed: list[str] = []
+    keep = set(versions[-keep_last:]) | {current}
+    # data files are <path>/data/v<version>-<nonce>/<part>: the last two
+    # components name a file whatever spelling of ``path`` wrote it
+    keep_files = {
+        tuple(_strip_scheme(f).split(os.sep)[-2:])
+        for v in keep
+        for f in read_manifest(path, v).files
+    }
     for v in versions:
-        if v in keep:
-            continue
-        for f in read_manifest(path, v).files:
-            fp = _strip_scheme(f)
-            if fp not in keep_files and os.path.exists(fp):
-                os.remove(fp)
-                removed.append(fp)
-        os.remove(_manifest_path(path, v))
-    # sweep empty data dirs left behind
+        if v not in keep:
+            os.remove(_manifest_path(path, v))
+    removed: list[str] = []
     data_root = os.path.join(path, "data")
-    if os.path.isdir(data_root):
-        for d in os.listdir(data_root):
-            full = os.path.join(data_root, d)
-            if os.path.isdir(full) and not any(
-                f.endswith(".parquet") for f in os.listdir(full)
-            ):
-                shutil.rmtree(full)
+    for d in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
+        version = d[1:].partition("-")[0]
+        full = os.path.join(data_root, d)
+        if not (version.isdigit() and int(version) <= current and os.path.isdir(full)):
+            continue
+        for f in sorted(os.listdir(full)):
+            if f.endswith(".parquet") and (d, f) not in keep_files:
+                os.remove(os.path.join(full, f))
+                removed.append(os.path.join(full, f))
+        if not any(f.endswith(".parquet") for f in os.listdir(full)):
+            shutil.rmtree(full)
     return removed
 
 

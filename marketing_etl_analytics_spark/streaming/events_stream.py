@@ -354,12 +354,13 @@ def sessionize_batch(ev: DataFrame) -> DataFrame:
 def session_window_agg(
     events: DataFrame, watermark: str = "1 hour", gap: str = "30 minutes"
 ) -> DataFrame:
-    """Native session-window sessionization under Structured Streaming:
-    the SAME expression as the batch ext_session_window_native entry,
-    with a watermark bounding state. Append mode emits a session once
-    the watermark passes its end (last event + gap) — sessions closer
-    to the head of the stream stay in state (a later event could still
-    extend them), which the suite oracle mirrors explicitly."""
+    """Native session-window sessionization under Structured Streaming,
+    with a watermark bounding state; the batch ext_session_window_native
+    entry runs the same function (the watermark is a no-op there).
+    Append mode emits a session once the watermark passes its end (last
+    event + gap) — sessions closer to the head of the stream stay in
+    state (a later event could still extend them), which the suite
+    oracle mirrors explicitly."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))

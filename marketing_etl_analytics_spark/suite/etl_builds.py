@@ -12,12 +12,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark.etl import incremental_upsert
+from marketing_etl_analytics_spark.functions import (
+    channel_from_campaign,
+    date_parts,
+    epoch_date_id,
+)
 from marketing_etl_analytics_spark.suite.common import (
-    dsum,
     lsum,
     money,
     revenue_expr,
-    sql_dsum,
     sql_lsum,
     SQL_REVENUE,
     t,
@@ -43,15 +47,10 @@ from marketing_etl_analytics_spark.suite.registry import register
     doc="dim_date: epoch-seconds surrogate key + ISO week (H1-H3).",
 )
 def etl_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
     d = F.to_date("o_orderdate")
-    return o.select(
-        F.unix_timestamp(d.cast("timestamp")).cast("long").alias("date_id"),
-        d.alias("date"),
-        F.dayofmonth(d).alias("day"),
-        F.weekofyear(d).alias("week"),
-        F.month(d).alias("month"),
-        F.year(d).alias("year"),
+    parts = [c.alias(n) for n, c in date_parts(d).items()]
+    return t(spark, sf_dir, "orders").select(
+        epoch_date_id(d).alias("date_id"), d.alias("date"), *parts
     ).dropDuplicates(["date_id"])
 
 
@@ -131,7 +130,7 @@ def etl_dim_campaign_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     return campaigns.select(
         F.row_number().over(w).alias("campaign_sk"),
         "campaign_name",
-        F.regexp_extract("campaign_name", r"^([^0-9]+)", 1).alias("channel"),
+        channel_from_campaign("campaign_name").alias("channel"),
     )
 
 
@@ -159,11 +158,10 @@ def etl_dim_campaign_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def etl_fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders")
-    d = F.to_date("o_orderdate")
     return li.join(o, li.l_orderkey == o.o_orderkey, "left").select(
         F.col("l_orderkey").alias("sale_orderkey"),
         F.col("l_linenumber").alias("sale_linenumber"),
-        F.unix_timestamp(d.cast("timestamp")).cast("long").alias("date_id"),
+        epoch_date_id(F.to_date("o_orderdate")).alias("date_id"),
         F.col("o_custkey").alias("customer_id"),
         F.col("l_partkey").alias("product_id"),
         F.col("l_quantity").cast("long").alias("quantity"),
@@ -191,19 +189,17 @@ def etl_fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     "after a simulated double-insert (idempotency by construction).",
 )
 def etl_upsert_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    src = o.groupBy(F.col("o_custkey").alias("customer_id")).agg(
-        F.min(F.to_date("o_orderdate")).alias("first_order"),
-        F.count(F.lit(1)).alias("n_orders"),
+    src = (
+        t(spark, sf_dir, "orders")
+        .groupBy(F.col("o_custkey").alias("customer_id"))
+        .agg(
+            F.min(F.to_date("o_orderdate")).alias("first_order"),
+            F.count(F.lit(1)).alias("n_orders"),
+        )
     )
-    # simulate a re-run: insert the same batch twice, then reconcile —
-    # existing keys win (DO NOTHING), new keys append (left-anti + union)
-    existing = src
-    incoming = src
-    reconciled = existing.unionByName(
-        incoming.join(existing, "customer_id", "left_anti")
-    )
-    return reconciled
+    # simulate a re-run: insert the same batch twice — existing keys
+    # win (DO NOTHING), new keys append
+    return incremental_upsert(src, src, ["customer_id"])
 
 
 # --- MERGE (upsert with update): retired suite entry -------------------------

@@ -16,7 +16,7 @@ Scale shapes:
   once; candidate generation joins on the bucket / probed-centroid
   key. Dot products snap elementwise products to the 1e-12 INTEGER
   lattice — floor(x*y * 1e12 + 0.5) summed as BIGINT (SPARK_DOT in
-  ext.curation, SQL_DOT in suite.ext, hardened fc3b048 after the
+  ext.similarity, SQL_DOT in suite.ext, hardened fc3b048 after the
   sf100b sweep caught a per-term DECIMAL(38,12) cast tie-rounding
   once in 128 M terms) — pure IEEE ops on identical doubles, so the
   sum is engine-invariant at any term count and ranking order is
@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext.curation import (
     POOL_FACTOR,
-    SPARK_DOT,
     semantic_assign,
     semantic_dedup,
 )
@@ -45,6 +44,11 @@ from marketing_etl_analytics_spark.ext.dedup import (
     N_BANDS,
     simhash_candidate_pairs,
     simhash_fingerprints,
+)
+from marketing_etl_analytics_spark.ext.similarity import (
+    SPARK_DOT,
+    cosine_topk,
+    sign_bucket,
 )
 from marketing_etl_analytics_spark.ext.text import STOPWORDS
 from marketing_etl_analytics_spark.streaming.events_stream import (
@@ -310,12 +314,8 @@ def ext_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding-cosine near-dup ----------------------------------------------
 
-# sign-LSH bucket over the first 8 dims (shared with ext_ann_lsh_bucketed)
-SPARK_BUCKET = (
-    "CAST(aggregate(sequence(1, 8), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) > 0"
-    " THEN CAST(pow(2, i - 1) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-)
+# sign-LSH bucket over dims 1..8: the oracle form of
+# ext.similarity.sign_bucket()
 SQL_BUCKET = (
     "CAST(list_sum(list_transform(generate_series(1, 8),"
     " i -> CASE WHEN CAST(embedding[i] AS DOUBLE) > 0"
@@ -338,11 +338,7 @@ COSINE_DUP_THRESHOLD = 0.3  # candidate threshold; production near-dup ~0.95
 # data), so the DuckDB oracle computes the identical keys.
 EMB_BUCKET_CAP = 64
 
-_SPARK_SUBBUCKET = (
-    "CAST(aggregate(sequence(9, 16), CAST(0 AS BIGINT),"
-    " (acc, i) -> acc + CASE WHEN CAST(element_at(embedding, i) AS DOUBLE) > 0"
-    " THEN CAST(pow(2, i - 9) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-)
+# refinement bits over dims 9..16: the oracle form of sign_bucket(first=9)
 _SQL_SUBBUCKET = (
     "CAST(list_sum(list_transform(generate_series(9, 16),"
     " i -> CASE WHEN CAST(embedding[i] AS DOUBLE) > 0"
@@ -393,8 +389,8 @@ def ext_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: embedding_norms(spark, sf_dir).select(
             "vec_id",
             "embedding",
-            F.expr(SPARK_BUCKET).alias("bucket"),
-            F.expr(_SPARK_SUBBUCKET).alias("subbucket"),
+            sign_bucket().alias("bucket"),
+            sign_bucket(first=9).alias("subbucket"),
             "n2",
         ),
     )
@@ -505,6 +501,52 @@ _SQL_ANN_IVF = f"""
 """
 
 
+def _argmax_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, cent_id, crn): every vector's centroids ranked by
+    cosine DESC, cent_id — a broadcast join vs the few centroids
+    (map-side). Not ``cosine_topk``: a seed centroid is also a vector,
+    and its self pair must stay."""
+    cos = (
+        F.expr(SPARK_DOT.format(a="embedding", b="ce"))
+        / F.sqrt(F.col("n2") * F.col("cn2"))
+    )
+    # score column projected before the rank window (guide §2.3):
+    # callers only consume (vec_id, cent_id, crn), so neither 64-dim
+    # array rides the window exchange
+    w = Window.partitionBy("vec_id").orderBy(F.desc("_c"), F.asc("cent_id"))
+    return (
+        vectors.crossJoin(F.broadcast(centroids))
+        .select("vec_id", "cent_id", cos.alias("_c"))
+        .withColumn("crn", F.row_number().over(w))
+    )
+
+
+def _ivf_search(b: DataFrame, scored: DataFrame) -> DataFrame:
+    """Probe-and-rank over an ``_argmax_assign`` result: every vector
+    sits in its argmax cluster, queries (vec_id 100..110) probe their
+    N_PROBE nearest clusters and rank the candidates there. Each
+    vector is in one cluster and each query probes distinct clusters,
+    so no (qid, cid) pair repeats across the ``on`` join."""
+    emb = b.select("vec_id", "embedding")
+    assigned = scored.filter(F.col("crn") == 1)
+    probes = scored.filter(
+        (F.col("crn") <= N_PROBE) & (F.col("vec_id") >= 100) & (F.col("vec_id") < 110)
+    )
+
+    def clustered(df: DataFrame) -> DataFrame:
+        return df.select("vec_id", F.col("cent_id").alias("cluster")).join(emb, "vec_id")
+
+    return cosine_topk(
+        clustered(assigned), clustered(probes), k=IVF_TOPK, on="cluster"
+    ).select(
+        "qid",
+        "cid",
+        F.col("cluster").cast("long").alias("cluster"),
+        pround(F.col("cosine"), 6).alias("cosine"),
+        "rn",
+    )
+
+
 def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: deterministic centroid seed (first 8 vectors), every
     vector assigned to its argmax-cosine centroid, queries probe their
@@ -512,71 +554,12 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. Assignment is a broadcast join vs 8 centroids (map-side);
     search joins on the cluster key — the inverted-file scale path."""
     b = embedding_norms(spark, sf_dir)
-    cent = (
-        b.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("ce"),
-            F.col("n2").alias("cn2"),
-        )
+    cent = b.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("embedding").alias("ce"),
+        F.col("n2").alias("cn2"),
     )
-    assign_cos = (
-        F.expr(SPARK_DOT.format(a="embedding", b="ce"))
-        / F.sqrt(F.col("n2") * F.col("cn2"))
-    )
-    # score as a COLUMN projected before the rank window (guide §2.3):
-    # downstream only needs (vec_id, cent_id, crn), so neither 64-dim
-    # array rides the window exchange and the dot is evaluated once
-    # per row instead of per SortOrder comparison
-    crn_w = Window.partitionBy("vec_id").orderBy(F.desc("_c"), F.asc("cent_id"))
-    assign_scored = (
-        b.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id", assign_cos.alias("_c"))
-        .withColumn("crn", F.row_number().over(crn_w))
-    )
-    assigned = assign_scored.filter(F.col("crn") == 1).select(
-        "vec_id", F.col("cent_id").alias("cluster")
-    )
-    probes = (
-        assign_scored.filter(
-            (F.col("crn") <= N_PROBE)
-            & (F.col("vec_id") >= 100)
-            & (F.col("vec_id") < 110)
-        )
-        .select(F.col("vec_id").alias("qid"), F.col("cent_id").alias("cluster"))
-    )
-    q = b.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    pairs = (
-        probes.join(assigned, "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(b, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            F.col("vec_id").alias("cid"),
-            "cluster",
-            (
-                F.expr(SPARK_DOT.format(a="qe", b="embedding"))
-                / F.sqrt(F.col("qn2") * F.col("n2"))
-            ).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_raw"), F.asc("cid"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVF_TOPK)
-        .select(
-            "qid",
-            "cid",
-            F.col("cluster").cast("long").alias("cluster"),
-            pround(F.col("cos_raw"), 6).alias("cosine"),
-            "rn",
-        )
-    )
+    return _ivf_search(b, _argmax_assign(b, cent))
 
 
 def ext_ann_cosine_for_ivf_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -775,22 +758,7 @@ def ext_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ce"),
         F.col("n2").alias("cn2"),
     )
-
-    def argmax_assign(vectors, centroids):
-        cos = (
-            F.expr(SPARK_DOT.format(a="embedding", b="ce"))
-            / F.sqrt(F.col("n2") * F.col("cn2"))
-        )
-        # score column projected before the rank window (guide §2.3);
-        # callers only consume (vec_id, cent_id, crn)
-        w = Window.partitionBy("vec_id").orderBy(F.desc("_c"), F.asc("cent_id"))
-        return (
-            vectors.crossJoin(F.broadcast(centroids))
-            .select("vec_id", "cent_id", cos.alias("_c"))
-            .withColumn("crn", F.row_number().over(w))
-        )
-
-    assign0 = argmax_assign(b, cent0).filter(F.col("crn") == 1).select(
+    assign0 = _argmax_assign(b, cent0).filter(F.col("crn") == 1).select(
         "vec_id", "cent_id"
     )
     # Lloyd update: exact-decimal mean per (cluster, dimension)
@@ -817,45 +785,7 @@ def ext_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent1 = cent1.select(
         "cent_id", "ce", F.expr(SPARK_DOT.format(a="ce", b="ce")).alias("cn2")
     )
-    scored1 = argmax_assign(b, cent1)
-    assigned = scored1.filter(F.col("crn") == 1).select(
-        "vec_id", F.col("cent_id").alias("cluster")
-    )
-    probes = scored1.filter(
-        (F.col("crn") <= N_PROBE) & (F.col("vec_id") >= 100) & (F.col("vec_id") < 110)
-    ).select(F.col("vec_id").alias("qid"), F.col("cent_id").alias("cluster"))
-    q = b.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    pairs = (
-        probes.join(assigned, "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(b, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            F.col("vec_id").alias("cid"),
-            "cluster",
-            (
-                F.expr(SPARK_DOT.format(a="qe", b="embedding"))
-                / F.sqrt(F.col("qn2") * F.col("n2"))
-            ).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_raw"), F.asc("cid"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVF_TOPK)
-        .select(
-            "qid",
-            "cid",
-            F.col("cluster").cast("long").alias("cluster"),
-            pround(F.col("cos_raw"), 6).alias("cosine"),
-            "rn",
-        )
-    )
+    return _ivf_search(b, _argmax_assign(b, cent1))
 
 
 # --- merged IVF ANN row (r5 in-window consolidation) --------------------------

@@ -55,7 +55,10 @@ from marketing_etl_analytics_spark.ext.sketches import (
     hll_merge,
     hll_registers,
 )
-from marketing_etl_analytics_spark.streaming.events_stream import SESSION_GAP_US
+from marketing_etl_analytics_spark.streaming.events_stream import (
+    SESSION_GAP_US,
+    session_window_agg,
+)
 from marketing_etl_analytics_spark.suite.common import money, pround, sql_pround, t
 from marketing_etl_analytics_spark.suite.registry import register
 
@@ -618,21 +621,10 @@ def ext_dau_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stateful streaming sessionizer.",
 )
 def ext_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum(money("value")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-        .orderBy("user_id", "session_start")
+    # the streaming sessionizer's expression; its watermark is a no-op
+    # on a batch frame
+    return session_window_agg(t(spark, sf_dir, "events")).orderBy(
+        "user_id", "session_start"
     )
 
 

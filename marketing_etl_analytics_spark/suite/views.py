@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark import views
 from marketing_etl_analytics_spark.suite.common import memo_df, money, ratio, sql_ratio, t
 from marketing_etl_analytics_spark.suite.registry import register
 
@@ -82,42 +83,26 @@ def merged_from_events(ev: DataFrame) -> DataFrame:
     """merged_grain over an explicit events slice (the incremental
     refresh path aggregates disjoint time slices independently —
     (date, user) groups never span a date-boundary cutoff — and
-    unions the resulting state additively)."""
-    date_key = F.to_date("ts").alias("date_key")
-    fs_agg = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(date_key, "user_id")
-        .agg(
-            F.sum(money("value")).alias("revenue"),
-            F.sum(money("value") * F.lit(0.6).cast("decimal(8,4)")).alias("cost"),
-            F.count(F.lit(1)).alias("orders"),
-        )
+    unions the resulting state additively). The grain alignment is
+    ``views.merged`` over per-event sales and spend rows, keyed
+    (date_key, user_id) in place of (date_id, campaign_id)."""
+    keys = [
+        F.to_date("ts").alias("date_id"),
+        F.col("user_id").alias("campaign_id"),
+    ]
+    sales = ev.filter(F.col("event_type") == "purchase").select(
+        *keys,
+        money("value").alias("revenue"),
+        (money("value") * F.lit(0.6).cast("decimal(8,4)")).alias("cost"),
     )
-    sp_agg = (
-        ev.filter(F.col("event_type").isin("click", "view"))
-        .groupBy(date_key, "user_id")
-        .agg(
-            F.sum(money("value")).alias("spend"),
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("clicks"),
-            F.count(F.lit(1)).alias("impressions"),
-        )
+    spend = ev.filter(F.col("event_type").isin("click", "view")).select(
+        *keys,
+        money("value").alias("spend"),
+        (F.col("event_type") == "click").cast("long").alias("clicks"),
+        F.lit(1).cast("long").alias("impressions"),
     )
-    joined = fs_agg.alias("fs").join(
-        sp_agg.alias("sp"),
-        (F.col("fs.date_key") == F.col("sp.date_key"))
-        & (F.col("fs.user_id") == F.col("sp.user_id")),
-        "full_outer",
-    )
-    zero = F.lit(0)
-    return joined.select(
-        F.coalesce("fs.date_key", "sp.date_key").alias("date_key"),
-        F.coalesce("fs.user_id", "sp.user_id").alias("user_id"),
-        F.coalesce("fs.revenue", zero).alias("revenue"),
-        F.coalesce("fs.cost", zero).alias("cost"),
-        F.coalesce("fs.orders", zero).alias("orders"),
-        F.coalesce("sp.spend", zero).alias("spend"),
-        F.coalesce("sp.clicks", zero).alias("clicks"),
-        F.coalesce("sp.impressions", zero).alias("impressions"),
+    return views.merged(sales, spend).withColumnsRenamed(
+        {"date_id": "date_key", "campaign_id": "user_id"}
     )
 
 

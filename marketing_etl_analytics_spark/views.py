@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from marketing_etl_analytics_spark.functions.kpis import safe_div
 
 
-def _merged(fact_sales: DataFrame, fact_spend: DataFrame) -> DataFrame:
+def merged(fact_sales: DataFrame, fact_spend: DataFrame) -> DataFrame:
     """fs_agg FULL OUTER sp_agg on (date_id, campaign_id), COALESCEd.
 
     (``04_views.sql:17-47`` — identical in all three views.)
@@ -78,7 +78,7 @@ def channel_daily(
     dates absent from dim_date (no sales that day) are silently dropped.
     Load-bearing reference quirk; replicated exactly.
     """
-    m = _merged(fact_sales, fact_spend)
+    m = merged(fact_sales, fact_spend)
     return (
         m.join(F.broadcast(dim_campaigns.select("campaign_id", "channel")),
                "campaign_id", "left")
@@ -177,7 +177,7 @@ def _kpi_totals(
 ) -> DataFrame:
     """Raw additive sums at ``grain`` (the stored representation)."""
     dim_cols = ["campaign_id"] + [c for c in grain if c != "campaign_id"]
-    m = _merged(fact_sales, fact_spend).join(
+    m = merged(fact_sales, fact_spend).join(
         F.broadcast(dim_campaigns.select(*dim_cols)), "campaign_id", "left"
     )
     return m.groupBy(*grain).agg(

@@ -26,7 +26,7 @@ from marketing_etl_analytics_spark.ext.embedding import (
     arrow_min_center_dist,
     arrow_nearest_center,
 )
-from marketing_etl_analytics_spark.ext.curation import SPARK_DOT
+from marketing_etl_analytics_spark.ext.similarity import SPARK_DOT
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext.embedding import arrow_lattice_dots
-from marketing_etl_analytics_spark.ext.curation import SPARK_DOT
+from marketing_etl_analytics_spark.ext.similarity import SPARK_DOT
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -15,8 +15,8 @@ from marketing_etl_analytics_spark.ext import (
     minhash_bands,
     quality_features,
     shingles,
+    sign_bucket,
     token_counts,
-    with_sign_bucket,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -119,15 +119,14 @@ def test_cosine_topk_bucketed_is_subset_quality(spark, emb):
     exact = {(r.qid, r.cid) for r in cosine_topk(emb, q, k=3).collect()}
     # coarse buckets (4) on 500 vectors — fine 256-bucket LSH would
     # leave ~2 vectors per bucket and near-zero recall at this scale
-    approx = cosine_topk(emb, q, k=3, bucketed=True, bucket_bits=2).collect()
+    b = emb.withColumn("bucket", sign_bucket("embedding", 2))
+    approx = cosine_topk(b, b.filter(F.col("vec_id") < 5), k=3, on="bucket").collect()
     # approximate results come from the same bucket; they need not equal
     # the exact set, but every returned pair must share the query bucket
-    buckets = {
-        r.vec_id: r.bucket
-        for r in with_sign_bucket(emb, bits=2).select("vec_id", "bucket").collect()
-    }
+    # and report it
+    buckets = {r.vec_id: r.bucket for r in b.select("vec_id", "bucket").collect()}
     for r in approx:
-        assert buckets[r.qid] == buckets[r.cid]
+        assert buckets[r.qid] == buckets[r.cid] == r.bucket
     assert len({(r.qid, r.cid) for r in approx} & exact) > 0  # nonzero recall
 
 
