@@ -2,7 +2,8 @@
 
 1:1 re-expression of ``analytics_queries.sql`` (reference query surface,
 SURVEY.md §2.K). Every function takes the warehouse dict from
-``etl.run_etl`` (+ ``views.build_views``) and returns a lazy DataFrame.
+``etl.run_etl`` (+ ``views.build_views``) and returns a lazy DataFrame;
+building one starts no Spark job.
 
 Reference quirks preserved on purpose (they are the semantics):
 - Q5/Q9 count fact *rows*, not distinct customers.
@@ -10,15 +11,39 @@ Reference quirks preserved on purpose (they are the semantics):
 - Q8's spend⋈sales join fans out many-to-many and double-counts both
   sides before HAVING (``analytics_queries.sql:202-205``).
 - Q9-frequency's ``customers`` counts fact rows per segment.
+
+Plan shapes: a Spark job costs tens of milliseconds however little it
+reads, so each exchange a query needs is planned once. Where the SQL
+joins the fact to its own aggregate on a key (Q5, Q6, Q9, Q11), the
+aggregate is a window over that key: one exchange, the same rows. As
+the SQL join never matches a NULL key, Q5, Q9 and Q11 drop NULL-key
+rows first; Q6's money sums keep them, as its SQL does. A totals row
+cross joined to a result a dimension bounds (Q7, Q10, Q11) is a window
+over the whole result, which leaves it in one partition, so the sort
+after it plans no exchange; other bounded results use ``_sort_small``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.functions.bands import age_band, frequency_band
 from marketing_etl_analytics_spark.functions.kpis import safe_div
+
+
+def _sort_small(df: DataFrame, *cols: Column | str) -> DataFrame:
+    """``df.orderBy(*cols)`` in one task, for a result bounded by a
+    dimension (channels, categories, campaigns). A plain ``orderBy``
+    range-partitions its input: one job to sample the bounds and one
+    more shuffle. One partition is already sorted globally."""
+    return df.coalesce(1).orderBy(*cols)
+
+
+def _margin() -> Column:
+    """Per-row margin, NULL for zero revenue (``analytics_queries.sql``
+    averages it per row)."""
+    return (F.col("revenue") - F.col("cost")) / F.nullif(F.col("revenue"), F.lit(0))
 
 
 # --- 0) P&L summary (analytics_queries.sql:12-18) --------------------------
@@ -88,7 +113,7 @@ def q4_channel_performance(wh: dict[str, DataFrame]) -> DataFrame:
     v = wh["mv_channel_daily"]
     rev, cost, spend = F.sum("revenue"), F.sum("cost"), F.sum("spend")
     clicks, impr, orders = F.sum("clicks"), F.sum("impressions"), F.sum("orders")
-    return (
+    return _sort_small(
         v.groupBy("channel")
         .agg(
             rev.alias("revenue"),
@@ -102,8 +127,8 @@ def q4_channel_performance(wh: dict[str, DataFrame]) -> DataFrame:
             F.round(safe_div(rev - cost, spend), 2).alias("profit_roas"),
             F.round(safe_div(rev - spend, spend), 2).alias("roi"),
             F.round(safe_div(rev - cost - spend, spend), 2).alias("profit_roi"),
-        )
-        .orderBy(F.desc("net_profit"))
+        ),
+        F.desc("net_profit"),
     )
 
 
@@ -111,13 +136,10 @@ def q4_channel_performance(wh: dict[str, DataFrame]) -> DataFrame:
 
 def q5_repeat_drivers(wh: dict[str, DataFrame]) -> DataFrame:
     fs, p = wh["fact_sales"], wh["dim_products"]
-    first_product = fs.groupBy("customer_id", "product_id").agg(
-        F.min("date_id").alias("first_date")
-    )
-    flagged = fs.join(first_product, ["customer_id", "product_id"]).select(
-        "customer_id",
+    first = F.min("date_id").over(Window.partitionBy("customer_id", "product_id"))
+    flagged = fs.filter(F.col("customer_id").isNotNull()).select(
         "product_id",
-        F.when(F.col("date_id") > F.col("first_date"), 1).otherwise(0).alias("is_repeat"),
+        F.when(F.col("date_id") > first, 1).otherwise(0).alias("is_repeat"),
     )
     repeat = F.sum(F.col("is_repeat"))  # COUNT(*) FILTER (WHERE is_repeat=1)
     total = F.count(F.lit(1))
@@ -139,30 +161,28 @@ def q5_repeat_drivers(wh: dict[str, DataFrame]) -> DataFrame:
 def q6_category_performance(wh: dict[str, DataFrame]) -> DataFrame:
     fs, p = wh["fact_sales"], wh["dim_products"]
     enriched = fs.join(F.broadcast(p.select("product_id", "category")), "product_id")
-    # loyalty aggregates fact_sales per customer; joining it back onto
-    # the enriched fact preserves each enriched row exactly once, so
-    # one category aggregation yields both the money metrics and the
-    # loyalty counts — one pass over the fact instead of three
-    loyalty = fs.groupBy("customer_id").agg(F.count(F.lit(1)).alias("purchase_count"))
-    return (
-        enriched.join(loyalty, "customer_id")
+    # loyalty counts the enriched rows per customer; the SQL joins it
+    # back on customer_id, so only rows with a customer count as buyers,
+    # and a category that has none (or a NULL category) drops out
+    purchases = F.count(F.lit(1)).over(Window.partitionBy("customer_id"))
+    buyer = F.col("customer_id").isNotNull()
+    return _sort_small(
+        enriched.withColumn("purchase_count", purchases)
         .groupBy("category")
         .agg(
             F.sum("revenue").alias("revenue"),
             F.sum(F.col("revenue") - F.col("cost")).alias("profit"),
-            F.round(
-                F.avg((F.col("revenue") - F.col("cost")) / F.nullif(F.col("revenue"), F.lit(0))),
-                3,
-            ).alias("avg_margin"),
-            F.count(F.when(F.col("purchase_count") > 1, 1)).alias("repeat_customers"),
-            F.count(F.lit(1)).alias("total_customers"),
+            F.round(F.avg(_margin()), 3).alias("avg_margin"),
+            F.count(F.when(buyer & (F.col("purchase_count") > 1), 1)).alias("repeat_customers"),
+            F.count(F.when(buyer, 1)).alias("total_customers"),
         )
+        .filter(F.col("category").isNotNull() & (F.col("total_customers") > 0))
         .select(
             "category", "revenue", "profit", "avg_margin",
             "repeat_customers", "total_customers",
             F.round(safe_div(F.col("repeat_customers"), F.col("total_customers")), 3).alias("loyalty_rate"),
-        )
-        .orderBy(F.desc("revenue"))
+        ),
+        F.desc("revenue"),
     )
 
 
@@ -177,26 +197,18 @@ def q7_product_quadrant(wh: dict[str, DataFrame]) -> DataFrame:
             F.sum("quantity").alias("units_sold"),
             F.sum("revenue").alias("revenue"),
             F.sum(F.col("revenue") - F.col("cost")).alias("profit"),
-            F.round(
-                F.avg((F.col("revenue") - F.col("cost")) / F.nullif(F.col("revenue"), F.lit(0))),
-                3,
-            ).alias("margin"),
+            F.round(F.avg(_margin()), 3).alias("margin"),
         )
     )
-    # Materialize the bounded product-grain aggregate once: it feeds
-    # both the stats row and the final projection, and the two pruned
-    # subtrees differ so Catalyst cannot ReuseExchange them — without
-    # this the fact table is scanned and aggregated twice.
-    product_profit = product_profit.localCheckpoint(eager=True)
-    stats = product_profit.agg(
-        F.avg("units_sold").alias("avg_units"), F.avg("margin").alias("avg_margin")
-    )
-    pp = product_profit.crossJoin(F.broadcast(stats))
-    return pp.select(
+    # the stats row is a window over the product-grain aggregate, so
+    # the fact is scanned and aggregated once
+    units, margin, products = F.col("units_sold"), F.col("margin"), Window.partitionBy()
+    avg_units, avg_margin = F.avg(units).over(products), F.avg(margin).over(products)
+    return product_profit.select(
         "product_id", "item_name", "units_sold", "revenue", "profit", "margin",
-        F.when((F.col("units_sold") > F.col("avg_units")) & (F.col("margin") > F.col("avg_margin")), "HERO PRODUCT 🔥")
-        .when((F.col("units_sold") < F.col("avg_units")) & (F.col("margin") > F.col("avg_margin")), "High Potential")
-        .when((F.col("units_sold") > F.col("avg_units")) & (F.col("margin") < F.col("avg_margin")), "Volume Driver")
+        F.when((units > avg_units) & (margin > avg_margin), "HERO PRODUCT 🔥")
+        .when((units < avg_units) & (margin > avg_margin), "High Potential")
+        .when((units > avg_units) & (margin < avg_margin), "Volume Driver")
         .otherwise("Free Rider")
         .alias("product_type"),
     ).orderBy(F.desc("revenue"))
@@ -206,7 +218,7 @@ def q7_product_quadrant(wh: dict[str, DataFrame]) -> DataFrame:
 
 def q8_spend_waste(wh: dict[str, DataFrame]) -> DataFrame:
     sp, fs, c = wh["fact_spend"], wh["fact_sales"], wh["dim_campaigns"]
-    return (
+    return _sort_small(
         sp.alias("sp")
         # deliberate many-to-many fan-out; sums double-count (reference C8)
         .join(
@@ -222,28 +234,31 @@ def q8_spend_waste(wh: dict[str, DataFrame]) -> DataFrame:
             F.sum("sp.clicks").alias("clicks"),
             F.sum("fs.revenue").alias("revenue"),
         )
-        .filter((F.col("spend") > 5000) & (F.col("clicks") < 100) & (F.col("revenue") < 3000))
-        .orderBy(F.desc("spend"))
+        .filter((F.col("spend") > 5000) & (F.col("clicks") < 100) & (F.col("revenue") < 3000)),
+        F.desc("spend"),
     )
 
 
 # --- 7) Customer retention rate (:217-230) ------------------------------------
 
 def q9_retention(wh: dict[str, DataFrame]) -> DataFrame:
-    fs = wh["fact_sales"]
-    first_purchase = fs.groupBy("customer_id").agg(
-        F.min("date_id").alias("first_purchase_date")
+    first_purchase = F.min("date_id").over(Window.partitionBy("customer_id"))
+    flagged = wh["fact_sales"].filter(F.col("customer_id").isNotNull()).select(
+        F.when(F.col("date_id") > first_purchase, 1).otherwise(0).alias("is_returning")
     )
-    joined = fs.join(first_purchase, "customer_id")
-    returning = F.sum(
-        F.when(F.col("date_id") > F.col("first_purchase_date"), 1).otherwise(0)
-    )
+    returning = F.sum("is_returning")
     total = F.count(F.lit(1))
-    return joined.agg(
+    return flagged.agg(
         returning.alias("returning_customers"),
         total.alias("total_customers"),
         F.round(safe_div(returning, total), 3).alias("retention_rate"),
     )
+
+
+def _pct_of_total(*cols: str) -> list[Column]:
+    """Each column's percent of its sum over the (bounded) result."""
+    return [F.round(F.col(c) / F.sum(c).over(Window.partitionBy()) * 100, 2)
+            .alias("pct_" + c.removeprefix("total_")) for c in cols]
 
 
 # --- 8) Demographic segmentation (:236-272) ------------------------------------
@@ -262,31 +277,19 @@ def q10_demographics(wh: dict[str, DataFrame]) -> DataFrame:
             F.sum("quantity").alias("total_units"),
         )
     )
-    totals = segment_sales.agg(
-        F.sum("customers").alias("all_customers"),
-        F.sum("total_revenue").alias("all_revenue"),
-    )
-    return (
-        segment_sales.crossJoin(F.broadcast(totals))
-        .select(
-            "age_group", "gender", "customers", "total_revenue", "total_units",
-            F.round(F.col("customers") / F.col("all_customers") * 100, 2).alias("pct_customers"),
-            F.round(F.col("total_revenue") / F.col("all_revenue") * 100, 2).alias("pct_revenue"),
-        )
-        .orderBy(F.desc("pct_revenue"))
-    )
+    return segment_sales.select(
+        "age_group", "gender", "customers", "total_revenue", "total_units",
+        *_pct_of_total("customers", "total_revenue"),
+    ).orderBy(F.desc("pct_revenue"))
 
 
 # --- 9) Frequency segmentation (:278-319) ---------------------------------------
 
 def q11_frequency_segments(wh: dict[str, DataFrame]) -> DataFrame:
-    fs = wh["fact_sales"]
-    freq = fs.groupBy("customer_id").agg(F.count(F.lit(1)).alias("purchase_count"))
-    segment = freq.select(
-        "customer_id", frequency_band("purchase_count").alias("segment")
-    )
+    purchases = F.count(F.lit(1)).over(Window.partitionBy("customer_id"))
     segment_sales = (
-        fs.join(segment, "customer_id")
+        wh["fact_sales"].filter(F.col("customer_id").isNotNull())
+        .withColumn("segment", frequency_band(purchases))
         .groupBy("segment")
         .agg(
             # reference counts fact ROWS here, not customers (:299)
@@ -295,21 +298,10 @@ def q11_frequency_segments(wh: dict[str, DataFrame]) -> DataFrame:
             F.sum("quantity").alias("total_units"),
         )
     )
-    totals = segment_sales.agg(
-        F.sum("customers").alias("all_customers"),
-        F.sum("total_revenue").alias("all_revenue"),
-        F.sum("total_units").alias("all_units"),
-    )
-    return (
-        segment_sales.crossJoin(F.broadcast(totals))
-        .select(
-            "segment", "customers", "total_revenue", "total_units",
-            F.round(F.col("customers") / F.col("all_customers") * 100, 2).alias("pct_customers"),
-            F.round(F.col("total_revenue") / F.col("all_revenue") * 100, 2).alias("pct_revenue"),
-            F.round(F.col("total_units") / F.col("all_units") * 100, 2).alias("pct_units"),
-        )
-        .orderBy(F.desc("pct_revenue"))
-    )
+    return segment_sales.select(
+        "segment", "customers", "total_revenue", "total_units",
+        *_pct_of_total("customers", "total_revenue", "total_units"),
+    ).orderBy(F.desc("pct_revenue"))
 
 
 ALL_QUERIES = {

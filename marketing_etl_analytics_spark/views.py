@@ -8,12 +8,11 @@ fact and dimension DataFrames, it returns the views it already built,
 so their plans are analysed once, and Spark can reuse query stages a
 view has already materialized.
 
-The correctness-critical core (SURVEY.md §2.D D6, §7.3.5): both facts
-are *partially aggregated to (date_id, campaign_id) grain first*, then
-FULL OUTER joined and COALESCEd. The pre-aggregation is semantically
-required (grain alignment before the join — Catalyst would never
-introduce it) and is also the 100 TB play: the join inputs shrink from
-fact-size to |days × campaigns| before any wide exchange.
+The reference aggregates both facts to (date_id, campaign_id), FULL
+OUTER joins them and COALESCEs to 0 before it rolls up (SURVEY.md §2.D
+D6, §7.3.5). Every column is a decimal sum or a count, so each view is
+one aggregation of the facts' UNION (``_facts``) at its own grain: the
+same sums, exactly, from one exchange instead of three.
 
 Documented deviation: the reference's ``ctr`` in mv_channel_daily
 (``04_views.sql:56-58``) hits PG bigint integer division and always
@@ -28,41 +27,48 @@ from pyspark.sql import functions as F
 from marketing_etl_analytics_spark.functions.kpis import safe_div
 
 
-def merged(fact_sales: DataFrame, fact_spend: DataFrame) -> DataFrame:
-    """fs_agg FULL OUTER sp_agg on (date_id, campaign_id), COALESCEd.
+# the additive columns of the merged grain, in its column order
+_SUMS = ["revenue", "cost", "orders", "spend", "clicks", "impressions"]
+# a view's money column is a SUM over the per-(date_id, campaign_id)
+# sums of DECIMAL(18,2) fact money, so it keeps that doubly widened type
+_VIEW_MONEY = "decimal(38,2)"
 
-    (``04_views.sql:17-47`` — identical in all three views.)
+
+def _facts(fact_sales: DataFrame, fact_spend: DataFrame) -> DataFrame:
+    """Both facts' keys and six additive columns, NULL where the other
+    fact has them; ``orders`` is 1 per sale (sale_id is unique)."""
+    return fact_sales.select(
+        "date_id", "campaign_id", "revenue", "cost", F.lit(1).alias("orders")
+    ).unionByName(
+        fact_spend.select("date_id", "campaign_id", "spend", "clicks", "impressions"),
+        allowMissingColumns=True,
+    )
+
+
+def _summed(facts: DataFrame, grain: list[str], cols: list[str]) -> DataFrame:
+    """SUM of ``cols`` at ``grain``, NULL as 0, money typed as the
+    reference's roll-up of the merged grain types it."""
+    return facts.groupBy(*grain).agg(
+        *[F.sum(F.coalesce(c, F.lit(0))).alias(c) for c in cols]
+    ).withColumns({c: F.col(c).cast(_VIEW_MONEY) for c in ("revenue", "cost", "spend")})
+
+
+def merged(fact_sales: DataFrame, fact_spend: DataFrame) -> DataFrame:
+    """fs_agg FULL OUTER sp_agg on (date_id, campaign_id), COALESCEd
+    (``04_views.sql:17-47`` — identical in all three views).
+
+    One aggregation of ``_facts``: a key that both facts share gets one
+    row, as the join matches it. The SQL ``ON`` never matches a NULL, so
+    a key with a NULL component is grouped per fact as well, and a sales
+    group and a spend group under it stay two rows.
     """
-    fs_agg = fact_sales.groupBy("date_id", "campaign_id").agg(
-        F.sum("revenue").alias("revenue"),
-        F.sum("cost").alias("cost"),
-        # sale_id is unique by construction, so COUNT(DISTINCT sale_id)
-        # == COUNT(*); plain count avoids a distinct-agg expand at scale.
-        F.count(F.lit(1)).alias("orders"),
-    )
-    sp_agg = fact_spend.groupBy("date_id", "campaign_id").agg(
-        F.sum("spend").alias("spend"),
-        F.sum("clicks").alias("clicks"),
-        F.sum("impressions").alias("impressions"),
-    )
-    joined = fs_agg.alias("fs").join(
-        sp_agg.alias("sp"),
-        # Explicit null-rejecting predicate, matching the SQL ON clause:
-        # NULL date_ids (spend on no-sale dates) never match.
-        (F.col("fs.date_id") == F.col("sp.date_id"))
-        & (F.col("fs.campaign_id") == F.col("sp.campaign_id")),
-        "full_outer",
-    )
-    zero = F.lit(0)
-    return joined.select(
-        F.coalesce("fs.date_id", "sp.date_id").alias("date_id"),
-        F.coalesce("fs.campaign_id", "sp.campaign_id").alias("campaign_id"),
-        F.coalesce("fs.revenue", zero).alias("revenue"),
-        F.coalesce("fs.cost", zero).alias("cost"),
-        F.coalesce("fs.orders", zero).alias("orders"),
-        F.coalesce("sp.spend", zero).alias("spend"),
-        F.coalesce("sp.clicks", zero).alias("clicks"),
-        F.coalesce("sp.impressions", zero).alias("impressions"),
+    null_key = F.col("date_id").isNull() | F.col("campaign_id").isNull()
+    side = F.when(null_key, F.col("orders").isNull()).alias("_spend_side")
+    return (
+        _facts(fact_sales, fact_spend)
+        .groupBy("date_id", "campaign_id", side)
+        .agg(*[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _SUMS])
+        .drop("_spend_side")
     )
 
 
@@ -78,22 +84,20 @@ def channel_daily(
     dates absent from dim_date (no sales that day) are silently dropped.
     Load-bearing reference quirk; replicated exactly.
     """
-    m = merged(fact_sales, fact_spend)
-    return (
-        m.join(F.broadcast(dim_campaigns.select("campaign_id", "channel")),
-               "campaign_id", "left")
+    facts = (
+        _facts(fact_sales, fact_spend)
+        .join(F.broadcast(dim_campaigns.select("campaign_id", "channel")),
+              "campaign_id", "left")
         .join(F.broadcast(dim_date.select("date_id", "date")), "date_id", "inner")
-        .groupBy("date", "channel")
-        .agg(
-            F.sum("revenue").alias("revenue"),
-            F.sum("cost").alias("cost"),
-            F.round(F.sum("spend"), 2).alias("spend"),
-            F.sum("clicks").alias("clicks"),
-            F.sum("impressions").alias("impressions"),
-            # true division (PG integer-division bug not replicated)
-            F.round(safe_div(F.sum("clicks"), F.sum("impressions")), 6).alias("ctr"),
-            F.sum("orders").alias("orders"),
-        )
+    )
+    clicks, impr = F.col("clicks"), F.col("impressions")
+    return _summed(facts, ["date", "channel"], _SUMS).select(
+        "date", "channel", "revenue", "cost",
+        F.round("spend", 2).alias("spend"),
+        clicks, impr,
+        # true division (PG integer-division bug not replicated)
+        F.round(safe_div(clicks, impr), 6).alias("ctr"),
+        "orders",
     )
 
 
@@ -143,7 +147,8 @@ def incremental_refresh_channel_daily(
     """
     from marketing_etl_analytics_spark.sources import acid
 
-    affected = changed_date_ids.select("date_id").distinct()
+    # a semi join ignores duplicate keys, so no distinct (and its shuffle)
+    affected = changed_date_ids.select("date_id")
     fs = wh["fact_sales"].join(F.broadcast(affected), "date_id", "left_semi")
     sp = wh["fact_spend"].join(F.broadcast(affected), "date_id", "left_semi")
     rows = channel_daily(fs, sp, wh["dim_campaigns"], wh["dim_date"])
@@ -153,15 +158,11 @@ def incremental_refresh_channel_daily(
 # --- incremental KPI-view maintenance ----------------------------------------
 #
 # kpi_channel / kpi_campaign are pure sums at their grain (every ratio
-# column derives from the six raw sums), and every money column is
-# DECIMAL — so the totals are exactly LINEAR in fact rows: sums over
-# (base ∪ delta) = sums over base + sums over delta, bit-for-bit, in
-# any order. The incremental form therefore never re-reads the base
-# facts at all: aggregate ONLY the delta rows to the grain, add them
-# onto a persisted raw-totals table (versioned, copy-on-write — only
-# files holding touched groups rewrite), and derive the KPI view from
-# the totals on read. A 10 GB nightly delta against 100 TB of facts
-# costs one pass over the delta.
+# derives from the six raw sums), and money is DECIMAL, so the totals
+# are exactly linear in fact rows. The incremental form aggregates ONLY
+# the delta rows, adds them onto a persisted raw-totals table
+# (versioned, copy-on-write: only files holding touched groups
+# rewrite), and derives the KPI view from the totals on read.
 
 _KPI_SUMS = ["revenue", "cost", "spend", "clicks", "impressions", "orders"]
 
@@ -177,12 +178,10 @@ def _kpi_totals(
 ) -> DataFrame:
     """Raw additive sums at ``grain`` (the stored representation)."""
     dim_cols = ["campaign_id"] + [c for c in grain if c != "campaign_id"]
-    m = merged(fact_sales, fact_spend).join(
+    facts = _facts(fact_sales, fact_spend).join(
         F.broadcast(dim_campaigns.select(*dim_cols)), "campaign_id", "left"
     )
-    return m.groupBy(*grain).agg(
-        *[F.sum(c).alias(c) for c in _KPI_SUMS]
-    )
+    return _summed(facts, grain, _KPI_SUMS)
 
 
 def kpi_from_totals(totals: DataFrame, grain: list[str]) -> DataFrame:

@@ -1,0 +1,143 @@
+"""Spark job budgets of the dashboard reads and the nightly steps.
+
+On a warehouse this size a Spark job costs tens of milliseconds however
+little it reads, so the job count, not the data, sets a read's latency.
+Counts are taken by job group (``statusTracker().getJobIdsForGroup``)
+on seeded ``perfbench/gen.py`` data, with every read on a fresh
+snapshot: nothing a previous read planned or ran is reused, as for the
+first read after a commit.
+
+A budget only goes down. A change that lowers a count lowers its budget
+here; raising one needs a reason in CHANGES.md.
+"""
+
+from __future__ import annotations
+
+import itertools
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from marketing_etl_analytics_spark import etl, queries, schemas, views
+from marketing_etl_analytics_spark.sources import acid
+from marketing_etl_analytics_spark.sources.csv import read_csv
+
+SEED, DELTA_TX = 1, 100
+TABLES = ("dim_date", "dim_customers", "dim_products", "dim_campaigns",
+          "fact_sales", "fact_spend")
+FACT_KEYS = {"fact_sales": "sale_id", "fact_spend": "spend_id"}
+
+READ_BUDGETS = {
+    "q0_pnl_summary": 5,
+    "q1_best_sellers": 3,
+    "q2_profit_products": 3,
+    "q3_margin_products": 3,
+    "q4_channel_performance": 5,
+    "q5_repeat_drivers": 4,
+    "q6_category_performance": 4,
+    "q7_product_quadrant": 4,
+    "q8_spend_waste": 4,
+    "q9_retention": 3,
+    "q10_demographics": 5,
+    "q11_frequency_segments": 4,
+    "mv_channel_daily": 4,
+    "mv_kpi_channel": 3,
+    "mv_kpi_campaign": 3,
+}
+NIGHTLY_BUDGETS = {
+    "create_kpi_totals": 3,
+    "create_channel_daily": 4,
+    "merge": 5,
+    "incremental_refresh_kpi": 9,
+    "incremental_refresh_channel_daily": 10,
+}
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def tables(spark, tmp_path_factory):
+    from perfbench import gen
+
+    root = tmp_path_factory.mktemp("budgets")
+    truth = gen.marketing(str(root / "in"), SEED, gen.N_TRANSACTIONS, 1, DELTA_TX)
+    wh = etl.run_etl(spark, truth["raw_dir"])
+    for t in TABLES:
+        acid.create(spark, str(root / t), wh[t],
+                    stats_cols=[FACT_KEYS[t]] if t in FACT_KEYS else None)
+    for t in TABLES[:4]:
+        wh[t].unpersist()
+    return truth, root
+
+
+def _fresh_snapshot(spark, root) -> dict:
+    """The warehouse tables, opened as if no read had come before: the
+    per-session snapshot memos are emptied first."""
+    acid._OPENED.clear()
+    views._BUILT = None
+    return {t: acid.read(spark, str(root / t)) for t in TABLES}
+
+
+@pytest.mark.parametrize("name", list(READ_BUDGETS))
+def test_read_job_budget(name, spark, tables):
+    wh = _fresh_snapshot(spark, tables[1])
+    wh.update(views.build_views(wh))
+    fn = queries.ALL_QUERIES.get(name)
+    df = fn(wh) if fn else wh[name]
+    _, jobs = _jobs(spark, df.collect)
+    assert jobs == READ_BUDGETS[name]
+
+
+def test_building_queries_and_views_starts_no_job(spark, tables):
+    wh = _fresh_snapshot(spark, tables[1])
+    _, jobs = _jobs(spark, lambda: wh.update(views.build_views(wh)))
+    assert jobs == 0
+    for name, fn in queries.ALL_QUERIES.items():
+        _, jobs = _jobs(spark, lambda: fn(wh))
+        assert jobs == 0, name
+
+
+def test_nightly_job_budgets(spark, tables):
+    truth, root = tables
+    wh = _fresh_snapshot(spark, root)
+    got = {}
+    _, got["create_kpi_totals"] = _jobs(spark, lambda: views.create_kpi_totals(
+        spark, str(root / "kpi_totals"), wh["fact_sales"], wh["fact_spend"],
+        wh["dim_campaigns"], views.KPI_CHANNEL_GRAIN))
+    _, got["create_channel_daily"] = _jobs(spark, lambda: acid.create(
+        spark, str(root / "mv_channel_daily"),
+        views.channel_daily(wh["fact_sales"], wh["fact_spend"], wh["dim_campaigns"],
+                            wh["dim_date"])))
+    # one delta, staged as the nightly job stages it
+    d = truth["deltas"][0]["dir"]
+    stg = {n: read_csv(spark, os.path.join(d, schemas.RAW_CSV_FILES[n][0]),
+                       schema=schemas.RAW_CSV_FILES[n][1])
+           for n in ("transactions", "spend")}
+    fs = (etl.build_fact_sales(stg["transactions"], wh["dim_date"], wh["dim_products"],
+                               wh["dim_campaigns"])
+          .withColumn("sale_id", F.col("sale_id") + F.lit(1 << 40)).localCheckpoint())
+    sp = etl.build_fact_spend(stg["spend"], wh["dim_date"], wh["dim_campaigns"]).localCheckpoint()
+    _, got["merge"] = _jobs(spark, lambda: acid.merge(
+        spark, str(root / "fact_sales"), fs, ["sale_id"]))
+    _, got["incremental_refresh_kpi"] = _jobs(spark, lambda: views.incremental_refresh_kpi(
+        spark, str(root / "kpi_totals"), fs, sp, wh["dim_campaigns"],
+        views.KPI_CHANNEL_GRAIN))
+    after = {t: acid.read(spark, str(root / t)) for t in TABLES}
+    _, got["incremental_refresh_channel_daily"] = _jobs(
+        spark, lambda: views.incremental_refresh_channel_daily(
+            spark, str(root / "mv_channel_daily"), after,
+            fs.select("date_id").union(sp.select("date_id"))))
+    assert got == NIGHTLY_BUDGETS
