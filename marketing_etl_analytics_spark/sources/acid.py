@@ -42,8 +42,13 @@ protocol, reduced to its essentials, on plain parquet + JSON:
 Single-table layout::
 
     <path>/_current              -> {"version": N}   (os.replace'd)
-    <path>/_versions/v0000N.json -> {"files": [...], "schema": ...}
+    <path>/_versions/v0000N.json -> {"files": [...], "schema": ...,
+                                     "stats": ..., "stats_cols": ...}
     <path>/data/v0000N-<nonce>/part-*.parquet
+
+A manifest lists its files relative to ``<path>`` (Delta's relative
+``add.path``): a table's bytes do not depend on where it lives, and a
+table directory can be moved or copied and still reads.
 
 - **Statistics-based file skipping.** Manifests record per-file
   min/max (+ null count) for declared stats columns (the Delta
@@ -83,7 +88,6 @@ class Manifest:
     version: int
     files: list[str]
     schema_json: str
-    parent: int | None
     # per-file column statistics: {basename: {col: [min, max, n_null]}}
     stats: dict | None = None
     stats_cols: list[str] | None = None
@@ -107,29 +111,29 @@ def current_version(path: str) -> int:
 
 
 def read_manifest(path: str, version: int) -> Manifest:
+    """Version ``version``'s manifest, its files as absolute paths. An
+    entry that is already absolute resolves to itself."""
     with open(_manifest_path(path, version)) as f:
         m = json.load(f)
+    root = os.path.abspath(path)
     return Manifest(
         version=version,
-        files=m["files"],
+        files=[os.path.join(root, f) for f in m["files"]],
         schema_json=m["schema"],
-        parent=m.get("parent"),
         stats=m.get("stats"),
         stats_cols=m.get("stats_cols"),
     )
 
 
 def _commit(path: str, version: int, files: list[str], schema_json: str,
-            parent: int | None, stats: dict | None = None,
-            stats_cols: list[str] | None = None) -> None:
+            stats: dict | None = None, stats_cols: list[str] | None = None) -> None:
     """O_EXCL manifest creation is the commit arbiter; the pointer swap
     is atomic, so readers never observe a partial commit."""
     os.makedirs(_versions_dir(path), exist_ok=True)
     body = json.dumps(
         {
-            "files": files,
+            "files": [os.path.relpath(f, path) for f in files],
             "schema": schema_json,
-            "parent": parent,
             "stats": stats,
             "stats_cols": stats_cols,
         },
@@ -146,19 +150,6 @@ def _commit(path: str, version: int, files: list[str], schema_json: str,
     with open(tmp, "w") as f:
         json.dump({"version": version}, f)
     os.replace(tmp, _pointer_path(path))
-
-
-def _write_data_files(df: DataFrame, path: str, version: int) -> list[str]:
-    """Write a batch of immutable data files; return their paths."""
-    out_dir = os.path.join(
-        path, "data", f"v{version:05d}-{uuid.uuid4().hex[:8]}"
-    )
-    df.write.mode("error").parquet(out_dir)
-    return sorted(
-        os.path.join(out_dir, f)
-        for f in os.listdir(out_dir)
-        if f.endswith(".parquet")
-    )
 
 
 # --- per-file statistics (data skipping) ------------------------------------
@@ -256,44 +247,40 @@ def prune_files(m: Manifest, col: str, lo, hi, src_has_null: bool = False) -> li
     ]
 
 
-def _commit_or_cleanup(
+def _write(
     path: str,
-    version: int,
-    files: list[str],
-    new_files: list[str],
+    base: Manifest | None,
+    rows: DataFrame | None,
+    keep: list[str],
     schema_json: str,
-    parent: int | None,
-    stats: dict | None = None,
-    stats_cols: list[str] | None = None,
-) -> None:
-    """Commit; on losing the version race, delete the just-written data
-    files before re-raising — otherwise every losing writer would leak
-    an orphaned (manifest-unreferenced) rewrite that vacuum can't see."""
+    stats_cols: list[str] | None,
+) -> int:
+    """Commit the version after ``base`` (version 1 without one): the
+    ``keep`` files of ``base`` plus new data files holding ``rows``, in
+    a fresh ``data/v<N>-<nonce>/`` directory. Kept files carry their
+    recorded stats; new files get theirs from their parquet footers.
+    A writer that loses the commit race deletes its new directory
+    before re-raising, or it would leak files no manifest lists.
+    Returns the new version."""
+    version = base.version + 1 if base else 1
+    out_dir = os.path.join(path, "data", f"v{version:05d}-{uuid.uuid4().hex[:8]}")
+    new_files: list[str] = []
+    if rows is not None:
+        rows.write.mode("error").parquet(out_dir)
+        new_files = sorted(
+            os.path.join(out_dir, f) for f in os.listdir(out_dir) if f.endswith(".parquet")
+        )
+    stats = None
+    if stats_cols:
+        recorded = (base.stats if base else None) or {}
+        stats = {b: recorded[b] for b in map(os.path.basename, keep) if b in recorded}
+        stats.update(_collect_stats(new_files, stats_cols))
     try:
-        _commit(path, version, files, schema_json, parent, stats, stats_cols)
+        _commit(path, version, keep + new_files, schema_json, stats, stats_cols)
     except ConcurrentWriteError:
-        if new_files:
-            shutil.rmtree(os.path.dirname(new_files[0]), ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)
         raise
-
-
-def _carry_stats(
-    m: Manifest,
-    carried: list[str],
-    new_files: list[str],
-) -> tuple[dict | None, list[str] | None]:
-    """Stats for the next manifest: carried files keep their recorded
-    entries; new files get theirs from their parquet footers. Tables
-    created without stats_cols stay stats-free."""
-    if not m.stats_cols:
-        return None, None
-    stats = {
-        os.path.basename(f): (m.stats or {}).get(os.path.basename(f))
-        for f in carried
-    }
-    stats = {k: v for k, v in stats.items() if v is not None}
-    stats.update(_collect_stats(new_files, m.stats_cols))
-    return stats, m.stats_cols
+    return version
 
 
 def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
@@ -302,14 +289,15 @@ def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
-def _read_files(spark: SparkSession, m: Manifest) -> DataFrame:
-    schema = StructType.fromJson(json.loads(m.schema_json))
-    if not m.files:
+def _scan(spark: SparkSession, files: list[str], schema_json: str) -> DataFrame:
+    """The rows of ``files`` under a manifest schema. The schema is
+    explicit: after additive schema evolution a manifest may list files
+    written under an older (narrower) schema, and parquet fills the
+    missing columns with NULL."""
+    schema = StructType.fromJson(json.loads(schema_json))
+    if not files:
         return _empty(spark, schema)
-    # explicit manifest schema: after additive schema evolution the
-    # manifest may list files written under an older (narrower) schema;
-    # parquet fills the missing columns with NULL
-    return spark.read.schema(schema).parquet(*m.files)
+    return spark.read.schema(schema).parquet(*files)
 
 
 def create(
@@ -325,15 +313,10 @@ def create(
     in ``merge`` planning and ``read_range``. Non-JSON-roundtrippable
     column types are silently excluded (conservative: no stats = scan).
     """
-    os.makedirs(path, exist_ok=True)
-    files = _write_data_files(df, path, 1)
-    cols = eligible_stats_cols(df.schema, stats_cols)
-    stats = _collect_stats(files, cols) if cols else None
-    _commit(
-        path, 1, files, df.schema.json(), parent=None,
-        stats=stats, stats_cols=cols or None,
+    return _write(
+        path, None, df, [], df.schema.json(),
+        eligible_stats_cols(df.schema, stats_cols) or None,
     )
-    return 1
 
 
 # absolute table path -> (session, files, schema_json, DataFrame) of the
@@ -361,7 +344,7 @@ def read(spark: SparkSession, path: str, version: int | None = None) -> DataFram
     hit = _OPENED.get(key)
     if hit is not None and hit[0] is spark and hit[1:3] == (m.files, m.schema_json):
         return hit[3]
-    df = _read_files(spark, m)
+    df = _scan(spark, m.files, m.schema_json)
     _OPENED[key] = (spark, m.files, m.schema_json, df)
     return df
 
@@ -376,15 +359,8 @@ def restore(path: str, version: int) -> int:
     long as the restore commit is retained)."""
     target = read_manifest(path, version)
     cur = current_version(path)
-    _commit(
-        path,
-        cur + 1,
-        target.files,
-        target.schema_json,
-        parent=cur,
-        stats=target.stats,
-        stats_cols=target.stats_cols,
-    )
+    _commit(path, cur + 1, target.files, target.schema_json, target.stats,
+            target.stats_cols)
     return cur + 1
 
 
@@ -419,11 +395,8 @@ def merge(
     Returns the new version number. Raises :class:`ConcurrentWriteError`
     if another writer commits first (retry against the new snapshot).
     """
-    base = current_version(path)
-    m = read_manifest(path, base)
-    new_version = base + 1
-
-    cur = _read_files(spark, m)
+    m = read_manifest(path, current_version(path))
+    cur = _scan(spark, m.files, m.schema_json)
     schema_json = m.schema_json
     if schema_evolution:
         extra = [f for f in source.schema.fields if f.name not in set(cur.columns)]
@@ -481,11 +454,8 @@ def merge(
 
         touched: set[str] = set()
         if cand_files:
-            # candidate scan under the (possibly evolved) manifest schema —
-            # parquet yields NULL for columns absent from older files
-            cand = spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(
-                *cand_files
-            )
+            # candidate scan under the (possibly evolved) manifest schema
+            cand = _scan(spark, cand_files, schema_json)
             # which files hold matched keys? file paths are metadata-sized —
             # the one deliberate driver-side collect (same shape as a
             # format's manifest planning step). Files are matched by
@@ -510,15 +480,8 @@ def merge(
             ).unionByName(staged)
         else:  # inserts only — untouched files all carry over
             new_data = staged
-        new_files = _write_data_files(new_data, path, new_version)
-
         carried = [f for f in m.files if os.path.basename(f) not in touched]
-        stats, stats_cols = _carry_stats(m, carried, new_files)
-        _commit_or_cleanup(
-            path, new_version, carried + new_files, new_files, schema_json, base,
-            stats, stats_cols,
-        )
-        return new_version
+        return _write(path, m, new_data, carried, schema_json, m.stats_cols)
     finally:
         # DataFrame.unpersist does not free a local checkpoint; the
         # checkpointed RDD behind the plan does
@@ -542,24 +505,19 @@ def read_range(
     v = current_version(path) if version is None else version
     m = read_manifest(path, v)
     files = prune_files(m, col, lo, hi)
-    schema = StructType.fromJson(json.loads(m.schema_json))
-    df = spark.read.schema(schema).parquet(*files) if files else _empty(spark, schema)
-    return df.filter(F.col(col).between(lo, hi))
+    return _scan(spark, files, m.schema_json).filter(F.col(col).between(lo, hi))
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
     """Copy-on-write DELETE: rewrite only files containing matching rows."""
-    base = current_version(path)
-    m = read_manifest(path, base)
-    new_version = base + 1
-
-    tagged = _read_files(spark, m).withColumn(
+    m = read_manifest(path, current_version(path))
+    tagged = _scan(spark, m.files, m.schema_json).withColumn(
         "_vt_file", _basename(F.input_file_name())
     )
     touched = {
         r[0] for r in tagged.filter(predicate).select("_vt_file").distinct().collect()
     }
-    new_files: list[str] = []
+    survivors = None
     if touched:
         survivors = (
             tagged.filter(F.col("_vt_file").isin(sorted(touched)))
@@ -569,14 +527,8 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
             .filter(~F.coalesce(F.expr(predicate), F.lit(False)))
             .drop("_vt_file")
         )
-        new_files = _write_data_files(survivors, path, new_version)
     carried = [f for f in m.files if os.path.basename(f) not in touched]
-    stats, stats_cols = _carry_stats(m, carried, new_files)
-    _commit_or_cleanup(
-        path, new_version, carried + new_files, new_files, m.schema_json, base,
-        stats, stats_cols,
-    )
-    return new_version
+    return _write(path, m, survivors, carried, m.schema_json, m.stats_cols)
 
 
 _Z_BITS = 8  # equi-depth buckets per column = 2^8; z-value fits in a long
@@ -654,10 +606,8 @@ def compact(
     A linear sort can only do this for its leading column."""
     if order_by and zorder_by:
         raise ValueError("pass order_by or zorder_by, not both")
-    base = current_version(path)
-    m = read_manifest(path, base)
-    new_version = base + 1
-    cur = _read_files(spark, m)
+    m = read_manifest(path, current_version(path))
+    cur = _scan(spark, m.files, m.schema_json)
     if zorder_by:
         shaped = (
             cur.withColumn("_vt_z", _zorder_value(cur, zorder_by))
@@ -671,13 +621,7 @@ def compact(
         )
     else:
         shaped = cur.repartition(target_files)
-    new_files = _write_data_files(shaped, path, new_version)
-    stats, stats_cols = _carry_stats(m, [], new_files)
-    _commit_or_cleanup(
-        path, new_version, new_files, new_files, m.schema_json, base,
-        stats, stats_cols,
-    )
-    return new_version
+    return _write(path, m, shaped, [], m.schema_json, m.stats_cols)
 
 
 def changes(
@@ -704,23 +648,12 @@ def changes(
     NULL column is correctly reported unchanged.
     """
     mf, mt = read_manifest(path, v_from), read_manifest(path, v_to)
-    schema = StructType.fromJson(json.loads(mt.schema_json))
-    removed = sorted(set(mf.files) - set(mt.files))
-    added = sorted(set(mt.files) - set(mf.files))
-
-    def side(files: list[str]) -> DataFrame:
-        if not files:
-            return _empty(spark, schema)
-        return spark.read.schema(schema).parquet(*files)
-
-    old, new = side(removed), side(added)
-    val_cols = [c for c in schema.fieldNames() if c not in key_cols]
-    o = old.select(
-        F.struct(*key_cols).alias("_k"), F.struct(*schema.fieldNames()).alias("_o")
-    )
-    n = new.select(
-        F.struct(*key_cols).alias("_k"), F.struct(*schema.fieldNames()).alias("_n")
-    )
+    old = _scan(spark, sorted(set(mf.files) - set(mt.files)), mt.schema_json)
+    new = _scan(spark, sorted(set(mt.files) - set(mf.files)), mt.schema_json)
+    cols = new.columns
+    val_cols = [c for c in cols if c not in key_cols]
+    o = old.select(F.struct(*key_cols).alias("_k"), F.struct(*cols).alias("_o"))
+    n = new.select(F.struct(*key_cols).alias("_k"), F.struct(*cols).alias("_n"))
     j = o.join(n, o["_k"].eqNullSafe(n["_k"]), "full_outer")
     tag = (
         F.when(o["_k"].isNull() & ~n["_k"].isNull(), F.lit("insert"))
@@ -737,7 +670,7 @@ def changes(
     return (
         j.select(tag.alias("_change_type"), img.alias("_row"))
         .filter(F.col("_change_type").isNotNull())
-        .select("_change_type", *[F.col("_row")[c].alias(c) for c in schema.fieldNames()])
+        .select("_change_type", *[F.col("_row")[c].alias(c) for c in cols])
     )
 
 
@@ -763,9 +696,10 @@ def vacuum(path: str, keep_last: int = 2) -> list[str]:
     versions = history(path)
     keep = set(versions[-keep_last:]) | {current}
     # data files are <path>/data/v<version>-<nonce>/<part>: the last two
-    # components name a file whatever spelling of ``path`` wrote it
+    # components name a file, also in a manifest that recorded absolute
+    # paths under another spelling or location of ``path``
     keep_files = {
-        tuple(_strip_scheme(f).split(os.sep)[-2:])
+        tuple(f.split(os.sep)[-2:])
         for v in keep
         for f in read_manifest(path, v).files
     }
@@ -790,7 +724,3 @@ def vacuum(path: str, keep_last: int = 2) -> list[str]:
 
 def _basename(col):
     return F.element_at(F.split(col, "/"), -1)
-
-
-def _strip_scheme(p: str) -> str:
-    return p[len("file:"):] if p.startswith("file:") else p

@@ -170,6 +170,19 @@ KPI_CHANNEL_GRAIN = ["channel"]
 KPI_CAMPAIGN_GRAIN = ["campaign_id", "campaign_name", "channel"]
 
 
+def _kpi_rows(
+    fact_sales: DataFrame,
+    fact_spend: DataFrame,
+    dim_campaigns: DataFrame,
+    grain: list[str],
+) -> DataFrame:
+    """Both facts' rows with the campaign columns of ``grain``."""
+    dim_cols = ["campaign_id"] + [c for c in grain if c != "campaign_id"]
+    return _facts(fact_sales, fact_spend).join(
+        F.broadcast(dim_campaigns.select(*dim_cols)), "campaign_id", "left"
+    )
+
+
 def _kpi_totals(
     fact_sales: DataFrame,
     fact_spend: DataFrame,
@@ -177,11 +190,7 @@ def _kpi_totals(
     grain: list[str],
 ) -> DataFrame:
     """Raw additive sums at ``grain`` (the stored representation)."""
-    dim_cols = ["campaign_id"] + [c for c in grain if c != "campaign_id"]
-    facts = _facts(fact_sales, fact_spend).join(
-        F.broadcast(dim_campaigns.select(*dim_cols)), "campaign_id", "left"
-    )
-    return _summed(facts, grain, _KPI_SUMS)
+    return _summed(_kpi_rows(fact_sales, fact_spend, dim_campaigns, grain), grain, _KPI_SUMS)
 
 
 def kpi_from_totals(totals: DataFrame, grain: list[str]) -> DataFrame:
@@ -236,38 +245,19 @@ def incremental_refresh_kpi(
     """Fold a fact delta into the persisted KPI totals.
 
     Additive-delta contract (same as the channel_daily refresh): facts
-    only gain rows. Aggregates the DELTA rows only, adds them onto the
-    current totals for the touched groups (NULL-grain groups — spend
-    rows whose campaign misses the dim — combine NULL-safely via the
-    versioned table's key matching), and MERGEs: untouched groups'
-    files carry over by reference. Returns the new version.
+    only gain rows. One aggregation sums the DELTA rows together with
+    the stored totals; ``_d`` counts a group's delta rows, so only the
+    groups the delta touched are MERGEd, and untouched groups' files
+    carry over by reference. ``groupBy`` puts NULL grain keys (spend
+    rows whose campaign misses the dim) in one group, as the merge's
+    NULL-safe key matching does. Returns the new version.
     """
     from marketing_etl_analytics_spark.sources import acid
 
-    delta = _kpi_totals(fs_delta, sp_delta, dim_campaigns, grain)
-    cur = acid.read(spark, path)
-    cur_types = {f.name: f.dataType for f in cur.schema.fields}
-    d = delta.alias("d")
-    c = cur.alias("c")
-    cond = None
-    for k in grain:
-        e = F.col(f"d.{k}").eqNullSafe(F.col(f"c.{k}"))
-        cond = e if cond is None else cond & e
-    combined = d.join(c, cond, "left").select(
-        *[F.col(f"d.{k}").alias(k) for k in grain],
-        *[
-            (
-                F.coalesce(F.col(f"c.{s}"), F.lit(0))
-                + F.coalesce(F.col(f"d.{s}"), F.lit(0))
-            )
-            # decimal addition widens precision; snap back to the
-            # stored column type so the table schema stays stable
-            .cast(cur_types[s])
-            .alias(s)
-            for s in _KPI_SUMS
-        ],
-    )
-    return acid.merge(spark, path, combined, grain)
+    delta = _kpi_rows(fs_delta, sp_delta, dim_campaigns, grain).withColumn("_d", F.lit(1))
+    both = delta.unionByName(acid.read(spark, path), allowMissingColumns=True)
+    folded = _summed(both, grain, _KPI_SUMS + ["_d"]).filter("_d > 0").drop("_d")
+    return acid.merge(spark, path, folded, grain)
 
 
 # (inputs, views) of the last build_views call, swapped as one tuple so

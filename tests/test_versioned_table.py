@@ -4,12 +4,15 @@ optimistic-concurrency conflict detection, vacuum."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.sources import acid
+from tests.test_versioned_table_crash import _rows, _unlisted
 
 
 def _df(spark, pairs):
@@ -75,6 +78,50 @@ def test_concurrent_writer_conflict(spark, table):
         f.write("{}")
     with pytest.raises(acid.ConcurrentWriteError):
         acid.merge(spark, table, _df(spark, [(0, "x")]), ["k"])
+
+
+def test_losing_create_removes_its_files(spark, table):
+    """A create at a path that holds a table loses the version-1 commit
+    and deletes the data files it wrote."""
+    want = _rows(spark, table)
+    with pytest.raises(acid.ConcurrentWriteError):
+        acid.create(spark, table, _df(spark, [(0, "second")]))
+    assert _rows(spark, table) == want
+    assert _unlisted(table) == set()
+
+
+def _merged_table(spark, path):
+    acid.create(spark, path, _df(spark, [(k, f"a{k}") for k in range(50)]),
+                stats_cols=["k"])
+    acid.merge(spark, path, _df(spark, [(k, f"b{k}") for k in range(45, 55)]), ["k"])
+    return path
+
+
+def test_table_bytes_do_not_depend_on_its_location(spark, tmp_path):
+    short = _merged_table(spark, str(tmp_path / "t"))
+    deep = _merged_table(spark, str(tmp_path / ("deeper" * 8) / "t"))
+
+    def manifest_bytes(path):
+        return sum(os.path.getsize(acid._manifest_path(path, v)) for v in acid.history(path))
+
+    assert manifest_bytes(short) == manifest_bytes(deep)
+    for v in acid.history(short):
+        with open(acid._manifest_path(short, v)) as f:
+            assert not any(os.path.isabs(p) for p in json.load(f)["files"])
+
+
+def test_moved_table_reads_and_vacuums(spark, tmp_path):
+    orig = _merged_table(spark, str(tmp_path / "orig"))
+    want = _rows(spark, orig)
+    moved = str(tmp_path / "elsewhere" / "t")
+    shutil.copytree(orig, moved)
+    shutil.rmtree(orig)
+    assert _rows(spark, moved) == want
+    live = set(acid.read_manifest(moved, acid.current_version(moved)).files)
+    removed = acid.vacuum(moved, keep_last=1)
+    assert removed and not live & set(removed)
+    assert all(os.path.exists(f) for f in live)
+    assert _rows(spark, moved) == want
 
 
 def test_delete_where_copy_on_write(spark, table):

@@ -1,9 +1,10 @@
 """Model-based check of the versioned table: random op sequences vs a dict.
 
 Hypothesis drives short random sequences of merge / delete_where /
-compact against one table; a plain Python dict models the expected
-key->value state after every op. Any divergence (lost rows, resurrected
-deletes, merge clobbering the wrong keys, compaction changing data) is
+compact / restore / vacuum against one table; a plain Python dict models
+the expected key->value state of every version. Any divergence (lost
+rows, resurrected deletes, merge clobbering the wrong keys, compaction
+changing data, a restore not reverting, vacuum dropping a live file) is
 a counterexample.
 """
 
@@ -22,6 +23,8 @@ OPS = st.lists(
                                                     min_size=1, max_size=4)),
         st.tuples(st.just("delete_le"), KEYS),
         st.tuples(st.just("compact"), st.just(None)),
+        st.tuples(st.just("restore"), st.just(None)),
+        st.tuples(st.just("vacuum"), st.just(None)),
     ),
     min_size=1,
     max_size=5,
@@ -37,12 +40,13 @@ OPS = st.lists(
        ops=OPS)
 def test_random_op_sequences_match_dict_model(spark, tmp_path_factory, initial, ops):
     path = str(tmp_path_factory.mktemp("vt") / "tbl")
-    model = dict(initial)
+    models = [dict(initial)]  # models[v - 1]: the rows of version v
     acid.create(
         spark, path,
         spark.createDataFrame(list(initial.items()), "k long, v long"),
     )
     for op, arg in ops:
+        model = dict(models[-1])
         if op == "merge":
             model.update(arg)
             acid.merge(
@@ -53,7 +57,21 @@ def test_random_op_sequences_match_dict_model(spark, tmp_path_factory, initial, 
         elif op == "delete_le":
             model = {k: v for k, v in model.items() if not k <= arg}
             acid.delete_where(spark, path, f"k <= {arg}")
-        else:
+        elif op == "compact":
             acid.compact(spark, path, 1)
-    got = {r.k: r.v for r in acid.read(spark, path).collect()}
-    assert got == model
+        elif op == "restore":
+            # to the previous version, which vacuum(keep_last=2) keeps
+            prev = max(len(models) - 1, 1)
+            model = dict(models[prev - 1])
+            acid.restore(path, prev)
+        else:
+            acid.vacuum(path, keep_last=2)
+            assert _read(spark, path) == model
+            continue
+        models.append(model)
+    assert acid.current_version(path) == len(models)
+    assert _read(spark, path) == models[-1]
+
+
+def _read(spark, path):
+    return {r.k: r.v for r in acid.read(spark, path).collect()}
