@@ -21,6 +21,12 @@ protocol, reduced to its essentials, on plain parquet + JSON:
   contain a matched key are rewritten; every other file carries over
   by reference. A small delta against a 100 TB table rewrites a small
   fraction of it, not the table.
+- **Whole-table rewrite of dimension-bounded tables.** ``rewrite``
+  replaces a table with a function of its current snapshot in one
+  write. For a table whose size follows a dimension (a view's totals),
+  writing every row costs less than MERGE's staging, touched-file scan
+  and anti-join. Its commit races like any other, so the new rows
+  always derive from the version they replace.
 - **One pass over the MERGE source.** ``merge`` stages its
   key-deduplicated source once with ``localCheckpoint`` (Delta's
   ``MergeIntoMaterializeSource``); the prune bounds, the touched-file
@@ -200,13 +206,10 @@ def _collect_stats(files: list[str], stats_cols: list[str]) -> dict:
     read from the parquet footers the write produced — no Spark job,
     as a table format takes its file stats at commit time. Min and max
     merge across row groups; an all-NULL column reads [None, None, n].
-    A column without footer bounds gets no entry (always scanned), and
-    a file with no rows gets no entry at all."""
+    A column without footer bounds gets no entry (always scanned)."""
     out: dict = {}
     for f in files:
         md = pq.read_metadata(f)
-        if md.num_rows == 0:
-            continue
         idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
         entry = {}
         for c in stats_cols:
@@ -261,15 +264,26 @@ def _write(
     recorded stats; new files get theirs from their parquet footers.
     A writer that loses the commit race deletes its new directory
     before re-raising, or it would leak files no manifest lists.
-    Returns the new version."""
+    A data file that holds no rows is deleted and not listed, so a
+    table with no rows lists no file. Returns the new version."""
     version = base.version + 1 if base else 1
     out_dir = os.path.join(path, "data", f"v{version:05d}-{uuid.uuid4().hex[:8]}")
     new_files: list[str] = []
     if rows is not None:
         rows.write.mode("error").parquet(out_dir)
-        new_files = sorted(
-            os.path.join(out_dir, f) for f in os.listdir(out_dir) if f.endswith(".parquet")
-        )
+        # Spark writes partition 0's file even when it is empty; a file
+        # with no rows is deleted (with its checksum), not committed and
+        # then carried forever
+        for f in sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet")):
+            full = os.path.join(out_dir, f)
+            if pq.read_metadata(full).num_rows:
+                new_files.append(full)
+            else:
+                for g in (full, os.path.join(out_dir, f".{f}.crc")):
+                    if os.path.exists(g):
+                        os.remove(g)
+        if not new_files:
+            shutil.rmtree(out_dir)
     stats = None
     if stats_cols:
         recorded = (base.stats if base else None) or {}
@@ -486,6 +500,23 @@ def merge(
         # DataFrame.unpersist does not free a local checkpoint; the
         # checkpointed RDD behind the plan does
         staged._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def rewrite(spark: SparkSession, path: str, fn) -> int:
+    """Replace the table with ``fn(current snapshot)`` as the next
+    version: a read-modify-write of the whole table (Delta's overwrite
+    under optimistic concurrency). Meant for tables bounded by dimension
+    size, where writing every row costs less than finding the files a
+    change touches. The rows are written in the table's column order,
+    and no file carries over.
+
+    The new rows derive from exactly the version they replace: if
+    another writer commits first (also from inside ``fn``), the rewrite
+    raises :class:`ConcurrentWriteError`, deletes its files, and the
+    other writer's version stands. Returns the new version."""
+    m = read_manifest(path, current_version(path))
+    cur = _scan(spark, m.files, m.schema_json)
+    return _write(path, m, fn(cur).select(*cur.columns), [], m.schema_json, m.stats_cols)
 
 
 def read_range(

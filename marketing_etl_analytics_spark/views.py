@@ -131,10 +131,10 @@ def incremental_refresh_channel_daily(
     """Incrementally maintain a MATERIALIZED mv_channel_daily.
 
     The reference recomputes its ``mv_*`` views from scratch nightly
-    (README.md:261-263); at 100 TB the incremental form recomputes only
-    the (date, channel) rows whose underlying dates received new fact
-    rows, and MERGEs them into a versioned table (``sources/acid.py``)
-    — concurrent readers keep a consistent snapshot throughout.
+    (README.md:261-263); the incremental form recomputes only the dates
+    that received new fact rows. The table is bounded by dates x
+    channels, so it is rewritten whole (``acid.rewrite``): the stored
+    rows of the other dates plus the recomputed ones.
 
     ``changed_date_ids``: one column ``date_id`` listing dates touched
     by the fact delta (additive-delta contract: facts only gain rows —
@@ -148,21 +148,23 @@ def incremental_refresh_channel_daily(
     from marketing_etl_analytics_spark.sources import acid
 
     # a semi join ignores duplicate keys, so no distinct (and its shuffle)
-    affected = changed_date_ids.select("date_id")
-    fs = wh["fact_sales"].join(F.broadcast(affected), "date_id", "left_semi")
-    sp = wh["fact_spend"].join(F.broadcast(affected), "date_id", "left_semi")
-    rows = channel_daily(fs, sp, wh["dim_campaigns"], wh["dim_date"])
-    return acid.merge(spark, mv_path, rows, ["date", "channel"])
+    affected = F.broadcast(changed_date_ids.select("date_id"))
+    fs = wh["fact_sales"].join(affected, "date_id", "left_semi")
+    sp = wh["fact_spend"].join(affected, "date_id", "left_semi")
+    fresh = channel_daily(fs, sp, wh["dim_campaigns"], wh["dim_date"])
+    dates = F.broadcast(wh["dim_date"].join(affected, "date_id", "left_semi").select("date"))
+    return acid.rewrite(spark, mv_path, lambda cur: cur.join(
+        dates, "date", "left_anti").unionByName(fresh))
 
 
 # --- incremental KPI-view maintenance ----------------------------------------
 #
 # kpi_channel / kpi_campaign are pure sums at their grain (every ratio
 # derives from the six raw sums), and money is DECIMAL, so the totals
-# are exactly linear in fact rows. The incremental form aggregates ONLY
-# the delta rows, adds them onto a persisted raw-totals table
-# (versioned, copy-on-write: only files holding touched groups
-# rewrite), and derives the KPI view from the totals on read.
+# are exactly linear in fact rows. The incremental form sums ONLY the
+# delta rows with a persisted raw-totals table (at most one row per
+# campaign, so each delta rewrites it whole), and derives the KPI view
+# from the totals on read.
 
 _KPI_SUMS = ["revenue", "cost", "spend", "clicks", "impressions", "orders"]
 
@@ -245,19 +247,15 @@ def incremental_refresh_kpi(
     """Fold a fact delta into the persisted KPI totals.
 
     Additive-delta contract (same as the channel_daily refresh): facts
-    only gain rows. One aggregation sums the DELTA rows together with
-    the stored totals; ``_d`` counts a group's delta rows, so only the
-    groups the delta touched are MERGEd, and untouched groups' files
-    carry over by reference. ``groupBy`` puts NULL grain keys (spend
-    rows whose campaign misses the dim) in one group, as the merge's
-    NULL-safe key matching does. Returns the new version.
+    only gain rows. One aggregation sums the DELTA rows with the stored
+    totals (NULL grain keys, spend whose campaign misses the dim, in one
+    group), and ``acid.rewrite`` writes it whole. Returns the new version.
     """
     from marketing_etl_analytics_spark.sources import acid
 
-    delta = _kpi_rows(fs_delta, sp_delta, dim_campaigns, grain).withColumn("_d", F.lit(1))
-    both = delta.unionByName(acid.read(spark, path), allowMissingColumns=True)
-    folded = _summed(both, grain, _KPI_SUMS + ["_d"]).filter("_d > 0").drop("_d")
-    return acid.merge(spark, path, folded, grain)
+    delta = _kpi_rows(fs_delta, sp_delta, dim_campaigns, grain)
+    return acid.rewrite(spark, path, lambda cur: _summed(
+        delta.unionByName(cur, allowMissingColumns=True), grain, _KPI_SUMS))
 
 
 # (inputs, views) of the last build_views call, swapped as one tuple so

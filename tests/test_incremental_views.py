@@ -9,6 +9,9 @@ bit-for-bit).
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.sources import acid
@@ -71,9 +74,12 @@ def test_incremental_refresh_matches_full_rebuild(spark, warehouse, tmp_path):
     assert sorted(maintained.columns) == sorted(full.columns)
     assert _rows(maintained.select(*full.columns)) == _rows(full)
 
-    # copy-on-write held: files of untouched dates carried over
-    m1, m2 = acid.read_manifest(mv_path, 1), acid.read_manifest(mv_path, 2)
-    assert set(m1.files) & set(m2.files)
+    # the table is rewritten whole: version 2 lists only its own files,
+    # and none of them is empty
+    m2 = acid.read_manifest(mv_path, 2)
+    assert m2.files
+    assert all(os.path.basename(os.path.dirname(f)).startswith("v00002-") for f in m2.files)
+    assert all(pq.read_metadata(f).num_rows for f in m2.files)
 
 
 def _split_facts(wh):
@@ -120,3 +126,42 @@ def test_incremental_kpi_campaign_matches_full_rebuild(spark, warehouse, tmp_pat
     _check_kpi_incremental(
         spark, warehouse, tmp_path, KPI_CAMPAIGN_GRAIN, kpi_campaign, "campaign"
     )
+
+
+def test_refresh_of_a_date_missing_from_the_base_dim_date(spark, warehouse, tmp_path):
+    """The delta brings a date that the base ``dim_date`` lacks, and its
+    dim_date row with it: the date's rows appear in ``channel_daily``.
+    The delta's NULL-date spend stays out of ``channel_daily`` (inner
+    ``dim_date`` join) and goes into the KPI totals."""
+    wh = warehouse
+    base_fs, base_sp, delta_fs, delta_sp = _split_facts(wh)
+    new_id = delta_fs.agg(F.max("date_id")).first()[0]
+    base_dd = wh["dim_date"].filter(F.col("date_id") != new_id)
+    mv_path = str(tmp_path / "mv_channel_daily")
+    acid.create(spark, mv_path,
+                channel_daily(base_fs, base_sp, wh["dim_campaigns"], base_dd))
+    kpi_path = str(tmp_path / "kpi_totals")
+    create_kpi_totals(spark, kpi_path, base_fs, base_sp, wh["dim_campaigns"],
+                      KPI_CHANNEL_GRAIN)
+
+    changed = delta_fs.select("date_id").union(delta_sp.select("date_id"))
+    assert incremental_refresh_channel_daily(spark, mv_path, wh, changed) == 2
+    assert incremental_refresh_kpi(spark, kpi_path, delta_fs, delta_sp,
+                                   wh["dim_campaigns"], KPI_CHANNEL_GRAIN) == 2
+
+    full = channel_daily(
+        wh["fact_sales"], wh["fact_spend"], wh["dim_campaigns"], wh["dim_date"]
+    )
+    maintained = acid.read(spark, mv_path).select(*full.columns)
+    assert _rows(maintained) == _rows(full)
+    new_date = wh["dim_date"].filter(F.col("date_id") == new_id).first()["date"]
+    assert maintained.filter(F.col("date") == new_date).count() > 0
+
+    spend = wh["fact_spend"].agg(
+        F.sum("spend"), F.sum(F.when(F.col("date_id").isNull(), F.col("spend")))
+    ).first()
+    all_spend, null_date_spend = spend[0], spend[1]
+    assert null_date_spend > 0
+    assert maintained.agg(F.sum("spend")).first()[0] == all_spend - null_date_spend
+    kpi = acid.read(spark, kpi_path).agg(F.sum("spend")).first()[0]
+    assert kpi == all_spend

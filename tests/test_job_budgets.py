@@ -60,8 +60,8 @@ NIGHTLY_BUDGETS = {
     "create_kpi_totals": 3,
     "create_channel_daily": 4,
     "merge": 5,
-    "incremental_refresh_kpi": 8,
-    "incremental_refresh_channel_daily": 10,
+    "incremental_refresh_kpi": 3,
+    "incremental_refresh_channel_daily": 6,
 }
 
 _groups = itertools.count()

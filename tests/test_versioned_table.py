@@ -7,10 +7,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from decimal import Decimal as D
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from marketing_etl_analytics_spark import views
 from marketing_etl_analytics_spark.sources import acid
 from tests.test_versioned_table_crash import _rows, _unlisted
 
@@ -320,6 +323,79 @@ def test_merge_releases_staged_source(spark, table):
     with pytest.raises(acid.ConcurrentWriteError):
         acid.merge(spark, table, _df(spark, [(0, "y")]), ["k"])
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_repeated_merges_of_the_same_keys_keep_one_live_file(spark, tmp_path):
+    """A merge that replaces every row of a file commits no 0-row file
+    in its place, so merging the same keys again and again leaves one
+    live file, not one more empty file per merge."""
+    path = str(tmp_path / "same_keys")
+    acid.create(spark, path, _df(spark, [(k, "a") for k in range(10)]).coalesce(1))
+    for i in range(3):
+        acid.merge(spark, path, _df(spark, [(k, f"m{i}") for k in range(10)]), ["k"])
+    files = acid.read_manifest(path, acid.current_version(path)).files
+    assert len(files) == 1
+    assert pq.read_metadata(files[0]).num_rows == 10
+    assert {r.v for r in acid.read(spark, path).collect()} == {"m2"}
+
+
+def test_create_of_an_empty_frame_commits_no_file(spark, tmp_path):
+    path = str(tmp_path / "empty")
+    schema = "k long not null, v string"
+    acid.create(spark, path, spark.createDataFrame([], schema))
+    assert acid.read_manifest(path, 1).files == []
+    df = acid.read(spark, path)
+    assert df.count() == 0
+    assert df.schema == spark.createDataFrame([], schema).schema
+
+
+# --- whole-table rewrite -----------------------------------------------------
+
+
+def test_rewrite_replaces_the_table_in_its_column_order(spark, table):
+    v = acid.rewrite(spark, table, lambda cur: cur.filter("k < 10").select(
+        F.concat(F.lit("r"), "v").alias("v"), "k"))
+    assert v == 2
+    assert acid.read(spark, table).columns == ["k", "v"]
+    assert _rows(spark, table) == [(k, f"ra{k}") for k in range(10)]
+    assert not set(acid.read_manifest(table, 1).files) & set(acid.read_manifest(table, 2).files)
+
+
+def test_rewrite_loses_to_a_writer_that_commits_first(spark, table):
+    """The rewritten rows derive from version 1; a merge that commits
+    version 2 while ``fn`` runs wins, and the rewrite deletes its files."""
+    def fn(cur):
+        acid.merge(spark, table, _df(spark, [(0, "other")]), ["k"])
+        return cur.withColumn("v", F.lit("rewritten"))
+
+    with pytest.raises(acid.ConcurrentWriteError):
+        acid.rewrite(spark, table, fn)
+    assert acid.history(table) == [1, 2]
+    got = {r.k: r.v for r in acid.read(spark, table).collect()}
+    assert len(got) == 100 and got[0] == "other" and got[1] == "a1"
+    assert _unlisted(table) == set()
+    assert len([d for d in os.listdir(os.path.join(table, "data"))
+                if d.startswith("v00002-")]) == 1
+
+
+def test_changes_over_a_kpi_rewrite_report_only_changed_groups(spark, tmp_path):
+    """A rewrite carries no file over, so the change feed diffs the whole
+    table; groups whose sums the delta left alone still drop out."""
+    sales = "date_id int, campaign_id int, revenue decimal(18,2), cost decimal(18,2)"
+    spend = ("date_id int, campaign_id int, spend decimal(18,2), clicks int, "
+             "impressions int")
+    camps = spark.createDataFrame([(1, "Email"), (2, "Search"), (3, "Social")],
+                                  "campaign_id int, channel string")
+    fs = spark.createDataFrame([(1, c, D(10), D(4)) for c in (1, 2, 3)], sales)
+    sp = spark.createDataFrame([(1, c, D(5), 7, 70) for c in (1, 2, 3)], spend)
+    path = str(tmp_path / "kpi_totals")
+    views.create_kpi_totals(spark, path, fs, sp, camps, views.KPI_CHANNEL_GRAIN)
+    v = views.incremental_refresh_kpi(
+        spark, path, spark.createDataFrame([(2, 2, D(30), D(1))], sales),
+        spark.createDataFrame([], spend), camps, views.KPI_CHANNEL_GRAIN)
+    feed = acid.changes(spark, path, 1, v, views.KPI_CHANNEL_GRAIN).collect()
+    assert [(r._change_type, r.channel, r.revenue, r.orders) for r in feed] == [
+        ("update", "Search", 40, 2)]
 
 
 def test_small_insert_merge_adds_one_file(spark, table):
