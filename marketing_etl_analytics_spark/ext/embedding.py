@@ -26,17 +26,12 @@ quantization rounds via ``floor(x + 0.5)`` (floor is exact on
 identical IEEE doubles in both engines, so no HALF_UP-vs-banker's
 divergence).
 
-Two execution tiers:
-
-- :func:`project_signs` / :func:`quantize_int8` — JVM expression
-  forms (flat ``aggregate()`` / ``transform()`` higher-order
-  functions over the array column): zero-shuffle per-row map, exact
-  decimal arithmetic, what the graded suite entry uses.
-- :func:`project_signs_arrow` — numpy/BLAS twin via mapInPandas: the
-  whole projection is ONE (batch x d) @ (d x p) matmul per Arrow
-  batch. Float64 matmul agrees with the decimal path to ~1e-12;
-  rank/bucket decisions downstream are made on coarse quantities, and
-  the equivalence is pinned by ``tests/test_embedding_api.py``.
+:func:`project_signs` / :func:`quantize_int8` are JVM expression
+forms (flat ``aggregate()`` / ``transform()`` higher-order functions
+over the array column): a zero-shuffle per-row map with
+engine-exact arithmetic. ``project_signs`` is the only JL projection;
+the graded suite entry builds its coordinates from the same
+:func:`sign_dot_expr`.
 
 No reference-repo parity: the reference (a Postgres marketing
 warehouse, see SURVEY.md) has no vector surface; this module is part
@@ -54,7 +49,6 @@ __all__ = [
     "sign_matrix",
     "sign_dot_expr",
     "project_signs",
-    "project_signs_arrow",
     "quantize_int8",
     "arrow_lattice_dots",
     "arrow_lattice_norms",
@@ -96,8 +90,8 @@ def sign_dot_expr(vec: str, signs: str, dialect: str = "spark") -> str:
     6-dp round across engines. ``floor(x * 1e12 + 0.5)`` is composed
     ONLY of IEEE ops that are bit-identical on identical inputs in
     every engine, so the lattice sum cannot diverge, at any scale.
-    Lattice error <= d * 0.5e-12 (~3e-11 at d=64, inside the Arrow
-    twin's 1e-10 agreement); BIGINT headroom to |x| ~ 1e4."""
+    Lattice error <= d * 0.5e-12 (~3e-11 at d=64); BIGINT headroom to
+    |x| ~ 1e4."""
     if dialect == "spark":
         return (
             f"CAST(aggregate(sequence(1, size({vec})), CAST(0 AS BIGINT),"
@@ -144,10 +138,8 @@ def project_signs(
     (scaled by 1/sqrt(p)), as an ``array<double>`` column.
 
     Per-row zero-shuffle map (embarrassingly parallel — the plan is a
-    bare Project over the scan at any corpus size); per-term decimal
-    snapping makes every coordinate engine-exact. For bulk throughput
-    use :func:`project_signs_arrow` (one BLAS matmul per Arrow batch
-    instead of p*d interpreted lambda steps per row). Pass ``d`` (the
+    bare Project over the scan at any corpus size); per-term lattice
+    snapping makes every coordinate engine-exact. Pass ``d`` (the
     vector width) to keep plan construction fully lazy; omitted, a
     one-row probe infers it and empty inputs raise a clear
     ValueError."""
@@ -158,45 +150,6 @@ def project_signs(
         for s in signs
     )
     return df.withColumn("proj", F.expr(f"array({coords})"))
-
-
-def project_signs_arrow(
-    df: DataFrame,
-    p: int = 8,
-    vec: str = "embedding",
-    tag: str = "jl",
-    d: int | None = None,
-) -> DataFrame:
-    """numpy/BLAS twin of :func:`project_signs`: same literal sign
-    matrix, one float64 matmul per Arrow batch. Coordinates agree
-    with the decimal path to ~1e-12 (pinned by pytest); schema and
-    column set are identical. ``d`` as in :func:`project_signs`."""
-    import numpy as np
-    import pandas as pd
-
-    d = _infer_dim(df, vec, d)
-    signs = sign_matrix(d, p, tag)
-    # (d, p) float64 +/-1 matrix — tiny; serialized into the closure
-    m = np.array(
-        [[1.0 if s[i] == "1" else -1.0 for s in signs] for i in range(d)]
-    ) / np.sqrt(float(p))
-    cols = df.columns
-    out_schema = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in cols]
-        + ["proj array<double>"]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.array(pdf[vec].tolist(), dtype=np.float64)
-            proj = vm @ m  # (batch, p)
-            out = pdf.copy()
-            out["proj"] = list(proj)
-            yield out
-
-    return df.mapInPandas(run, out_schema)
 
 
 def quantize_int8(df: DataFrame, vec: str = "embedding") -> DataFrame:

@@ -722,10 +722,13 @@ def vacuum(path: str, keep_last: int = 2) -> list[str]:
     at or below it has lost its commit race (``_commit`` raises
     ConcurrentWriteError). Returns removed file paths. (Time travel to
     vacuumed versions stops working — same contract as Delta's
-    VACUUM.)"""
+    VACUUM.) ``keep_last=0`` keeps only the current version; a negative
+    ``keep_last`` raises ValueError."""
+    if keep_last < 0:
+        raise ValueError(f"keep_last must be >= 0, got {keep_last}")
     current = current_version(path)
     versions = history(path)
-    keep = set(versions[-keep_last:]) | {current}
+    keep = set(versions[max(len(versions) - keep_last, 0):]) | {current}
     # data files are <path>/data/v<version>-<nonce>/<part>: the last two
     # components name a file, also in a manifest that recorded absolute
     # paths under another spelling or location of ``path``

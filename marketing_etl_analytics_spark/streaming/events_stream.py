@@ -3,18 +3,15 @@
 Batch/stream equivalence contract: ``daily_event_aggregates`` over a
 bounded stream (``trigger(availableNow=True)``) must produce exactly
 the rows of the equivalent batch tumbling-window aggregation — the
-test suite asserts this.
+test suite asserts this. Sessions come from one operator, Spark's
+native ``session_window`` (:func:`session_window_agg`); its state is
+the engine's own, so no stream here starts a Python worker.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -179,152 +176,16 @@ def daily_event_aggregates(events: DataFrame, watermark: str = "1 hour") -> Data
     )
 
 
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes
-
-
-def _sessionize_user(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Custom stateful operator: split one user's event stream into
-    sessions separated by >30 min of inactivity. Emits closed sessions;
-    keeps the open one in state (flushed on timeout)."""
-    (user_id,) = key
-    if state.hasTimedOut:
-        if state.exists:
-            start_us, last_us, n, value = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(last_us, unit="us")],
-                    "n_events": [n],
-                    "total_value": [round(value, 2)],
-                }
-            )
-        return
-
-    import numpy as np
-
-    # vectorized gaps-and-islands: a Python per-event loop costs ~1 ms
-    # per group x thousands of groups per partition; numpy keeps the
-    # whole group batch in C
-    ts_parts, val_parts = [], []
-    for pdf in pdfs:
-        ts_parts.append(
-            pd.to_datetime(pdf["ts"]).values.astype("datetime64[us]").astype(np.int64)
-        )
-        val_parts.append(pdf["value"].to_numpy(dtype=np.float64))
-    us = np.concatenate(ts_parts) if ts_parts else np.empty(0, np.int64)
-    vals = np.concatenate(val_parts) if val_parts else np.empty(0, np.float64)
-    if len(us) == 0:
-        # empty non-timeout batch for this key: nothing to sessionize;
-        # re-arm the timeout so the open session still flushes
-        if state.exists:
-            _, last0, _, _ = state.get
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(last0 // 1000 + SESSION_GAP_US // 1000, wm + 1)
-            )
-        return
-    order = np.argsort(us, kind="stable")
-    us, vals = us[order], vals[order]
-
-    seg_starts = np.concatenate(
-        ([0], np.flatnonzero(np.diff(us) > SESSION_GAP_US) + 1)
-    )
-    seg_last = np.concatenate((seg_starts[1:] - 1, [len(us) - 1]))
-    counts = np.diff(np.concatenate((seg_starts, [len(us)])))
-    sums = np.add.reduceat(vals, seg_starts)
-    segments = [
-        (int(us[s]), int(us[e]), int(c), float(v))
-        for s, e, c, v in zip(seg_starts, seg_last, counts, sums)
-    ]
-
-    if state.exists:
-        # place the open session on the segment timeline and re-merge:
-        # an in-watermark out-of-order batch can sit entirely BEFORE
-        # the stored session (or straddle it), so pairwise in-gap
-        # merging over the sorted segment list is the correct general
-        # form — not a special case on the first batch segment
-        segments.append(tuple(state.get))
-        segments.sort()
-        merged = [segments[0]]
-        for seg in segments[1:]:
-            prev = merged[-1]
-            if seg[0] - prev[1] <= SESSION_GAP_US:
-                merged[-1] = (
-                    min(prev[0], seg[0]),
-                    max(prev[1], seg[1]),
-                    prev[2] + seg[2],
-                    prev[3] + seg[3],
-                )
-            else:
-                merged.append(seg)
-        segments = merged
-
-    out = segments[:-1]
-    start_us, last_us, n, value = segments[-1]
-    state.update((start_us, last_us, n, value))
-    # event-time timeout: the open session closes when the watermark
-    # passes last_event + gap (no more in-gap events can arrive). A
-    # processing-time timeout would keep an availableNow run spinning
-    # empty "state cleanup" batches until wall-clock expiry.
-    timeout_ms = last_us // 1000 + SESSION_GAP_US // 1000
-    wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(max(timeout_ms, wm + 1))
-    if out:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _, _ in out],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _, _ in out],
-                "n_events": [n_ for _, _, n_, _ in out],
-                "total_value": [round(v_, 2) for _, _, _, v_ in out],
-            }
-        )
-
-
-def sessionize(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """30-min-gap sessionization via applyInPandasWithState — the
-    custom-stateful-operator pattern Spark's built-ins can't express."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_user,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+SESSION_GAP = f"{SESSION_GAP_US} microseconds"  # the same gap as an interval
 
 
 def sessionize_batch(ev: DataFrame) -> DataFrame:
     """Sessions by 30-min inactivity gap over (event_id, user_id, ts,
-    value) rows — the gaps-and-islands batch twin of :func:`sessionize`
-    (lag + running flag-sum; one shuffle on user_id, windows stay
-    inside the partition)."""
+    value) rows — the gaps-and-islands batch twin of
+    :func:`session_window_agg` (lag + running flag-sum; one shuffle on
+    user_id, windows stay inside the partition). ``session_end`` is the
+    last event, where the session window's end is last event + gap."""
     order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(order_w))
     flagged = ev.select(
@@ -352,7 +213,7 @@ def sessionize_batch(ev: DataFrame) -> DataFrame:
 
 
 def session_window_agg(
-    events: DataFrame, watermark: str = "1 hour", gap: str = "30 minutes"
+    events: DataFrame, watermark: str = "1 hour", gap: str = SESSION_GAP
 ) -> DataFrame:
     """Native session-window sessionization under Structured Streaming,
     with a watermark bounding state; the batch ext_session_window_native

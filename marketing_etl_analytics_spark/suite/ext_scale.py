@@ -3,7 +3,7 @@
 Completes the dedup family (SimHash), the embedding near-dup path
 (cosine over LSH buckets), and the ANN scale path (IVF with
 deterministic centroid seeding), plus batch sessionization
-(gaps-and-islands — the batch twin of streaming.sessionize) and
+(gaps-and-islands — the batch twin of session_window_agg) and
 corpus n-gram statistics.
 
 Scale shapes:
@@ -876,8 +876,9 @@ def ext_ann_ivf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, session_no
     """,
     doc="Batch sessionization by 30-min inactivity gap (gaps-and-"
-    "islands: lag + running flag-sum). The batch twin of "
-    "streaming.sessionize (applyInPandasWithState); one shuffle on "
+    "islands: lag + running flag-sum). The batch twin of the native "
+    "session_window sessionizer (streaming.events_stream."
+    "session_window_agg); one shuffle on "
     "user_id, windows stay inside the partition.",
 )
 def ext_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1913,12 +1914,12 @@ def ext_semantic_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # projection (Achlioptas 2003 database-friendly random projections —
 # the cheap routing geometry). Everything is a ZERO-SHUFFLE per-row
 # map over the corpus scan (the plan is Project over FileScan — at
-# 100 TB this is the embarrassingly-parallel shape; the BLAS matmul
-# twin ext/embedding.py::project_signs_arrow is the throughput form,
-# rank-equal by pytest). Determinism: the sign matrix is md5-derived
+# 100 TB this is the embarrassingly-parallel shape; the projection is
+# the expression of ext/embedding.py::project_signs, the one JL
+# projection). Determinism: the sign matrix is md5-derived
 # IN PYTHON and inlined as '0'/'1' string literals into BOTH engines'
 # SQL (no cross-engine hash/RNG to disagree); signed sums snap
-# per-term to DECIMAL(38,12) (order-free exact addition); int8
+# per-term to the 1e-12 integer lattice (order-free exact addition); int8
 # rounding is floor(x + 0.5) on identical IEEE doubles (no
 # HALF_UP-vs-banker's divergence); sqrt/divide are correctly-rounded
 # IEEE ops on identical operands.
@@ -2045,9 +2046,9 @@ def _emb_oracle() -> str:
     "serving tier), and an 8-dim Johnson-Lindenstrauss +/-1 sign "
     "projection (Achlioptas 2003) with energy-preservation ratio. "
     "ZERO-shuffle per-row map (Project over the scan — the "
-    "embarrassingly-parallel shape at any corpus size); the BLAS "
-    "matmul twin project_signs_arrow is the bulk-throughput form "
-    "(~1e-12-equal, pinned by tests/test_embedding_api.py). "
+    "embarrassingly-parallel shape at any corpus size), built from "
+    "the same sign_dot_expr as the library's one JL projection, "
+    "project_signs (tests/test_embedding_api.py). "
     "Deterministic cross-engine: Python-md5 sign literals, per-term "
     "decimal snapping, floor(x+0.5) rounding.",
 )

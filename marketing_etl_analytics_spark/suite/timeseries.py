@@ -616,9 +616,10 @@ def ext_dau_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Streaming with a watermark). The oracle mirrors the exact "
     "semantics with gaps-and-islands: session end = last event + gap, "
     "and the end bound is inclusive (boundary pinned by "
-    "tests/test_sessionize_unit.py::test_session_window_boundary_is_inclusive). "
-    "Complements ext_sessionize (authored islands form) and the "
-    "stateful streaming sessionizer.",
+    "tests/test_streaming.py::test_session_window_boundary_is_inclusive). "
+    "Complements ext_sessionize (authored islands form); the streaming "
+    "entries stream_session_window and stream_sessionize run the same "
+    "function under a watermark.",
 )
 def ext_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the streaming sessionizer's expression; its watermark is a no-op

@@ -1,8 +1,9 @@
 """Embedding preprocessing engine API (`ext/embedding.py`, r5): sign
-matrix determinism, int8 quantization contract, and decimal-vs-BLAS
-projection agreement. The driver-graded `ext_embed_transform` row
-carries the oracle evidence; here we pin the library-level properties
-the oracle can't see (the arrow twin, reconstruction bounds)."""
+matrix determinism, int8 quantization contract, and the JL
+projection's energy preservation. The oracle-graded
+`ext_embed_transform` row carries the oracle evidence; here we pin the
+library-level properties the oracle can't see (reconstruction bounds,
+empty inputs)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ import pytest
 
 from marketing_etl_analytics_spark.ext.embedding import (
     project_signs,
-    project_signs_arrow,
     quantize_int8,
     sign_matrix,
 )
@@ -59,28 +59,11 @@ def test_quantize_zero_vector(spark):
     assert r["scale"] == 0.0 and r["codes"] == [0] * 8
 
 
-def test_project_signs_arrow_matches_decimal_path(spark, emb):
-    """The BLAS matmul twin must agree with the exact-decimal JVM
-    path to float64 noise on every coordinate of every vector."""
-    sample = emb.limit(200)
-    jvm = {
-        r["vec_id"]: r["proj"] for r in project_signs(sample, p=8).collect()
-    }
-    arrow = {
-        r["vec_id"]: r["proj"]
-        for r in project_signs_arrow(sample, p=8).collect()
-    }
-    assert jvm.keys() == arrow.keys() and len(jvm) == 200
-    for k in jvm:
-        for a, b in zip(jvm[k], arrow[k]):
-            assert a == pytest.approx(b, abs=1e-10)
-
-
 def test_projection_preserves_energy_in_expectation(spark, emb):
     """JL with 1/sqrt(p) scaling: E[||Pv||^2] = ||v||^2. Averaged
     over the corpus the energy ratio should sit near 1 (individual
     vectors vary — that's the lemma's variance, not a bug)."""
-    rows = project_signs_arrow(emb, p=8).collect()
+    rows = project_signs(emb, p=8).collect()
     ratios = []
     for r in rows:
         n2 = sum(float(x) * float(x) for x in r["embedding"])
@@ -98,19 +81,11 @@ def test_project_signs_empty_and_explicit_dim(spark):
     frame with explicit d builds a valid (empty) projection lazily."""
     import pytest
 
-    from marketing_etl_analytics_spark.ext.embedding import (
-        project_signs,
-        project_signs_arrow,
-    )
-
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="pass d= explicitly"):
         project_signs(empty)
-    with pytest.raises(ValueError, match="pass d= explicitly"):
-        project_signs_arrow(empty)
     # explicit d: lazy plan on an empty frame, zero rows out
     assert project_signs(empty, p=4, d=16).count() == 0
-    assert project_signs_arrow(empty, p=4, d=16).count() == 0
     # explicit d equals inferred d on real data
     df = spark.createDataFrame(
         [(1, [0.5] * 16), (2, [-0.25] * 16)],

@@ -1,7 +1,10 @@
 """The library packages ``ext``, ``streaming``, ``sources`` and
 ``functions`` import nothing from ``suite``: the suite's entries are
-adapters over the library, never the other way round. Every import
-statement counts, including the ones inside functions."""
+adapters over the library, never the other way round. ``streaming``
+also imports neither ``pandas`` nor the Python ``GroupState`` API: its
+state lives in Spark's own operators, so no stream starts a Python
+worker. Every import statement counts, including the ones inside
+functions."""
 
 from __future__ import annotations
 
@@ -33,14 +36,25 @@ def _imported_modules(path: Path) -> list[tuple[int, str]]:
     return out
 
 
-@pytest.mark.parametrize("subpackage", ["ext", "streaming", "sources", "functions"])
-def test_library_does_not_import_suite(subpackage):
+def _imports_of(subpackage: str, modules: tuple[str, ...]) -> list[str]:
+    """``file:line imports name`` for every import in ``subpackage`` of
+    one of ``modules`` or a module below it."""
     files = sorted((PKG_DIR / subpackage).rglob("*.py"))
     assert files
-    bad = [
+    return [
         f"{path.relative_to(PKG_DIR)}:{line} imports {name}"
         for path in files
         for line, name in _imported_modules(path)
-        if name == SUITE or name.startswith(SUITE + ".")
+        if any(name == m or name.startswith(m + ".") for m in modules)
     ]
+
+
+@pytest.mark.parametrize("subpackage", ["ext", "streaming", "sources", "functions"])
+def test_library_does_not_import_suite(subpackage):
+    bad = _imports_of(subpackage, (SUITE,))
+    assert not bad, bad
+
+
+def test_streaming_imports_no_python_worker_api():
+    bad = _imports_of("streaming", ("pandas", "pyspark.sql.streaming.state"))
     assert not bad, bad

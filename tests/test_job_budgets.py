@@ -3,12 +3,16 @@
 On a warehouse this size a Spark job costs tens of milliseconds however
 little it reads, so the job count, not the data, sets a read's latency.
 Counts are taken by job group (``statusTracker().getJobIdsForGroup``)
-on seeded ``perfbench/gen.py`` data, with every read on a fresh
-snapshot: nothing a previous read planned or ran is reused, as for the
-first read after a commit.
+on seeded ``perfbench/gen.py`` data. ``READ_BUDGETS`` count each read
+on a fresh snapshot: nothing a previous read planned or ran is reused,
+as for the first read after a commit. ``REPEAT_READ_BUDGETS`` count
+each read again on a snapshot that a warm-up round has read once, as
+perfbench's ``Dashboard`` times it: opening the tables, building the
+views and the query, and collecting.
 
-The build's budgets count the ``acid.create`` of each warehouse table
-after ``etl.run_etl``, with the dimensions still cached.
+The build's budgets count ``etl.run_etl`` itself and the
+``acid.create`` of each warehouse table after it, with the dimensions
+still cached.
 
 A budget only goes down. A change that lowers a count lowers its budget
 here; raising one needs a reason in CHANGES.md.
@@ -48,7 +52,17 @@ READ_BUDGETS = {
     "mv_kpi_channel": 3,
     "mv_kpi_campaign": 3,
 }
+# A query builds a new plan on every read, so a repeat costs what a
+# fresh read does. A view is the already-executed plan that
+# ``build_views`` memoizes per snapshot: collecting it again reuses its
+# shuffle stages.
+REPEAT_READ_BUDGETS = READ_BUDGETS | {
+    "mv_channel_daily": 1,
+    "mv_kpi_channel": 1,
+    "mv_kpi_campaign": 1,
+}
 BUILD_BUDGETS = {
+    "run_etl": 0,
     "dim_date": 3,
     "dim_customers": 3,
     "dim_products": 4,
@@ -85,8 +99,8 @@ def tables(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("budgets")
     truth = gen.marketing(str(root / "in"), SEED, gen.N_TRANSACTIONS, 1, DELTA_TX)
-    wh = etl.run_etl(spark, truth["raw_dir"])
-    create_jobs = {
+    wh, etl_jobs = _jobs(spark, lambda: etl.run_etl(spark, truth["raw_dir"]))
+    build_jobs = {"run_etl": etl_jobs} | {
         t: _jobs(spark, lambda: acid.create(
             spark, str(root / t), wh[t],
             stats_cols=[FACT_KEYS[t]] if t in FACT_KEYS else None))[1]
@@ -94,7 +108,7 @@ def tables(spark, tmp_path_factory):
     }
     for t in TABLES[:4]:
         wh[t].unpersist()
-    return truth, root, create_jobs
+    return truth, root, build_jobs
 
 
 def _fresh_snapshot(spark, root) -> dict:
@@ -105,12 +119,20 @@ def _fresh_snapshot(spark, root) -> dict:
     return {t: acid.read(spark, str(root / t)) for t in TABLES}
 
 
-@pytest.mark.parametrize("name", list(READ_BUDGETS))
-def test_read_job_budget(name, spark, tables):
-    wh = _fresh_snapshot(spark, tables[1])
+def _dashboard_query(spark, root, name):
+    """One dashboard read, built as perfbench's ``Dashboard`` builds it:
+    open the tables and build the views (both memoized per snapshot),
+    then build the query."""
+    wh = {t: acid.read(spark, str(root / t)) for t in TABLES}
     wh.update(views.build_views(wh))
     fn = queries.ALL_QUERIES.get(name)
-    df = fn(wh) if fn else wh[name]
+    return fn(wh) if fn else wh[name]
+
+
+@pytest.mark.parametrize("name", list(READ_BUDGETS))
+def test_read_job_budget(name, spark, tables):
+    _fresh_snapshot(spark, tables[1])
+    df = _dashboard_query(spark, tables[1], name)
     _, jobs = _jobs(spark, df.collect)
     assert jobs == READ_BUDGETS[name]
 
@@ -122,6 +144,16 @@ def test_building_queries_and_views_starts_no_job(spark, tables):
     for name, fn in queries.ALL_QUERIES.items():
         _, jobs = _jobs(spark, lambda: fn(wh))
         assert jobs == 0, name
+
+
+def test_repeat_read_job_budgets(spark, tables):
+    root = tables[1]
+    _fresh_snapshot(spark, root)
+    for name in READ_BUDGETS:  # the warm-up round
+        _dashboard_query(spark, root, name).collect()
+    got = {name: _jobs(spark, lambda: _dashboard_query(spark, root, name).collect())[1]
+           for name in REPEAT_READ_BUDGETS}
+    assert got == REPEAT_READ_BUDGETS
 
 
 def test_build_job_budgets(tables):

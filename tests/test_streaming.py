@@ -7,29 +7,39 @@ entry's rows exactly (modulo the approx-distinct column).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.streaming import (
     daily_event_aggregates,
     dedup_events,
     read_events_stream,
-    sessionize,
 )
 from marketing_etl_analytics_spark.suite.common import events as batch_events
 
 SF = "/root/testdata/sf0.001"
 
 
-def _run_stream(df, name: str):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append" if name == "sessions" else "complete")
-        .trigger(availableNow=True)
-        .start()
+def _one_file_per_batch(spark, tmp_path, frames):
+    """A stream over one parquet file per frame, read one file per
+    micro-batch (maxFilesPerTrigger=1) in the order of ``frames``."""
+    src = tmp_path / "batches"
+    os.makedirs(src)
+    for i, df in enumerate(frames):
+        part_dir = str(tmp_path / f"batch_{i}")
+        df.coalesce(1).write.parquet(part_dir)
+        pq = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
+        dst = os.path.join(src, f"{i:04d}.parquet")
+        os.rename(os.path.join(part_dir, pq), dst)
+        # FileStreamSource orders new files by modification time;
+        # spaced mtimes pin the intended batch order deterministically
+        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
     )
-    q.awaitTermination(120)
-    return q
 
 
 def test_daily_aggregates_match_batch(spark):
@@ -81,35 +91,6 @@ def test_stateful_dedup(spark):
     row = spark.sql("SELECT * FROM dedup_counts").collect()[0]
     n_batch = batch_events(spark, SF).count()
     assert row.n == n_batch  # input ids are unique; dedup drops nothing
-
-
-def test_sessionize(spark):
-    stream = read_events_stream(spark, SF)
-    q = (
-        sessionize(stream)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM sessions").collect()
-    # closed sessions only (open ones wait for the processing-time
-    # timeout, which an availableNow run doesn't reach) — still, a
-    # month of events per user must yield many >30min gaps
-    assert len(rows) > 0
-    for r in rows[:50]:
-        assert r.session_end >= r.session_start
-        assert r.n_events >= 1
-    # session invariant: per user, sessions don't overlap
-    by_user: dict[int, list] = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append((r.session_start, r.session_end))
-    for spans in by_user.values():
-        spans.sort()
-        for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-            assert e1 < s2
 
 
 def test_attribution_join_matches_batch(spark):
@@ -166,11 +147,11 @@ def test_attribution_join_matches_batch(spark):
 
 def test_stream_sessionize_equals_batch(spark):
     """The availableNow streaming sessionizer must emit exactly the
-    batch gaps-and-islands sessions whose event-time timeout fired
-    before the final watermark (sessions still 'open' at end-of-stream
-    wait for a timeout that never comes — the only permitted
-    difference). This gives the no-oracle stream_sessionize entry real
-    correctness evidence against its fully-oracled batch twin."""
+    batch gaps-and-islands sessions whose window end (last event +
+    gap) the final watermark has reached (sessions still 'open' at
+    end-of-stream stay in state — the only permitted difference). This
+    gives the no-oracle stream_sessionize entry real correctness
+    evidence against its fully-oracled batch twin."""
     from marketing_etl_analytics_spark.streaming.events_stream import (
         SESSION_GAP_US,
         sessionize_batch,
@@ -206,10 +187,9 @@ def test_stream_sessionize_equals_batch(spark):
     assert set(streamed) == set(closed)
     # every session NOT emitted must be one whose timeout never fired
     assert still_open.isdisjoint(streamed)
-    # money: streaming sums float64 in state, batch sums exact decimal
-    # — identical after 2dp rounding up to one-ulp boundary noise
+    # money: both sides round the same decimal(18,2) sum
     for key, got in streamed.items():
-        assert abs(got - closed[key]) <= 0.011, (key, got, closed[key])
+        assert got == closed[key], (key, got, closed[key])
 
 
 def test_dedup_within_watermark_drops_replays(spark, tmp_path):
@@ -249,10 +229,8 @@ def test_stream_session_window_multibatch(spark, tmp_path):
     come out right if the session-window state carries between
     batches. The closed-session set (end strictly before the final
     watermark) must equal the batch gaps-and-islands computation."""
-    import os
-    import time as _time
-
     from marketing_etl_analytics_spark.streaming.events_stream import (
+        SESSION_GAP,
         session_window_agg,
         sessionize_batch,
     )
@@ -262,28 +240,16 @@ def test_stream_session_window_multibatch(spark, tmp_path):
     )
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
     span = (hi - lo) / 4
-    src = str(tmp_path / "ev_parts")
-    os.makedirs(src)
+    parts = []
     for i in range(4):
         a = lo + i * span
         b = hi if i == 3 else lo + (i + 1) * span
         cond = (F.col("ts") >= F.lit(a)) & (
             (F.col("ts") <= F.lit(b)) if i == 3 else (F.col("ts") < F.lit(b))
         )
-        part_dir = str(tmp_path / f"part_{i}")
-        ev.filter(cond).coalesce(1).write.parquet(part_dir)
-        pq = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(src, f"{i:04d}.parquet")
-        os.rename(os.path.join(part_dir, pq), dst)
-        # FileStreamSource orders new files by modification time;
-        # spaced mtimes pin the intended batch order deterministically
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+        parts.append(ev.filter(cond))
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _one_file_per_batch(spark, tmp_path, parts)
     q = (
         session_window_agg(stream)
         .writeStream.format("memory")
@@ -310,7 +276,7 @@ def test_stream_session_window_multibatch(spark, tmp_path):
             sessionize_batch(ev)
             .withColumn(
                 "session_end_w",
-                F.col("session_end") + F.expr("INTERVAL 30 MINUTES"),
+                F.col("session_end") + F.expr(f"INTERVAL {SESSION_GAP}"),
             )
             .filter(F.col("session_end_w") < F.lit(wm))
             .select("user_id", "session_start", "n_events")
@@ -325,29 +291,13 @@ def test_dedup_within_watermark_drops_cross_batch_replays(spark, tmp_path):
     """A replay that arrives in a LATER micro-batch (still inside the
     watermark horizon) must be dropped — the dedup state has to carry
     across batches, not just within one."""
-    import os
-
     base = (
         batch_events(spark, SF)
         .limit(50)
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
     replays = base.withColumn("ts", F.col("ts") + F.expr("INTERVAL 5 MINUTES"))
-    src = str(tmp_path / "dup_parts")
-    os.makedirs(src)
-    for i, part in enumerate((base, replays)):
-        part_dir = str(tmp_path / f"dpart_{i}")
-        part.coalesce(1).write.parquet(part_dir)
-        pq = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        dst = os.path.join(src, f"{i:04d}.parquet")
-        os.rename(os.path.join(part_dir, pq), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _one_file_per_batch(spark, tmp_path, [base, replays])
     q = (
         dedup_events(stream, watermark="1 hour")
         .writeStream.format("memory")
@@ -402,3 +352,111 @@ def test_rocksdb_state_store_backend_equivalent(spark, tmp_path):
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     assert got.count() == batch.select("event_id").distinct().count()
     assert got.select(F.countDistinct("event_id")).collect()[0][0] == got.count()
+
+
+def test_session_window_boundary_is_inclusive(spark):
+    """An event at exactly last_ts + gap MERGES into the session:
+    Spark's session_window end bound is inclusive (verified here, not
+    assumed from the docs). This pins the strict > rule the
+    ext_session_window_native oracle uses — the same rule as the
+    gaps-and-islands twin."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [
+        (1, t0),
+        (1, t0 + dt.timedelta(minutes=30)),       # == gap -> merges
+        (1, t0 + dt.timedelta(minutes=90)),       # > gap after prev -> new
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    got = (
+        df.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("w.start", "n")
+        .orderBy("start")
+        .collect()
+    )
+    assert [(r.start, r.n) for r in got] == [
+        (t0, 2),
+        (t0 + dt.timedelta(minutes=90), 1),
+    ]
+
+
+def test_stream_session_window_merges_late_batches(spark, tmp_path):
+    """Out-of-order micro-batches inside the watermark, one file per
+    trigger. After the first batch user 1 has two open sessions
+    (minutes 0-10 and 50-55) and user 2 one (120-125); the watermark
+    is minute 20. A late batch with one event at minute 30 lies within
+    the gap of both user-1 sessions, which must merge into one. A
+    second late batch (user 2, minutes 60-70) lies wholly before
+    user 2's open session, 50 minutes from it, and must stay a session
+    of its own. A last batch moves the watermark past every earlier
+    session, and the closed sessions must equal sessionize_batch over
+    the union of the batches."""
+    import datetime as dt
+
+    from marketing_etl_analytics_spark.streaming.events_stream import (
+        SESSION_GAP,
+        session_window_agg,
+        sessionize_batch,
+    )
+
+    def at(minute):
+        return dt.datetime(2024, 1, 1, 12, 0, 0) + dt.timedelta(minutes=minute)
+
+    batches = [
+        [(1, 1, 0, 1.10), (2, 1, 10, 2.20), (3, 1, 50, 0.30), (4, 1, 55, 0.05),
+         (5, 2, 120, 7.00), (6, 2, 125, 0.01), (7, 3, 200, 1.00)],
+        [(8, 1, 30, 0.15)],                     # straddles user 1's sessions
+        [(9, 2, 60, 3.33), (10, 2, 70, 0.67)],  # wholly before user 2's
+        [(11, 3, 600, 5.00)],                   # closes everything before
+    ]
+    schema = "event_id long, ts timestamp, user_id long, value double"
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(e, at(m), u, v) for e, u, m, v in rows], schema
+        )
+
+    stream = _one_file_per_batch(spark, tmp_path, [frame(b) for b in batches])
+    q = (
+        session_window_agg(stream, watermark="3 hours")
+        .writeStream.format("memory")
+        .queryName("sess_late_batches")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    gap = F.expr(f"INTERVAL {SESSION_GAP}")
+    got = sorted(
+        map(
+            tuple,
+            spark.table("sess_late_batches")
+            .select("user_id", "session_start", (F.col("session_end") - gap)
+                    .alias("session_end"), "n_events", "total_value")
+            .collect(),
+        )
+    )
+
+    wm = at(600) - dt.timedelta(hours=3)  # the final watermark
+    union = frame([row for b in batches for row in b])
+    expected = sorted(
+        map(
+            tuple,
+            sessionize_batch(union)
+            .filter(F.col("session_end") + gap <= F.lit(wm))
+            .select("user_id", "session_start", "session_end", "n_events", "total_value")
+            .collect(),
+        )
+    )
+    assert expected == [
+        (1, at(0), at(55), 5, 3.80),
+        (2, at(60), at(70), 2, 4.00),
+        (2, at(120), at(125), 2, 7.01),
+        (3, at(200), at(200), 1, 1.00),
+    ]
+    assert got == expected
+

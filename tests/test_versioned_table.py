@@ -159,6 +159,26 @@ def test_vacuum_drops_unreachable_files(spark, table):
         assert not os.path.exists(f)
 
 
+def test_vacuum_keep_last_zero_keeps_only_the_current_version(spark, table):
+    for tag in ("b", "c"):
+        acid.merge(
+            spark, table, _df(spark, [(k, f"{tag}{k}") for k in range(0, 100, 7)]), ["k"]
+        )
+    want = _rows(spark, table)
+    with pytest.raises(ValueError, match="keep_last"):
+        acid.vacuum(table, keep_last=-1)
+    assert acid.history(table) == [1, 2, 3]
+    assert acid.vacuum(table, keep_last=4) == []  # more than the history
+    assert acid.history(table) == [1, 2, 3]
+    for v in (1, 2, 3):
+        assert all(os.path.exists(f) for f in acid.read_manifest(table, v).files)
+    acid.vacuum(table, keep_last=0)
+    assert acid.history(table) == [3]
+    assert not _unlisted(table)
+    assert all(os.path.exists(f) for f in acid.read_manifest(table, 3).files)
+    assert _rows(spark, table) == want
+
+
 def test_merge_normalizes_source_column_order(spark, table):
     shuffled = spark.createDataFrame([("zz", 300)], "v string, k long")
     acid.merge(spark, table, shuffled, ["k"])
