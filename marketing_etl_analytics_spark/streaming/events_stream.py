@@ -10,6 +10,10 @@ the engine's own, so no stream here starts a Python worker.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -34,38 +38,35 @@ EVENTS_RAW_SCHEMA = StructType(
 )
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (bounded; use
-    availableNow trigger for batch-equivalence runs).
-
-    The parquet file source requires a *directory*, so the single
-    events.parquet file is exposed via a symlink inside a temp dir.
-    """
-    import hashlib
-    import os
-    import tempfile
-
+def _stage(sf_dir: str, name: str) -> str:
+    """The directory the parquet file source streams
+    ``<sf_dir>/<name>.parquet`` from. The source requires a directory,
+    so a single file is exposed by a symlink inside the temp dir
+    ``<name>_stream_<md5 tag of its path>``."""
     # abspath: a relative sf_dir would otherwise produce a symlink whose
     # relative target resolves against /tmp — a broken link the parquet
     # stream source reads as an EMPTY directory (0 rows, no error)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    src = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     if os.path.isdir(src):
         # already a directory of part files (Spark-written layout) —
         # stream straight from it; a nested symlink would be invisible
         # to the file source (non-partition subdirs are not recursed)
-        stage = src
-    else:
-        tag = hashlib.md5(src.encode()).hexdigest()[:8]
-        stage = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
-        os.makedirs(stage, exist_ok=True)
-        link = os.path.join(stage, "events.parquet")
-        if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(
-            src
-        ):
-            os.remove(link)  # stale/broken link from an earlier process
-        if not os.path.lexists(link):
-            os.symlink(src, link)
+        return src
+    tag = hashlib.md5(src.encode()).hexdigest()[:8]
+    stage = os.path.join(tempfile.gettempdir(), f"{name}_stream_{tag}")
+    os.makedirs(stage, exist_ok=True)
+    link = os.path.join(stage, f"{name}.parquet")
+    if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(src):
+        os.remove(link)  # stale/broken link from an earlier process
+    if not os.path.lexists(link):
+        os.symlink(src, link)
+    return stage
 
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events parquet (bounded; use
+    availableNow trigger for batch-equivalence runs)."""
+    stage = _stage(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the file stream source needs an explicit schema; the physical ts
     # type varies by writer (driver testdata: INT64 nanos -> long under
@@ -243,24 +244,8 @@ def session_window_agg(
 
 def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source stream over any driver testdata parquet (bounded;
-    availableNow for batch-equivalence runs). Same symlink staging as
-    ``read_events_stream`` — the parquet stream source needs a
-    directory — with the schema probed from a batch footer read."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    if os.path.isdir(src):
-        stage = src
-    else:
-        tag = hashlib.md5(src.encode()).hexdigest()[:8]
-        stage = os.path.join(tempfile.gettempdir(), f"{name}_stream_{tag}")
-        os.makedirs(stage, exist_ok=True)
-        link = os.path.join(stage, f"{name}.parquet")
-        if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(src):
-            os.remove(link)
-        if not os.path.lexists(link):
-            os.symlink(src, link)
+    availableNow for batch-equivalence runs), with the schema probed
+    from a batch footer read."""
+    stage = _stage(sf_dir, name)
     schema = spark.read.parquet(stage).schema
     return spark.readStream.schema(schema).format("parquet").load(stage)

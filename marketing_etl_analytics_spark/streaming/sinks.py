@@ -10,14 +10,58 @@ table format).
 
 Scale shape: the per-batch MERGE is copy-on-write at file granularity,
 so a micro-batch touching recent keys rewrites recent files only;
-``acid.compact`` runs periodically to fold the accreted small files.
+the caller runs ``acid.compact`` to fold the accreted small files.
+
+Every sink here starts its query with ``trigger(availableNow=True)``:
+it processes the input present at start and stops.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+from typing import Callable
 
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from marketing_etl_analytics_spark.ext.dedup import cap_lsh_buckets, minhash_bands
 from marketing_etl_analytics_spark.sources import acid
+
+
+def _start(
+    stream_df: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    mode: str = "update",
+) -> StreamingQuery:
+    return (
+        stream_df.writeStream.outputMode(mode)
+        .foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _create_or_merge(
+    table_path: str,
+    rows: DataFrame,
+    key_cols: list[str],
+    reconcile: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+) -> None:
+    """Create the versioned table from the first batch's ``rows``; MERGE
+    later batches by key, as ``reconcile(current table, rows)`` when
+    given."""
+    spark = rows.sparkSession
+    try:
+        acid.current_version(table_path)
+    except FileNotFoundError:
+        acid.create(spark, table_path, rows)
+        return
+    if reconcile is not None:
+        rows = reconcile(acid.read(spark, table_path), rows)
+    acid.merge(spark, table_path, rows, key_cols)
 
 
 def stream_merge_sink(
@@ -25,33 +69,19 @@ def stream_merge_sink(
     table_path: str,
     key_cols: list[str],
     checkpoint_dir: str,
-    available_now: bool = True,
-):
+) -> StreamingQuery:
     """Start a streaming query that MERGEs each micro-batch into the
     versioned table at ``table_path`` (created on first batch).
 
-    Returns the StreamingQuery; callers typically
-    ``.awaitTermination()`` (availableNow) or manage it themselves.
+    Returns the StreamingQuery; callers ``.awaitTermination()`` it.
     """
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.dropDuplicates(key_cols)
-        try:
-            acid.current_version(table_path)
-        except FileNotFoundError:
-            acid.create(spark, table_path, batch_df)
-            return
-        acid.merge(spark, table_path, batch_df, key_cols)
-
-    writer = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        stream_df,
+        lambda batch_df, _: _create_or_merge(
+            table_path, batch_df.dropDuplicates(key_cols), key_cols
+        ),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cdc_apply_sink(
@@ -60,8 +90,7 @@ def cdc_apply_sink(
     key_cols: list[str],
     order_cols: list[str],
     checkpoint_dir: str,
-    available_now: bool = True,
-):
+) -> StreamingQuery:
     """Apply a CDC feed to a versioned table with LAST-WRITE-WINS
     semantics under arbitrary micro-batch ordering.
 
@@ -81,9 +110,6 @@ def cdc_apply_sink(
     Replayed batches are idempotent: re-reconciling an already-applied
     change picks the same winner.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     cols = change_stream.columns
 
     def winners(df: DataFrame) -> DataFrame:
@@ -112,27 +138,18 @@ def cdc_apply_sink(
             .drop("_rn")
         )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bw = winners(batch_df).select(*cols)
-        try:
-            acid.current_version(table_path)
-        except FileNotFoundError:
-            acid.create(spark, table_path, bw)
-            return
-        cur = acid.read(spark, table_path).select(*cols)
-        touched = cur.join(bw.select(*key_cols).distinct(), key_cols, "semi")
-        merged = winners(touched.unionByName(bw))
-        acid.merge(spark, table_path, merged, key_cols)
+    def reconcile(cur: DataFrame, bw: DataFrame) -> DataFrame:
+        keys = bw.select(*key_cols).distinct()
+        touched = cur.select(*cols).join(keys, key_cols, "semi")
+        return winners(touched.unionByName(bw))
 
-    writer = (
-        change_stream.writeStream.outputMode("update")
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        change_stream,
+        lambda batch_df, _: _create_or_merge(
+            table_path, winners(batch_df).select(*cols), key_cols, reconcile
+        ),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_ingest_sink(
@@ -140,10 +157,9 @@ def dedup_ingest_sink(
     index_dir: str,
     decisions_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     cap_buckets: bool = False,
     compact_index: bool = False,
-):
+) -> StreamingQuery:
     """Continuous dedup ingest: per micro-batch, compute the arriving
     documents' MinHash band signatures, flag each doc against ALL
     docs that ARRIVED before it, append the decisions, and grow the
@@ -206,79 +222,7 @@ def dedup_ingest_sink(
             "band_sig) and cannot supply the member-count statistics "
             "cap_lsh_buckets caps on (ADVICE r6)"
         )
-    import os
-
-    from pyspark.sql import functions as F
-
-    from marketing_etl_analytics_spark.ext.dedup import (
-        cap_lsh_buckets,
-        minhash_bands,
-    )
-
-    def ingest_batch_compact(batch_df: DataFrame, batch_id: int) -> None:
-        # batchId-keyed OVERWRITE subdirs + own-subdir exclusion: the
-        # same two replay shields as the uncompacted path below
-        sp = batch_df.sparkSession
-        bands = minhash_bands(batch_df, "doc_id", "text").localCheckpoint(
-            eager=True
-        )
-        this_sub = f"b{batch_id:06d}"
-        prior_subs = (
-            [
-                os.path.join(index_dir, d)
-                for d in sorted(os.listdir(index_dir))
-                if d != this_sub
-            ]
-            if os.path.isdir(index_dir)
-            else []
-        )
-        idx = sp.read.parquet(*prior_subs) if prior_subs else None
-        # same-batch "earlier": the batch's own first arrival per sig
-        batch_firsts = bands.groupBy("band", "band_sig").agg(
-            F.min("doc_id").alias("brep")
-        )
-        m = bands.join(batch_firsts, ["band", "band_sig"])
-        if idx is not None:
-            e_idx = idx.select(
-                "band", "band_sig", F.col("rep_doc").alias("irep")
-            )
-            m = m.join(e_idx, ["band", "band_sig"], "left")
-        else:
-            m = m.withColumn("irep", F.lit(None).cast("long"))
-        # a band matches iff an earlier arrival carried its signature:
-        # a smaller same-batch doc_id, or any standing representative
-        # (irep != doc_id shields source-level re-delivery of the rep
-        # itself under a new batch id — the e_doc != doc_id analog)
-        matched = (F.col("doc_id") > F.col("brep")) | (
-            F.col("irep").isNotNull() & (F.col("irep") != F.col("doc_id"))
-        )
-        perdoc = m.groupBy("doc_id").agg(
-            F.sum(matched.cast("int")).cast("long").alias("nmb")
-        )
-        (
-            batch_df.select("doc_id")
-            .join(perdoc, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("nmb", F.lit(0)).cast("long").alias("n_matched_bands"),
-                (F.coalesce("nmb", F.lit(0)) == 0).alias("is_new"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(decisions_dir, this_sub))
-        )
-        # index compaction: persist ONLY the signatures this batch saw
-        # first (anti-join against the standing reps) — the index is
-        # one row per distinct signature forever
-        new_reps = batch_firsts.select(
-            "band", "band_sig", F.col("brep").alias("rep_doc")
-        )
-        if idx is not None:
-            new_reps = new_reps.join(
-                idx.select("band", "band_sig"), ["band", "band_sig"], "anti"
-            )
-        new_reps.write.mode("overwrite").parquet(
-            os.path.join(index_dir, this_sub)
-        )
+    count_col = "n_matched_bands" if compact_index else "n_earlier_matches"
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is AT-LEAST-ONCE: a crash between these writes
@@ -286,7 +230,6 @@ def dedup_ingest_sink(
         # are batchId-keyed subdirs written with OVERWRITE — a replay
         # rewrites the same subdir instead of appending a second copy
         # (idempotence by deterministic placement).
-        sp = batch_df.sparkSession
         bands = minhash_bands(batch_df, "doc_id", "text").localCheckpoint(
             eager=True
         )  # several consumers below
@@ -300,71 +243,97 @@ def dedup_ingest_sink(
             if os.path.isdir(index_dir)
             else []
         )
-        idx = sp.read.parquet(*prior_subs) if prior_subs else None
-        probe = bands
-        if cap_buckets:
-            # decisions-at-time skew guard: signatures whose bucket
-            # exceeds the cap across index+batch drop from BOTH sides
-            knowledge = idx.unionByName(bands) if idx is not None else bands
-            kept = (
-                cap_lsh_buckets(knowledge, ["band", "band_sig"])
-                .select("band", "band_sig")
-                .distinct()
-            )
-            probe = bands.join(kept, ["band", "band_sig"], "semi")
-            if idx is not None:
-                idx = idx.join(kept, ["band", "band_sig"], "semi")
-        # (b) same-batch arrivals, ordered by doc_id
-        e_batch = probe.select(
-            F.col("doc_id").alias("e_doc"), "band", "band_sig"
-        )
-        pairs = probe.join(
-            e_batch,
-            (probe.band == e_batch.band)
-            & (probe.band_sig == e_batch.band_sig)
-            & (e_batch.e_doc < probe.doc_id),
-        ).select("doc_id", "e_doc")
-        # (a) previous-batch arrivals: ANY index member counts —
-        # except the doc itself (e_doc != doc_id): a SOURCE-level
-        # re-delivery of the same doc under a NEW batch id (the
-        # subdir exclusion only shields same-batch-id replays) must
-        # not flag the doc as a duplicate of its own first delivery,
-        # or the id-ordered-feed oracle equality breaks
-        if idx is not None:
-            e_idx = idx.select(
-                F.col("doc_id").alias("e_doc"), "band", "band_sig"
-            )
-            pairs = pairs.unionByName(
-                probe.join(
-                    e_idx,
-                    (probe.band == e_idx.band)
-                    & (probe.band_sig == e_idx.band_sig)
-                    & (e_idx.e_doc != probe.doc_id),
-                ).select("doc_id", "e_doc")
-            )
-        matches = pairs.groupBy("doc_id").agg(
-            F.countDistinct("e_doc").alias("ne")
-        )
+        idx = batch_df.sparkSession.read.parquet(*prior_subs) if prior_subs else None
+        if compact_index:
+            matches, new_index = _matched_bands(bands, idx)
+        else:
+            matches, new_index = _earlier_matches(bands, idx, cap_buckets), bands
+        n = F.coalesce("n", F.lit(0))
         (
             batch_df.select("doc_id")
             .join(matches, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("ne", F.lit(0)).cast("long").alias("n_earlier_matches"),
-                (F.coalesce("ne", F.lit(0)) == 0).alias("is_new"),
-            )
+            .select("doc_id", n.cast("long").alias(count_col), (n == 0).alias("is_new"))
             .write.mode("overwrite")
             .parquet(os.path.join(decisions_dir, this_sub))
         )
-        bands.write.mode("overwrite").parquet(
-            os.path.join(index_dir, this_sub)
-        )
+        new_index.write.mode("overwrite").parquet(os.path.join(index_dir, this_sub))
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(ingest_batch_compact if compact_index else ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(doc_stream, ingest_batch, checkpoint_dir, mode="append")
+
+
+def _earlier_matches(
+    bands: DataFrame, idx: DataFrame | None, cap_buckets: bool
+) -> DataFrame:
+    """Per doc of the batch, ``n``: the distinct earlier arrivals that
+    share one of its band signatures (full index of every member)."""
+    probe = bands
+    if cap_buckets:
+        # decisions-at-time skew guard: signatures whose bucket
+        # exceeds the cap across index+batch drop from BOTH sides
+        knowledge = idx.unionByName(bands) if idx is not None else bands
+        kept = (
+            cap_lsh_buckets(knowledge, ["band", "band_sig"])
+            .select("band", "band_sig")
+            .distinct()
+        )
+        probe = bands.join(kept, ["band", "band_sig"], "semi")
+        if idx is not None:
+            idx = idx.join(kept, ["band", "band_sig"], "semi")
+    # (b) same-batch arrivals, ordered by doc_id
+    e_batch = probe.select(F.col("doc_id").alias("e_doc"), "band", "band_sig")
+    pairs = probe.join(
+        e_batch,
+        (probe.band == e_batch.band)
+        & (probe.band_sig == e_batch.band_sig)
+        & (e_batch.e_doc < probe.doc_id),
+    ).select("doc_id", "e_doc")
+    # (a) previous-batch arrivals: ANY index member counts —
+    # except the doc itself (e_doc != doc_id): a SOURCE-level
+    # re-delivery of the same doc under a NEW batch id (the
+    # subdir exclusion only shields same-batch-id replays) must
+    # not flag the doc as a duplicate of its own first delivery,
+    # or the id-ordered-feed oracle equality breaks
+    if idx is not None:
+        e_idx = idx.select(F.col("doc_id").alias("e_doc"), "band", "band_sig")
+        pairs = pairs.unionByName(
+            probe.join(
+                e_idx,
+                (probe.band == e_idx.band)
+                & (probe.band_sig == e_idx.band_sig)
+                & (e_idx.e_doc != probe.doc_id),
+            ).select("doc_id", "e_doc")
+        )
+    return pairs.groupBy("doc_id").agg(F.countDistinct("e_doc").alias("n"))
+
+
+def _matched_bands(
+    bands: DataFrame, idx: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """Per doc of the batch, ``n``: how many of its band signatures an
+    earlier arrival carried; and the index rows this batch adds, one
+    representative (``rep_doc``) per signature it saw first."""
+    # same-batch "earlier": the batch's own first arrival per sig
+    batch_firsts = bands.groupBy("band", "band_sig").agg(F.min("doc_id").alias("brep"))
+    m = bands.join(batch_firsts, ["band", "band_sig"])
+    if idx is not None:
+        e_idx = idx.select("band", "band_sig", F.col("rep_doc").alias("irep"))
+        m = m.join(e_idx, ["band", "band_sig"], "left")
+    else:
+        m = m.withColumn("irep", F.lit(None).cast("long"))
+    # a band matches iff an earlier arrival carried its signature:
+    # a smaller same-batch doc_id, or any standing representative
+    # (irep != doc_id shields source-level re-delivery of the rep
+    # itself under a new batch id — the e_doc != doc_id analog)
+    matched = (F.col("doc_id") > F.col("brep")) | (
+        F.col("irep").isNotNull() & (F.col("irep") != F.col("doc_id"))
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    perdoc = m.groupBy("doc_id").agg(F.sum(matched.cast("int")).cast("long").alias("n"))
+    # index compaction: persist ONLY the signatures this batch saw
+    # first (anti-join against the standing reps) — the index is
+    # one row per distinct signature forever
+    new_reps = batch_firsts.select("band", "band_sig", F.col("brep").alias("rep_doc"))
+    if idx is not None:
+        new_reps = new_reps.join(
+            idx.select("band", "band_sig"), ["band", "band_sig"], "anti"
+        )
+    return perdoc, new_reps

@@ -57,9 +57,17 @@ from marketing_etl_analytics_spark.ext.sketches import (
 )
 from marketing_etl_analytics_spark.streaming.events_stream import (
     SESSION_GAP_US,
+    read_events_stream,
     session_window_agg,
 )
-from marketing_etl_analytics_spark.suite.common import money, pround, sql_pround, t
+from marketing_etl_analytics_spark.suite.common import (
+    drain,
+    money,
+    pround,
+    sql_pround,
+    stream_scratch,
+    t,
+)
 from marketing_etl_analytics_spark.suite.registry import register
 
 BUCKET_US = 6 * 3600 * 1_000_000  # 6-hour buckets
@@ -1401,46 +1409,42 @@ def stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — the invariant the oracle (batch HLL over the full feed)
     verifies exactly. Graded via the stream_sketch_suite merged row
     (r6 consolidation; r4-green as a single, body unchanged)."""
-    import shutil
-    import tempfile
-    import uuid
+    with stream_scratch("hll_stream") as base:
+        reg_dir = f"{base}/registers"
 
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_events_stream,
-    )
+        def batch_registers(batch_df: DataFrame, batch_id: int) -> None:
+            hll_registers(batch_df, "user_id").write.mode("append").parquet(reg_dir)
 
-    base = tempfile.mkdtemp(prefix=f"hll_stream_{uuid.uuid4().hex[:8]}_")
-    reg_dir = f"{base}/registers"
-
-    def batch_registers(batch_df: DataFrame, batch_id: int) -> None:
-        hll_registers(batch_df, "user_id").write.mode("append").parquet(reg_dir)
-
-    try:
-        q = (
-            read_events_stream(spark, sf_dir)
-            .select("user_id")
-            .writeStream.outputMode("append")
-            .foreachBatch(batch_registers)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        _drain_user_ids(spark, sf_dir, batch_registers, f"{base}/ckpt")
         merged = hll_merge(spark.read.parquet(reg_dir)).select(
             F.lit("(all)").alias("grp"), "idx", "m"
         )
         ex = t(spark, sf_dir, "events").agg(
             F.countDistinct("user_id").cast("long").alias("n_exact")
         )
-        out = (
+        return (
             hll_estimate(merged, ["grp"])
             .crossJoin(F.broadcast(ex))
             .select("grp", "n_exact", "hll_estimate", "n_zero_registers")
             .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+
+
+def _drain_user_ids(
+    spark: SparkSession, sf_dir: str, batch_fn, checkpoint: str
+) -> None:
+    """Run ``batch_fn`` over every micro-batch of the events stream's
+    user_id column, to the end of the input."""
+    drain(
+        spark,
+        sf_dir,
+        lambda: read_events_stream(spark, sf_dir)
+        .select("user_id")
+        .writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start(),
+    )
 
 
 # --- rolling median (windowed order statistics) ------------------------------
@@ -1633,39 +1637,19 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 users; the oracle is the batch sketch over the full feed.
     Graded via the stream_sketch_suite merged row (r6 consolidation;
     r4-green as a single, body unchanged)."""
-    import shutil
-    import tempfile
-    import uuid
+    with stream_scratch("cm_stream") as base:
+        cnt_dir = f"{base}/counters"
 
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_events_stream,
-    )
+        def batch_counters(batch_df: DataFrame, batch_id: int) -> None:
+            # sum-merge is NOT replay-idempotent and foreachBatch is
+            # at-least-once, so the partial counters land in a
+            # batchId-keyed subdir with OVERWRITE: a replayed batch
+            # rewrites its own subdir instead of double-counting
+            countmin_counters(
+                batch_df.select(F.col("user_id").cast("string").alias("v")), "v"
+            ).write.mode("overwrite").parquet(f"{cnt_dir}/b{batch_id:06d}")
 
-    base = tempfile.mkdtemp(prefix=f"cm_stream_{uuid.uuid4().hex[:8]}_")
-    cnt_dir = f"{base}/counters"
-
-    def batch_counters(batch_df: DataFrame, batch_id: int) -> None:
-        # sum-merge is NOT replay-idempotent and foreachBatch is
-        # at-least-once, so the partial counters land in a
-        # batchId-keyed subdir with OVERWRITE: a replayed batch
-        # rewrites its own subdir instead of double-counting
-        import os as _os
-
-        countmin_counters(
-            batch_df.select(F.col("user_id").cast("string").alias("v")), "v"
-        ).write.mode("overwrite").parquet(_os.path.join(cnt_dir, f"b{batch_id:06d}"))
-
-    try:
-        q = (
-            read_events_stream(spark, sf_dir)
-            .select("user_id")
-            .writeStream.outputMode("append")
-            .foreachBatch(batch_counters)
-            .option("checkpointLocation", f"{base}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        _drain_user_ids(spark, sf_dir, batch_counters, f"{base}/ckpt")
         counters = (
             spark.read.option("recursiveFileLookup", "true")
             .parquet(cnt_dir)
@@ -1680,7 +1664,7 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("n"), "v")
             .limit(CM_TOPK)
         )
-        out = (
+        return (
             countmin_query(counters, top, "v")
             .select(
                 F.col("v").alias("user_key"),
@@ -1691,9 +1675,6 @@ def stream_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("n_exact"), "user_key")
             .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 # --- merged streaming-sketch row (r6 consolidation) ---------------------------

@@ -30,44 +30,26 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from marketing_etl_analytics_spark.suite.common import t
+from marketing_etl_analytics_spark.streaming.events_stream import (
+    SESSION_GAP,
+    attribution_join_outer,
+    dedup_events,
+    read_events_stream,
+    read_table_stream,
+    session_window_agg,
+)
+from marketing_etl_analytics_spark.suite.common import (
+    drain,
+    drain_memory,
+    money,
+    stream_scratch,
+    t,
+)
 from marketing_etl_analytics_spark.suite.registry import SUITE, SuiteEntry, register
-
-
-def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size the state-store count for a streaming entry from the input
-    volume, the way Spark sizes scan partitions from file bytes.
-
-    Each shuffle partition of a stateful operator is one state-store
-    instance paying a fixed commit (delta file + snapshot bookkeeping)
-    per micro-batch, so over-partitioning a small stream is pure
-    overhead — measured here: the stream-stream join at sf0.1 (2 MB of
-    events) runs 2.7 s with 8 stores vs 6.5-9.7 s with 32 for identical
-    output. Rule: one store per ~256 KB of source parquet, clamped to
-    [4, defaultParallelism]; a cluster-scale stream hits the
-    parallelism cap and behaves exactly as before.
-    """
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        nbytes = (
-            os.path.getsize(src)
-            if os.path.isfile(src)
-            else sum(
-                os.path.getsize(os.path.join(src, f))
-                for f in os.listdir(src)
-                if f.endswith(".parquet")
-            )
-        )
-    except OSError:
-        nbytes = 0
-    cap = spark.sparkContext.defaultParallelism
-    return max(4, min(cap, nbytes // (256 * 1024) or 4))
 
 
 # --- vectorized scalar pandas UDF -------------------------------------------
@@ -168,32 +150,8 @@ def rel_pandas_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deduped stream count must equal the batch COUNT(DISTINCT).",
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        dedup_events,
-        read_events_stream,
-    )
-
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            dedup_events(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).agg(
+    deduped = dedup_events(read_events_stream(spark, sf_dir))
+    return drain_memory(spark, sf_dir, deduped, "dedup").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("event_id").alias("n_distinct"),
     )
@@ -212,36 +170,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "closed session (tests/test_streaming.py).",
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        SESSION_GAP,
-        read_events_stream,
-        session_window_agg,
-    )
-
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    # one state store per shuffle partition: right-size for the host
-    # session (a driver-default 200 would mean 200 stores for ~10^5
-    # rows), then restore the caller's setting
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            session_window_agg(read_events_stream(spark, sf_dir), watermark="2 hours")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).withColumn(
+    events = read_events_stream(spark, sf_dir)
+    sessions = session_window_agg(events, watermark="2 hours")
+    return drain_memory(spark, sf_dir, sessions, "sessions").withColumn(
         "session_end", F.col("session_end") - F.expr(f"INTERVAL {SESSION_GAP}")
     )
 
@@ -266,29 +197,14 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the sink; the returned aggregate must equal the batch join.",
 )
 def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_events_stream,
-    )
-
     dim = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
+    enriched = (
         read_events_stream(spark, sf_dir)
         .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "value", "c_nationkey")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
-    from marketing_etl_analytics_spark.suite.common import money
-
     return (
-        spark.table(name)
+        drain_memory(spark, sf_dir, enriched, "enrich")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -337,32 +253,10 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark has provably closed — the oracle mirrors that rule.",
 )
 def stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        attribution_join_outer,
-        read_events_stream,
+    joined = attribution_join_outer(read_events_stream(spark, sf_dir))
+    return drain_memory(spark, sf_dir, joined, "attrib_outer").orderBy(
+        "click_id", "view_id"
     )
-
-    name = f"attrib_outer_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            attribution_join_outer(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).orderBy("click_id", "view_id")
 
 
 # --- Arrow-native mapInArrow -------------------------------------------------
@@ -517,6 +411,18 @@ def rel_udf_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Structured Streaming native session windows (fully oracled) -------------
 
+def _closed(
+    spark: SparkSession, sf_dir: str, sink: DataFrame, end: Column
+) -> DataFrame:
+    """The rows of a 1 h-watermarked sink whose ``end`` lies before the
+    final watermark (max event time - 1 hour): the rows the stream has
+    provably closed, the set the oracles restrict to as well."""
+    wm = t(spark, sf_dir, "events").agg(
+        (F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("wm")
+    )
+    return sink.crossJoin(F.broadcast(wm)).filter(end < F.col("wm"))
+
+
 @register(
     "stream_session_window",
     """
@@ -569,39 +475,11 @@ def rel_udf_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "evicted at emission — bounded by the watermark horizon.",
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_events_stream,
-        session_window_agg,
-    )
-
-    name = f"sess_win_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            session_window_agg(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    ev = t(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("wm")
+    sessions = drain_memory(
+        spark, sf_dir, session_window_agg(read_events_stream(spark, sf_dir)), "sess_win"
     )
     return (
-        spark.table(name)
-        .crossJoin(F.broadcast(bounds))
-        .filter(F.col("session_end") < F.col("wm"))
+        _closed(spark, sf_dir, sessions, F.col("session_end"))
         .select("user_id", "session_start", "session_end", "n_events", "total_value")
         .orderBy("user_id", "session_start")
     )
@@ -636,37 +514,26 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is the batch argmax per key over the full feed.",
 )
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
     from marketing_etl_analytics_spark.sources import acid
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_events_stream,
-    )
     from marketing_etl_analytics_spark.streaming.sinks import cdc_apply_sink
 
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"cdc_apply_{run}_")
-    table = f"{base}/table"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
+    feed = read_events_stream(spark, sf_dir).select(
+        "user_id", "event_id", "ts", "event_type", "value"
     )
-    try:
-        feed = read_events_stream(spark, sf_dir).select(
-            "user_id", "event_id", "ts", "event_type", "value"
+    with stream_scratch("cdc_apply") as base:
+        table = f"{base}/table"
+        drain(
+            spark,
+            sf_dir,
+            lambda: cdc_apply_sink(
+                feed,
+                table,
+                key_cols=["user_id"],
+                order_cols=["ts", "event_id"],
+                checkpoint_dir=f"{base}/ckpt",
+            ),
         )
-        q = cdc_apply_sink(
-            feed,
-            table,
-            key_cols=["user_id"],
-            order_cols=["ts", "event_id"],
-            checkpoint_dir=f"{base}/ckpt",
-        )
-        q.awaitTermination(300)
-        out = (
+        return (
             acid.read(spark, table)
             .filter(F.col("event_type") != "error")  # tombstones out
             .select(
@@ -678,10 +545,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id")
             .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 # --- Structured Streaming windowed top-k trending ----------------------------
@@ -725,39 +588,14 @@ _TREND_K = 3
     "state is one count per (window, type), bounded by the watermark.",
 )
 def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_events_stream,
+    counts = (
+        read_events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-
-    name = f"trend_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            read_events_stream(spark, sf_dir)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    ev = t(spark, sf_dir, "events")
-    bounds = ev.agg((F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("wm"))
-    closed = (
-        spark.table(name)
-        .crossJoin(F.broadcast(bounds))
-        .filter(F.col("w.end") < F.col("wm"))
+    closed = _closed(
+        spark, sf_dir, drain_memory(spark, sf_dir, counts, "trend"), F.col("w.end")
     )
     rank_w = Window.partitionBy("w.start").orderBy(
         F.desc("n_events"), F.asc("event_type")
@@ -799,34 +637,34 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     "index here gives decisions-at-time semantics at scale.",
 )
 def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
+    return _ingest_decisions(spark, sf_dir, "dedup_ingest", compact_index=False)
 
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_table_stream,
-    )
+
+def _ingest_decisions(
+    spark: SparkSession, sf_dir: str, prefix: str, compact_index: bool
+) -> DataFrame:
+    """The decisions of ``dedup_ingest_sink`` over the documents stream,
+    ordered by doc_id."""
     from marketing_etl_analytics_spark.streaming.sinks import dedup_ingest_sink
 
-    base = tempfile.mkdtemp(prefix=f"dedup_ingest_{uuid.uuid4().hex[:8]}_")
-    dec_dir = f"{base}/decisions"
-    try:
-        q = dedup_ingest_sink(
-            read_table_stream(spark, sf_dir, "documents"),
-            index_dir=f"{base}/index",
-            decisions_dir=dec_dir,
-            checkpoint_dir=f"{base}/ckpt",
+    with stream_scratch(prefix) as base:
+        drain(
+            spark,
+            sf_dir,
+            lambda: dedup_ingest_sink(
+                read_table_stream(spark, sf_dir, "documents"),
+                index_dir=f"{base}/index",
+                decisions_dir=f"{base}/decisions",
+                checkpoint_dir=f"{base}/ckpt",
+                compact_index=compact_index,
+            ),
         )
-        q.awaitTermination(300)
-        out = (
+        return (
             spark.read.option("recursiveFileLookup", "true")
-            .parquet(dec_dir)
+            .parquet(f"{base}/decisions")
             .orderBy("doc_id")
             .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 def _dedup_ingest_oracle() -> str:
@@ -894,35 +732,7 @@ SUITE["stream_dedup_ingest"] = SuiteEntry(
     "(availableNow, batchId-keyed replay-idempotent writes).",
 )
 def ext_dedup_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
-    from marketing_etl_analytics_spark.streaming.events_stream import (
-        read_table_stream,
-    )
-    from marketing_etl_analytics_spark.streaming.sinks import dedup_ingest_sink
-
-    base = tempfile.mkdtemp(prefix=f"dedup_capped_{uuid.uuid4().hex[:8]}_")
-    dec_dir = f"{base}/decisions"
-    try:
-        q = dedup_ingest_sink(
-            read_table_stream(spark, sf_dir, "documents"),
-            index_dir=f"{base}/index",
-            decisions_dir=dec_dir,
-            checkpoint_dir=f"{base}/ckpt",
-            compact_index=True,
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(dec_dir)
-            .orderBy("doc_id")
-            .localCheckpoint(eager=True)  # materialize before rmtree
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+    return _ingest_decisions(spark, sf_dir, "dedup_capped", compact_index=True)
 
 
 def _dedup_ingest_capped_oracle() -> str:

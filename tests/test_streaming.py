@@ -7,8 +7,13 @@ entry's rows exactly (modulo the approx-distinct column).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.streaming import (
@@ -16,6 +21,8 @@ from marketing_etl_analytics_spark.streaming import (
     dedup_events,
     read_events_stream,
 )
+from marketing_etl_analytics_spark.streaming.events_stream import read_table_stream
+from marketing_etl_analytics_spark.suite import common
 from marketing_etl_analytics_spark.suite.common import events as batch_events
 
 SF = "/root/testdata/sf0.001"
@@ -460,3 +467,69 @@ def test_stream_session_window_merges_late_batches(spark, tmp_path):
     ]
     assert got == expected
 
+
+
+READERS = {
+    "events": lambda spark, sf_dir: read_events_stream(spark, sf_dir),
+    "documents": lambda spark, sf_dir: read_table_stream(spark, sf_dir, "documents"),
+}
+
+
+@pytest.mark.parametrize("case", ["relative_dir", "stale_link", "part_files"])
+@pytest.mark.parametrize("name", sorted(READERS))
+def test_file_source_staging(spark, tmp_path, monkeypatch, name, case):
+    """Both readers stage ``<sf_dir>/<name>.parquet`` for the file
+    source the same way, and a bounded drain returns every row of the
+    batch read: from a relative ``sf_dir``, over a stage dir whose
+    link of the right name points at another file (an earlier
+    process's), and from a directory of part files."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tmp_path / "tmp")
+    batch = common.t(spark, SF, name)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / f"{name}.parquet"
+    if case == "part_files":
+        batch.write.parquet(str(src))
+    else:
+        shutil.copy(f"{SF}/{name}.parquet", src)
+    sf_dir = str(sf)
+    if case == "relative_dir":
+        monkeypatch.chdir(tmp_path)
+        sf_dir = "sf"
+    elif case == "stale_link":
+        tag = hashlib.md5(str(src).encode()).hexdigest()[:8]
+        stage = tmp_path / "tmp" / f"{name}_stream_{tag}"
+        stage.mkdir()
+        os.symlink(f"{SF}/customer.parquet", stage / f"{name}.parquet")
+    stream = READERS[name](spark, sf_dir)
+    got = common.drain_memory(spark, sf_dir, stream, f"staged_{name}").count()
+    assert got == batch.count() > 0
+
+
+def test_drain_timeout_stops_the_query(spark, tmp_path, monkeypatch):
+    """A stream still running at the timeout is stopped and raises,
+    so no caller reads its partial sink; the shuffle partitions the
+    drain sized for the run are restored either way."""
+    monkeypatch.setattr(common, "STREAM_TIMEOUT_S", 1)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    started, during = [], []
+
+    def start():
+        during.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        q = (
+            read_events_stream(spark, SF)
+            .writeStream.queryName("slow_drain")
+            .foreachBatch(lambda batch_df, batch_id: time.sleep(4))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        started.append(q)
+        return q
+
+    with pytest.raises(TimeoutError, match="slow_drain"):
+        common.drain(spark, SF, start)
+    assert not started[0].isActive
+    assert during == [str(common._stream_state_partitions(spark, SF))]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
