@@ -15,19 +15,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
+from marketing_etl_analytics_spark.ext.embedding import (
+    arrow_ivf_assign,
+    arrow_lattice_dots,
+    arrow_min_center_dist,
+    arrow_nearest_center,
+    null_vector_error,
+)
 from marketing_etl_analytics_spark.ext.similarity import SPARK_DOT
 from marketing_etl_analytics_spark.ext.text import STOPWORDS
 
-# Max collected center rows for the Arrow/NumPy closure evaluators
-# (r10, guide §4.2): nearest-center assignment, IVF probing, and
-# k-means|| state updates evaluate their (row x center) lattice dots
-# vectorized per Arrow batch with the planning-sized center set in the
-# task closure — no n*k crossJoin rows, no rank-window exchange, no
-# interpreted ArrayAggregate lambda (CodegenFallback). Above this
-# bound (k ~ 1e5 regimes: 8192 centers x 64 dims x 8 B = 4 MB closure
-# is the comfort ceiling) the code falls back to the frame-only
-# broadcast-join shape, which never collects centers to the driver.
-ARROW_CENTERS_MAX = 8192
+# Every corpus x centers score below (nearest-center assignment, IVF
+# probing, k-means|| state updates) runs in the ext.embedding Arrow/
+# NumPy evaluators: the center set is collected to the driver and
+# shipped in the task closure, so it must stay planning-sized (8192
+# centers x 64 dims x 8 B is a 4 MB closure).
 
 # farthest-first seeding draws its candidates from the POOL_FACTOR * k
 # md5-first rows (quantize_pool)
@@ -237,17 +239,22 @@ def farthest_first_from_pool(pool: list[tuple], k: int) -> list:
 # sampled in a round iff u(x) * S < ell * dmin^2(x), where u(x) is
 # the md5-uniform of its key and S the decimal-snapped corpus sum of
 # dmin^2 — so every engine (and the DuckDB oracle) derives the
-# identical candidate set with no RNG state. The final reduction is
-# ALSO a frame op: candidates are weighted by how many corpus rows
-# they are nearest to, bucketed by md5(key) % k, and the max-weight
-# candidate per bucket wins (tiebreak: smaller key). Seeds therefore
-# stay a DataFrame end-to-end: no driver-side pool collect, no
-# O(pool*k) Python greedy, no isin(<k literals>) — the seeding path
-# that survives k~1e5 (the farthest-first pool path remains for the
-# k~sqrt(n) SemDeDup regime where its k-center spread guarantee is
-# worth the planning-sized collect).
+# identical candidate set with no RNG state. The final reduction
+# weights candidates by how many corpus rows they are nearest to,
+# buckets them by md5(key) % k, and keeps the max-weight candidate per
+# bucket (tiebreak: smaller key): no O(pool*k) Python greedy, no
+# isin(<k literals>).
 
 KMPAR_ROUNDS = 3
+KMPAR_ELL_FACTOR = 2  # ell = KMPAR_ELL_FACTOR * k candidates per round
+
+
+def _center_rows(frame: DataFrame) -> list[tuple]:
+    """Collect a planning-sized center frame whose first three columns
+    are (id, vector, norm) as the evaluators' [(id, [..], n2, *rest)]."""
+    return [
+        (r[0], list(r[1]), float(r[2]), *r[3:]) for r in frame.collect()
+    ]
 
 
 def kmeanspar_seeds(
@@ -255,20 +262,19 @@ def kmeanspar_seeds(
     key: str,
     vec: str,
     n_centroids: int,
-    rounds: int = KMPAR_ROUNDS,
-    ell_factor: int = 2,
 ) -> DataFrame:
     """Deterministic k-means|| seed selection over a pre-normed frame
     ``b`` with columns (key, vec, _n2). Returns (_cid, _ce, _cn2) —
     at most ``n_centroids`` rows (occupied weight-buckets), a frame.
 
     Geometry is cosine distance d = 1 - cos (the dedup metric);
-    within a round dmin is a MIN over the broadcast seed frame —
-    O(n * |seeds|) exact-decimal dots per round, |seeds| <= 1 +
-    ell*rounds ~ O(k). The per-round seed frame is localCheckpoint'ed
-    (planning-sized) so round r's plan does not re-derive rounds
-    1..r-1."""
-    ell = ell_factor * n_centroids
+    within a round dmin is a MIN over the seed set — O(n * |seeds|)
+    lattice dots in total, |seeds| <= 1 + ell*KMPAR_ROUNDS ~ O(k).
+    Each seed set is collected to the driver and scored in the
+    ext.embedding evaluators' task closure, so it must stay
+    planning-sized. The per-round seed frame is localCheckpoint'ed so
+    round r's plan does not re-derive rounds 1..r-1."""
+    ell = KMPAR_ELL_FACTOR * n_centroids
     h = F.md5(F.col(key).cast("string"))
     u = (
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
@@ -290,60 +296,23 @@ def kmeanspar_seeds(
         base.orderBy("_h", "_k").limit(1).select(*seed_cols)
         .localCheckpoint(eager=True)
     )
+
     # zero-norm vectors (legitimate in filtered corpora) get cos 0 /
-    # distance 1 instead of an ANSI divide-by-zero; mirrored in the
-    # suite oracle (_sql_kmeanspar_ctes)
-    cos = F.coalesce(
-        F.expr(SPARK_DOT.format(a="_v", b="_ce"))
-        / F.nullif(F.sqrt(F.col("_vn2") * F.col("_cn2")), F.lit(0.0)),
-        F.lit(0.0),
-    )
-    d = F.greatest(F.lit(0.0), F.lit(1.0) - cos)
-    # Arrow/NumPy closure path (r10, guide §4.2): the seed sets here
-    # are planning-sized (<= 1 + ell*rounds rows), so each corpus pass
-    # — the initial distance, every round's running-min update, and
-    # the final nearest-seed weights — evaluates its lattice dots
-    # vectorized per Arrow batch with the seeds in the task closure.
-    # Values are bit-identical to the expression form (the
-    # arrow_lattice_dots proof: same IEEE ops on the same operands;
-    # min/least are selections), and the previous per-round
-    # groupBy(_k, _v, _vn2, _u).min shuffle — the corpus, CARRYING the
-    # 64-dim vectors, exchanged once per round — disappears entirely.
-    from marketing_etl_analytics_spark.ext.embedding import (
-        arrow_min_center_dist,
-        arrow_nearest_center,
-    )
-
-    use_arrow = (1 + ell * rounds) <= ARROW_CENTERS_MAX
-
-    def _rows(frame: DataFrame) -> list[tuple]:
-        return [
-            (r["_cid"], list(r["_ce"]), float(r["_cn2"]))
-            for r in frame.collect()
-        ]
-
+    # distance 1 instead of an ANSI divide-by-zero (arrow_min_center_dist
+    # and zero_cos=0.0 below); mirrored in the suite oracle
+    # (_sql_kmeanspar_ctes).
+    #
     # Carried min-distance state (the k-center/Lloyd zero-recompute
     # discipline): dmin over a growing seed set is monotone, so each
     # round only dots the corpus against the round's NEW seeds and
     # takes least(carried, new) — min over a union equals
     # min(min(old), min(new)) exactly (selection, not arithmetic, so
-    # no FP-order concern). The previous shape re-dotted every row
-    # against the FULL seed frame each round AND re-evaluated that
-    # pass twice (once under the S-total broadcast, once under the
-    # threshold filter): O(rounds * n * |seeds|) interpreted dots,
-    # now O(n * |new seeds|) total with each pass materialized once.
-    if use_arrow:
-        state = arrow_min_center_dist(
-            base.select("_k", "_v", "_vn2", "_u"),
-            "_v", "_vn2", _rows(seeds), "_d",
-        ).localCheckpoint(eager=True)
-    else:
-        state = (
-            base.crossJoin(F.broadcast(seeds))
-            .select("_k", "_v", "_vn2", "_u", d.alias("_d"))
-            .localCheckpoint(eager=True)
-        )
-    for r in range(rounds):
+    # no FP-order concern); each pass is materialized once.
+    state = arrow_min_center_dist(
+        base.select("_k", "_v", "_vn2", "_u"),
+        "_v", "_vn2", _center_rows(seeds), "_d",
+    ).localCheckpoint(eager=True)
+    for r in range(KMPAR_ROUNDS):
         # integer-lattice snap of d^2 (ADVICE r6): per-term
         # CAST(double AS DECIMAL(38,12)) tie-rounds differently in
         # Java BigDecimal (HALF_UP) vs DuckDB (scaled multiply) — the
@@ -379,56 +348,25 @@ def kmeanspar_seeds(
         seeds = seeds.unionByName(new).localCheckpoint(eager=True)
         # state only feeds the NEXT round's draw; skip the update on
         # the last round, and when the draw selected nothing (the
-        # crossJoin below would otherwise empty the state)
-        if r < rounds - 1 and not new.isEmpty():
-            if use_arrow:
-                # zero-shuffle running-min update: one vectorized scan,
-                # least(carried, min over the round's NEW seeds)
-                state = arrow_min_center_dist(
-                    state, "_v", "_vn2", _rows(new), "_d", carry="_d",
-                ).localCheckpoint(eager=True)
-            else:
-                state = (
-                    state.crossJoin(F.broadcast(new))
-                    .groupBy("_k", "_v", "_vn2", "_u")
-                    .agg(F.min(F.least(F.col("_d"), d)).alias("_d"))
-                    .localCheckpoint(eager=True)
-                )
+        # evaluator needs at least one center)
+        if r < KMPAR_ROUNDS - 1 and not new.isEmpty():
+            # running-min update: least(carried, min over the NEW seeds)
+            state = arrow_min_center_dist(
+                state, "_v", "_vn2", _center_rows(new), "_d", carry="_d",
+            ).localCheckpoint(eager=True)
     # weight each candidate by the corpus rows nearest to it
     # (tiebreak: higher cos, then smaller candidate key), then reduce
-    # to k via md5-bucket max-weight
-    if use_arrow:
-        # nearest-seed id per row computed in the same vectorized scan
-        # (desc cos with the zero-norm guard, tie -> smaller _cid —
-        # the evaluator replicates the window's ordering exactly);
-        # only (_k -> _cid) leaves the Python boundary
-        weights = (
-            arrow_nearest_center(
-                base.select("_k", "_v", "_vn2"),
-                "_v", "_vn2", _rows(seeds), "_cid",
-                keep=["_k"], zero_cos=0.0,
-            )
-            .groupBy("_cid")
-            .agg(F.count(F.lit(1)).alias("_w"))
+    # to k via md5-bucket max-weight; only (_k -> _cid) leaves the
+    # Python boundary
+    weights = (
+        arrow_nearest_center(
+            base.select("_k", "_v", "_vn2"),
+            "_v", "_vn2", _center_rows(seeds), "_cid",
+            keep=["_k"], zero_cos=0.0,
         )
-    else:
-        # frame path: project to (_k, _cid, cos) BEFORE the window
-        # (guide §2.3): the rank only needs the score, so neither
-        # 64-dim vector rides the window exchange, and the cos is
-        # evaluated once per row as a column instead of inside the
-        # SortOrder (where GenerateOrdering re-evaluates it per
-        # comparison)
-        wnear = Window.partitionBy("_k").orderBy(
-            F.desc("_cw"), F.asc("_cid")
-        )
-        weights = (
-            base.crossJoin(F.broadcast(seeds))
-            .select("_k", "_cid", cos.alias("_cw"))
-            .withColumn("_r", F.row_number().over(wnear))
-            .filter(F.col("_r") == 1)
-            .groupBy("_cid")
-            .agg(F.count(F.lit(1)).alias("_w"))
-        )
+        .groupBy("_cid")
+        .agg(F.count(F.lit(1)).alias("_w"))
+    )
     bkt = (
         F.conv(F.substring(F.md5(F.col("_cid").cast("string")), 1, 8), 16, 10)
         .cast("long")
@@ -459,8 +397,8 @@ def semantic_assign(
     n_probe: int = 3,
 ) -> DataFrame:
     """SemDeDup assignment stage: nearest-seed-centroid clusters
-    (broadcast argmax or IVF-probed), hot clusters re-split on 8
-    hyperplane sign bits. Returns (key, cluster, _ckey) — the
+    (argmax or IVF-probed), hot clusters re-split on 8 hyperplane
+    sign bits. Returns (key, cluster, _ckey) — the
     per-corpus cluster index. At cluster scale this IS a persisted
     table built once per corpus version (the suite memoizes it via
     memo_df and feeds it back to semantic_dedup(keyed=...)).
@@ -475,34 +413,29 @@ def semantic_assign(
     quality determines cluster BALANCE, and balance is what the
     sum(c_i^2) bound actually buys: spread seeds keep a dense region
     from collapsing the rest of the space onto few giant clusters
-    (pinned by the skewed-synthetic pytest). 'kmeanspar' is the
-    distributed large-k mode (see ``assign`` below): seeds stay a
-    frame — no driver greedy, no isin literals; the k~1e5 path.
+    (pinned by the skewed-synthetic pytest). 'kmeanspar' draws the
+    seeds by deterministic k-means|| (``kmeanspar_seeds``): no
+    O(pool*k) driver greedy, no isin(<k literals>).
 
     ``assign``: 'exact' scores every row against all k centroids
-    (O(n*k) dots — fine at k~sqrt(n) up to modest k). 'ivf' routes
-    assignment through ceil(sqrt(k)) super-centroids (farthest-first
-    over the seed set): each row scores the super-centroids, then
-    only the member centroids of its ``n_probe`` nearest
-    super-clusters — O(n*(sqrt(k) + n_probe*sqrt(k))) dots, the
-    IVF-probe shape that keeps the ASSIGNMENT step tractable at
-    k~1e5. With ``seeding='kmeanspar'`` (r6, VERDICT r5 #4) the
-    whole path is frame-only: k-means||-style seeds
-    (``kmeanspar_seeds``) AND hash-bucket super-centroids come from
-    DataFrame ops joined downstream — no driver pool collect, no
-    O(pool*k) greedy, no isin(<k literals>) — the k~1e5 shape. The
-    'farthest' pool path remains for the k~sqrt(n) SemDeDup regime
-    where its k-center spread guarantee is worth the planning-sized
-    collect. Approximate in general (a row whose true centroid lives
-    outside the probed super-clusters mis-assigns); equality vs exact
-    argmax on the graded corpora is pinned by pytest.
+    (O(n*k) dots). 'ivf' routes assignment through ceil(sqrt(k))
+    super-centroids (farthest-first over the seed set, or with
+    ``seeding='kmeanspar'`` the hash-first seed per md5 bucket): each
+    row scores the super-centroids, then only the member centroids
+    of its ``n_probe`` nearest super-clusters — O(n*(sqrt(k) +
+    n_probe*sqrt(k))) dots. Approximate in general (a row whose true
+    centroid lives outside the probed super-clusters mis-assigns);
+    equality vs exact argmax on the graded corpora is pinned by
+    pytest.
+
+    Both modes score rows in the ext.embedding Arrow evaluators: the
+    centroids (and supers) are collected to the driver and shipped in
+    the task closure, so ``n_centroids`` must stay planning-sized.
 
     Raises ValueError when ``key`` is not an integer column (center
     ids are written as bigint); a NULL vector fails the first job
-    that reads it, with the same message on every path.
+    that reads it, with the same message as the evaluators.
     """
-    from marketing_etl_analytics_spark.ext.embedding import null_vector_error
-
     key_type = df.schema[key].dataType
     if not isinstance(key_type, IntegralType):
         raise ValueError(
@@ -542,9 +475,8 @@ def semantic_assign(
             else b.limit(0).select(*cent_cols)  # empty input frame
         )
     elif seeding == "kmeanspar":
-        # r6 (VERDICT r5 #4): deterministic k-means|| — oversample by
-        # threshold each round, weight-reduce to k via md5 buckets;
-        # seeds are a FRAME end-to-end (see kmeanspar_seeds)
+        # deterministic k-means|| — oversample by threshold each
+        # round, weight-reduce to k via md5 buckets
         cent = kmeanspar_seeds(
             b.select(key, vec, "_n2"), key, vec, n_centroids
         ).select(
@@ -552,22 +484,6 @@ def semantic_assign(
         )
     else:
         raise ValueError(f"unknown seeding mode: {seeding!r}")
-    cos_c = F.expr(SPARK_DOT.format(a=vec, b="_ce")) / F.sqrt(
-        F.col("_n2") * F.col("_cn2")
-    )
-    # Arrow/NumPy closure path (r10, guide §4.2): with a planning-
-    # sized center set, the probe/argmax dots run vectorized per
-    # Arrow batch — no n*k crossJoin rows, no rank-window exchange.
-    # Bit-identical to the expression form (arrow_lattice_dots proof;
-    # NaN ranks greatest like Spark's sort; ties break on asc center
-    # id). Above ARROW_CENTERS_MAX the frame-only broadcast shape
-    # below remains the k~1e5 path.
-    from marketing_etl_analytics_spark.ext.embedding import (
-        arrow_ivf_assign,
-        arrow_nearest_center,
-    )
-
-    use_arrow = n_centroids <= ARROW_CENTERS_MAX
 
     def _empty_assign() -> DataFrame:
         return b.limit(0).select(
@@ -576,20 +492,13 @@ def semantic_assign(
             F.col("_sub"),
         )
 
-    # every rank below orders by a PRECOMPUTED score column and
-    # projects the vectors away before the window exchange (guide
-    # §2.3): the 64-dim arrays never ride a shuffle just to be
-    # re-dotted inside a SortOrder comparator
-    w = Window.partitionBy(key).orderBy(F.desc("_cc"), F.asc("_cid"))
     if assign == "ivf":
         import math
 
         n_super = max(1, math.isqrt(max(n_centroids - 1, 0)) + 1)
         if seeding == "kmeanspar":
-            # fully-distributed mode (VERDICT r5 #4): super-centroids
-            # are the hash-first SEED per md5 bucket — one window over
-            # the k-row seed frame, no collect, no isin; supers (like
-            # seeds) stay a frame at k~1e5
+            # super-centroids are the hash-first SEED per md5 bucket —
+            # one window over the k-row seed frame, no isin
             sh = F.md5(F.col("_cid").cast("string"))
             sbkt = (
                 F.conv(F.substring(sh, 1, 8), 16, 10).cast("long")
@@ -642,73 +551,28 @@ def semantic_assign(
             .filter(F.col("_r") == 1)
             .select("_cid", "_ce", "_cn2", F.col("_sid").alias("_home"))
         )
-        # row -> n_probe nearest super-clusters, then argmax over the
-        # member centroids of those probes only: O(n*(sqrt(k) +
-        # n_probe * k/sqrt(k))) dots instead of O(n*k)
-        if use_arrow:
-            # one vectorized corpus pass does the probe ranking AND
-            # the member argmax (supers + homed centroids in the task
-            # closure); the previous shape materialized n*n_probe
-            # probe rows CARRYING the 64-dim vectors through a rank
-            # window, joined members, then ranked again
-            sup_rows = [
-                (r["_sid"], list(r["_se"]), float(r["_sn2"]))
-                for r in sup.collect()
-            ]
-            cm_rows = [
-                (r["_cid"], list(r["_ce"]), float(r["_cn2"]), r["_home"])
-                for r in cmember.collect()
-            ]
-            if not sup_rows or not cm_rows:
-                assign = _empty_assign()
-            else:
-                assign = arrow_ivf_assign(
-                    b.select(key, vec, "_n2", "_sub"),
-                    vec, "_n2", sup_rows, cm_rows, n_probe,
-                    "cluster", keep=[key, "_sub"],
-                ).select(key, "cluster", "_sub")
+        # one corpus pass: row -> n_probe nearest super-clusters,
+        # then argmax over the member centroids of those probes only:
+        # O(n*(sqrt(k) + n_probe * k/sqrt(k))) dots instead of O(n*k)
+        sup_rows = _center_rows(sup)
+        cm_rows = _center_rows(cmember)
+        if not sup_rows or not cm_rows:
+            assign = _empty_assign()
         else:
-            cos_ds = F.expr(SPARK_DOT.format(a=vec, b="_se")) / F.sqrt(
-                F.col("_n2") * F.col("_sn2")
-            )
-            wds = Window.partitionBy(key).orderBy(
-                F.desc("_cds"), F.asc("_sid")
-            )
-            probes = (
-                b.crossJoin(F.broadcast(sup))
-                .select(key, vec, "_n2", "_sub", "_sid", cos_ds.alias("_cds"))
-                .withColumn("_r", F.row_number().over(wds))
-                .filter(F.col("_r") <= n_probe)
-                .select(key, vec, "_n2", "_sub", F.col("_sid").alias("_home"))
-            )
-            assign = (
-                probes.join(F.broadcast(cmember), "_home")
-                .select(key, "_sub", "_cid", cos_c.alias("_cc"))
-                .withColumn("_crn", F.row_number().over(w))
-                .filter(F.col("_crn") == 1)
-                .select(key, F.col("_cid").alias("cluster"), "_sub")
-            )
+            assign = arrow_ivf_assign(
+                b.select(key, vec, "_n2", "_sub"),
+                vec, "_n2", sup_rows, cm_rows, n_probe,
+                "cluster", keep=[key, "_sub"],
+            ).select(key, "cluster", "_sub")
     elif assign == "exact":
-        if use_arrow:
-            cent_rows = [
-                (r["_cid"], list(r["_ce"]), float(r["_cn2"]))
-                for r in cent.collect()
-            ]
-            if not cent_rows:
-                assign = _empty_assign()
-            else:
-                assign = arrow_nearest_center(
-                    b.select(key, vec, "_n2", "_sub"),
-                    vec, "_n2", cent_rows, "cluster", keep=[key, "_sub"],
-                ).select(key, "cluster", "_sub")
+        cent_rows = _center_rows(cent)
+        if not cent_rows:
+            assign = _empty_assign()
         else:
-            assign = (
-                b.crossJoin(F.broadcast(cent))
-                .select(key, "_sub", "_cid", cos_c.alias("_cc"))
-                .withColumn("_crn", F.row_number().over(w))
-                .filter(F.col("_crn") == 1)
-                .select(key, F.col("_cid").alias("cluster"), "_sub")
-            )
+            assign = arrow_nearest_center(
+                b.select(key, vec, "_n2", "_sub"),
+                vec, "_n2", cent_rows, "cluster", keep=[key, "_sub"],
+            ).select(key, "cluster", "_sub")
     else:
         raise ValueError(f"unknown assign mode: {assign!r}")
     hot = (
@@ -782,10 +646,6 @@ def semantic_dedup(
     # §4.2; bit-identical to the SQL lattice dot, pinned by pytest):
     # the vectors are dropped at the Python boundary, so only
     # (u, v, norms, dot) flows into the threshold filter
-    from marketing_etl_analytics_spark.ext.embedding import (
-        arrow_lattice_dots,
-    )
-
     scored = arrow_lattice_dots(
         mu.join(mv, (mu._ckey == mv._ckey_v) & (mu._u < mv._v))
         .select("_u", "_v", "_un2", "_vn2", "_ue", "_ve"),

@@ -51,7 +51,6 @@ __all__ = [
     "project_signs",
     "quantize_int8",
     "arrow_lattice_dots",
-    "arrow_lattice_norms",
     "arrow_nearest_center",
     "arrow_min_center_dist",
     "arrow_ivf_assign",
@@ -179,6 +178,40 @@ def quantize_int8(df: DataFrame, vec: str = "embedding") -> DataFrame:
     )
 
 
+def _map_batches(
+    df: DataFrame, keep: list[str], out: str, out_type: str, compute
+) -> DataFrame:
+    """The one ``mapInArrow`` driver of the evaluators below: each
+    output batch is the ``keep`` columns plus ``out`` (``double`` or
+    ``bigint``). ``compute(batch)`` runs on every non-empty batch and
+    returns ``(values, rows)``: one value per input row, and ``rows``
+    None or a boolean mask of the rows to emit."""
+    import pyarrow as pa
+
+    pa_type = {"double": pa.float64(), "bigint": pa.int64()}[out_type]
+    out_schema = ", ".join(
+        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in keep]
+        + [f"`{out}` {out_type}"]
+    )
+    names = keep + [out]
+
+    def batches(it):
+        for batch in it:
+            cols = [batch.column(c) for c in keep]
+            if len(batch) == 0:
+                values = []
+            else:
+                values, rows = compute(batch)
+                if rows is not None and not rows.all():
+                    cols = [col.filter(pa.array(rows)) for col in cols]
+                    values = values[rows]
+            yield pa.RecordBatch.from_arrays(
+                cols + [pa.array(values, pa_type)], names=names
+            )
+
+    return df.mapInArrow(batches, out_schema)
+
+
 def arrow_lattice_dots(
     df: DataFrame,
     a: str,
@@ -205,60 +238,43 @@ def arrow_lattice_dots(
     fixed-dimension; the callers' dot semantics already assume it).
     """
     import numpy as np
-    import pyarrow as pa
 
-    keep = [f for f in df.schema.fields if f.name not in (a, b)]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in keep]
-        + [f"`{out}` double"]
-    )
-    names = [f.name for f in keep] + [out]
+    def compute(batch):
+        # _np_vecs asserts the batch is rectangular (ADVICE r9 #1)
+        # before the reshape
+        ua = _np_vecs(batch, a, len(batch))
+        va = _np_vecs(batch, b, len(batch))
+        s = np.floor(ua * va * 1e12 + 0.5).astype(np.int64).sum(axis=1)
+        return s / 1e12, None
 
-    def batches(it):
-        for batch in it:
-            m = len(batch)
-            cols = [batch.column(f.name) for f in keep]
-            if m == 0:
-                dots = pa.array(np.zeros(0), pa.float64())
-            else:
-                # _np_vecs asserts the batch is rectangular (ADVICE
-                # r9 #1) before the reshape
-                ua = _np_vecs(batch, a, m)
-                va = _np_vecs(batch, b, m)
-                s = np.floor(ua * va * 1e12 + 0.5).astype(np.int64).sum(axis=1)
-                dots = pa.array(s / 1e12, pa.float64())
-            yield pa.RecordBatch.from_arrays(cols + [dots], names=names)
-
-    return df.mapInArrow(batches, out_schema)
+    keep = [c for c in df.columns if c not in (a, b)]
+    return _map_batches(df, keep, out, "double", compute)
 
 
-# --- corpus x centers lattice evaluators (r10 optimization round) -------------
+# --- corpus x centers lattice evaluators --------------------------------------
 #
-# The r9 pair-verify evaluator (arrow_lattice_dots) proved the Arrow/
-# NumPy twin of the SQL lattice dot bit-identical and ~2x faster than
-# the interpreted ArrayAggregate lambda (CodegenFallback: never
-# compiled). These evaluators extend the same discipline to the
-# corpus-side hot paths — nearest-center assignment, IVF probing, and
-# running-min distance state — where the previous shape was a
-# crossJoin(broadcast(centers)) producing n*k JVM rows, each paying an
-# interpreted per-term dot, followed by a rank window that shuffled
-# the n*k rows just to pick a per-row argmax. Here the center set
-# (always planning-sized in these paths: k ~ sqrt(n) seeds, sqrt(k)
-# supers, one new k-center per round) is captured in the task closure
-# and each Arrow batch computes every (row, center) score vectorized —
-# no n*k row materialization, no window exchange, one corpus pass.
+# The only code that scores corpus rows against a center set:
+# nearest-center assignment, IVF probing, and k-means|| running-min
+# distance state. The caller collects the center set to the driver
+# and it ships in the task closure, so it must stay planning-sized
+# (k ~ sqrt(n) seeds, sqrt(k) supers, one k-means|| round's new
+# seeds). Each Arrow batch computes every (row, center) score
+# vectorized: no n*k row materialization, no window exchange, one
+# corpus pass.
 #
-# BIT-IDENTITY: every arithmetic step is the same IEEE-754 op the JVM
-# evaluates on the same operands — float->float64 widening exact,
-# multiply/floor/int64-sum per the arrow_lattice_dots proof, np.sqrt
-# and division correctly rounded like java.lang.Math — and every
-# selection replicates Spark's ordering semantics: NaN ranks greatest
-# (Spark sort), ties break on ascending center id (centers are passed
-# sorted ascending and NumPy argmax/stable argsort pick the first).
+# BIT-IDENTITY with the SQL form (crossJoin + rank window over
+# SPARK_DOT cosines, the tests' reference): every arithmetic step is
+# the same IEEE-754 op the JVM evaluates on the same operands —
+# float->float64 widening exact, multiply/floor/int64-sum per the
+# arrow_lattice_dots proof, np.sqrt and division correctly rounded
+# like java.lang.Math — and every selection replicates Spark's
+# ordering semantics: NaN ranks greatest (Spark sort), ties break on
+# ascending center id (centers are sorted ascending and NumPy
+# argmax/stable argsort pick the first).
 
 def null_vector_error(vec: str) -> str:
     """The one error text for a NULL vector, raised by the Arrow
-    evaluators here and by the frame-path guard in ext.curation."""
+    evaluators here and by semantic_assign's input guard."""
     return f"NULL vector in column {vec!r}"
 
 
@@ -316,6 +332,15 @@ def _np_cos_matrix(vm, n2, cm, cn2, zero_cos: float | None):
     return np.where(denom == 0.0, zero_cos, cos)
 
 
+def _batch_cos(batch, vec: str, n2: str, cmat, cn2, zero_cos: float | None):
+    """(m,k) cosines of one batch's ``vec`` rows against the centers."""
+    import numpy as np
+
+    vm = _np_vecs(batch, vec, len(batch))
+    n2v = np.asarray(batch.column(n2), dtype=np.float64)
+    return _np_cos_matrix(vm, n2v, cmat, cn2, zero_cos)
+
+
 def _desc_order(cos):
     """Per-row column order by descending score under Spark's sort
     rule: NaN ranks above every double, +inf included; ties keep
@@ -343,7 +368,7 @@ def _argmax(cos, mask=None):
 
 
 def _center_arrays(centers):
-    """centers: [(cid, vec, n2), ...] -> cid int64 asc-sorted arrays."""
+    """centers: [(cid, vec, n2, ...), ...] -> cid int64 asc-sorted arrays."""
     import numpy as np
 
     rows = sorted(centers, key=lambda r: int(r[0]))
@@ -351,35 +376,6 @@ def _center_arrays(centers):
     cmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     cn2 = np.array([float(r[2]) for r in rows], dtype=np.float64)
     return cids, cmat, cn2
-
-
-def arrow_lattice_norms(df: DataFrame, vec: str, out: str = "n2") -> DataFrame:
-    """Append the lattice self-dot (SPARK_DOT(vec, vec)) as ``out``,
-    keeping every input column — the memoized norm-table build, one
-    vectorized corpus pass instead of n*d interpreted lambda steps."""
-    import numpy as np
-    import pyarrow as pa
-
-    fields = list(df.schema.fields)
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-        + [f"`{out}` double"]
-    )
-    names = [f.name for f in fields] + [out]
-
-    def batches(it):
-        for batch in it:
-            m = len(batch)
-            cols = [batch.column(f.name) for f in fields]
-            if m == 0:
-                n2 = pa.array(np.zeros(0), pa.float64())
-            else:
-                vm = _np_vecs(batch, vec, m)
-                s = np.floor(vm * vm * 1e12 + 0.5).astype(np.int64).sum(axis=1)
-                n2 = pa.array(s / 1e12, pa.float64())
-            yield pa.RecordBatch.from_arrays(cols + [n2], names=names)
-
-    return df.mapInArrow(batches, out_schema)
 
 
 def arrow_nearest_center(
@@ -391,37 +387,17 @@ def arrow_nearest_center(
     keep: list[str],
     zero_cos: float | None = None,
 ) -> DataFrame:
-    """Per-row argmax-cosine center id over a planning-sized collected
-    center set: replaces crossJoin(broadcast(centers)) + rank-window
-    with one vectorized corpus pass. Ordering: desc cos (NaN greatest,
-    the Spark sort rule), tie -> ascending center id. Returns ``keep``
+    """Per-row argmax-cosine center id over a collected center set, in
+    one vectorized corpus pass. Ordering: desc cos (NaN greatest, the
+    Spark sort rule), tie -> ascending center id. Returns ``keep``
     columns + ``out_id`` (long)."""
-    import pyarrow as pa
-
     cids, cmat, cn2 = _center_arrays(centers)
-    kfields = [df.schema[c] for c in keep]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in kfields]
-        + [f"`{out_id}` bigint"]
-    )
-    names = keep + [out_id]
 
-    def batches(it):
-        import numpy as np
+    def compute(batch):
+        cos = _batch_cos(batch, vec, n2, cmat, cn2, zero_cos)
+        return cids[_argmax(cos)], None
 
-        for batch in it:
-            m = len(batch)
-            cols = [batch.column(c) for c in keep]
-            if m == 0:
-                best = pa.array(np.zeros(0, dtype=np.int64), pa.int64())
-            else:
-                vm = _np_vecs(batch, vec, m)
-                n2v = np.asarray(batch.column(n2), dtype=np.float64)
-                cos = _np_cos_matrix(vm, n2v, cmat, cn2, zero_cos)
-                best = pa.array(cids[_argmax(cos)], pa.int64())
-            yield pa.RecordBatch.from_arrays(cols + [best], names=names)
-
-    return df.mapInArrow(batches, out_schema)
+    return _map_batches(df, keep, out_id, "bigint", compute)
 
 
 def arrow_min_center_dist(
@@ -438,36 +414,20 @@ def arrow_min_center_dist(
     distance column in via least() — the running-min state update.
     Passes through every input column except ``carry`` (replaced by
     ``out``; min/least are selections, so the update is exact)."""
-    import pyarrow as pa
+    import numpy as np
 
     _, cmat, cn2 = _center_arrays(centers)
-    fields = [f for f in df.schema.fields if f.name != carry]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-        + [f"`{out}` double"]
-    )
-    names = [f.name for f in fields] + [out]
 
-    def batches(it):
-        import numpy as np
+    def compute(batch):
+        cos = _batch_cos(batch, vec, n2, cmat, cn2, 0.0)
+        dmin = np.maximum(0.0, 1.0 - cos).min(axis=1)
+        if carry is not None:
+            prev = np.asarray(batch.column(carry), dtype=np.float64)
+            dmin = np.minimum(prev, dmin)
+        return dmin, None
 
-        for batch in it:
-            m = len(batch)
-            cols = [batch.column(f.name) for f in fields]
-            if m == 0:
-                d = pa.array(np.zeros(0), pa.float64())
-            else:
-                vm = _np_vecs(batch, vec, m)
-                n2v = np.asarray(batch.column(n2), dtype=np.float64)
-                cos = _np_cos_matrix(vm, n2v, cmat, cn2, 0.0)
-                dmin = np.maximum(0.0, 1.0 - cos).min(axis=1)
-                if carry is not None:
-                    prev = np.asarray(batch.column(carry), dtype=np.float64)
-                    dmin = np.minimum(prev, dmin)
-                d = pa.array(dmin, pa.float64())
-            yield pa.RecordBatch.from_arrays(cols + [d], names=names)
-
-    return df.mapInArrow(batches, out_schema)
+    keep = [c for c in df.columns if c != carry]
+    return _map_batches(df, keep, out, "double", compute)
 
 
 def arrow_ivf_assign(
@@ -484,56 +444,25 @@ def arrow_ivf_assign(
     rank the super-centroids (desc cos raw-division form, NaN
     greatest, tie asc sid), take the ``n_probe`` nearest, then argmax
     cosine over the member centroids homed to those supers (tie asc
-    cid). Replaces two crossJoin+window passes (probes = n*n_probe
-    rows CARRYING the 64-dim vectors, then a probe x member join +
-    argmax window). Rows none of whose probed supers have member
-    centroids are dropped — the same rows the probe->member inner
-    join dropped. ``supers``: [(sid, vec, n2)]; ``cmember``:
-    [(cid, vec, cn2, home_sid)]."""
+    cid). Rows none of whose probed supers have member centroids are
+    dropped, as an inner join of probes to members drops them.
+    ``supers``: [(sid, vec, n2)]; ``cmember``: [(cid, vec, cn2,
+    home_sid)]."""
     import numpy as np
-    import pyarrow as pa
 
-    sids, smat, sn2 = _center_arrays([(s[0], s[1], s[2]) for s in supers])
-    crows = sorted(cmember, key=lambda r: int(r[0]))
-    cids = np.array([int(r[0]) for r in crows], dtype=np.int64)
-    cmat = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    cn2 = np.array([float(r[2]) for r in crows], dtype=np.float64)
-    sid_pos = {int(s): i for i, s in enumerate(sids)}
-    home_idx = np.array(
-        [sid_pos[int(r[3])] for r in crows], dtype=np.int64
-    )
-    kfields = [df.schema[c] for c in keep]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in kfields]
-        + [f"`{out_id}` bigint"]
-    )
-    names = keep + [out_id]
+    sids, smat, sn2 = _center_arrays(supers)
+    cids, cmat, cn2 = _center_arrays(cmember)
+    home = {int(r[0]): int(r[3]) for r in cmember}
+    home_idx = np.searchsorted(sids, [home[c] for c in cids.tolist()])
 
-    def batches(it):
-        for batch in it:
-            m = len(batch)
-            if m == 0:
-                cols = [batch.column(c) for c in keep]
-                best = pa.array(np.zeros(0, dtype=np.int64), pa.int64())
-                yield pa.RecordBatch.from_arrays(cols + [best], names=names)
-                continue
-            vm = _np_vecs(batch, vec, m)
-            n2v = np.asarray(batch.column(n2), dtype=np.float64)
-            # probe ranking: desc cos (NaN first), asc sid ties
-            scos = _np_cos_matrix(vm, n2v, smat, sn2, None)
-            order = _desc_order(scos)[:, :n_probe]
-            probe_mask = np.zeros((m, len(sids)), dtype=bool)
-            np.put_along_axis(probe_mask, order, True, axis=1)
-            # candidate centroids: home super among the row's probes
-            cand = probe_mask[:, home_idx]
-            ccos = _np_cos_matrix(vm, n2v, cmat, cn2, None)
-            alive = cand.any(axis=1)
-            best_all = cids[_argmax(ccos, cand)]
-            arrs = []
-            for c in keep:
-                col = batch.column(c)
-                arrs.append(col.filter(pa.array(alive)) if not alive.all() else col)
-            best = pa.array(best_all[alive], pa.int64())
-            yield pa.RecordBatch.from_arrays(arrs + [best], names=names)
+    def compute(batch):
+        # probe ranking: desc cos (NaN first), asc sid ties
+        order = _desc_order(_batch_cos(batch, vec, n2, smat, sn2, None))
+        probe_mask = np.zeros((len(batch), len(sids)), dtype=bool)
+        np.put_along_axis(probe_mask, order[:, :n_probe], True, axis=1)
+        # candidate centroids: home super among the row's probes
+        cand = probe_mask[:, home_idx]
+        ccos = _batch_cos(batch, vec, n2, cmat, cn2, None)
+        return cids[_argmax(ccos, cand)], cand.any(axis=1)
 
-    return df.mapInArrow(batches, out_schema)
+    return _map_batches(df, keep, out_id, "bigint", compute)

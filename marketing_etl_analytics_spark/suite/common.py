@@ -208,9 +208,12 @@ def memo_df(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
 STREAM_TIMEOUT_S = 300
 
 
-def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size the state-store count for a streaming entry from the input
-    volume, the way Spark sizes scan partitions from file bytes.
+def _stream_state_partitions(
+    spark: SparkSession, sf_dir: str, table: str = "events"
+) -> int:
+    """Size the state-store count for a streaming entry from the volume
+    of the table it reads (``<sf_dir>/<table>.parquet``), the way Spark
+    sizes scan partitions from file bytes.
 
     Each shuffle partition of a stateful operator is one state-store
     instance paying a fixed commit (delta file + snapshot bookkeeping)
@@ -221,7 +224,7 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     [4, defaultParallelism]; a cluster-scale stream hits the
     parallelism cap and behaves exactly as before.
     """
-    src = os.path.join(sf_dir, "events.parquet")
+    src = os.path.join(sf_dir, f"{table}.parquet")
     try:
         nbytes = (
             os.path.getsize(src)
@@ -239,17 +242,22 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
 
 
 def drain(
-    spark: SparkSession, sf_dir: str, start: Callable[[], StreamingQuery]
+    spark: SparkSession,
+    sf_dir: str,
+    start: Callable[[], StreamingQuery],
+    table: str = "events",
 ) -> None:
     """Start a bounded query with ``start()`` and wait until it has
     processed all of its input. The shuffle partitions (one state store
-    each) are sized by :func:`_stream_state_partitions` for the query's
-    start and restored on every exit. A query still running after
-    ``STREAM_TIMEOUT_S`` is stopped and raises ``TimeoutError``: its
-    sink holds a partial result."""
+    each) are sized by :func:`_stream_state_partitions` from ``table``,
+    the source the query streams, for the query's start and restored on
+    every exit. A query still running after ``STREAM_TIMEOUT_S`` is
+    stopped and raises ``TimeoutError``: its sink holds a partial
+    result."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_state_partitions(spark, sf_dir))
+        "spark.sql.shuffle.partitions",
+        str(_stream_state_partitions(spark, sf_dir, table)),
     )
     try:
         q = start()

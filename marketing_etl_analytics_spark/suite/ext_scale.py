@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext.curation import (
+    KMPAR_ELL_FACTOR,
+    KMPAR_ROUNDS,
     POOL_FACTOR,
     semantic_assign,
     semantic_dedup,
@@ -1692,19 +1694,19 @@ SEM_N_PROBE = 3
 _SEM_N_SUPER = math.isqrt(SEM_CENTROIDS - 1) + 1  # = ext.curation's n_super
 
 
-def _sql_kmeanspar_ctes(k: int, rounds: int = 3, ell_factor: int = 2) -> str:
+def _sql_kmeanspar_ctes(k: int) -> str:
     """DuckDB CTE chain mirroring ext.curation.kmeanspar_seeds
     EXACTLY (r6, VERDICT r5 #4 — deterministic k-means||): hash-first
     initial seed; per round, every row's min cosine-distance to the
     current seed frame, the decimal-snapped corpus sum S of dmin^2,
     and the content-addressed threshold draw u(x)*S < ell*dmin^2(x);
-    after ``rounds`` rounds, candidates are weighted by nearest-row
+    after KMPAR_ROUNDS rounds, candidates are weighted by nearest-row
     counts and reduced to <= k via md5-bucket max-weight (tiebreak:
     smaller key). Exposes ``seed_keys(k)``. Values (not the physical
     grouping shape) mirror the Spark frame ops: grouping by the
     unique key then re-joining vectors is value-identical to Spark's
     wide groupBy. Requires a prior ``b(vec_id, embedding, n2)`` CTE."""
-    ell = float(ell_factor * k)
+    ell = float(KMPAR_ELL_FACTOR * k)
     cos = (
         "COALESCE(" + SQL_DOT.format(a="p.v", b="c.ce")
         + " / nullif(sqrt(p.vn2 * c.cn2), 0.0), 0.0)"
@@ -1722,7 +1724,7 @@ def _sql_kmeanspar_ctes(k: int, rounds: int = 3, ell_factor: int = 2) -> str:
       SELECT k AS cid, v AS ce, vn2 AS cn2 FROM kmbase ORDER BY h, k LIMIT 1
     )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, KMPAR_ROUNDS + 1):
         parts.append(
             f"""kmdmin{r} AS MATERIALIZED (
       SELECT p.k, MIN({d}) AS d
@@ -1757,7 +1759,7 @@ def _sql_kmeanspar_ctes(k: int, rounds: int = 3, ell_factor: int = 2) -> str:
         SELECT p.k, c.cid,
           row_number() OVER (PARTITION BY p.k ORDER BY {cos} DESC, c.cid)
             AS r
-        FROM kmbase p, kmseeds{rounds} c
+        FROM kmbase p, kmseeds{KMPAR_ROUNDS} c
       ) WHERE r = 1
     )"""
     )
@@ -1774,7 +1776,7 @@ def _sql_kmeanspar_ctes(k: int, rounds: int = 3, ell_factor: int = 2) -> str:
                 % {k}
             ORDER BY COALESCE(w.w, 0) DESC, s.cid
           ) AS pr
-        FROM kmseeds{rounds} s LEFT JOIN kmwts w ON w.cid = s.cid
+        FROM kmseeds{KMPAR_ROUNDS} s LEFT JOIN kmwts w ON w.cid = s.cid
       ) WHERE pr = 1
     )"""
     )
@@ -1866,14 +1868,14 @@ def _sql_kmeanspar_ctes(k: int, rounds: int = 3, ell_factor: int = 2) -> str:
     ORDER BY vec_id
     """,
     doc="SemDeDup with IVF-probed centroid assignment (VERDICT r4 #3) "
-    "on the FULLY-DISTRIBUTED seeding path (r6, VERDICT r5 #4): "
+    "on the k-means|| seeding path (r6, VERDICT r5 #4): "
     "seeds come from deterministic k-means|| "
     "(ext/curation.py::kmeanspar_seeds — content-addressed threshold "
     "oversampling, 3 rounds, frame-op weight reduction to k) and "
     "super-centroids are hash-bucket representatives of the seed "
-    "frame — seeds and supers stay DataFrames end-to-end: no driver "
-    "pool collect, no O(pool*k) greedy, no isin(<k literals>), the "
-    "seeding shape that survives k~1e5 on a 100 TB corpus. Rows "
+    "frame: no O(pool*k) greedy, no isin(<k literals>). Seeds and "
+    "supers are collected to the driver and scored in the Arrow "
+    "evaluators' task closure, so k stays planning-sized. Rows "
     "probe their 3 nearest super-clusters and argmax only over "
     "member centroids — O(n*sqrt(k)) assignment. Every decision "
     "(threshold draws, probe ranking, home assignment, final argmax) "

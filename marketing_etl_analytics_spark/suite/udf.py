@@ -658,6 +658,7 @@ def _ingest_decisions(
                 checkpoint_dir=f"{base}/ckpt",
                 compact_index=compact_index,
             ),
+            table="documents",
         )
         return (
             spark.read.option("recursiveFileLookup", "true")

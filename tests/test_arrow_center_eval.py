@@ -1,17 +1,17 @@
-"""The r10 corpus x centers Arrow evaluators must be BIT-identical to
-the expression forms they replace.
+"""The corpus x centers Arrow evaluators must be BIT-identical to the
+SQL forms written inline here as references.
 
-Each evaluator re-implements a crossJoin(broadcast(centers)) +
-rank-window (or min-aggregate) shape as one vectorized NumPy pass with
-the planning-sized center set in the task closure. Nothing is
+Each evaluator computes what a crossJoin(broadcast(centers)) +
+rank-window (or min-aggregate) shape computes, as one vectorized NumPy
+pass with the planning-sized center set in the task closure; they are
+the only code that scores rows against a center set. Nothing is
 approximate: the lattice dot is the arrow_lattice_dots kernel (proved
 bit-identical in test_arrow_lattice_dot.py), np.sqrt and division are
 the same correctly-rounded IEEE ops Catalyst evaluates, and every
 selection replicates Spark's ordering (NaN greatest, ties on ascending
-center id). The whole-path tests drive the REAL callers both ways by
-toggling curation.ARROW_CENTERS_MAX, so any divergence in the
-surrounding plumbing (empty-candidate drops, column passthrough,
-probe counts) also fails.
+center id). The IVF test also covers the plumbing around the scores:
+probe counts, column passthrough and the drop of rows whose probed
+supers have no member centroid.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.ext import curation
 from marketing_etl_analytics_spark.ext.embedding import (
-    arrow_lattice_norms,
+    arrow_ivf_assign,
     arrow_min_center_dist,
     arrow_nearest_center,
 )
@@ -53,20 +53,6 @@ def _centers(spark, n=16):
 
 def _rows_set(df):
     return {tuple(r) for r in df.collect()}
-
-
-def test_lattice_norms_bit_identical(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    jvm = emb.select(
-        "vec_id",
-        F.expr(SPARK_DOT.format(a="embedding", b="embedding")).alias("n2"),
-    )
-    arrow = arrow_lattice_norms(emb, "embedding", "n2").select("vec_id", "n2")
-    j = jvm.withColumnRenamed("n2", "n1").join(arrow, "vec_id")
-    assert j.count() == emb.count()
-    assert j.filter(F.col("n1") != F.col("n2")).count() == 0
 
 
 def test_nearest_center_matches_rank_window(spark):
@@ -166,37 +152,46 @@ def test_min_center_dist_matches_expression(spark):
     assert _rows_set(jvm) == _rows_set(arrow)
 
 
-def _toggle_paths(monkeypatch, fn):
-    """Run ``fn()`` on the Arrow path and on the frame path and return
-    both results (the env-independent whole-path A/B)."""
-    monkeypatch.setattr(curation, "ARROW_CENTERS_MAX", 10**9)
-    arrow = fn()
-    monkeypatch.setattr(curation, "ARROW_CENTERS_MAX", 0)
-    frame = fn()
-    return arrow, frame
-
-
-def test_semantic_assign_exact_whole_path(spark, monkeypatch):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    arrow, frame = _toggle_paths(
-        monkeypatch,
-        lambda: curation.semantic_assign(
-            emb, n_centroids=8, cluster_cap=32, seeding="farthest"
-        ),
+@pytest.mark.parametrize("n_probe", [1, 2, 3])
+def test_ivf_assign_matches_probe_windows(spark, n_probe):
+    """Six supers, of which only the first three home member
+    centroids: a row whose n_probe nearest supers are all memberless
+    has no candidate and is dropped, as the inner join drops it (some
+    rows drop at every n_probe here)."""
+    b = _base(spark)
+    sc = _centers(spark, n=22)
+    supers, members = sc[:6], [
+        (c[0], c[1], c[2], sc[i % 3][0]) for i, c in enumerate(sc[6:])
+    ]
+    sup = spark.createDataFrame(supers, "sid long, se array<float>, sn2 double")
+    mem = spark.createDataFrame(
+        members, "cid long, ce array<float>, cn2 double, home long"
     )
-    assert _rows_set(arrow) == _rows_set(frame)
-
-
-def test_semantic_assign_ivf_kmeanspar_whole_path(spark, monkeypatch):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    arrow, frame = _toggle_paths(
-        monkeypatch,
-        lambda: curation.semantic_assign(
-            emb, n_centroids=16, cluster_cap=32,
-            seeding="kmeanspar", assign="ivf", n_probe=2,
-        ),
+    scos = F.expr(SPARK_DOT.format(a="embedding", b="se")) / F.sqrt(
+        F.col("n2") * F.col("sn2")
     )
-    assert _rows_set(arrow) == _rows_set(frame)
+    ccos = F.expr(SPARK_DOT.format(a="embedding", b="ce")) / F.sqrt(
+        F.col("n2") * F.col("cn2")
+    )
+    wp = Window.partitionBy("vec_id").orderBy(F.desc("_sc"), F.asc("sid"))
+    wc = Window.partitionBy("vec_id").orderBy(F.desc("_cc"), F.asc("cid"))
+    jvm = (
+        b.crossJoin(F.broadcast(sup))
+        .select("vec_id", "embedding", "n2", "sid", scos.alias("_sc"))
+        .withColumn("r", F.row_number().over(wp))
+        .filter(F.col("r") <= n_probe)
+        .join(F.broadcast(mem), F.col("sid") == F.col("home"))
+        .select("vec_id", "cid", ccos.alias("_cc"))
+        .withColumn("r", F.row_number().over(wc))
+        .filter("r = 1")
+        .select("vec_id", F.col("cid").alias("best"))
+    )
+    arrow = arrow_ivf_assign(
+        b, "embedding", "n2", supers, members, n_probe, "best", keep=["vec_id"]
+    )
+    expect = _rows_set(jvm)
+    assert _rows_set(arrow) == expect
+    assert 0 < len(expect) < b.count()
 
 
 def test_nan_center_outranks_inf():
@@ -224,7 +219,7 @@ def test_nan_center_outranks_inf():
     assert _argmax(cos, np.array([[True, False]])).tolist() == [0]
 
 
-def test_null_vector_raises_on_both_paths(spark, monkeypatch):
+def test_null_vector_raises_on_both_paths(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter("vec_id < 200")
     holed = emb.select(
         "vec_id",
@@ -232,10 +227,8 @@ def test_null_vector_raises_on_both_paths(spark, monkeypatch):
         .otherwise(F.col("embedding"))
         .alias("embedding"),
     )
-    for cap in (10**9, 0):  # Arrow path, then the frame fallback
-        monkeypatch.setattr(curation, "ARROW_CENTERS_MAX", cap)
-        with pytest.raises(Exception, match="NULL vector in column 'embedding'"):
-            curation.semantic_assign(holed, n_centroids=4, cluster_cap=32).collect()
+    with pytest.raises(Exception, match="NULL vector in column 'embedding'"):
+        curation.semantic_assign(holed, n_centroids=4, cluster_cap=32).collect()
 
 
 def test_semantic_assign_rejects_non_integer_key(spark):

@@ -142,55 +142,3 @@ def test_dsir_weights_match_python(spark, raw_docs):
     kept_other = kept - kept_en
     n_other = len(rows) - n_en
     assert kept_en / n_en > kept_other / max(1, n_other)
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
-                                    "/root/testdata/sf0.01"])
-def test_dsir_approx_cutoff_agrees_with_exact(spark, sf_dir):
-    """VERDICT r8 Next #5: the approx-over-sample percentile (the
-    100 TB form) must land close enough to the exact cutoff that the
-    keep decision only moves for docs inside the sampling error band
-    around it — pinned at both graded SFs."""
-    from pyspark.sql import functions as F
-
-    from marketing_etl_analytics_spark.suite.ext_pipeline import (
-        dsir_keep_cutoff,
-        ext_quality_dsir,
-    )
-
-    rows = ext_quality_dsir(spark, sf_dir).collect()
-    weights = sorted(r["log_w"] for r in rows)
-    exact = {r["doc_id"]: r["keep_dsir"] for r in rows}
-
-    doc_w = ext_quality_dsir(spark, sf_dir).select("doc_id", "log_w")
-    p_apx = dsir_keep_cutoff(doc_w, mode="approx").collect()[0]["p_keep"]
-    p_ex = dsir_keep_cutoff(doc_w, mode="exact").collect()[0]["p_keep"]
-
-    # cutoff agreement: the approx cut sits within a small quantile
-    # band of the exact one (a 25% Bernoulli sample of n docs has
-    # stderr ~ sqrt(q(1-q)/(n*rate)) ~ 0.02 quantile units at n=500)
-    import bisect
-
-    q_apx = bisect.bisect_left(weights, p_apx) / len(weights)
-    q_ex = bisect.bisect_left(weights, p_ex) / len(weights)
-    assert abs(q_apx - q_ex) <= 0.10, (p_apx, p_ex, q_apx, q_ex)
-
-    # keep-set agreement: decisions only flip inside the band
-    approx_keep = {
-        r["doc_id"]: int(r["log_w"] >= p_apx)
-        for r in doc_w.collect()
-    }
-    flips = sum(1 for d in exact if exact[d] != approx_keep[d])
-    assert flips <= 0.10 * len(exact), flips
-
-    # determinism: the sample is content-addressed, so a second
-    # evaluation returns the identical cutoff
-    p_apx2 = dsir_keep_cutoff(doc_w, mode="approx").collect()[0]["p_keep"]
-    assert p_apx == p_apx2
-
-    # mode validation
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dsir_keep_cutoff(doc_w, mode="bogus")
-    _ = F  # keep the import local-lint happy
