@@ -22,7 +22,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from marketing_etl_analytics_spark.suite import SUITE  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-FLAGSHIP = "q1_top_sellers"
+FLAGSHIP = "q1_best_sellers"
 
 
 def entry(spark: SparkSession) -> DataFrame:

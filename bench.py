@@ -114,7 +114,7 @@ def main() -> None:
         "ext_semantic_dedup",         # sem_assign
         "ext_semantic_dedup_ivf",     # IVF centroids
         "ext_search_suite",           # persisted bucketed term index
-        "v_channel_daily_incremental",  # channel_daily_base_state
+        "mv_channel_daily_incremental",  # the refreshed view table
     ]
     for wname in WARMUP_OWNERS:
         if wname not in SUITE:

@@ -357,7 +357,8 @@ def kmeanspar_seeds(
     # weight each candidate by the corpus rows nearest to it
     # (tiebreak: higher cos, then smaller candidate key), then reduce
     # to k via md5-bucket max-weight; only (_k -> _cid) leaves the
-    # Python boundary
+    # Python boundary. The k-row result is materialized, so the
+    # weights pass runs once however often the caller reads it.
     weights = (
         arrow_nearest_center(
             base.select("_k", "_v", "_vn2"),
@@ -383,6 +384,7 @@ def kmeanspar_seeds(
         .withColumn("_pr", F.row_number().over(wpick))
         .filter(F.col("_pr") == 1)
         .select("_cid", "_ce", "_cn2")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -399,7 +401,9 @@ def semantic_assign(
     """SemDeDup assignment stage: nearest-seed-centroid clusters
     (argmax or IVF-probed), hot clusters re-split on 8 hyperplane
     sign bits. Returns (key, cluster, _ckey) — the
-    per-corpus cluster index. At cluster scale this IS a persisted
+    per-corpus cluster index, materialized by the call, which scores
+    the corpus once (k-means|| seeding adds its own passes). At
+    cluster scale this IS a persisted
     table built once per corpus version (the suite memoizes it via
     memo_df and feeds it back to semantic_dedup(keyed=...)).
 
@@ -575,6 +579,9 @@ def semantic_assign(
             ).select(key, "cluster", "_sub")
     else:
         raise ValueError(f"unknown assign mode: {assign!r}")
+    # the hot-cluster count and the join below both read the
+    # assignment: materialize it so the corpus is scored once
+    assign = assign.localCheckpoint(eager=True)
     hot = (
         assign.groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("_cn"))

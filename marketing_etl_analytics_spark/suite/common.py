@@ -14,12 +14,9 @@ Cross-engine determinism rules (Spark vs DuckDB must hash identically):
 4. **Top-k needs total order**: every ORDER BY ... LIMIT carries a
    unique key as the final tie-breaker.
 
-The marketing-schema mapping onto the testdata follows FIXTURES.md §4:
-lineitem+orders = fact_sales, part = dim_products, customer(+nation)
-= dim_customers, events = fact_spend, o_orderdate-derived = dim_date.
-Line revenue = extendedprice*(1-discount); line cost =
-extendedprice*(1-discount)*0.6 (fixed COGS ratio, stands in for the
-reference's cost_price_thb column).
+The marketing entries (``suite.warehouse``) run the library itself
+over the testdata rendered as raw staging; the rest of the suite reads
+the testdata tables through :func:`t` directly.
 """
 
 from __future__ import annotations
@@ -303,7 +300,6 @@ def stream_scratch(prefix: str) -> Iterator[str]:
 # --- numeric discipline (Spark side) ---------------------------------------
 
 MONEY = "decimal(18,2)"
-RATE = "decimal(8,4)"
 
 
 def money(col: Column | str) -> Column:
@@ -312,98 +308,12 @@ def money(col: Column | str) -> Column:
     return c.cast(MONEY)
 
 
-def rate(col: Column | str) -> Column:
-    """Exact 4-dp decimal view of a small ratio column (discount/tax)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(RATE)
-
-
-def revenue_expr() -> Column:
-    """Line revenue: extendedprice * (1 - discount), exact decimal."""
-    return money("l_extendedprice") * (F.lit(1).cast(RATE) - rate("l_discount"))
-
-
-def cost_expr() -> Column:
-    """Line cost analog: revenue * (0.5 + tax) — a per-row-varying COGS
-    ratio (0.50..0.58), exact decimal. Varying margins matter: a
-    constant ratio makes every product's margin identical and
-    margin-vs-average comparisons degenerate to FP-noise coin flips."""
-    return revenue_expr() * (F.lit(0.5).cast(RATE) + rate("l_tax"))
-
-
-def dsum(col: Column, ndigits: int = 2) -> Column:
-    """SUM of exact decimals, emitted as DOUBLE.
-
-    Round in the DECIMAL domain (HALF_UP in both Spark and DuckDB —
-    probed), THEN cast to double. Rounding after the double cast is
-    engine-dependent at exact-tie values (Spark rounds the shortest
-    decimal repr, DuckDB rounds via scaled multiply)."""
-    return F.round(F.sum(col), ndigits).cast("double")
-
-
-def dcol(col: Column) -> Column:
-    """Row-level exact decimal emitted as DOUBLE — no rounding, so no
-    tie-breaking divergence; decimal->double conversion is exact-value
-    identical in both engines."""
-    return col.cast("double")
-
-
-def lsum(col: Column | str) -> Column:
-    """SUM of an integral column, emitted as BIGINT."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("long")).cast("long")
-
-
-# --- numeric discipline (oracle/DuckDB side SQL fragments) ------------------
-
-SQL_REVENUE = (
-    "CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(8,4)))"
-)
-SQL_COST = (
-    f"({SQL_REVENUE}) * (CAST(0.5 AS DECIMAL(8,4)) + CAST(l_tax AS DECIMAL(8,4)))"
-)
-
-
-def sql_dsum(expr: str, alias: str, ndigits: int = 2) -> str:
-    # decimal-domain ROUND, then double cast (see dsum)
-    return f"CAST(ROUND(SUM({expr}), {ndigits}) AS DOUBLE) AS {alias}"
-
-
-def sql_lsum(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS BIGINT)) AS BIGINT) AS {alias}"
-
-
 def ratio(num: Column, den: Column, ndigits: int) -> Column:
     """Portable rounded NULLIF-guarded double ratio."""
     return pround(num.cast("double") / F.nullif(den.cast("double"), F.lit(0.0)), ndigits)
 
 
-# AVG(double) is order-dependent (engines sum in different orders), so
-# any comparison or rounding of it is a coin flip near boundaries.
-# Deterministic mean: snap each double to a 6-dp decimal (exact),
-# sum exactly, then do ONE double division — bit-identical everywhere.
-
-def avg_det(col: Column, ndigits: int) -> Column:
-    s = F.sum(col.cast("decimal(28,6)")).cast("double")
-    return pround(s / F.count(col.cast("decimal(28,6)")), ndigits)
-
-
-def avg_det_raw(col: Column) -> Column:
-    """Unrounded deterministic mean (for threshold comparisons)."""
-    s = F.sum(col.cast("decimal(28,6)")).cast("double")
-    return s / F.count(col.cast("decimal(28,6)"))
-
-
-def sql_avg_det(expr: str, ndigits: int) -> str:
-    e = f"CAST({expr} AS DECIMAL(28,6))"
-    return sql_pround(f"CAST(SUM({e}) AS DOUBLE) / COUNT({e})", ndigits)
-
-
-def sql_avg_det_raw(expr: str) -> str:
-    e = f"CAST({expr} AS DECIMAL(28,6))"
-    return f"(CAST(SUM({e}) AS DOUBLE) / COUNT({e}))"
-
+# --- numeric discipline (oracle/DuckDB side SQL fragments) ------------------
 
 # ext.text.STOPWORDS as a DuckDB list literal: 'the', 'a', ...
 SQL_STOPWORDS = ", ".join(repr(w) for w in STOPWORDS)

@@ -1,10 +1,8 @@
-"""ETL-transform suite entries: the dim/fact builders of
-``etl_script/03_transform.sql`` exercised on the driver testdata.
-
-Mapping (FIXTURES.md §4): orders/lineitem = transactions, part =
-products, events = campaign/spend world. Every build is deterministic
-(documented ORDER BY for surrogate keys) so the DuckDB oracle can
-reproduce it exactly.
+"""ETL suite entries without a library build of their own: the
+idempotent upsert (``etl.incremental_upsert``, the reference's
+``ON CONFLICT DO NOTHING``) and an SCD Type-2 dimension build, on the
+testdata. The six ``03_transform.sql`` builds run through
+``etl.build_*`` in ``suite.warehouse``.
 """
 
 from __future__ import annotations
@@ -13,161 +11,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marketing_etl_analytics_spark.etl import incremental_upsert
-from marketing_etl_analytics_spark.functions import (
-    channel_from_campaign,
-    date_parts,
-    epoch_date_id,
-)
-from marketing_etl_analytics_spark.suite.common import (
-    lsum,
-    money,
-    revenue_expr,
-    sql_lsum,
-    SQL_REVENUE,
-    t,
-)
+from marketing_etl_analytics_spark.suite.common import t
 from marketing_etl_analytics_spark.suite.registry import register
-
-
-# --- dim_date build (03_transform.sql:5-14): epoch surrogate key,
-#     calendar parts, ISO week --------------------------------------------
-
-@register(
-    "etl_dim_date",
-    """
-    SELECT DISTINCT
-      CAST(epoch(CAST(o_orderdate AS DATE)) AS BIGINT) AS date_id,
-      CAST(o_orderdate AS DATE) AS date,
-      CAST(EXTRACT(DAY FROM o_orderdate) AS INT) AS day,
-      CAST(weekofyear(CAST(o_orderdate AS DATE)) AS INT) AS week,
-      CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS month,
-      CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS year
-    FROM orders
-    """,
-    doc="dim_date: epoch-seconds surrogate key + ISO week (H1-H3).",
-)
-def etl_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = F.to_date("o_orderdate")
-    parts = [c.alias(n) for n, c in date_parts(d).items()]
-    return t(spark, sf_dir, "orders").select(
-        epoch_date_id(d).alias("date_id"), d.alias("date"), *parts
-    ).dropDuplicates(["date_id"])
-
-
-# --- dim_products build (03_transform.sql:25-28): weighted-average
-#     derived prices + deterministic surrogate key -------------------------
-
-@register(
-    "etl_dim_product",
-    f"""
-    WITH agg AS (
-      SELECT p.p_partkey, p.p_name, p.p_type,
-             {sql_lsum("l.l_quantity", "units")},
-             CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS amount
-      FROM part p JOIN lineitem l ON l.l_partkey = p.p_partkey
-      GROUP BY p.p_partkey, p.p_name, p.p_type
-    )
-    SELECT
-      CAST(row_number() OVER (ORDER BY p_name, p_partkey) AS INT) AS product_sk,
-      p_partkey, p_name, p_type,
-      ROUND(amount / units, 0) AS base_price
-    FROM agg
-    """,
-    doc="dim_products: ROUND(SUM(amount)/SUM(qty),0) derived price, "
-    "row_number surrogate key over documented ORDER BY.",
-)
-def etl_dim_product(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = t(spark, sf_dir, "part")
-    li = t(spark, sf_dir, "lineitem")
-    agg = (
-        part.join(li, li.l_partkey == part.p_partkey)
-        .groupBy("p_partkey", "p_name", "p_type")
-        .agg(
-            lsum("l_quantity").alias("units"),
-            F.sum(money("l_extendedprice")).cast("double").alias("amount"),
-        )
-    )
-    w = Window.orderBy("p_name", "p_partkey")
-    return agg.select(
-        F.row_number().over(w).alias("product_sk"),
-        "p_partkey",
-        "p_name",
-        "p_type",
-        F.round(F.col("amount") / F.col("units"), 0).alias("base_price"),
-    )
-
-
-# --- dim_campaigns build (03_transform.sql:30-34): channel parsed from
-#     the campaign name, trailing space preserved (H6) ----------------------
-
-@register(
-    "etl_dim_campaign_parse",
-    """
-    WITH campaigns AS (
-      SELECT DISTINCT event_type || ' 2024-' || lpad(CAST(EXTRACT(MONTH FROM ts) AS VARCHAR), 2, '0')
-             AS campaign_name
-      FROM events
-    )
-    SELECT
-      CAST(row_number() OVER (ORDER BY campaign_name) AS INT) AS campaign_sk,
-      campaign_name,
-      regexp_extract(campaign_name, '^([^0-9]+)', 1) AS channel
-    FROM campaigns
-    """,
-    doc="dim_campaigns: '<Channel> YYYY-MM' name -> leading-non-digit "
-    "channel parse KEEPING the trailing space (03_transform.sql:32).",
-)
-def etl_dim_campaign_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    campaigns = ev.select(
-        F.concat(
-            F.col("event_type"),
-            F.lit(" 2024-"),
-            F.lpad(F.month("ts").cast("string"), 2, "0"),
-        ).alias("campaign_name")
-    ).distinct()
-    w = Window.orderBy("campaign_name")
-    return campaigns.select(
-        F.row_number().over(w).alias("campaign_sk"),
-        "campaign_name",
-        channel_from_campaign("campaign_name").alias("channel"),
-    )
-
-
-# --- fact build (03_transform.sql:36-52): staging LEFT JOIN dims, typed
-#     money columns; full-size output hash-checked --------------------------
-
-@register(
-    "etl_fact_sales",
-    f"""
-    SELECT
-      l.l_orderkey AS sale_orderkey,
-      CAST(l.l_linenumber AS INT) AS sale_linenumber,
-      CAST(epoch(CAST(o.o_orderdate AS DATE)) AS BIGINT) AS date_id,
-      o.o_custkey AS customer_id,
-      l.l_partkey AS product_id,
-      CAST(l.l_quantity AS BIGINT) AS quantity,
-      CAST({SQL_REVENUE} AS DOUBLE) AS revenue,
-      o.o_orderpriority AS channel_code
-    FROM lineitem l
-    LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-    """,
-    doc="fact_sales build: fact LEFT JOIN dims on natural keys, epoch "
-    "date key, decimal money; output checked at full row count.",
-)
-def etl_fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    return li.join(o, li.l_orderkey == o.o_orderkey, "left").select(
-        F.col("l_orderkey").alias("sale_orderkey"),
-        F.col("l_linenumber").alias("sale_linenumber"),
-        epoch_date_id(F.to_date("o_orderdate")).alias("date_id"),
-        F.col("o_custkey").alias("customer_id"),
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_quantity").cast("long").alias("quantity"),
-        revenue_expr().cast("double").alias("revenue"),
-        F.col("o_orderpriority").alias("channel_code"),
-    )
 
 
 # --- idempotent upsert analog (ON CONFLICT DO NOTHING,

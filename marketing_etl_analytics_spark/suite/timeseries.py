@@ -626,8 +626,8 @@ def ext_dau_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the end bound is inclusive (boundary pinned by "
     "tests/test_streaming.py::test_session_window_boundary_is_inclusive). "
     "Complements ext_sessionize (authored islands form); the streaming "
-    "entries stream_session_window and stream_sessionize run the same "
-    "function under a watermark.",
+    "entry stream_session_window runs the same function under a "
+    "watermark.",
 )
 def ext_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the streaming sessionizer's expression; its watermark is a no-op

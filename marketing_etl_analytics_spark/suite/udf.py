@@ -11,13 +11,10 @@ can't express natively. Graded here:
   the DuckDB oracle matches exactly — proving the batch plumbing,
   not float luck. (Round-4 consolidation of the retired
   rel_pandas_udf and rel_apply_in_pandas entries, VERDICT r3 #8.)
-- ``stream_sessionize``: the native ``session_window`` sessionizer
+- ``stream_session_window``: the native ``session_window`` sessionizer
   (``streaming.events_stream.session_window_agg``) run as a real
-  Structured Streaming query (availableNow), reporting each closed
-  session's last event as ``session_end``. Registered without an
-  oracle (graded rows-only); the same operator is oracle-exact as
-  ``stream_session_window``, and ``tests/test_streaming.py`` pins
-  this entry to the batch twin.
+  Structured Streaming query (availableNow), graded against a DuckDB
+  gaps-and-islands oracle on the sessions the watermark has closed.
 
 Scale notes: pandas UDFs move data Python-side in Arrow batches —
 10-100x over row-at-a-time UDFs but still the slow path vs codegen;
@@ -35,7 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from marketing_etl_analytics_spark.streaming.events_stream import (
-    SESSION_GAP,
     attribution_join_outer,
     dedup_events,
     read_events_stream,
@@ -154,26 +150,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_memory(spark, sf_dir, deduped, "dedup").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("event_id").alias("n_distinct"),
-    )
-
-
-# --- Structured Streaming sessionization (weak: rows-only) -------------------
-
-@register(
-    "stream_sessionize",
-    None,  # registered rows-only; stream_session_window grades the operator
-    doc="Native session_window sessionization (30-min gap, 2h "
-    "watermark) run as a real Structured Streaming query (availableNow "
-    "over the events parquet) — emits the closed sessions with "
-    "session_end = last event (window end - gap) and the exact decimal "
-    "total_value; equal to the batch twin ext_sessionize on every "
-    "closed session (tests/test_streaming.py).",
-)
-def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = read_events_stream(spark, sf_dir)
-    sessions = session_window_agg(events, watermark="2 hours")
-    return drain_memory(spark, sf_dir, sessions, "sessions").withColumn(
-        "session_end", F.col("session_end") - F.expr(f"INTERVAL {SESSION_GAP}")
     )
 
 
@@ -466,8 +442,7 @@ def _closed(
     doc="Native session_window sessionization under Structured "
     "Streaming (append mode, 1h watermark, 30-min gap), run "
     "end-to-end as an availableNow stream — the FULLY-ORACLED "
-    "streaming sessionizer, whose operator the rows-only "
-    "stream_sessionize entry also runs. Both sides restrict to sessions "
+    "streaming sessionizer. Both sides restrict to sessions "
     "whose end the final watermark has strictly passed (the set the "
     "stream has provably closed — late data can no longer change "
     "them), so the comparison is exact regardless of the emission "

@@ -231,6 +231,33 @@ def test_null_vector_raises_on_both_paths(spark):
         curation.semantic_assign(holed, n_centroids=4, cluster_cap=32).collect()
 
 
+@pytest.mark.parametrize(
+    "seeding, assign, passes",
+    # kmeanspar: initial distances, two running-min updates, the
+    # nearest-seed weights; then the assignment
+    [("farthest", "exact", 1), ("kmeanspar", "ivf", 5)],
+)
+def test_semantic_assign_corpus_passes(spark, monkeypatch, seeding, assign, passes):
+    """Rows scored by the evaluators per semantic_assign call: each
+    corpus pass runs once, however many frames read its result."""
+    from marketing_etl_analytics_spark.ext import embedding
+
+    scored = spark.sparkContext.accumulator(0)
+    map_batches = embedding._map_batches
+
+    def counting(df, keep, out, out_type, compute):
+        def counted(batch):
+            scored.add(batch.num_rows)
+            return compute(batch)
+
+        return map_batches(df, keep, out, out_type, counted)
+
+    monkeypatch.setattr(embedding, "_map_batches", counting)
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    curation.semantic_assign(emb, seeding=seeding, assign=assign).collect()
+    assert scored.value == passes * emb.count()
+
+
 def test_semantic_assign_rejects_non_integer_key(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"

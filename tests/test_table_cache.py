@@ -13,7 +13,7 @@ from marketing_etl_analytics_spark.suite import SUITE
 from marketing_etl_analytics_spark.suite import common
 
 SF = "/root/testdata/sf0.001"
-NAMES = ["q1_top_sellers", "v_channel_daily", "ext_dedup_exact"]
+NAMES = ["q1_best_sellers", "mv_channel_daily", "ext_dedup_exact"]
 
 
 def _rows(df):
