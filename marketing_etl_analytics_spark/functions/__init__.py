@@ -13,5 +13,4 @@ from marketing_etl_analytics_spark.functions.text import (  # noqa: F401
 from marketing_etl_analytics_spark.functions.bands import (  # noqa: F401
     age_band,
     frequency_band,
-    thai_season,
 )

@@ -29,16 +29,3 @@ def frequency_band(purchase_count: Column | str) -> Column:
         .when(c >= 2, "Repeat Buyers (2–4)")
         .otherwise("One-Time Buyers")
     )
-
-
-def thai_season(month: Column | str) -> Column:
-    """Thai seasons per ``etl_script/etil_pipeline.sql:108-112``:
-    months 3-5 Summer, 6-9 Rainy, else Cool. (Optional enricher; the
-    main reference path leaves ``season`` NULL — SURVEY.md §7.3.)
-    """
-    m = F.col(month) if isinstance(month, str) else month
-    return (
-        F.when(m.between(3, 5), "Summer")
-        .when(m.between(6, 9), "Rainy")
-        .otherwise("Cool")
-    )

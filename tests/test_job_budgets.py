@@ -14,6 +14,11 @@ The build's budgets count ``etl.run_etl`` itself and the
 ``acid.create`` of each warehouse table after it, with the dimensions
 still cached.
 
+The compile budgets count the classes Spark's code generator compiles
+(``CodegenMetrics``), on copies of the tables: a plan shape that ran
+once in the process compiles nothing again, on a repeat read, on the
+first read of a new snapshot and on a repeat delta. Each budget is 0.
+
 A budget only goes down. A change that lowers a count lowers its budget
 here; raising one needs a reason in CHANGES.md.
 """
@@ -22,6 +27,8 @@ from __future__ import annotations
 
 import itertools
 import os
+import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -93,6 +100,15 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _compiles(spark, fn):
+    """(fn(), number of classes Spark's code generator compiled)."""
+    metric = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+              .CodegenMetrics.METRIC_COMPILATION_TIME())
+    before = metric.getCount()
+    out = fn()
+    return out, metric.getCount() - before
+
+
 @pytest.fixture(scope="module")
 def tables(spark, tmp_path_factory):
     from perfbench import gen
@@ -160,34 +176,101 @@ def test_build_job_budgets(tables):
     assert tables[2] == BUILD_BUDGETS
 
 
-def test_nightly_job_budgets(spark, tables):
-    truth, root, _ = tables
-    wh = _fresh_snapshot(spark, root)
+def _create_view_tables(spark, root, wh, count):
+    """Build the two maintained view tables; ``count`` of each create."""
     got = {}
-    _, got["create_kpi_totals"] = _jobs(spark, lambda: views.create_kpi_totals(
+    _, got["create_kpi_totals"] = count(spark, lambda: views.create_kpi_totals(
         spark, str(root / "kpi_totals"), wh["fact_sales"], wh["fact_spend"],
         wh["dim_campaigns"], views.KPI_CHANNEL_GRAIN))
-    _, got["create_channel_daily"] = _jobs(spark, lambda: acid.create(
+    _, got["create_channel_daily"] = count(spark, lambda: acid.create(
         spark, str(root / "mv_channel_daily"),
         views.channel_daily(wh["fact_sales"], wh["fact_spend"], wh["dim_campaigns"],
                             wh["dim_date"])))
-    # one delta, staged as the nightly job stages it
+    return got
+
+
+def _stage_delta(spark, truth, wh, n):
+    """The fixture's delta, staged as the nightly job stages it, with its
+    ``sale_id`` moved past the table's by ``n << 40``: (fact_sales rows,
+    fact_spend rows)."""
     d = truth["deltas"][0]["dir"]
-    stg = {n: read_csv(spark, os.path.join(d, schemas.RAW_CSV_FILES[n][0]),
-                       schema=schemas.RAW_CSV_FILES[n][1])
-           for n in ("transactions", "spend")}
+    stg = {t: read_csv(spark, os.path.join(d, schemas.RAW_CSV_FILES[t][0]),
+                       schema=schemas.RAW_CSV_FILES[t][1])
+           for t in ("transactions", "spend")}
     fs = (etl.build_fact_sales(stg["transactions"], wh["dim_date"], wh["dim_products"],
                                wh["dim_campaigns"])
-          .withColumn("sale_id", F.col("sale_id") + F.lit(1 << 40)).localCheckpoint())
+          .withColumn("sale_id", F.col("sale_id") + F.lit(n << 40)).localCheckpoint())
     sp = etl.build_fact_spend(stg["spend"], wh["dim_date"], wh["dim_campaigns"]).localCheckpoint()
-    _, got["merge"] = _jobs(spark, lambda: acid.merge(
+    return fs, sp
+
+
+def _apply_delta(spark, truth, root, wh, n, count):
+    """Stage delta ``n``, merge it into ``fact_sales`` and fold it into
+    both view tables; ``count`` of each of those three calls."""
+    fs, sp = _stage_delta(spark, truth, wh, n)
+    got = {}
+    _, got["merge"] = count(spark, lambda: acid.merge(
         spark, str(root / "fact_sales"), fs, ["sale_id"]))
-    _, got["incremental_refresh_kpi"] = _jobs(spark, lambda: views.incremental_refresh_kpi(
+    _, got["incremental_refresh_kpi"] = count(spark, lambda: views.incremental_refresh_kpi(
         spark, str(root / "kpi_totals"), fs, sp, wh["dim_campaigns"],
         views.KPI_CHANNEL_GRAIN))
     after = {t: acid.read(spark, str(root / t)) for t in TABLES}
-    _, got["incremental_refresh_channel_daily"] = _jobs(
+    _, got["incremental_refresh_channel_daily"] = count(
         spark, lambda: views.incremental_refresh_channel_daily(
             spark, str(root / "mv_channel_daily"), after,
             fs.select("date_id").union(sp.select("date_id"))))
+    return got
+
+
+def test_nightly_job_budgets(spark, tables):
+    truth, root, _ = tables
+    wh = _fresh_snapshot(spark, root)
+    got = (_create_view_tables(spark, root, wh, _jobs)
+           | _apply_delta(spark, truth, root, wh, 1, _jobs))
     assert got == NIGHTLY_BUDGETS
+
+
+def _copy_tables(tables, dst):
+    """A copy of the fixture's warehouse tables under ``dst``, so a test
+    may commit to it without moving the other budgets' snapshots."""
+    for t in TABLES:
+        shutil.copytree(tables[1] / t, dst / t)
+    return dst
+
+
+def _read_round(spark, root, names):
+    """Compiles of each dashboard read of ``names``, in that order."""
+    return {name: _compiles(spark, lambda: _dashboard_query(spark, root, name).collect())[1]
+            for name in names}
+
+
+def test_repeat_reads_compile_nothing(spark, tables, tmp_path):
+    root = _copy_tables(tables, tmp_path)
+    _fresh_snapshot(spark, root)
+    _read_round(spark, root, READ_BUDGETS)
+    names = list(READ_BUDGETS)
+    random.Random(SEED).shuffle(names)
+    assert _read_round(spark, root, names) == dict.fromkeys(names, 0)
+
+
+def test_first_reads_after_a_commit_compile_nothing(spark, tables, tmp_path):
+    truth, _, _ = tables
+    root = _copy_tables(tables, tmp_path)
+    wh = _fresh_snapshot(spark, root)
+    _read_round(spark, root, READ_BUDGETS)
+    fs, _ = _stage_delta(spark, truth, wh, 1)
+    acid.merge(spark, str(root / "fact_sales"), fs, ["sale_id"])
+    assert _read_round(spark, root, READ_BUDGETS) == dict.fromkeys(READ_BUDGETS, 0)
+
+
+def test_repeat_delta_compiles_nothing(spark, tables, tmp_path):
+    """A nightly day: a delta, a round of the dashboard reads, then the
+    next delta, whose calls compile nothing the first one did not."""
+    truth, _, _ = tables
+    root = _copy_tables(tables, tmp_path)
+    wh = _fresh_snapshot(spark, root)
+    _create_view_tables(spark, root, wh, _compiles)
+    _apply_delta(spark, truth, root, wh, 1, _compiles)
+    _read_round(spark, root, READ_BUDGETS)
+    assert _apply_delta(spark, truth, root, wh, 2, _compiles) == {
+        "merge": 0, "incremental_refresh_kpi": 0, "incremental_refresh_channel_daily": 0}

@@ -1,7 +1,8 @@
 """``get_spark`` sizes a local session from the CPUs it may run on when
 ``SPARK_GRAFT_CPUS`` is unset, and from the variable when it is set; the
 suite's spread width follows the same default. The driver heap follows
-the host's physical memory unless ``SPARK_DRIVER_MEM`` sets it."""
+the host's physical memory unless ``SPARK_DRIVER_MEM`` sets it. The
+generated-class cache holds more than Spark's default of 100 classes."""
 
 from __future__ import annotations
 
@@ -85,3 +86,15 @@ def test_driver_memory_is_half_the_host_up_to_8g(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
     session.get_spark()
     assert builder.conf["spark.driver.memory"] == "2g"
+
+
+def test_codegen_cache_holds_the_working_set_unless_overridden(monkeypatch):
+    """The generated-class cache is on (a positive bound; 0 turns it off)
+    and above Spark's default of 100; ``extra_conf`` still sets it."""
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+    key = "spark.sql.codegen.cache.maxEntries"
+    session.get_spark()
+    assert int(builder.conf[key]) > 100
+    session.get_spark(extra_conf={key: "250"})
+    assert builder.conf[key] == "250"
